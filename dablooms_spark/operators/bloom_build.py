@@ -4,14 +4,18 @@ The reference is a single-process writer (scaling_bloom_add,
 src/dablooms.c:≈487). The Spark-native equivalent (SURVEY.md §4.3):
 
   stage 1 (no shuffle of text):  mapInArrow over input partitions —
-      each task hashes its Arrow batches zero-copy and scatter-adds
-      into one partition-local filter, emitting a single small blob
-      row. The wide text column never shuffles; only filter blobs do.
-  stage 2 (tree merge):          repeated groupBy(shard // fanin) →
-      applyInPandas counter-sum/concat merges — log_fanin(P) rounds of
-      blob-only shuffles, then a driver-side merge of the last ≤ fanin
-      blobs. At P=10k input partitions and fanin 64 that is two tiny
-      shuffle rounds; at local scale usually zero.
+      each task hashes its Arrow batches zero-copy and emits either
+      one partition-local filter blob or counter PIECES (sparse
+      gap-coded or dense clipped counters per touched layer/chunk,
+      encoded by core/pieces.py). The wide text column never
+      shuffles; only blobs or pieces do.
+  stage 2 (merge, operators/merge.py): pieces fold per key — on the
+      driver when the input estimate is small, else in one
+      groupBy(key) exchange — and blobs merge through the blob tree:
+      log_fanin(P) rounds of blob-only groupBy(shard // fanin)
+      shuffles, then a driver-side merge of the last ≤ fanin blobs.
+      At P=10k input partitions and fanin 64 that is two tiny shuffle
+      rounds; at local scale usually zero.
 
 This is the map-side-combine shape Catalyst builds for its own
 partial aggregates, expressed for a Python UDAF whose state (the
@@ -30,128 +34,16 @@ from pyspark.sql import functions as F
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
+from dablooms_spark.core.pieces import PieceEncoder, chunk_bounds, fold, runs
 from dablooms_spark.core.scaling_bloom import ScalingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
-from dablooms_spark.functions.hashing import km_expand
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
+from dablooms_spark.operators.merge import _BLOB_SCHEMA, fold_or_exchange, merge_blobs
+from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
 
-# Chunked piece flush: the sparse-piece stages (here, sharded_scaling,
-# bloom_remove) accumulate nfuncs-expanded int64 index arrays per
-# input partition; without a cap, worker memory is proportional to the
-# CALLER'S partition size (a coalesce(1) feeding a multi-GB partition
-# would OOM the Python worker). Draining every ~4M accumulated index
-# elements (~32 MB of int64) bounds memory unconditionally — the merge
-# side already counter-sums an arbitrary number of pieces per group,
-# so extra pieces change nothing but shuffle row count.
-PIECE_FLUSH_ELEMS = 4 << 20
-
-_BLOB_SCHEMA = "shard long, blob binary, n long"
 _BLOB_SCHEMA_PA = pa.schema(
     [("shard", pa.int64()), ("blob", pa.large_binary()), ("n", pa.int64())]
 )
-
-
-def _loads(blob: bytes, seed: int):
-    """Kind-dispatching deserializer (blobs are self-describing)."""
-    from dablooms_spark.core.serde import loads
-
-    return loads(blob, seed=seed)
-
-
-def _merge_blobs_to_bytes(blobs: list[bytes], seed: int) -> bytes:
-    """Fold serialized sketches to a serialized result, using the
-    no-densify fast paths: counting blooms scatter-add sparsely,
-    scaling blooms splice layer bytes."""
-    magic = bytes(blobs[0][:4])
-    if magic == b"DBSK":
-        return CountingBloom.merge_blobs([bytes(b) for b in blobs], seed=seed).to_bytes()
-    if magic == b"DBSC":
-        return ScalingBloom.merge_blobs([bytes(b) for b in blobs], seed=seed)
-    out = _loads(blobs[0], seed)
-    for b in blobs[1:]:
-        out = out.merge(_loads(b, seed))
-    return out.to_bytes()
-
-
-def _merge_blob_list(blobs: list[bytes], seed: int):
-    """Fold serialized sketches to a driver-side object."""
-    magic = bytes(blobs[0][:4])
-    if magic == b"DBSK":
-        return CountingBloom.merge_blobs([bytes(b) for b in blobs], seed=seed)
-    if len(blobs) == 1:
-        return _loads(blobs[0], seed)
-    return _loads(_merge_blobs_to_bytes(blobs, seed), seed)
-
-
-def _tree_merge(
-    blob_df: DataFrame,
-    seed: int,
-    fanin: int = 8,
-    collect_threshold: int = 8,
-    num_blobs: int | None = None,
-):
-    """Merge a DataFrame of (shard, blob, n) rows down to one filter.
-
-    Shuffles only blobs. Rounds of groupBy(shard % k) with k =
-    ceil(n/fanin) groups run the merges in parallel (the log-depth
-    critical path); once <= collect_threshold blobs remain they are
-    collected and folded on the driver. Small fanin keeps every round
-    wide enough to use the cluster — with wide filters the merge is
-    memory-bandwidth work, and one task merging 64 blobs serializes
-    exactly what the tree is meant to parallelize.
-
-    Pass num_blobs (any upper bound — builders know their partition or
-    shard count) to size the tree STATICALLY: the dynamic path must
-    persist + count() the partials — one extra full job over the input
-    plus a cache round-trip — purely to learn a number the caller
-    already had. With the bound, the whole merge is ONE action (the
-    final collect); an overestimate only adds empty merge groups.
-    """
-
-    def merge_group(pdf):
-        import pandas as pd
-
-        merged = _merge_blobs_to_bytes(list(pdf.blob), seed)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf.shard.min())],
-                "blob": [merged],
-                "n": [int(pdf.n.sum())],
-            }
-        )
-
-    def tree_rounds(df: DataFrame, n: int) -> DataFrame:
-        while n > collect_threshold:
-            k = math.ceil(n / fanin)
-            df = (
-                df.withColumn("g", (F.col("shard") % F.lit(k)).cast("long"))
-                .groupBy("g")
-                .applyInPandas(
-                    lambda pdf: merge_group(pdf.assign(shard=pdf.g)),
-                    schema=_BLOB_SCHEMA,
-                )
-            )
-            n = k
-        return df
-
-    if num_blobs is not None:
-        rows = tree_rounds(blob_df, max(int(num_blobs), 1)).collect()
-        if not rows:
-            return None, 0
-    else:
-        blob_df = blob_df.persist()
-        try:
-            n = blob_df.count()
-            if n == 0:
-                return None, 0
-            rows = tree_rounds(blob_df, n).collect()
-        finally:
-            # a strict (on_overflow='error') merge RAISES on overflow —
-            # an expected path that must not leak the pinned partials
-            blob_df.unpersist()
-    filt = _merge_blob_list([r.blob for r in rows], seed)
-    total = sum(r.n for r in rows)
-    return filt, total
 
 
 #: optimized-logical-plan nodes that are NARROW (no exchange, no
@@ -183,178 +75,60 @@ def _static_num_partitions(df: DataFrame) -> int | None:
         return None
 
 
-# the delta-u8 gap codec lives in core/codec.py (shared with the
-# sparse blob serde); keep the private aliases for in-module callers
-from dablooms_spark.core.codec import delta_decode as _delta_decode  # noqa: E402
-from dablooms_spark.core.codec import delta_encode as _delta_encode  # noqa: E402
-
-
-def _chunk_pieces_build(
+def _chunked_counting_build(
+    df: DataFrame,
     sdf: DataFrame,
     capacity: int,
     error_rate: float,
     seed: int,
     num_chunks: int,
-) -> DataFrame:
-    """Stage 1 for the chunked merge: each task builds its partial
-    filter, then splits the (sorted) nonzero counters into
-    `num_chunks` counter-range chunks and emits one sparse piece per
-    non-empty chunk: (chunk, idx binary delta-u8, exc binary, vals
-    binary, n)."""
-    g = BloomGeometry(capacity, error_rate)
-    size = g.size
-    bounds = np.linspace(0, size, num_chunks + 1).astype(np.int64)
-
-    def build_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Never materialize the full counter array in the task: with
-        # capacity >> per-task rows it is O(size) of random-scatter
-        # writes per task — 32 concurrent 77MB working sets thrash a
-        # single socket's cache. Instead collect the banded indices
-        # (sequential appends) and sort/group once at the end: the
-        # sparse counts fall out of np.unique directly.
-        idx_parts = []
-        count = 0
-        for batch in batches:
-            buf, offs, lens = arrow_byte_view(batch.column(0))
-            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-            idx_parts.append(
-                km_expand(h1, h2, g.nfuncs, g.counts_per_func).ravel()
-            )
-            count += len(h1)
-        if not count:
-            return
-        all_idx = np.concatenate(idx_parts)
-        nz, cnts = np.unique(all_idx, return_counts=True)
-        vals = np.minimum(cnts, 15).astype(np.uint8)  # saturating 4-bit
-        cuts = np.searchsorted(nz, bounds)
-        chunks, idx_b, exc_b, val_b, ns = [], [], [], [], []
-        first = True
-        for c in range(num_chunks):
-            lo, hi = int(cuts[c]), int(cuts[c + 1])
-            if lo == hi and not first:
-                continue
-            local = nz[lo:hi] - bounds[c]
-            gaps, exc = _delta_encode(local)
-            chunks.append(c)
-            idx_b.append(gaps)
-            exc_b.append(exc)
-            val_b.append(vals[lo:hi].tobytes())
-            ns.append(count if first else 0)  # count rides on one piece
-            first = False
-        yield pa.RecordBatch.from_pydict(
-            {"chunk": chunks, "idx": idx_b, "exc": exc_b, "vals": val_b, "n": ns},
-            schema=pa.schema(
-                [
-                    ("chunk", pa.int64()),
-                    ("idx", pa.large_binary()),
-                    ("exc", pa.large_binary()),
-                    ("vals", pa.large_binary()),
-                    ("n", pa.int64()),
-                ]
-            ),
-        )
-
-    return sdf.mapInArrow(
-        build_partition,
-        schema="chunk long, idx binary, exc binary, vals binary, n long",
-    )
-
-
-def _chunked_counting_merge(
-    pieces: DataFrame, capacity: int, error_rate: float, seed: int, num_chunks: int
 ) -> CountingBloom:
-    """ONE shuffle: groupBy(chunk) sums every shard's sparse piece of
-    that counter range in parallel (num_chunks-way), emitting dense
-    nibble-packed chunk bytes; the driver concatenates. Unlike a fanin
-    tree, parallelism here is independent of shard count and no task
-    ever holds more than (chunk width + its pieces) in memory."""
+    """Wide-filter build: each task emits its partial counters as
+    pieces of `num_chunks` counter-range chunks (core/pieces.py); the
+    merge folds each chunk — on the driver for small inputs, else in
+    ONE groupBy(chunk) exchange, num_chunks-way parallel and
+    independent of shard count, no task ever holding more than (chunk
+    width + its pieces) — and the driver concatenates the chunks.
+
+    Tasks never materialize the full counter array: with capacity >>
+    per-task rows it is O(size) of random-scatter writes per task —
+    32 concurrent 77MB working sets thrash a single socket's cache —
+    so the encoder collects banded indices and sorts once per drain."""
     g = BloomGeometry(capacity, error_rate)
-    size = g.size
-    bounds = np.linspace(0, size, num_chunks + 1).astype(np.int64)
+    bounds = chunk_bounds(g.size, num_chunks)
+
+    def route(batch: pa.RecordBatch):
+        buf, offs, lens = arrow_byte_view(batch.column(0))
+        if len(lens):
+            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
+            yield (), h1, h2, None
+
+    enc = PieceEncoder(["chunk"], lambda key: g, chunks=num_chunks)
+    pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
 
     def merge_chunk(pdf):
         import pandas as pd
 
         c = int(pdf.chunk.iloc[0])
-        width = int(bounds[c + 1] - bounds[c])
-        acc = np.zeros(width, dtype=np.int32)
-        for gap_bytes, exc_bytes, val_bytes in zip(pdf.idx, pdf.exc, pdf.vals):
-            idx = _delta_decode(gap_bytes, exc_bytes)
-            vals = np.frombuffer(val_bytes, dtype=np.uint8)
-            np.add.at(acc, idx, vals.astype(np.int32))
-        np.clip(acc, 0, 15, out=acc)
+        counters = fold(pdf, int(bounds[c + 1] - bounds[c]))
         return pd.DataFrame(
-            {
-                "chunk": [c],
-                "dense": [acc.astype(np.uint8).tobytes()],
-                "n": [int(pdf.n.sum())],
-            }
+            {"chunk": [c], "dense": [counters.tobytes()], "n": [int(pdf.n.sum())]}
         )
 
-    out = (
-        pieces.groupBy("chunk")
-        .applyInPandas(merge_chunk, schema="chunk long, dense binary, n long")
-        .collect()
+    # small inputs skip the piece exchange entirely (gated on the
+    # caller's frame; bit-identical either way)
+    rows = fold_or_exchange(
+        pieces, ["chunk"], merge_chunk, "chunk long, dense binary, n long",
+        gate=df, collect=True,
     )
-    counters = np.zeros(size, dtype=np.uint8)
+    counters = np.zeros(g.size, dtype=np.uint8)
     total = 0
-    for r in out:
-        c = r.chunk
+    for r in rows:
+        c = int(r.chunk)
         counters[bounds[c] : bounds[c + 1]] = np.frombuffer(r.dense, dtype=np.uint8)
-        total += r.n
+        total += int(r.n)
     return CountingBloom(
         capacity, error_rate, seed=seed, _counters=counters, _count=total
-    )
-
-
-def _driver_merge_max_bytes(spark) -> int:
-    """Catalyst-estimated input ceiling under which a build's sparse
-    pieces are collected and merged DRIVER-SIDE instead of through a
-    groupBy exchange (spark.dablooms.build.driverMergeMaxBytes, size
-    string, default 32 MiB; '0' disables). Interleaved same-session
-    A/B on the bench build: driver fold 0.869 s vs distributed merge
-    0.958 s end-to-end — the fold also removes a stage, a shuffle and
-    a pandas round-trip. Above the ceiling the distributed merge
-    keeps the driver out of the data path (guide §5)."""
-    from dablooms_spark.operators.bloom_probe import _parse_size_bytes
-
-    try:
-        return _parse_size_bytes(
-            spark.conf.get("spark.dablooms.build.driverMergeMaxBytes", "32m")
-        )
-    except Exception:
-        return 32 << 20
-
-
-def _est_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate, or None."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-
-
-def _driver_counting_merge(
-    pieces: DataFrame, capacity: int, error_rate: float, seed: int, num_chunks: int
-) -> CountingBloom:
-    """Driver-side fold of the chunked build's sparse pieces — the
-    small-input twin of _chunked_counting_merge: one collect, one
-    np.add.at pass, bit-identical result (min(15, Σ min(15, tᵢ)) ==
-    min(15, Σ tᵢ), the documented piece-boundary invariance)."""
-    g = BloomGeometry(capacity, error_rate)
-    bounds = np.linspace(0, g.size, num_chunks + 1).astype(np.int64)
-    acc = np.zeros(g.size, dtype=np.int32)
-    total = 0
-    for r in pieces.collect():
-        idx = _delta_decode(r.idx, r.exc) + bounds[r.chunk]
-        np.add.at(acc, idx, np.frombuffer(r.vals, dtype=np.uint8).astype(np.int32))
-        total += r.n
-    np.clip(acc, 0, 15, out=acc)
-    return CountingBloom(
-        capacity, error_rate, seed=seed, _counters=acc.astype(np.uint8),
-        _count=total,
     )
 
 
@@ -473,14 +247,7 @@ def build_counting_bloom(
         # wide filter: chunked merge — one shuffle, counter-range
         # parallelism, no multi-round tree, no fat blobs to the driver
         num_chunks = max(df.sparkSession.sparkContext.defaultParallelism, 16)
-        pieces = _chunk_pieces_build(sdf, capacity, error_rate, seed, num_chunks)
-        # small inputs skip the piece exchange entirely: collect the
-        # sparse pieces and fold driver-side (bit-identical; see
-        # _driver_merge_max_bytes for the measured stage cost)
-        est = _est_plan_bytes(df)
-        if est is not None and 0 <= est <= _driver_merge_max_bytes(df.sparkSession):
-            return _driver_counting_merge(pieces, capacity, error_rate, seed, num_chunks)
-        return _chunked_counting_merge(pieces, capacity, error_rate, seed, num_chunks)
+        return _chunked_counting_build(df, sdf, capacity, error_rate, seed, num_chunks)
     blob_df = counting_bloom_partials(
         df, key_col, capacity, error_rate, seed,
         num_build_partitions or auto_parts, on_overflow,
@@ -489,7 +256,7 @@ def build_counting_bloom(
     # so the partition count bounds the blob count — one action total
     # instead of persist + count + collect (guide §1.2: fewer passes)
     num_blobs = num_build_partitions or auto_parts or _static_num_partitions(df)
-    filt, _ = _tree_merge(blob_df, seed, merge_fanin, num_blobs=num_blobs)
+    filt, _ = merge_blobs(blob_df, seed, merge_fanin, num_blobs=num_blobs)
     if filt is None:
         return CountingBloom(capacity, error_rate, seed=seed, on_overflow=on_overflow)
     return filt
@@ -582,51 +349,6 @@ def scaling_bloom_partials(
     return hashed.mapInArrow(build_partition, schema=_BLOB_SCHEMA)
 
 
-def merge_blobs_df(
-    blob_df: DataFrame,
-    seed: int = DABLOOMS_SEED,
-    fanin: int = 8,
-    num_blobs: int | None = None,
-) -> DataFrame:
-    """Merge a (shard, blob, n) DataFrame down to ONE blob row, fully
-    inside Spark — the result never visits the driver. Chain with a
-    parquet write for the scalable build→checkpoint→broadcast flow
-    (at 10^12 rows the merged filter is GBs; collecting it is the
-    anti-pattern, checkpointing it is the product).
-
-    Pass num_blobs (an upper bound is fine — builders know their shard
-    count) to size the merge tree WITHOUT a count() action: counting
-    an un-persisted blob_df materializes the whole expensive partials
-    stage once for the count and again for the downstream write."""
-    import math as _math
-
-    def merge_group(pdf):
-        import pandas as pd
-
-        merged = _merge_blobs_to_bytes(list(pdf.blob), seed)
-        return pd.DataFrame(
-            {"shard": [int(pdf.shard.min())], "blob": [merged], "n": [int(pdf.n.sum())]}
-        )
-
-    df = blob_df
-    # clamp a caller-supplied estimate to >= 2: an underestimate of
-    # exactly 1 would skip the loop and silently return a multi-row
-    # frame; with 2 the final pass always runs one full merge (a true
-    # single-blob input just round-trips through one trivial group)
-    n = max(num_blobs, 2) if num_blobs is not None else df.count()
-    while n > 1:
-        k = _math.ceil(n / fanin)
-        df = (
-            df.withColumn("g", (F.col("shard") % F.lit(k)).cast("long"))
-            .groupBy("g")
-            .applyInPandas(
-                lambda pdf: merge_group(pdf.assign(shard=pdf.g)), schema=_BLOB_SCHEMA
-            )
-        )
-        n = k
-    return df
-
-
 _LAYER_SCHEMA = (
     "first_id long, layer_eps double, capacity long, max_id long, "
     "sb_eps double, blob binary, n long"
@@ -670,80 +392,17 @@ def fixed_layer_eps(
     return error_rate * FIXED_POLY / (k + 1) ** 2
 
 
-def scaling_bloom_fixed_partials(
+def _fixed_pieces(
     df: DataFrame,
     key_col: str,
     id_col: str,
     capacity: int,
     error_rate: float,
-    seed: int = DABLOOMS_SEED,
-    expected_layers: int | None = None,
-    dense_piece_frac: float | None = 0.5,
-    as_pieces: bool = False,
-) -> DataFrame:
-    """Scaling-bloom build with FIXED id-value layer boundaries — the
-    no-shuffle topology for dense insertion-sequence ids (the
-    reference's own id model: monotone unique integers,
-    scaling_bloom_add src/dablooms.c:≈487).
-
-    Layer k owns ids [k·(capacity−1), (k+1)·(capacity−1)); since ids
-    are UNIQUE integers, a width-(capacity−1) range can never hold more
-    than capacity−1 elements, so each layer keeps the reference's
-    per-layer load bound and ε·0.5^(k+1) tightening by construction —
-    the compound FP stays ≤ ε with NO ε/S budget split (layers are
-    global, not per-shard). Because the layer set is a deterministic
-    function of id alone, every input partition builds partials of the
-    SAME layers and the merge is a pure counter-sum:
-
-      stage 1 (mapInArrow, no row movement): hash keys zero-copy,
-          route rows by id//(capacity−1), emit one gap-coded sparse
-          index piece per (partition, touched layer);
-      stage 2 (the only shuffle — pieces, never rows): groupBy(layer)
-          scatter-adds pieces and emits the layer-row form
-          (_LAYER_SCHEMA, restore with restore_scaling_bloom_layers).
-
-    vs scaling_bloom_partials (the arrival-order state machine): that
-    path must range-shuffle every row (16 B/row — 16 TB at 10^12 rows)
-    plus sort within shards; this one moves only sparse counter
-    pieces. Use the range path when ids are sparse (e.g. raw
-    timestamps — fixed boundaries would mint one layer per
-    capacity-sized id gap); use this one whenever ids are dense row
-    numbers, which the build can always arrange
-    (monotonically-increasing row ids are the reference's model).
-    The result is partition-order invariant (counter-sum merge) but
-    not bit-identical to the sequential grow-at-count machine — the
-    same documented deviation class as the per-shard ε budget.
-
-    dense_piece_frac: a drained layer slice whose accumulated index
-    count reaches ``dense_piece_frac * layer_counter_size`` is emitted
-    as a DENSE piece — the layer's per-piece-clipped uint8 counter
-    array itself (marker: empty ``idx``) — instead of sorted gap-coded
-    sparse indices. At that density the sparse form is no smaller
-    (nnz ≈ 0.4·size ⇒ ~2 B/nz ≈ the dense payload) and strictly more
-    expensive: the sparse path sorts every index on emit
-    (np.unique) and scatter-adds on merge (np.add.at), both
-    DRAM-random patterns that collapse under multi-core memory-bus
-    contention, while the dense path bincounts per Kirsch-Mitzenmacher
-    band (the band's counter space is L2-resident) and merges by
-    straight vector add. At real scale an input partition spans whole
-    layers, so dense is the common case; boundary slivers stay
-    sparse. The emitted artifact is BIT-IDENTICAL either way (same
-    drain points, same per-piece saturating clip, same counter-sum —
-    property-tested; in fact min(15, Σ min(15, tᵢ)) == min(15, Σ tᵢ),
-    so the artifact is invariant to piece boundaries altogether).
-    Mid-stream flushes hold back the still-filling layer while it is
-    below the dense threshold (bounded extra memory:
-    dense_piece_frac·size elements) so a full layer emits as ONE
-    dense piece instead of sparse slivers. ``None`` disables dense
-    pieces and hold-back entirely (the pre-optimization code path).
-
-    as_pieces=True returns the RAW piece DataFrame (stage 1 only, no
-    exchange) — consumed by build_scaling_bloom's small-input
-    driver-side merge, which folds the pieces without the groupBy
-    stage (bit-identical by the piece-boundary invariance above).
-    """
-    from dablooms_spark.core.codec import delta_decode, delta_encode
-
+    seed: int,
+    expected_layers: int | None,
+):
+    """Stage 1 of the fixed-boundary build: (pieces DataFrame keyed by
+    layer, per-layer fold emitting _LAYER_SCHEMA rows)."""
     width = max(capacity - 1, 1)
     geom_cache: dict[int, BloomGeometry] = {}
 
@@ -772,167 +431,34 @@ def scaling_bloom_fixed_partials(
         F.col(key_col).alias("key"), F.col(id_col).cast("long").alias("id")
     ).filter(F.col("key").isNotNull() & F.col("id").isNotNull())
 
-    piece_pa_schema = pa.schema(
-        [
-            ("layer", pa.int64()),
-            ("idx", pa.large_binary()),
-            ("exc", pa.large_binary()),
-            ("vals", pa.large_binary()),
-            ("n", pa.int64()),
-            ("max_id", pa.int64()),
-        ]
-    )
-    # snapshot driver-side so the value ships inside the pickled
-    # closure (a worker-side module import would read the worker's
-    # copy, invisible to callers/tests overriding the module attr)
-    flush_elems = PIECE_FLUSH_ELEMS
-
-    def piece_stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idx_parts: dict[int, list[np.ndarray]] = {}
-        counts: dict[int, int] = {}
-        maxid: dict[int, int] = {}
-        acc_elems = 0
-        open_layer = -1  # layer that appended most recently (still filling)
-
-        def dense_counts(chunks: list[np.ndarray], g: BloomGeometry) -> bytes:
-            # per-KM-band bincount: each band's counter space
-            # (counts_per_func cells) is L2-resident, so the scatter
-            # never leaves cache the way a whole-space sort does.
-            # Chunks are raveled (rows, nfuncs) km_expand outputs, so
-            # a reshape recovers the band columns exactly.
-            cat = np.concatenate(chunks).reshape(-1, g.nfuncs)
-            cpf = g.counts_per_func
-            out = np.empty(g.size, dtype=np.uint8)
-            for b in range(g.nfuncs):
-                # plain-int offset: exact in both the uint32 and the
-                # giant-geometry int64 km_expand dtypes (a uint32
-                # product would wrap for band offsets past 2^32)
-                db = np.bincount(cat[:, b] - b * cpf, minlength=cpf)
-                np.minimum(db, 15, out=db)
-                out[b * cpf:(b + 1) * cpf] = db
-            return out.tobytes()
-
-        def drain(final: bool = True) -> pa.RecordBatch | None:
-            nonlocal idx_parts, counts, maxid, acc_elems
-            held: int | None = None
-            if (not final and dense_piece_frac is not None
-                    and open_layer in idx_parts):
-                # hold back the still-filling layer unless it already
-                # clears the dense threshold: a mid-stream flush would
-                # otherwise fragment a would-be dense layer into sparse
-                # slivers (sort + scatter-merge on both sides). The
-                # held memory is < dense_piece_frac·size elems, so the
-                # flush bound only stretches by that constant. The
-                # artifact is invariant to piece boundaries either way:
-                # min(15, Σ min(15, tᵢ)) == min(15, Σ tᵢ).
-                g = layer_geom(open_layer)
-                if (sum(c.size for c in idx_parts[open_layer])
-                        < dense_piece_frac * g.size):
-                    held = open_layer
-            if not idx_parts or set(idx_parts) == {held}:
-                return None
-            layers, gaps_b, exc_b, val_b, ns, mx = [], [], [], [], [], []
-            for li in sorted(idx_parts):
-                if li == held:
-                    continue
-                g = layer_geom(li)
-                elems = sum(c.size for c in idx_parts[li])
-                if (dense_piece_frac is not None
-                        and elems >= dense_piece_frac * g.size):
-                    # dense piece: empty idx is the marker (a sparse
-                    # piece with n>0 always has a non-empty gap stream)
-                    gaps, exc = b"", b""
-                    vals = dense_counts(idx_parts[li], g)
-                else:
-                    nz, cnts = np.unique(
-                        np.concatenate(idx_parts[li]), return_counts=True
-                    )
-                    gaps, exc = delta_encode(nz.astype(np.int64))
-                    vals = np.minimum(cnts, 15).astype(np.uint8).tobytes()
-                layers.append(li)
-                gaps_b.append(gaps)
-                exc_b.append(exc)
-                val_b.append(vals)
-                ns.append(counts[li])
-                mx.append(maxid[li])
-            rb = pa.RecordBatch.from_pydict(
-                {"layer": layers, "idx": gaps_b, "exc": exc_b, "vals": val_b,
-                 "n": ns, "max_id": mx},
-                schema=piece_pa_schema,
+    def route(batch: pa.RecordBatch):
+        ids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        if len(ids) == 0:
+            return
+        if ids.min() < 0:
+            # layer = id // width needs non-negative ids (layer -1
+            # would divide the ε schedule by zero); refusing beats
+            # silently dropping, which would false-negative
+            raise ValueError(
+                "fixed-boundary layout requires non-negative ids; "
+                f"got {int(ids.min())}"
             )
-            if held is not None:
-                idx_parts = {held: idx_parts[held]}
-                counts = {held: counts[held]}
-                maxid = {held: maxid[held]}
-                acc_elems = sum(c.size for c in idx_parts[held])
-            else:
-                idx_parts, counts, maxid, acc_elems = {}, {}, {}, 0
-            return rb
+        buf, offs, lens = arrow_byte_view(batch.column(0))
+        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
+        for li, a, b, i in runs(ids // width, h1, h2, ids):
+            yield (li,), a, b, i
 
-        for batch in batches:
-            ids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(ids) == 0:
-                continue
-            if ids.min() < 0:
-                # layer = id // width needs non-negative ids (layer -1
-                # would divide the ε schedule by zero); refusing beats
-                # silently dropping, which would false-negative
-                raise ValueError(
-                    "fixed-boundary layout requires non-negative ids; "
-                    f"got {int(ids.min())}"
-                )
-            buf, offs, lens = arrow_byte_view(batch.column(0))
-            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-            tgt = ids // width
-            for li in np.unique(tgt):
-                li = int(li)
-                m = tgt == li
-                g = layer_geom(li)
-                arr = km_expand(h1[m], h2[m], g.nfuncs, g.counts_per_func).ravel()
-                idx_parts.setdefault(li, []).append(arr)
-                acc_elems += arr.size
-                counts[li] = counts.get(li, 0) + int(m.sum())
-                maxid[li] = max(maxid.get(li, 0), int(ids[m].max()))
-                open_layer = li
-            if acc_elems >= flush_elems:
-                rb = drain(final=False)
-                if rb is not None:
-                    yield rb
-        rb = drain()
-        if rb is not None:
-            yield rb
-
-    pieces = sdf.mapInArrow(
-        piece_stage,
-        schema="layer long, idx binary, exc binary, vals binary, n long, max_id long",
-    )
-    if as_pieces:
-        return pieces
+    enc = PieceEncoder(["layer"], lambda key: layer_geom(key[0]))
+    pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
 
     def merge_layer(pdf):
         import pandas as pd
 
         li = int(pdf.layer.iloc[0])
         g = layer_geom(li)
-        acc = np.zeros(g.size, dtype=np.int32)
-        for gap_bytes, exc_bytes, val_bytes in zip(pdf.idx, pdf.exc, pdf.vals):
-            if len(gap_bytes) == 0:
-                # dense piece (see piece_stage): vals IS the clipped
-                # counter array — straight vector add, no decode
-                dense = np.frombuffer(val_bytes, dtype=np.uint8)
-                if dense.size != g.size:
-                    raise ValueError(
-                        f"dense piece for layer {li} has {dense.size} "
-                        f"counters, geometry expects {g.size}"
-                    )
-                acc += dense
-                continue
-            idx = delta_decode(gap_bytes, exc_bytes)
-            np.add.at(acc, idx, np.frombuffer(val_bytes, dtype=np.uint8).astype(np.int32))
-        np.clip(acc, 0, 15, out=acc)
         cb = CountingBloom(
             capacity, g.error_rate, first_id=li * width, seed=seed,
-            _counters=acc.astype(np.uint8), _count=int(pdf.n.sum()),
+            _counters=fold(pdf, g.size), _count=int(pdf.n.sum()),
         )
         return pd.DataFrame(
             {
@@ -946,6 +472,55 @@ def scaling_bloom_fixed_partials(
             }
         )
 
+    return pieces, merge_layer
+
+
+def scaling_bloom_fixed_partials(
+    df: DataFrame,
+    key_col: str,
+    id_col: str,
+    capacity: int,
+    error_rate: float,
+    seed: int = DABLOOMS_SEED,
+    expected_layers: int | None = None,
+) -> DataFrame:
+    """Scaling-bloom build with FIXED id-value layer boundaries — the
+    no-shuffle topology for dense insertion-sequence ids (the
+    reference's own id model: monotone unique integers,
+    scaling_bloom_add src/dablooms.c:≈487).
+
+    Layer k owns ids [k·(capacity−1), (k+1)·(capacity−1)); since ids
+    are UNIQUE integers, a width-(capacity−1) range can never hold more
+    than capacity−1 elements, so each layer keeps the reference's
+    per-layer load bound and ε·0.5^(k+1) tightening by construction —
+    the compound FP stays ≤ ε with NO ε/S budget split (layers are
+    global, not per-shard). Because the layer set is a deterministic
+    function of id alone, every input partition builds partials of the
+    SAME layers and the merge is a pure counter-sum:
+
+      stage 1 (mapInArrow, no row movement): hash keys zero-copy,
+          route rows by id//(capacity−1), emit one counter piece per
+          (partition, touched layer) — sparse gap-coded, or dense
+          once the layer is half full (core/pieces.py);
+      stage 2 (the only shuffle — pieces, never rows): groupBy(layer)
+          folds pieces and emits the layer-row form
+          (_LAYER_SCHEMA, restore with restore_scaling_bloom_layers).
+
+    vs scaling_bloom_partials (the arrival-order state machine): that
+    path must range-shuffle every row (16 B/row — 16 TB at 10^12 rows)
+    plus sort within shards; this one moves only counter pieces. Use
+    the range path when ids are sparse (e.g. raw timestamps — fixed
+    boundaries would mint one layer per capacity-sized id gap); use
+    this one whenever ids are dense row numbers, which the build can
+    always arrange (monotonically-increasing row ids are the
+    reference's model). The result is partition-order invariant
+    (counter-sum merge) but not bit-identical to the sequential
+    grow-at-count machine — the same documented deviation class as
+    the per-shard ε budget.
+    """
+    pieces, merge_layer = _fixed_pieces(
+        df, key_col, id_col, capacity, error_rate, seed, expected_layers
+    )
     return pieces.groupBy("layer").applyInPandas(merge_layer, schema=_LAYER_SCHEMA)
 
 
@@ -1055,54 +630,6 @@ def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFra
     )
 
 
-def _driver_scaling_merge(
-    piece_rows,
-    capacity: int,
-    error_rate: float,
-    seed: int,
-    expected_layers: int | None,
-) -> ScalingBloom:
-    """Driver-side fold of fixed-boundary scaling pieces — the
-    small-input twin of the groupBy(layer) merge in
-    scaling_bloom_fixed_partials: same per-layer geometry, same
-    sum-then-clip counter math (bit-identical by the piece-boundary
-    invariance), same layer rows, assembled directly."""
-    from dablooms_spark.core.codec import delta_decode
-
-    width = max(capacity - 1, 1)
-    by_layer: dict[int, list] = {}
-    for r in piece_rows:
-        by_layer.setdefault(int(r.layer), []).append(r)
-    layers = []
-    max_id = 0
-    for li in sorted(by_layer):
-        g = BloomGeometry(
-            capacity, fixed_layer_eps(li, error_rate, expected_layers)
-        )
-        acc = np.zeros(g.size, dtype=np.int32)
-        n = 0
-        for r in by_layer[li]:
-            if len(r.idx) == 0:
-                acc += np.frombuffer(r.vals, dtype=np.uint8)
-            else:
-                np.add.at(
-                    acc, delta_decode(r.idx, r.exc),
-                    np.frombuffer(r.vals, dtype=np.uint8).astype(np.int32),
-                )
-            n += r.n
-            max_id = max(max_id, int(r.max_id))
-        np.clip(acc, 0, 15, out=acc)
-        layers.append(
-            CountingBloom(
-                capacity, g.error_rate, first_id=li * width, seed=seed,
-                _counters=acc.astype(np.uint8), _count=n,
-            )
-        )
-    return ScalingBloom(
-        capacity, error_rate, seed=seed, layers=layers, max_id=max_id
-    )
-
-
 def assemble_scaling_bloom(rows, seed: int = DABLOOMS_SEED) -> ScalingBloom:
     """Driver-side ScalingBloom from collected layer rows
     (_LAYER_SCHEMA; canonical order first_id asc, eps desc — matching
@@ -1163,24 +690,14 @@ def build_scaling_bloom(
     layer-row checkpoint write when the filter is too big to
     collect."""
     if id_layout == "dense":
-        est = _est_plan_bytes(df)
-        if est is not None and 0 <= est <= _driver_merge_max_bytes(df.sparkSession):
-            # small input: collect stage-1 pieces and fold driver-side,
-            # skipping the groupBy(layer) exchange + pandas stage —
-            # bit-identical (piece-boundary invariance)
-            pieces = scaling_bloom_fixed_partials(
-                df, key_col, id_col, capacity, error_rate, seed,
-                expected_layers=expected_layers, as_pieces=True,
-            ).collect()
-            if not pieces:
-                return ScalingBloom(capacity, error_rate, seed=seed)
-            return _driver_scaling_merge(
-                pieces, capacity, error_rate, seed, expected_layers
-            )
-        rows = scaling_bloom_fixed_partials(
-            df, key_col, id_col, capacity, error_rate, seed,
-            expected_layers=expected_layers,
-        ).collect()
+        # small inputs fold the pieces on the driver, skipping the
+        # groupBy(layer) exchange + pandas stage (bit-identical)
+        pieces, merge_layer = _fixed_pieces(
+            df, key_col, id_col, capacity, error_rate, seed, expected_layers
+        )
+        rows = fold_or_exchange(
+            pieces, ["layer"], merge_layer, _LAYER_SCHEMA, gate=df, collect=True
+        )
         if not rows:
             return ScalingBloom(capacity, error_rate, seed=seed)
         return assemble_scaling_bloom(rows, seed)
@@ -1195,7 +712,7 @@ def build_scaling_bloom(
     )
     # the range build repartitions to num_shards before its partial
     # stage, so the blob count is statically bounded by the shard count
-    filt, _ = _tree_merge(
+    filt, _ = merge_blobs(
         blob_df, seed, merge_fanin,
         num_blobs=num_shards or df.sparkSession.sparkContext.defaultParallelism,
     )

@@ -19,11 +19,10 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
@@ -47,9 +46,9 @@ def _get_filter(blob: bytes, seed: int):
     if hit is not None:
         _FILTER_CACHE.move_to_end(key)
         return hit[1]
-    from dablooms_spark.operators.bloom_build import _loads
+    from dablooms_spark.core.serde import loads
 
-    filt = _loads(blob, seed)
+    filt = loads(blob, seed=seed)
     while len(_FILTER_CACHE) >= _FILTER_CACHE_MAX:
         _FILTER_CACHE.popitem(last=False)
     _FILTER_CACHE[key] = (blob, filt)
@@ -70,42 +69,19 @@ def _check_arrow(arr: pa.Array, blob: bytes, seed: int) -> "np.ndarray":
     return verdict
 
 
-def _check_series(series: pd.Series, blob: bytes, seed: int) -> pd.Series:
-    arr = pa.array(series, type=pa.large_string())
-    return pd.Series(_check_arrow(arr, blob, seed))
-
-
-try:  # Spark 4.1+: true Arrow UDFs — the probe never touches pandas
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover - older Spark fallback
-    _arrow_udf = None
-
-
 def bloom_probe_udf(spark, bloom, seed: int = DABLOOMS_SEED):
     """A reusable vectorized UDF closing over the broadcast filter.
 
-    With Spark 4.1+'s arrow_udf the probe is end-to-end zero-copy:
-    Arrow string buffers in, hash kernel, boolean buffer out — no
-    per-row Python string objects are ever materialized (the pandas
-    round trip creates one str per key). Falls back to a pandas UDF
-    on older runtimes."""
+    The probe is end-to-end zero-copy (Spark 4.1 arrow_udf): Arrow
+    string buffers in, hash kernel, boolean buffer out — no per-row
+    Python string objects are ever materialized."""
     bc = spark.sparkContext.broadcast(bloom.to_bytes())
 
-    if _arrow_udf is not None:
-
-        @_arrow_udf("boolean")
-        def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            blob = bc.value
-            for arr in it:
-                yield pa.array(_check_arrow(arr, blob, seed))
-
-        return probe
-
-    @pandas_udf("boolean")
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf("boolean")
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         blob = bc.value
-        for series in it:
-            yield _check_series(series, blob, seed)
+        for arr in it:
+            yield pa.array(_check_arrow(arr, blob, seed))
 
     return probe
 

@@ -10,10 +10,13 @@ Two paths:
   vectorized. A 10M-row deletion set moves 160 MB — fine; a 10^10-row
   stream would be 160 GB on the driver — not fine.
 - `bloom_remove_distributed` (any size): builds a DELETION-COUNT
-  filter in the cluster — per-partition sparse index pieces, one
-  blob-only shuffle merging per layer — and subtracts blobs on the
-  driver. Driver traffic is bounded by (num_layers × layer blob
-  size) regardless of deletion count, the same shape as the build.
+  filter in the cluster — per-partition counter pieces
+  (core/pieces.py), folded per layer on the driver for small
+  deletion frames or in one piece-only shuffle otherwise
+  (operators/merge.py) — and subtracts blobs on the driver. Above
+  the fold gate, driver traffic is bounded by (num_layers × layer
+  blob size) regardless of deletion count, the same shape as the
+  build.
   Exactness: counters never exceed 15, so subtracting the saturated
   deletion multiplicities is bit-identical to row-at-a-time removal
   (max(c - min(d,15), 0) == max(c - d, 0); property-tested).
@@ -29,9 +32,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dablooms_spark.core.geometry import BloomGeometry
+from dablooms_spark.core.pieces import PieceEncoder, fold, runs
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
-from dablooms_spark.functions.hashing import km_expand
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
+from dablooms_spark.operators.merge import fold_or_exchange
 
 
 def _hashed_rows(df: DataFrame, key_col: str, id_col: str | None, seed: int):
@@ -92,20 +96,20 @@ def _scaling_deletion_blobs(
     id_col: str,
     skeleton: list[tuple[int, int, float]],
     seed: int,
-) -> DataFrame:
-    """DataFrame(layer long, blob binary, n long): one deletion-count
-    filter per TOUCHED layer of the target's layer skeleton
-    ((first_id, capacity, error_rate) per layer, tiny — rides in the
-    task closure).
+) -> list:
+    """Rows (layer, blob, n): one deletion-count filter per TOUCHED
+    layer of the target's layer skeleton ((first_id, capacity,
+    error_rate) per layer, tiny — rides in the task closure).
 
     Stage 1 (mapInArrow, no row shuffle): hash keys zero-copy, route
     each row to its layer (newest layer with first_id <= id — the
     scaling_bloom_remove ≈L517 scan as a searchsorted), and emit one
-    gap-coded sparse index piece per (partition, touched layer).
-    Stage 2 (the only shuffle — pieces, never rows): groupBy(layer)
-    scatter-adds pieces into that layer's counter space and emits one
-    self-describing deletion blob per layer."""
-    from dablooms_spark.core.codec import delta_decode, delta_encode
+    counter piece per (partition, touched layer). Pieces saturate at
+    15: counters never exceed 15, so the clipped multiplicity
+    subtracts identically to the true one. Stage 2 folds each layer's
+    pieces into one self-describing deletion blob — on the driver
+    when the deletions frame is small, else in one groupBy(layer)
+    exchange (pieces, never rows)."""
     from dablooms_spark.core.counting_bloom import CountingBloom
 
     first_ids = np.array([fid for fid, _, _ in skeleton], dtype=np.int64)
@@ -116,107 +120,35 @@ def _scaling_deletion_blobs(
         F.col(id_col).cast("long").alias("id"),
     ).filter(F.col("key").isNotNull() & F.col("id").isNotNull())
 
-    piece_pa_schema = pa.schema(
-        [
-            ("layer", pa.int64()),
-            ("idx", pa.large_binary()),
-            ("exc", pa.large_binary()),
-            ("vals", pa.large_binary()),
-            ("n", pa.int64()),
-        ]
-    )
+    def route(batch: pa.RecordBatch):
+        ids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        if len(ids) == 0:
+            return
+        buf, offs, lens = arrow_byte_view(batch.column(0))
+        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
+        tgt = np.maximum(np.searchsorted(first_ids, ids, side="right") - 1, 0)
+        for li, a, b, i in runs(tgt, h1, h2, ids):
+            yield (li,), a, b, i
 
-    from dablooms_spark.operators import bloom_build as _bb
-
-    # snapshot driver-side: ships in the pickled closure, honours
-    # caller/test overrides of bloom_build.PIECE_FLUSH_ELEMS
-    flush_elems = _bb.PIECE_FLUSH_ELEMS
-
-    def piece_stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idx_parts: dict[int, list[np.ndarray]] = {}
-        counts: dict[int, int] = {}
-        acc_elems = 0
-
-        def drain() -> pa.RecordBatch | None:
-            # bounded-memory flush: see bloom_build.PIECE_FLUSH_ELEMS.
-            # NOTE the per-piece saturation below stays exact under
-            # chunking: counters never exceed 15, and
-            # min(Σ min(c_i,15), 15) == min(Σ c_i, 15) for c_i ≥ 0, so
-            # the merge's post-sum clip restores the one-piece value.
-            nonlocal idx_parts, counts, acc_elems
-            if not idx_parts:
-                return None
-            layers, gaps_b, exc_b, val_b, ns = [], [], [], [], []
-            for li in sorted(idx_parts):
-                nz, cnts = np.unique(
-                    np.concatenate(idx_parts[li]), return_counts=True
-                )
-                gaps, exc = delta_encode(nz.astype(np.int64))
-                layers.append(li)
-                gaps_b.append(gaps)
-                exc_b.append(exc)
-                # saturate at 15: counters never exceed 15, so the
-                # clipped multiplicity subtracts identically to the
-                # true one
-                val_b.append(np.minimum(cnts, 15).astype(np.uint8).tobytes())
-                ns.append(counts[li])
-            rb = pa.RecordBatch.from_pydict(
-                {"layer": layers, "idx": gaps_b, "exc": exc_b,
-                 "vals": val_b, "n": ns},
-                schema=piece_pa_schema,
-            )
-            idx_parts, counts, acc_elems = {}, {}, 0
-            return rb
-
-        for batch in batches:
-            ids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(ids) == 0:
-                continue
-            buf, offs, lens = arrow_byte_view(batch.column(0))
-            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-            tgt = np.maximum(
-                np.searchsorted(first_ids, ids, side="right") - 1, 0
-            )
-            for li in np.unique(tgt):
-                m = tgt == li
-                g = geoms[li]
-                arr = km_expand(h1[m], h2[m], g.nfuncs, g.counts_per_func).ravel()
-                idx_parts.setdefault(int(li), []).append(arr)
-                acc_elems += arr.size
-                counts[int(li)] = counts.get(int(li), 0) + int(m.sum())
-            if acc_elems >= flush_elems:
-                rb = drain()
-                if rb is not None:
-                    yield rb
-        rb = drain()
-        if rb is not None:
-            yield rb
-
-    pieces = sdf.mapInArrow(
-        piece_stage, schema="layer long, idx binary, exc binary, vals binary, n long"
-    )
+    enc = PieceEncoder(["layer"], lambda key: geoms[key[0]])
+    pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
 
     def merge_layer(pdf):
         import pandas as pd
 
         li = int(pdf.layer.iloc[0])
         fid, cap, eps = skeleton[li]
-        g = geoms[li]
-        acc = np.zeros(g.size, dtype=np.int32)
-        for gap_bytes, exc_bytes, val_bytes in zip(pdf.idx, pdf.exc, pdf.vals):
-            idx = delta_decode(gap_bytes, exc_bytes)
-            np.add.at(acc, idx, np.frombuffer(val_bytes, dtype=np.uint8).astype(np.int32))
-        np.clip(acc, 0, 15, out=acc)
         dl = CountingBloom(
             cap, eps, first_id=fid, seed=seed,
-            _counters=acc.astype(np.uint8), _count=int(pdf.n.sum()),
+            _counters=fold(pdf, geoms[li].size), _count=int(pdf.n.sum()),
         )
         return pd.DataFrame(
             {"layer": [li], "blob": [dl.to_bytes()], "n": [dl.count]}
         )
 
-    return pieces.groupBy("layer").applyInPandas(
-        merge_layer, schema="layer long, blob binary, n long"
+    return fold_or_exchange(
+        pieces, ["layer"], merge_layer, "layer long, blob binary, n long",
+        gate=deletions, collect=True,
     )
 
 
@@ -258,9 +190,8 @@ def bloom_remove_distributed(
         (l.first_id, l.geometry.capacity, l.geometry.error_rate)
         for l in filt.layers
     ]
-    blobs = _scaling_deletion_blobs(deletions, key_col, id_col, skeleton, seed).collect()
-    for r in blobs:
-        filt.layers[r.layer].subtract(
+    for r in _scaling_deletion_blobs(deletions, key_col, id_col, skeleton, seed):
+        filt.layers[int(r.layer)].subtract(
             CountingBloom.from_bytes(bytes(r.blob), seed=seed)
         )
     return filt

@@ -25,14 +25,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from dablooms_spark.operators.textops import shingle_hashes
-
-try:  # Spark 4.1+: zero-copy Arrow UDFs (ListArray values/offsets direct)
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover
-    _arrow_udf = None
 
 import pyarrow as pa
 
@@ -199,36 +194,19 @@ def _sig_udf(k: int, num_perms: int, seed: int):
         )
         return pa.StructArray.from_arrays([shingles, sig_arr], ["shingles", "sig"])
 
-    if _arrow_udf is not None:
-
-        @_arrow_udf("struct<shingles: array<long>, sig: array<long>>")
-        def sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            for arr in it:
-                flat, offsets = _list_offsets(arr)
-                if len(offsets) <= 1:
-                    yield to_struct(
-                        np.empty(0, np.int64),
-                        np.zeros(max(len(offsets), 1), np.int64),
-                        np.zeros((max(len(offsets) - 1, 0), num_perms), np.int64),
-                    )
-                    continue
-                yield to_struct(*kernel(flat, offsets))
-
-        return sig
-
-    @pandas_udf("struct<shingles: array<long>, sig: array<long>>")
-    def sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            if len(series) == 0:
-                yield pd.DataFrame({"shingles": [], "sig": []})
+    # zero-copy Arrow UDF: ListArray values/offsets read directly
+    @arrow_udf("struct<shingles: array<long>, sig: array<long>>")
+    def sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in it:
+            flat, offsets = _list_offsets(arr)
+            if len(offsets) <= 1:
+                yield to_struct(
+                    np.empty(0, np.int64),
+                    np.zeros(max(len(offsets), 1), np.int64),
+                    np.zeros((max(len(offsets) - 1, 0), num_perms), np.int64),
+                )
                 continue
-            flat, offsets = _list_offsets(series)
-            sh_values, sh_offsets, sigm = kernel(flat, offsets)
-            shingles_out = [
-                sh_values[sh_offsets[i] : sh_offsets[i + 1]]
-                for i in range(len(sh_offsets) - 1)
-            ]
-            yield pd.DataFrame({"shingles": shingles_out, "sig": list(sigm)})
+            yield to_struct(*kernel(flat, offsets))
 
     return sig
 
@@ -413,27 +391,14 @@ def simhash_fingerprints(
             fp |= np.where(maj, np.uint64(1) << np.uint64(j), np.uint64(0))
         return fp.view(np.int64)
 
-    if _arrow_udf is not None:
-
-        @_arrow_udf("long")
-        def fold(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            for arr in it:
-                if len(arr) == 0:
-                    yield pa.array([], type=pa.int64())
-                    continue
-                flat, offsets = _list_offsets(arr)
-                yield pa.array(fold_kernel(flat, offsets))
-
-        return df.select(F.col(id_col), fold(tok_hashes).alias("simhash"))
-
-    @pandas_udf("long")
-    def fold(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            if len(series) == 0:
-                yield pd.Series([], dtype="int64")
+    @arrow_udf("long")
+    def fold(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in it:
+            if len(arr) == 0:
+                yield pa.array([], type=pa.int64())
                 continue
-            flat, offsets = _list_offsets(series)
-            yield pd.Series(fold_kernel(flat, offsets))
+            flat, offsets = _list_offsets(arr)
+            yield pa.array(fold_kernel(flat, offsets))
 
     return df.select(F.col(id_col), fold(tok_hashes).alias("simhash"))
 

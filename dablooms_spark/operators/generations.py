@@ -282,9 +282,11 @@ def generation_semi_join(
     )
     out = out.filter(F.col("__hit")).drop("__hit")
     if exact_df is not None:
+        from dablooms_spark.operators.bloom_probe import _semi_dim
+
         ek = exact_key or key_col
         out = out.join(
-            exact_df.select(F.col(ek).alias("__ek")).distinct(),
+            _semi_dim(exact_df, ek),
             on=F.col(key_col) == F.col("__ek"),
             how="left_semi",
         )

@@ -129,27 +129,12 @@ def observed_fp_rate_per_layer(
         )
         return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1)))
 
-    try:
-        from pyspark.sql.functions import arrow_udf as _audf
-    except ImportError:  # pragma: no cover - older Spark fallback
-        _audf = None
+    from pyspark.sql.functions import arrow_udf
 
-    if _audf is not None:
-
-        @_audf("array<boolean>")
-        def layer_hits(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-            for arr in it:
-                yield _layer_hits_arrow(arr)
-
-    else:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf as _pudf
-
-        @_pudf("array<boolean>")
-        def layer_hits(it):
-            for series in it:
-                arr = pa.array(series, type=pa.large_string())
-                yield pd.Series(_layer_hits_arrow(arr).to_pylist())
+    @arrow_udf("array<boolean>")
+    def layer_hits(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in it:
+            yield _layer_hits_arrow(arr)
 
     probed = negatives.select(
         layer_hits(F.col(key_col).cast("string")).alias("__hits")

@@ -36,16 +36,13 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-
-try:  # Spark 4.1+: true Arrow UDFs for the broadcast probe path
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover - older Spark fallback
-    _arrow_udf = None
+from dablooms_spark.operators.merge import fold_or_exchange
 
 _SHARD_SEED = 0x5D
 
@@ -98,9 +95,8 @@ def _measure_blobs(blobs_df: DataFrame) -> tuple[DataFrame, int]:
 def _broadcast_counting_probe_udf(spark, shard_blobs: dict, seed: int):
     """Vectorized membership UDF over (key_str, shard) against a
     broadcast {shard: blob} dict — the shuffle-free probe for sharded
-    counting filters small enough to replicate. Arrow-native on Spark
-    4.1+, pandas fallback otherwise; filters deserialize once per task
-    (iterator form, guide §4.5)."""
+    counting filters small enough to replicate. Arrow-native; filters
+    deserialize once per task (iterator form)."""
     bc = spark.sparkContext.broadcast(shard_blobs)
 
     def probe_batch(keys: pa.Array, shards: np.ndarray, cache: dict) -> np.ndarray:
@@ -124,25 +120,12 @@ def _broadcast_counting_probe_udf(spark, shard_blobs: dict, seed: int):
             verdict &= ~np.asarray(pa.compute.is_null(keys))
         return verdict
 
-    if _arrow_udf is not None:
-        @_arrow_udf("boolean")
-        def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-            cache: dict = {}
-            for keys, shards in it:
-                sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-                yield pa.array(probe_batch(keys, sh, cache))
-
-        return probe
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def probe(it: TIterator[TTuple[pd.Series, pd.Series]]) -> TIterator[pd.Series]:
+    @arrow_udf("boolean")
+    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
         cache: dict = {}
         for keys, shards in it:
-            arr = pa.array(keys, type=pa.large_string())
-            sh = shards.to_numpy(dtype=np.int64, na_value=0)
-            yield pd.Series(probe_batch(arr, sh, cache))
+            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.array(probe_batch(keys, sh, cache))
 
     return probe
 
@@ -207,32 +190,6 @@ def build_sharded_counting_bloom(
 
     partials = sdf.mapInArrow(build_partials, schema="shard long, blob binary, n long")
 
-    # Small inputs skip the blob exchange + pandas merge stage: collect
-    # the per-(partition, shard) partial blobs (one map-only job) and
-    # counter-sum them driver-side — bit-identical (the merge is an
-    # order-invariant saturating counter sum) and gated on the same
-    # Catalyst-estimate ceiling as the other driver merges.
-    from dablooms_spark.operators.bloom_build import (
-        _driver_merge_max_bytes,
-        _est_plan_bytes,
-    )
-
-    spark = df.sparkSession
-    est = _est_plan_bytes(sdf)
-    if est is not None and 0 <= est <= _driver_merge_max_bytes(spark):
-        by_shard: dict[int, list[bytes]] = {}
-        counts: dict[int, int] = {}
-        for r in partials.collect():
-            by_shard.setdefault(int(r.shard), []).append(bytes(r.blob))
-            counts[int(r.shard)] = counts.get(int(r.shard), 0) + int(r.n)
-        data = []
-        for s in sorted(by_shard):
-            merged = CountingBloom.merge_blobs(by_shard[s], seed=seed)
-            data.append((s, bytearray(merged.to_bytes()), counts[s]))
-        return spark.createDataFrame(
-            data, schema="shard long, blob binary, n long"
-        )
-
     def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         merged = CountingBloom.merge_blobs([bytes(b) for b in pdf.blob], seed=seed)
         return pd.DataFrame(
@@ -243,8 +200,12 @@ def build_sharded_counting_bloom(
             }
         )
 
-    return partials.groupBy("shard").applyInPandas(
-        merge_shard, schema="shard long, blob binary, n long"
+    # small inputs (gated on the projected key frame) merge the
+    # per-(partition, shard) partials on the driver — bit-identical:
+    # the merge is an order-invariant saturating counter sum
+    return fold_or_exchange(
+        partials, ["shard"], merge_shard, "shard long, blob binary, n long",
+        gate=sdf,
     )
 
 

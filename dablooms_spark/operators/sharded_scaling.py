@@ -38,7 +38,6 @@ the single mmap file cannot express.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Iterator as TIterator
 from typing import Tuple as TTuple
 
@@ -47,13 +46,15 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
+from dablooms_spark.core.pieces import PieceEncoder, fold, runs
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
-from dablooms_spark.functions.hashing import km_expand
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
+from dablooms_spark.operators.merge import fold_or_exchange
 from dablooms_spark.operators.sharded import (
     _SHARD_SEED,
     _measure_blobs,
@@ -61,12 +62,6 @@ from dablooms_spark.operators.sharded import (
     _shard_expr,
 )
 
-_POLY = 6.0 / (np.pi ** 2)  # retained for older callers; see fixed_layer_eps
-
-_PIECE_SCHEMA = (
-    "shard long, layer long, idx binary, exc binary, vals binary, "
-    "n long, max_id long"
-)
 _ROW_SCHEMA = (
     "shard long, first_id long, layer_eps double, capacity long, "
     "max_id long, sb_eps double, blob binary, n long, num_shards long"
@@ -120,10 +115,8 @@ def _pieces_df(
     expected_layers: int | None = None,
 ) -> DataFrame:
     """Map-only stage shared by build and remove: hash keys zero-copy
-    and emit one gap-coded sparse counter piece per (input partition,
+    and emit one counter piece (core/pieces.py) per (input partition,
     shard, touched layer). No row movement."""
-    from dablooms_spark.core.codec import delta_encode
-
     width = max(capacity - 1, 1) * num_shards
     geom_cache: dict[int, BloomGeometry] = {}
 
@@ -134,108 +127,30 @@ def _pieces_df(
         _shard_expr(key, num_shards).alias("shard"),
     ).filter(F.col("key").isNotNull() & F.col("id").isNotNull())
 
-    piece_pa_schema = pa.schema(
-        [
-            ("shard", pa.int64()),
-            ("layer", pa.int64()),
-            ("idx", pa.large_binary()),
-            ("exc", pa.large_binary()),
-            ("vals", pa.large_binary()),
-            ("n", pa.int64()),
-            ("max_id", pa.int64()),
-        ]
+    def route(batch: pa.RecordBatch):
+        ids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        if len(ids) == 0:
+            return
+        if ids.min() < 0:
+            # a negative id would corrupt the shard/layer composite
+            # encoding AND the fixed-boundary layer math; refusing
+            # beats silently dropping (a drop would false-negative)
+            raise ValueError(
+                "fixed-boundary layout requires non-negative ids; "
+                f"got {int(ids.min())}"
+            )
+        shards = batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
+        buf, offs, lens = arrow_byte_view(batch.column(0))
+        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
+        group = shards * (1 << 40) + ids // width  # composite group code
+        for code, a, b, i in runs(group, h1, h2, ids):
+            yield (code >> 40, code & ((1 << 40) - 1)), a, b, i
+
+    enc = PieceEncoder(
+        ["shard", "layer"],
+        lambda k: _layer_geom(k[1], capacity, error_rate, geom_cache, expected_layers),
     )
-
-    from dablooms_spark.operators import bloom_build as _bb
-
-    # snapshot driver-side: ships in the pickled closure, honours
-    # caller/test overrides of bloom_build.PIECE_FLUSH_ELEMS
-    flush_elems = _bb.PIECE_FLUSH_ELEMS
-
-    def piece_stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idx_parts: dict[tuple[int, int], list[np.ndarray]] = {}
-        counts: dict[tuple[int, int], int] = {}
-        maxid: dict[tuple[int, int], int] = {}
-        acc_elems = 0
-
-        def drain() -> pa.RecordBatch | None:
-            # bounded-memory flush: see bloom_build.PIECE_FLUSH_ELEMS
-            nonlocal idx_parts, counts, maxid, acc_elems
-            if not idx_parts:
-                return None
-            sh, layers, gaps_b, exc_b, val_b, ns, mx = [], [], [], [], [], [], []
-            for s, li in sorted(idx_parts):
-                nz, cnts = np.unique(
-                    np.concatenate(idx_parts[(s, li)]), return_counts=True
-                )
-                gaps, exc = delta_encode(nz.astype(np.int64))
-                sh.append(s)
-                layers.append(li)
-                gaps_b.append(gaps)
-                exc_b.append(exc)
-                val_b.append(np.minimum(cnts, 15).astype(np.uint8).tobytes())
-                ns.append(counts[(s, li)])
-                mx.append(maxid[(s, li)])
-            rb = pa.RecordBatch.from_pydict(
-                {"shard": sh, "layer": layers, "idx": gaps_b, "exc": exc_b,
-                 "vals": val_b, "n": ns, "max_id": mx},
-                schema=piece_pa_schema,
-            )
-            idx_parts, counts, maxid, acc_elems = {}, {}, {}, 0
-            return rb
-
-        for batch in batches:
-            ids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(ids) == 0:
-                continue
-            if ids.min() < 0:
-                # a negative id would corrupt the shard/layer composite
-                # encoding AND the fixed-boundary layer math; refusing
-                # beats silently dropping (a drop would false-negative)
-                raise ValueError(
-                    "fixed-boundary layout requires non-negative ids; "
-                    f"got {int(ids.min())}"
-                )
-            shards = batch.column(2).to_numpy(zero_copy_only=False).astype(np.int64)
-            buf, offs, lens = arrow_byte_view(batch.column(0))
-            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-            layer = ids // width
-            group = shards * (1 << 40) + layer  # composite group code
-            # ONE argsort + contiguous-run slicing, not a full-batch
-            # boolean mask per group: with S shards x L layers the mask
-            # loop makes S*L passes over the batch (e.g. 80 at S=16,
-            # L=5) — pure DRAM traffic that throttles exactly where
-            # this build should scale
-            order = np.argsort(group, kind="stable")
-            g_sorted = group[order]
-            h1s, h2s, ids_s = h1[order], h2[order], ids[order]
-            run_starts = np.flatnonzero(
-                np.concatenate(([True], g_sorted[1:] != g_sorted[:-1]))
-            )
-            run_bounds = np.append(run_starts, len(g_sorted))
-            for ri in range(len(run_starts)):
-                lo, hi = int(run_bounds[ri]), int(run_bounds[ri + 1])
-                gcode = int(g_sorted[lo])
-                s, li = gcode >> 40, gcode & ((1 << 40) - 1)
-                g = _layer_geom(li, capacity, error_rate, geom_cache,
-                                expected_layers)
-                kk = (s, li)
-                arr = km_expand(
-                    h1s[lo:hi], h2s[lo:hi], g.nfuncs, g.counts_per_func
-                ).ravel()
-                idx_parts.setdefault(kk, []).append(arr)
-                acc_elems += arr.size
-                counts[kk] = counts.get(kk, 0) + (hi - lo)
-                maxid[kk] = max(maxid.get(kk, 0), int(ids_s[lo:hi].max()))
-            if acc_elems >= flush_elems:
-                rb = drain()
-                if rb is not None:
-                    yield rb
-        rb = drain()
-        if rb is not None:
-            yield rb
-
-    return sdf.mapInArrow(piece_stage, schema=_PIECE_SCHEMA)
+    return sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
 
 
 def build_sharded_scaling_layers(
@@ -255,76 +170,24 @@ def build_sharded_scaling_layers(
     polynomial to uniform (see bloom_build.fixed_layer_eps — ~20%
     less hash/index work at 80 layers, more at scale). Rows
     never shuffle: stage 1 (_pieces_df) hashes keys zero-copy and
-    emits one gap-coded sparse piece per (partition, shard, touched
-    layer); stage 2 — the only exchange, pieces not rows —
-    counter-sums per (shard, layer). Shard routing is the same
+    emits one counter piece per (partition, shard, touched layer);
+    stage 2 — pieces not rows — folds per (shard, layer), on the
+    driver for small inputs (the layer rows then come back as a local
+    relation) or else in one exchange. Shard routing is the same
     JVM-side expression the probe uses (`pmod(xxhash64(key), S)`)."""
-    from dablooms_spark.core.codec import delta_decode
-
     width = max(capacity - 1, 1) * num_shards
     geom_cache: dict[int, BloomGeometry] = {}
     pieces = _pieces_df(df, key_col, id_col, capacity, error_rate,
                         num_shards, seed, expected_layers)
-
-    # Small inputs skip the piece exchange + pandas merge stage:
-    # collect the per-(partition, shard, layer) sparse pieces (one
-    # map-only job) and counter-sum them driver-side with the SAME
-    # per-layer geometry math — bit-identical (piece-boundary
-    # invariance), gated on the Catalyst-estimate ceiling shared with
-    # the other driver merges. The layer rows stay a DataFrame either
-    # way (here a local relation).
-    from dablooms_spark.core.codec import delta_decode as _dd
-    from dablooms_spark.operators.bloom_build import (
-        _driver_merge_max_bytes,
-        _est_plan_bytes,
-    )
-
-    spark = df.sparkSession
-    est = _est_plan_bytes(df)
-    if est is not None and 0 <= est <= _driver_merge_max_bytes(spark):
-        groups: dict[tuple[int, int], list] = {}
-        for r in pieces.collect():
-            groups.setdefault((int(r.shard), int(r.layer)), []).append(r)
-        data = []
-        for (s, li) in sorted(groups):
-            g = _layer_geom(li, capacity, error_rate, geom_cache,
-                            expected_layers)
-            acc = np.zeros(g.size, dtype=np.int32)
-            n = 0
-            max_id = 0
-            for r in groups[(s, li)]:
-                np.add.at(
-                    acc, _dd(r.idx, r.exc),
-                    np.frombuffer(r.vals, dtype=np.uint8).astype(np.int32),
-                )
-                n += int(r.n)
-                max_id = max(max_id, int(r.max_id))
-            np.clip(acc, 0, 15, out=acc)
-            cb = CountingBloom(
-                g.capacity, g.error_rate, first_id=li * width, seed=seed,
-                _counters=acc.astype(np.uint8), _count=n,
-            )
-            data.append(
-                (s, li * width, g.error_rate, capacity, max_id, error_rate,
-                 bytearray(cb.to_bytes()), cb.count, num_shards)
-            )
-        return spark.createDataFrame(data, schema=_ROW_SCHEMA)
 
     def merge_layer(pdf: pd.DataFrame) -> pd.DataFrame:
         s = int(pdf["shard"].iloc[0])
         li = int(pdf["layer"].iloc[0])
         g = _layer_geom(li, capacity, error_rate, geom_cache,
                         expected_layers)
-        acc = np.zeros(g.size, dtype=np.int32)
-        for gap_bytes, exc_bytes, val_bytes in zip(pdf.idx, pdf.exc, pdf.vals):
-            idx = delta_decode(gap_bytes, exc_bytes)
-            np.add.at(
-                acc, idx, np.frombuffer(val_bytes, dtype=np.uint8).astype(np.int32)
-            )
-        np.clip(acc, 0, 15, out=acc)
         cb = CountingBloom(
             g.capacity, g.error_rate, first_id=li * width, seed=seed,
-            _counters=acc.astype(np.uint8), _count=int(pdf.n.sum()),
+            _counters=fold(pdf, g.size), _count=int(pdf.n.sum()),
         )
         return pd.DataFrame(
             {
@@ -340,8 +203,8 @@ def build_sharded_scaling_layers(
             }
         )
 
-    return pieces.groupBy("shard", "layer").applyInPandas(
-        merge_layer, schema=_ROW_SCHEMA
+    return fold_or_exchange(
+        pieces, ["shard", "layer"], merge_layer, _ROW_SCHEMA, gate=df
     )
 
 
@@ -381,28 +244,12 @@ def _broadcast_scaling_probe_udf(spark, shard_layers: dict, seed: int):
             verdict &= ~np.asarray(pa.compute.is_null(keys))
         return verdict
 
-    from dablooms_spark.operators import sharded as _sharded
-
-    if _sharded._arrow_udf is not None:
-        _arrow_udf = _sharded._arrow_udf
-        @_arrow_udf("boolean")
-        def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-            cache: dict = {}
-            for keys, shards in it:
-                sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-                yield pa.array(probe_batch(keys, sh, cache))
-
-        return probe
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def probe(it: TIterator[TTuple[pd.Series, pd.Series]]) -> TIterator[pd.Series]:
+    @arrow_udf("boolean")
+    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
         cache: dict = {}
         for keys, shards in it:
-            arr = pa.array(keys, type=pa.large_string())
-            sh = shards.to_numpy(dtype=np.int64, na_value=0)
-            yield pd.Series(probe_batch(arr, sh, cache))
+            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.array(probe_batch(keys, sh, cache))
 
     return probe
 
@@ -558,8 +405,6 @@ def sharded_scaling_remove(
     zero). Saturated counters carry the reference's documented
     remove-after-saturation hazard, exactly as in the driver-side
     path."""
-    from dablooms_spark.core.codec import delta_decode
-
     width = max(capacity - 1, 1) * num_shards
     geom_cache: dict[int, BloomGeometry] = {}
     pieces = _pieces_df(deletions, key_col, id_col, capacity, error_rate,
@@ -620,21 +465,11 @@ def sharded_scaling_remove(
         if piece_pdf.empty:
             return layer_pdf[out_fields]
         cb = CountingBloom.from_bytes(bytes(row["blob"]), seed=seed)
-        acc = np.zeros(cb.geometry.size, dtype=np.int32)
-        removed = 0
-        for gap_bytes, exc_bytes, val_bytes in zip(
-            piece_pdf.idx, piece_pdf.exc, piece_pdf.vals
-        ):
-            idx = delta_decode(gap_bytes, exc_bytes)
-            np.add.at(
-                acc, idx, np.frombuffer(val_bytes, dtype=np.uint8).astype(np.int32)
-            )
         removed = int(piece_pdf.n.sum())
-        np.clip(acc, 0, 15, out=acc)
         dl = CountingBloom(
             cb.geometry.capacity, cb.geometry.error_rate,
             first_id=cb.first_id, seed=seed,
-            _counters=acc.astype(np.uint8), _count=removed,
+            _counters=fold(piece_pdf, cb.geometry.size), _count=removed,
         )
         cb = cb.subtract(dl)
         cb.count = max(int(row["n"]) - removed, 0)

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from dablooms_spark.core import CountingBloom
 from dablooms_spark.operators import build_counting_bloom, bloom_probe_column
-from dablooms_spark.operators.bloom_build import counting_bloom_partials, _tree_merge
+from dablooms_spark.operators.bloom_build import counting_bloom_partials
 from dablooms_spark.sources import load_table
 from dablooms_spark.sources.checkpoint import CheckpointManager, checkpoint_sketch
 

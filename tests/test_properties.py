@@ -122,11 +122,11 @@ def test_hll_merge_commutes(keys, split):
 def test_delta_codec_roundtrip(idx):
     import numpy as np
 
-    from dablooms_spark.operators.bloom_build import _delta_decode, _delta_encode
+    from dablooms_spark.core.codec import delta_decode, delta_encode
 
     arr = np.sort(np.array(idx, dtype=np.int64))
-    gaps, exc = _delta_encode(arr)
-    out = _delta_decode(gaps, exc)
+    gaps, exc = delta_encode(arr)
+    out = delta_decode(gaps, exc)
     assert np.array_equal(out, arr)
 
 

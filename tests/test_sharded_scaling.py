@@ -366,7 +366,7 @@ def test_num_shards_drift_raises(spark):
 def test_sharded_chunked_flush_bit_identical(spark, monkeypatch):
     """PIECE_FLUSH_ELEMS chunking is invisible to the sharded scaling
     build: tiny flush budget on a single giant partition == default."""
-    import dablooms_spark.operators.bloom_build as bb
+    import dablooms_spark.core.pieces as pieces
 
     rows = _rows(spark, n=8_000, parts=1)
 
@@ -380,7 +380,7 @@ def test_sharded_chunked_flush_bit_identical(spark, monkeypatch):
         }
 
     base = snap()
-    monkeypatch.setattr(bb, "PIECE_FLUSH_ELEMS", 1024)
+    monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 1024)
     assert snap() == base
 
 
@@ -478,6 +478,27 @@ def test_driver_fold_matches_distributed(spark):
         assert bytes(a[k].blob) == bytes(b[k].blob), k
         for col in ("layer_eps", "capacity", "max_id", "sb_eps", "n", "num_shards"):
             assert a[k][col] == b[k][col], (k, col)
+
+    # grouped sketch finalize takes the same gate: approx_distinct_by
+    # and quantiles_by (KLL) answer identically either way. Groups stay
+    # below the KLL k, so no compaction makes the fold order matter.
+    from dablooms_spark.operators.sketch_agg import approx_distinct_by, quantiles_by
+
+    ev = spark.range(0, 500, 1, 4).select(
+        (F.col("id") % 5).cast("string").alias("g"), (F.col("id") * 7 % 389).alias("v")
+    )
+    for agg in (
+        lambda: approx_distinct_by(ev, "g", "v", p=10),
+        lambda: quantiles_by(ev, "g", "v", [0.1, 0.5, 0.9], kind="kll", k=200),
+    ):
+        drv_rows = sorted(map(tuple, agg().collect()))
+        spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+        try:
+            dist_rows = sorted(map(tuple, agg().collect()))
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+        assert len(drv_rows) >= 5
+        assert drv_rows == dist_rows
 
 
 def test_counting_driver_fold_matches_distributed(spark):

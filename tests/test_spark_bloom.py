@@ -152,24 +152,6 @@ def test_webpages_bloom_end_to_end(spark):
     assert fp / 10_000 <= 0.05 * 1.2
 
 
-def test_probe_pandas_fallback_matches_arrow(spark, docs, monkeypatch):
-    """The pandas_udf fallback (pre-4.1 runtimes) must verdict
-    identically to the arrow_udf hot path."""
-    import dablooms_spark.operators.bloom_probe as bp
-
-    filt = build_counting_bloom(docs, "text", capacity=600, error_rate=0.05)
-    probe_df = docs.select("doc_id", "text").union(
-        docs.sparkSession.range(300).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("absent-"), F.col("id")).alias("text"),
-        )
-    )
-    arrow = {r.doc_id: r.is_member for r in bloom_probe_column(probe_df, "text", filt).collect()}
-    monkeypatch.setattr(bp, "_arrow_udf", None)
-    pandas_ = {r.doc_id: r.is_member for r in bp.bloom_probe_column(probe_df, "text", filt).collect()}
-    assert arrow == pandas_
-
-
 def test_auto_semi_join_strategies_exact_and_plan(spark, sf_dir):
     """auto_semi_join returns exactly LEFT SEMI under all three
     strategies, records its decision, and the physical plan matches:
@@ -557,7 +539,7 @@ def test_chunked_piece_flush_bit_identical(spark, monkeypatch):
     scaling build and the distributed deletion blobs."""
     import copy
 
-    import dablooms_spark.operators.bloom_build as bb
+    import dablooms_spark.core.pieces as pieces
     from dablooms_spark.operators import build_scaling_bloom
     from dablooms_spark.operators.bloom_build import scaling_bloom_fixed_partials
     from dablooms_spark.operators.bloom_remove import bloom_remove_distributed
@@ -573,7 +555,7 @@ def test_chunked_piece_flush_bit_identical(spark, monkeypatch):
     }
     # ~7 hash funcs x 12k rows >> 1024: forces many flushes in the one
     # giant partition
-    monkeypatch.setattr(bb, "PIECE_FLUSH_ELEMS", 1024)
+    monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 1024)
     chunked = {
         (r.first_id,): (bytes(r.blob), r.n)
         for r in scaling_bloom_fixed_partials(
@@ -586,11 +568,11 @@ def test_chunked_piece_flush_bit_identical(spark, monkeypatch):
     filt = build_scaling_bloom(
         df, "key", "id", capacity=1500, error_rate=0.05, id_layout="dense"
     )
-    monkeypatch.setattr(bb, "PIECE_FLUSH_ELEMS", 4 << 20)
+    monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 4 << 20)
     unchunked = bloom_remove_distributed(
         copy.deepcopy(filt), df.filter("id % 3 = 0").coalesce(1), "key", id_col="id"
     )
-    monkeypatch.setattr(bb, "PIECE_FLUSH_ELEMS", 1024)
+    monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 1024)
     chunked_rm = bloom_remove_distributed(
         copy.deepcopy(filt), df.filter("id % 3 = 0").coalesce(1), "key", id_col="id"
     )
@@ -611,13 +593,13 @@ def test_approx_n_keys_slack_covers_undershoot(spark):
 def test_fixed_partials_dense_piece_bit_identity(spark, tmp_path, monkeypatch):
     """The dense-piece drain encoding (banded bincount, empty-idx
     marker) is a pure transport optimization: sparse-only
-    (dense_piece_frac=None, the pre-dense code path), the default
+    (DENSE_PIECE_FRAC=None, the pre-dense code path), the default
     mixed threshold, and all-dense (frac=0.0) must produce
     BIT-IDENTICAL layer artifacts — the artifact is invariant to both
     encoding and piece boundaries (min(15, Σ min(15, tᵢ)) ==
     min(15, Σ tᵢ)). A tiny flush threshold forces mid-stream drains,
     exercising the hold-back of the still-filling layer."""
-    from dablooms_spark.operators import bloom_build as bb
+    from dablooms_spark.core import pieces
     from dablooms_spark.operators.bloom_build import (
         scaling_bloom_fixed_partials,
     )
@@ -628,20 +610,21 @@ def test_fixed_partials_dense_piece_bit_identity(spark, tmp_path, monkeypatch):
     blobs = []
     # 20k elems ≈ many drains per partition at this size; the frac=0.7
     # variant drains mid-layer with hold-back active
-    monkeypatch.setattr(bb, "PIECE_FLUSH_ELEMS", 20_000)
+    monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 20_000)
     for name, frac in [("sparse", None), ("mixed", 0.5), ("dense", 0.0),
                        ("holdback", 0.7)]:
         path = str(tmp_path / f"dpf_{name}")
+        monkeypatch.setattr(pieces, "DENSE_PIECE_FRAC", frac)
         scaling_bloom_fixed_partials(
             df.repartition(5), "key", "id", capacity=2_000,
-            error_rate=0.05, dense_piece_frac=frac,
+            error_rate=0.05,
         ).write.parquet(path)
         blobs.append(
             {r.first_id: bytes(r.blob)
              for r in spark.read.parquet(path).collect()}
         )
     assert blobs[0] == blobs[1] == blobs[2] == blobs[3]
-    monkeypatch.setattr(bb, "PIECE_FLUSH_ELEMS", 4 << 20)
+    monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 4 << 20)
     # saturation parity: heavy duplicate keys clip counters at 15 the
     # same way through both encodings (per-piece clip, then sum+clip)
     dup = spark.range(4_000).select(
@@ -650,15 +633,27 @@ def test_fixed_partials_dense_piece_bit_identity(spark, tmp_path, monkeypatch):
     pair = []
     for name, frac in [("sat_sparse", None), ("sat_dense", 0.0)]:
         path = str(tmp_path / name)
+        monkeypatch.setattr(pieces, "DENSE_PIECE_FRAC", frac)
         scaling_bloom_fixed_partials(
             dup.repartition(4), "key", "id", capacity=2_000,
-            error_rate=0.05, dense_piece_frac=frac,
+            error_rate=0.05,
         ).write.parquet(path)
         pair.append(
             {r.first_id: bytes(r.blob)
              for r in spark.read.parquet(path).collect()}
         )
     assert pair[0] == pair[1]
+    # the wide counting build cuts its pieces into counter-range
+    # chunks: all-dense chunks fold to the same counters as sparse ones
+    from dablooms_spark.operators import build_counting_bloom
+
+    wide = []
+    for frac in (None, 0.0):
+        monkeypatch.setattr(pieces, "DENSE_PIECE_FRAC", frac)
+        wide.append(build_counting_bloom(
+            df.repartition(3), "key", capacity=300_000, error_rate=0.01
+        ).counters)
+    assert np.array_equal(wide[0], wide[1])
 
 
 def test_fixed_layer_eps_budget_and_savings():
@@ -771,3 +766,22 @@ def test_driver_merge_routing_bit_identical(spark):
     finally:
         spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
     assert sdrv.to_bytes() == sdist.to_bytes()
+
+    # the scaling distributed remove folds its deletion pieces through
+    # the same gate: driver-folded and exchange-merged deletion blobs
+    # subtract identically
+    import copy
+
+    from dablooms_spark.operators.bloom_remove import bloom_remove_distributed
+
+    dels = df.filter("id % 3 = 0")
+    rdrv = bloom_remove_distributed(copy.deepcopy(sdrv), dels, "key", id_col="id")
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+    try:
+        rdist = bloom_remove_distributed(
+            copy.deepcopy(sdrv), dels, "key", id_col="id"
+        )
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+    assert rdrv.to_bytes() != sdrv.to_bytes()
+    assert rdrv.to_bytes() == rdist.to_bytes()

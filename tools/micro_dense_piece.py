@@ -1,15 +1,16 @@
 """Deterministic interleaved micro A/B: sparse vs dense layer pieces.
 
-Reproduces the evidence behind the dense-piece drain encoding in
-scaling_bloom_fixed_partials (BENCH/BASELINE.md "Dense layer pieces"):
-one FULL layer slice at the paired-bench shape — 200k rows x nfuncs
-indices into the 81-layer uniform-schedule geometry (capacity 200k,
-eps 0.01) — pushed end-to-end through both piece paths:
+Reproduces the evidence behind the dense-piece drain encoding of
+core/pieces.py (BENCH/BASELINE.md "Dense layer pieces"): one FULL
+layer slice at the paired-bench shape — 200k rows x nfuncs indices
+into the 81-layer uniform-schedule geometry (capacity 200k, eps 0.01)
+— pushed end-to-end through the shipped PieceEncoder and fold, once
+per encoding (DENSE_PIECE_FRAC=None forces sparse, 0.0 forces dense):
 
   sparse: np.unique (whole-space sort) -> gap/exception delta codec ->
-          merge via delta_decode + np.add.at scatter
+          fold via delta_decode + np.add.at scatter
   dense:  per-KM-band bincount (band space is L2-resident) ->
-          raw clipped uint8 counters -> merge via vector add
+          raw clipped uint8 counters -> fold via vector add
 
 Both paths must produce the identical merged counter array (asserted),
 and min(15, sum(min(15, t_i))) == min(15, sum(t_i)) makes the shipped
@@ -27,10 +28,11 @@ import sys
 import time
 
 import numpy as np
+import pyarrow as pa
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
-from dablooms_spark.core.codec import delta_decode, delta_encode  # noqa: E402
+from dablooms_spark.core import pieces  # noqa: E402
 from dablooms_spark.core.geometry import BloomGeometry  # noqa: E402
 from dablooms_spark.operators.bloom_build import fixed_layer_eps  # noqa: E402
 
@@ -39,65 +41,50 @@ def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 11
     g = BloomGeometry(200_000, fixed_layer_eps(3, 0.01, 81))
-    size, nf, cpf = g.size, g.nfuncs, g.counts_per_func
     rng = np.random.default_rng(3)
 
-    def mk_slice(n: int) -> np.ndarray:
-        # km_expand-shaped banded indices from random hash words
-        h1 = rng.integers(0, 2**32, n, dtype=np.uint32)
-        h2 = rng.integers(0, 2**32, n, dtype=np.uint32)
-        i = np.arange(nf, dtype=np.uint32)
-        with np.errstate(over="ignore"):
-            mixed = h1[:, None] + i[None, :] * h2[:, None]
-        idx = mixed % np.uint32(cpf)
-        idx += (i * np.uint32(cpf))[None, :]
-        return idx.ravel()
+    def route(batch):
+        yield (0,), batch.column(0).to_numpy(), batch.column(1).to_numpy(), None
 
-    # 8 Arrow-batch-sized chunks, as piece_stage would accumulate them
-    chunks = [mk_slice(rows // 8) for _ in range(8)]
+    def stage(frac):
+        enc = pieces.PieceEncoder(["layer"], lambda key: g)
+        enc.dense_frac = frac  # None: sparse only; 0.0: always dense
+        return enc.map_fn(route)
 
-    def sparse_path(chs):
-        nz, cnts = np.unique(np.concatenate(chs), return_counts=True)
-        gaps, exc = delta_encode(nz.astype(np.int64))
-        vals = np.minimum(cnts, 15).astype(np.uint8).tobytes()
-        acc = np.zeros(size, dtype=np.int32)
-        idx = delta_decode(gaps, exc)
-        np.add.at(
-            acc, idx, np.frombuffer(vals, dtype=np.uint8).astype(np.int32)
-        )
-        np.clip(acc, 0, 15, out=acc)
-        return acc.astype(np.uint8), len(gaps) + len(exc) + len(vals)
+    sparse_stage, dense_stage = stage(None), stage(0.0)
 
-    def dense_path(chs):
-        cat = np.concatenate(chs).reshape(-1, nf)
-        out = np.empty(size, dtype=np.uint8)
-        for b in range(nf):
-            db = np.bincount(cat[:, b] - b * cpf, minlength=cpf)
-            np.minimum(db, 15, out=db)
-            out[b * cpf:(b + 1) * cpf] = db
-        payload = out.tobytes()
-        acc = np.zeros(size, dtype=np.int32)
-        acc += np.frombuffer(payload, dtype=np.uint8)
-        np.clip(acc, 0, 15, out=acc)
-        return acc.astype(np.uint8), len(payload)
+    def run(piece_stage):
+        # encode in the map stage, fold as the merge does (pandas group)
+        pdf = pa.Table.from_batches(list(piece_stage(iter(batches)))).to_pandas()
+        payload = sum(len(v) for c in ("idx", "exc", "vals") for v in pdf[c])
+        return pieces.fold(pdf, g.size), payload
 
-    a, bytes_sparse = sparse_path(chunks)
-    b, bytes_dense = dense_path(chunks)
+    # 8 Arrow-batch-sized chunks of murmur hash words (uniform), as the
+    # piece stage receives them
+    batches = [
+        pa.RecordBatch.from_pydict({
+            "h1": rng.integers(0, 2**32, rows // 8, dtype=np.uint32),
+            "h2": rng.integers(0, 2**32, rows // 8, dtype=np.uint32),
+        })
+        for _ in range(8)
+    ]
+    a, bytes_sparse = run(sparse_stage)
+    b, bytes_dense = run(dense_stage)
     assert np.array_equal(a, b), "paths disagree — encoding bug"
 
     for _ in range(2):  # warm caches/allocator
-        sparse_path(chunks)
-        dense_path(chunks)
+        run(sparse_stage)
+        run(dense_stage)
     ts, td = [], []
     for _ in range(trials):  # interleaved: epoch drift divides out
         t0 = time.perf_counter()
-        sparse_path(chunks)
+        run(sparse_stage)
         ts.append(time.perf_counter() - t0)
         t0 = time.perf_counter()
-        dense_path(chunks)
+        run(dense_stage)
         td.append(time.perf_counter() - t0)
     print(json.dumps({
-        "rows_per_layer": rows, "layer_size": size, "nfuncs": nf,
+        "rows_per_layer": rows, "layer_size": g.size, "nfuncs": g.nfuncs,
         "trials": trials, "identical": True,
         "payload_bytes": {"sparse": bytes_sparse, "dense": bytes_dense},
         "sparse_ms": {"min": round(min(ts) * 1000, 1),
