@@ -166,20 +166,25 @@ class PieceEncoder:
             max_id: dict[Key, int] = {}
 
             def drain(final: bool) -> pa.RecordBatch | None:
-                # mid-stream, hold back the keys this batch is still
-                # filling unless they already clear the dense
-                # threshold: flushing would fragment a would-be dense
-                # key into sparse slivers. Held memory stays below
-                # dense_frac·size per key.
-                held = set()
-                if not final and self.dense_frac is not None:
-                    held = {
-                        k for k in touched
-                        if elems[k] < self.dense_frac * self.geometry_of(k).size
-                    }
+                # mid-stream, hold back the ONE key routed last (the
+                # key the stream is still filling) while it is below
+                # the dense threshold: flushing it would fragment a
+                # would-be dense key into sparse slivers. The held key
+                # is also capped at the flush budget, so after every
+                # drain fewer than flush_elems indices remain and the
+                # stage never holds more than ~2 flush budgets plus
+                # one batch, whatever the key sizes.
+                held = None
+                if not final and self.dense_frac is not None and last in parts:
+                    cap = min(
+                        self.dense_frac * self.geometry_of(last).size,
+                        self.flush_elems,
+                    )
+                    if elems[last] < cap:
+                        held = last
                 out = {f: [] for f in self.schema.names}
                 for k in sorted(parts):
-                    if k in held:
+                    if k == held:
                         continue
                     first = True
                     for c, idx, exc, vals in self._encode(k, parts[k], elems[k]):
@@ -194,14 +199,14 @@ class PieceEncoder:
                         first = False
                 for d in (parts, elems, rows, max_id):
                     for k in list(d):
-                        if k not in held:
+                        if k != held:
                             del d[k]
                 if not out["idx"]:
                     return None
                 return pa.RecordBatch.from_pydict(out, schema=self.schema)
 
+            last = None
             for batch in batches:
-                touched: set[Key] = set()
                 for key, h1, h2, ids in route(batch):
                     g = self.geometry_of(key)
                     arr = km_expand(h1, h2, g.nfuncs, g.counts_per_func).ravel()
@@ -210,7 +215,7 @@ class PieceEncoder:
                     rows[key] = rows.get(key, 0) + len(h1)
                     top = int(ids.max()) if ids is not None else 0
                     max_id[key] = max(max_id.get(key, 0), top)
-                    touched.add(key)
+                    last = key
                 if sum(elems.values()) >= self.flush_elems:
                     rb = drain(final=False)
                     if rb is not None:

@@ -38,12 +38,13 @@ from dablooms_spark.core.pieces import PieceEncoder, chunk_bounds, fold, runs
 from dablooms_spark.core.scaling_bloom import ScalingBloom
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-from dablooms_spark.operators.merge import _BLOB_SCHEMA, fold_or_exchange, merge_blobs
-from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
-
-_BLOB_SCHEMA_PA = pa.schema(
-    [("shard", pa.int64()), ("blob", pa.large_binary()), ("n", pa.int64())]
+from dablooms_spark.operators.merge import (
+    _BLOB_SCHEMA,
+    _BLOB_SCHEMA_PA,
+    fold_or_exchange,
+    merge_blobs,
 )
+from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
 
 
 #: optimized-logical-plan nodes that are NARROW (no exchange, no

@@ -90,28 +90,21 @@ def bloom_remove(filt, deletions: DataFrame, key_col: str,
     return filt
 
 
-def _scaling_deletion_blobs(
+def _deletion_pieces(
     deletions: DataFrame,
     key_col: str,
     id_col: str,
     skeleton: list[tuple[int, int, float]],
     seed: int,
-) -> list:
-    """Rows (layer, blob, n): one deletion-count filter per TOUCHED
-    layer of the target's layer skeleton ((first_id, capacity,
-    error_rate) per layer, tiny — rides in the task closure).
-
-    Stage 1 (mapInArrow, no row shuffle): hash keys zero-copy, route
-    each row to its layer (newest layer with first_id <= id — the
-    scaling_bloom_remove ≈L517 scan as a searchsorted), and emit one
-    counter piece per (partition, touched layer). Pieces saturate at
-    15: counters never exceed 15, so the clipped multiplicity
-    subtracts identically to the true one. Stage 2 folds each layer's
-    pieces into one self-describing deletion blob — on the driver
-    when the deletions frame is small, else in one groupBy(layer)
-    exchange (pieces, never rows)."""
-    from dablooms_spark.core.counting_bloom import CountingBloom
-
+) -> DataFrame:
+    """Map-only stage of the scaling remove (no row shuffle): hash keys
+    zero-copy, route each row to its layer of the target's skeleton
+    ((first_id, capacity, error_rate) per layer, tiny — rides in the
+    task closure) — the newest layer with first_id <= id, the
+    scaling_bloom_remove ≈L517 scan as a searchsorted — and emit one
+    counter piece (core/pieces.py) per (partition, touched layer).
+    Pieces saturate at 15: counters never exceed 15, so the clipped
+    multiplicity subtracts identically to the true one."""
     first_ids = np.array([fid for fid, _, _ in skeleton], dtype=np.int64)
     geoms = [BloomGeometry(cap, eps) for _, cap, eps in skeleton]
 
@@ -131,7 +124,26 @@ def _scaling_deletion_blobs(
             yield (li,), a, b, i
 
     enc = PieceEncoder(["layer"], lambda key: geoms[key[0]])
-    pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
+    return sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
+
+
+def _scaling_deletion_blobs(
+    deletions: DataFrame,
+    key_col: str,
+    id_col: str,
+    skeleton: list[tuple[int, int, float]],
+    seed: int,
+) -> list:
+    """Rows (layer, blob, n): one deletion-count filter per TOUCHED
+    layer of the target's layer skeleton. Stage 1 is
+    _deletion_pieces; stage 2 folds each layer's pieces into one
+    self-describing deletion blob — on the driver when the deletions
+    frame is small, else in one groupBy(layer) exchange (pieces, never
+    rows)."""
+    from dablooms_spark.core.counting_bloom import CountingBloom
+
+    geoms = [BloomGeometry(cap, eps) for _, cap, eps in skeleton]
+    pieces = _deletion_pieces(deletions, key_col, id_col, skeleton, seed)
 
     def merge_layer(pdf):
         import pandas as pd

@@ -19,6 +19,7 @@ import math
 from collections.abc import Callable
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,7 +28,12 @@ from dablooms_spark.core.scaling_bloom import ScalingBloom
 from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 
+# the (shard, blob, n) partial-blob row, as Spark DDL and as the
+# Arrow schema the mapInArrow stages that emit it build batches with
 _BLOB_SCHEMA = "shard long, blob binary, n long"
+_BLOB_SCHEMA_PA = pa.schema(
+    [("shard", pa.int64()), ("blob", pa.large_binary()), ("n", pa.int64())]
+)
 
 
 def _driver_merge_max_bytes(spark) -> int:

@@ -367,6 +367,8 @@ def test_sharded_chunked_flush_bit_identical(spark, monkeypatch):
     """PIECE_FLUSH_ELEMS chunking is invisible to the sharded scaling
     build: tiny flush budget on a single giant partition == default."""
     import dablooms_spark.core.pieces as pieces
+    from dablooms_spark.functions.murmur import DABLOOMS_SEED
+    from dablooms_spark.operators.sharded_scaling import _pieces_df
 
     rows = _rows(spark, n=8_000, parts=1)
 
@@ -382,6 +384,28 @@ def test_sharded_chunked_flush_bit_identical(spark, monkeypatch):
     base = snap()
     monkeypatch.setattr(pieces, "PIECE_FLUSH_ELEMS", 1024)
     assert snap() == base
+    # 8,000 rows arrive as ONE Arrow batch by default; with several
+    # batches per partition the tiny budget drains mid-stream, so
+    # every (shard, layer) spanning several batches ships more than
+    # one piece — memory stays bounded although each batch touches
+    # every shard — and the layers are still bit-identical
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    try:
+        assert snap() == base
+        per_key = (
+            _pieces_df(rows.coalesce(1), "k", "id", CAP, EPS, SHARDS, DABLOOMS_SEED)
+            .groupBy("shard", "layer")
+            .agg(F.count("*").alias("pieces"), F.sum("n").alias("n"),
+                 F.max("n").alias("piece_rows"))
+            .collect()
+        )
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spanning = [r for r in per_key if r.n > 1_000]
+    assert len(spanning) >= SHARDS
+    assert all(r.pieces > 1 for r in spanning), per_key
+    # no piece carries more than two batches of rows
+    assert max(r.piece_rows for r in per_key) <= 1_000
 
 
 def test_sharded_uniform_schedule_build_probe_remove(spark):

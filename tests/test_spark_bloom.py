@@ -578,6 +578,34 @@ def test_chunked_piece_flush_bit_identical(spark, monkeypatch):
     )
     assert chunked_rm.to_bytes() == unchunked.to_bytes()
 
+    # the drain really is bounded: several Arrow batches in ONE
+    # partition under a tiny budget give every layer that spans more
+    # than one batch more than one deletion piece (nothing waits for
+    # the end of the partition)
+    from dablooms_spark.functions.murmur import DABLOOMS_SEED
+    from dablooms_spark.operators.bloom_remove import _deletion_pieces
+
+    skeleton = [
+        (l.first_id, l.geometry.capacity, l.geometry.error_rate)
+        for l in filt.layers
+    ]
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    try:
+        per_layer = (
+            _deletion_pieces(df.coalesce(1), "key", "id", skeleton, DABLOOMS_SEED)
+            .groupBy("layer")
+            .agg(F.count("*").alias("pieces"), F.sum("n").alias("n"),
+                 F.max("n").alias("piece_rows"))
+            .collect()
+        )
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spanning = [r for r in per_layer if r.n > 1_000]
+    assert len(spanning) >= len(skeleton) - 1
+    assert all(r.pieces > 1 for r in spanning), per_layer
+    # no piece carries more than two batches of rows
+    assert max(r.piece_rows for r in per_layer) <= 1_000
+
 
 def test_approx_n_keys_slack_covers_undershoot(spark):
     """Filter pricing uses approx_count_distinct (map-side HLL
