@@ -149,9 +149,9 @@ def _q_sharded_scaling_semi_lineitem(spark: SparkSession, sf_dir: str) -> DataFr
 def _q_generation_window_semi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rotating-generation windowed membership ("seen in the last N
     days?"): one counting bloom per (2-day generation, key-hash shard)
-    over user:event_type keys — rows never shuffle, blobs do — the
-    live window's blobs counter-summed per shard (membership-OR
-    preserved; counts only grow), survivors confirmed exactly. Expiry
+    over user:event_type keys — rows never shuffle, counter pieces
+    do — each live generation probed as its own layer, newest first
+    (FP ≤ Σ per-generation ε), survivors confirmed exactly. Expiry
     at scale is a gen-partition drop, never a per-key decrement; per-
     generation semantics stay counting_bloom add/check
     (src/dablooms.c ≈L202/≈238)."""

@@ -21,6 +21,11 @@ A piece row is (key columns..., idx, exc, vals, n, max_id):
 
 n is the key's row count (carried by one piece per key), max_id the
 largest routing id seen (0 when the stage has no ids).
+
+on_overflow='error' (a strict filter, CountingBloom's reference-parity
+mode) refuses instead of clipping: the encoder raises when a key's
+count within one piece passes 15, the fold when the summed counters
+do — together exactly the counters whose true total passes 15.
 """
 
 from __future__ import annotations
@@ -87,11 +92,23 @@ def runs(codes: np.ndarray, *cols: np.ndarray) -> Iterator[tuple]:
         yield (int(sc[lo]), *(c[lo:hi] for c in cols))
 
 
-def dense_counts(parts: list[np.ndarray], g: BloomGeometry) -> np.ndarray:
+def _refuse_overflow(raw: np.ndarray, strict: bool) -> None:
+    if strict and raw.max(initial=0) > 15:
+        raise OverflowError(
+            "increment would overflow a 4-bit counter (strict "
+            "on_overflow='error' filter; the reference bitmap_increment "
+            "refuses it)"
+        )
+
+
+def dense_counts(
+    parts: list[np.ndarray], g: BloomGeometry, strict: bool = False
+) -> np.ndarray:
     """Clipped uint8 counters from raveled (rows, nfuncs) km_expand
     chunks: one bincount per KM band, whose counter space
     (counts_per_func cells) is L2-resident, so the scatter never
-    leaves cache the way a whole-space sort does."""
+    leaves cache the way a whole-space sort does. `strict` raises
+    instead of clipping."""
     cat = np.concatenate(parts).reshape(-1, g.nfuncs)
     cpf = g.counts_per_func
     out = np.empty(g.size, dtype=np.uint8)
@@ -99,6 +116,7 @@ def dense_counts(parts: list[np.ndarray], g: BloomGeometry) -> np.ndarray:
         # plain-int offset: exact in both the uint32 and the
         # giant-geometry int64 km_expand dtypes
         db = np.bincount(cat[:, b] - b * cpf, minlength=cpf)
+        _refuse_overflow(db, strict)
         np.minimum(db, 15, out=db)
         out[b * cpf:(b + 1) * cpf] = db
     return out
@@ -116,17 +134,22 @@ class PieceEncoder:
     gives the key's counter space. With chunks > 1 each key's space is
     cut into counter ranges on emit and the chunk number becomes the
     last key field (counter-range merge parallelism for one wide
-    filter)."""
+    filter). on_overflow='error' raises instead of clipping a piece's
+    counts (see the module docstring)."""
 
     def __init__(
         self,
         key_fields: Iterable[str],
         geometry_of: Callable[[Key], BloomGeometry],
         chunks: int = 1,
+        on_overflow: str = "saturate",
     ):
         self.key_fields = list(key_fields)
         self.geometry_of = geometry_of
         self.chunks = chunks
+        if on_overflow not in ("saturate", "error"):
+            raise ValueError("on_overflow must be 'saturate' or 'error'")
+        self.strict = on_overflow == "error"
         self.flush_elems = PIECE_FLUSH_ELEMS
         self.dense_frac = DENSE_PIECE_FRAC
         cols = [(f, "long") for f in self.key_fields] + _PIECE_COLUMNS
@@ -138,12 +161,13 @@ class PieceEncoder:
         g = self.geometry_of(key)
         bounds = chunk_bounds(g.size, self.chunks)
         if self.dense_frac is not None and elems >= self.dense_frac * g.size:
-            dense = dense_counts(parts, g)
+            dense = dense_counts(parts, g, self.strict)
             return [
                 (c, b"", b"", dense[bounds[c]:bounds[c + 1]].tobytes())
                 for c in range(self.chunks)
             ]
         nz, cnts = np.unique(np.concatenate(parts), return_counts=True)
+        _refuse_overflow(cnts, self.strict)
         vals = np.minimum(cnts, 15).astype(np.uint8)
         cuts = np.searchsorted(nz, bounds)
         out = []
@@ -227,10 +251,11 @@ class PieceEncoder:
         return stage
 
 
-def fold(pieces, size: int) -> np.ndarray:
+def fold(pieces, size: int, on_overflow: str = "saturate") -> np.ndarray:
     """The one fold: sum a key's pieces (any sparse/dense mix — a
     pandas group or any object with idx/exc/vals columns) into its
-    clipped uint8 counter array of `size` cells."""
+    clipped uint8 counter array of `size` cells; on_overflow='error'
+    raises where a summed counter passes 15."""
     acc = np.zeros(size, dtype=np.int32)
     for idx, exc, vals in zip(pieces.idx, pieces.exc, pieces.vals):
         v = np.frombuffer(vals, dtype=np.uint8)
@@ -243,5 +268,6 @@ def fold(pieces, size: int) -> np.ndarray:
                     f"expects {size}"
                 )
             acc += v
+    _refuse_overflow(acc, on_overflow == "error")
     np.clip(acc, 0, 15, out=acc)
     return acc.astype(np.uint8)

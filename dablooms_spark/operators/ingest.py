@@ -37,6 +37,7 @@ from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import counting_bloom_partials, merge_blobs_df
 from dablooms_spark.operators.bloom_probe import bloom_anti_join
+from dablooms_spark.operators.sharded import confirm
 from dablooms_spark.sources.checkpoint import CheckpointManager
 
 
@@ -191,27 +192,6 @@ def _artifact_bytes(blob_dir: str, layers_df: DataFrame) -> int:
     return int(row["b"] or 0)
 
 
-def _anti_from_flag(
-    probed: DataFrame,
-    key_col: str,
-    flag_col: str,
-    exact_seen_df: DataFrame | None,
-    exact_key: str | None,
-) -> DataFrame:
-    """bloom_anti_join's split semantics from a probed flag column:
-    misses are definite new keys (no false negatives); with an exact
-    seen-set the ε-sized hit set is verified by a real anti join."""
-    misses = probed.filter(~F.col(flag_col)).drop(flag_col)
-    if exact_seen_df is None:
-        return misses
-    ek = exact_key or key_col
-    dim = exact_seen_df.select(F.col(ek).alias("__ek")).distinct()
-    candidates = probed.filter(F.col(flag_col)).drop(flag_col)
-    return misses.unionByName(
-        candidates.join(dim, on=F.col(key_col) == F.col("__ek"), how="left_anti")
-    )
-
-
 def incremental_ingest_scaling(
     batch_df: DataFrame,
     key_col: str,
@@ -303,8 +283,8 @@ def incremental_ingest_scaling(
                 batch_df, key_col, one_shard, num_shards=1, salt=salt,
                 seed=seed, out_col="__seen",
             )
-            new_rows = _anti_from_flag(
-                probed, key_col, "__seen", exact_seen_df, exact_key
+            new_rows = confirm(
+                probed, key_col, exact_seen_df, exact_key, anti=True, hit="__seen"
             )
     else:
         new_rows = batch_df
@@ -423,8 +403,8 @@ def incremental_ingest_sharded_scaling(
             batch_df, key_col, prior_layers, num_shards=num_shards,
             salt=salt, seed=seed, out_col="__seen",
         )
-        new_rows = _anti_from_flag(
-            probed, key_col, "__seen", exact_seen_df, exact_key
+        new_rows = confirm(
+            probed, key_col, exact_seen_df, exact_key, anti=True, hit="__seen"
         )
     else:
         new_rows = batch_df

@@ -1,33 +1,47 @@
-"""Sharded counting bloom — filters too big to broadcast.
+"""The layered sharded filter: a filter too big to broadcast, kept as
+a DataFrame of (shard, layer) counting-bloom rows.
 
-A single filter sized for 10^12 keys at ε=0.01 is ~1.4 TB of
-nibbles: it can neither broadcast nor live on the driver. The sharded
-form keeps the filter AS a DataFrame — S shards, each a self-contained
-counting bloom over the keys that hash-route to it — and probes by
-routing probe rows to their shard (`pmod(xxhash64(key), S)`, pure
-Catalyst on both sides) and co-grouping them with the shard blob.
+A filter sized for 10^12 keys at ε=0.01 is ~1.4 TB of nibbles: it can
+neither broadcast nor live on the driver. Each key hash-routes to one
+of S shards (`pmod(xxhash64(key), S)`, pure Catalyst on both sides),
+and each shard holds counting-bloom layers checked newest first, as
+dablooms' scaling filter checks its layers (scaling_bloom_check,
+src/dablooms.c ≈L437 family). Three filters are this one structure
+with a different layer key:
 
-Scale shape:
-- build: per input partition, one partial blob per TOUCHED shard
-  (map-side combine, gap-coded sparse serde), then ONE blob-only
-  shuffle merges partials per shard — rows never shuffle
-  (counting-bloom merge is an exact saturating counter-sum, so
-  shard filters are bit-identical to single-node builds).
-- probe: the probe side shuffles ONCE on (shard, salt) — the
-  unavoidable cost of consulting state too big to replicate; the salt
-  bounds each cogroup task's pandas frame so a hot shard can't OOM a
-  task. Verdicts keep the bloom invariant: no false negatives,
-  false positives ≤ the per-shard configured bound.
+  * sharded counting (the wrappers below): one layer per shard, sized
+    capacity/S;
+  * sharded scaling (sharded_scaling.py): layers keyed by id window;
+  * rotating generations (generations.py): layers keyed by time bucket.
 
-Reference parity: semantics per shard are exactly
-counting_bloom_add/check (src/dablooms.c ≈L202/≈238); sharding is the
-distributed-scale topology the reference's single mmap file cannot
-express.
+The layered core is the one build, probe, remove and confirm of all
+three; a wrapper supplies the layer key, the per-layer geometry and
+the row projection.
+
+- build_layers: one map stage (layer_pieces) emits counter pieces
+  (core/pieces.py) per touched (shard, layer) and input partition;
+  they fold per (shard, layer) on the driver or in one piece-only
+  exchange (merge.fold_or_exchange). Rows never shuffle; the fold is
+  an exact saturating counter sum, bit-identical to one node's build.
+- probe_layers: a key walks its shard's layers newest first and stops
+  at the first that answers "present" — in a broadcast UDF when the
+  blobs fit spark.dablooms.probe.autoBroadcastBytes, else in a
+  (shard, salt) cogroup whose salt bounds a hot shard's task. No
+  false negatives; FP ≤ Σ of the shard's per-layer ε.
+- remove_layers: deletion pieces co-group with the layer rows and
+  subtract counter-wise, floored at zero (counting_bloom_remove ≈L220).
+- confirm: the exact LEFT SEMI / ANTI pass over the bloom verdicts.
+
+Per (shard, layer) semantics are exactly counting_bloom_add/check
+(≈L202/≈238); sharding is the topology the reference's single mmap
+file cannot express.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import operator
+from collections.abc import Callable, Iterable
+from functools import reduce
 from typing import Iterator as TIterator
 from typing import Tuple as TTuple
 
@@ -40,11 +54,16 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
+from dablooms_spark.core.geometry import BloomGeometry
+from dablooms_spark.core.pieces import PieceEncoder, fold, runs
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-from dablooms_spark.operators.merge import fold_or_exchange
+from dablooms_spark.operators.bloom_probe import _parse_size_bytes, _semi_dim
+from dablooms_spark.operators.merge import _BLOB_SCHEMA, fold_or_exchange
 
 _SHARD_SEED = 0x5D
+
+Geometry = Callable[[int], BloomGeometry]
 
 
 def _shard_expr(key, num_shards: int):
@@ -54,254 +73,194 @@ def _shard_expr(key, num_shards: int):
 
 
 def _probe_broadcast_bytes(spark) -> int:
-    """Size ceiling under which a sharded filter's blobs are collected
-    and BROADCAST for a shuffle-free probe instead of co-grouped
-    (guide §2.4/§3.1: a broadcast of the small side replaces a shuffle
-    of the big side — here the big side is every probe row with all
-    its payload columns). Parameterised via
-    spark.dablooms.probe.autoBroadcastBytes (size string; '0' disables
-    broadcast routing entirely); the 64 MiB default is an
-    executor-memory bound, independent of data scale: filters above it
-    keep the cogroup topology that never materializes the filter in
-    one place."""
-    from dablooms_spark.operators.bloom_probe import _parse_size_bytes
-
+    """Blob bytes under which a sharded filter is broadcast instead of
+    co-grouped with every probe row (spark.dablooms.probe.
+    autoBroadcastBytes, default 64 MiB, executor-memory bound; '0' off)."""
     try:
-        v = spark.conf.get("spark.dablooms.probe.autoBroadcastBytes", "64m")
-    except Exception:
-        v = "64m"
-    try:
-        return _parse_size_bytes(v)
+        return _parse_size_bytes(
+            spark.conf.get("spark.dablooms.probe.autoBroadcastBytes", "64m")
+        )
     except Exception:
         return 64 << 20
 
 
-def _measure_blobs(blobs_df: DataFrame) -> tuple[DataFrame, int]:
-    """Persist the blob rows and return (persisted_df, total_blob_bytes).
-
-    One tiny aggregate over the (already small) blob side decides the
-    probe topology; the persist makes the decision pass and the probe
-    itself share ONE computation of the build lineage. In the
-    broadcast outcome the cache is dropped immediately after collect;
-    in the cogroup outcome it stays so the probe reads cached blobs."""
-    blobs_df = blobs_df.persist()
-    row = blobs_df.agg(
-        F.sum(F.length(F.col("blob"))).alias("__bytes")
-    ).first()
-    total = int(row["__bytes"] or 0)
-    return blobs_df, total
+def _check_num_shards(built: int, num_shards: int) -> None:
+    """Refuse rows built with another num_shards (routing and width)."""
+    if int(built) != num_shards:
+        raise ValueError(
+            f"num_shards drift: layer rows were built with "
+            f"num_shards={int(built)}, called with {num_shards} — shard "
+            "routing and layer width differ"
+        )
 
 
-def _broadcast_counting_probe_udf(spark, shard_blobs: dict, seed: int):
-    """Vectorized membership UDF over (key_str, shard) against a
-    broadcast {shard: blob} dict — the shuffle-free probe for sharded
-    counting filters small enough to replicate. Arrow-native; filters
-    deserialize once per task (iterator form)."""
-    bc = spark.sparkContext.broadcast(shard_blobs)
+def layer_pieces(
+    keyed: DataFrame,
+    num_shards: int,
+    geometry: Geometry,
+    seed: int = DABLOOMS_SEED,
+    on_overflow: str = "saturate",
+) -> DataFrame:
+    """The map-only stage of every build and remove: `keyed` carries
+    (key string, layer long[, id long]); rows with a NULL column drop
+    out, each row routes to (its key's shard, its layer), and every
+    input partition emits one counter piece (core/pieces.py) per
+    touched (shard, layer). `geometry(layer)` sizes a layer. An `id`
+    column feeds the pieces' max_id and must be non-negative."""
+    has_ids = "id" in keyed.columns
+    cols = ["key", "layer", "shard"] + (["id"] if has_ids else [])
+    present = reduce(operator.and_, [F.col(c).isNotNull() for c in keyed.columns])
+    sdf = (
+        keyed.filter(present)
+        .withColumn("shard", _shard_expr(F.col("key"), num_shards))
+        .select(*cols)
+    )
 
-    def probe_batch(keys: pa.Array, shards: np.ndarray, cache: dict) -> np.ndarray:
-        blobs = bc.value
-        buf, offs, lens = arrow_byte_view(keys)
+    def route(batch: pa.RecordBatch):
+        layers, shards, *ids = (
+            batch.column(i).to_numpy(zero_copy_only=False).astype(np.int64)
+            for i in range(1, batch.num_columns)
+        )
+        if ids and len(ids[0]) and ids[0].min() < 0:
+            # ids place keys in fixed id windows; refusing beats
+            # silently misrouting (a misrouted key would false-negative)
+            raise ValueError(
+                "fixed-boundary layout requires non-negative ids; "
+                f"got {int(ids[0].min())}"
+            )
+        buf, offs, lens = arrow_byte_view(batch.column(0))
         h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        verdict = np.zeros(len(shards), dtype=bool)
-        for s in np.unique(shards):
-            blob = blobs.get(int(s))
-            if blob is None:
-                continue
-            cb = cache.get(int(s))
-            if cb is None:
-                cb = CountingBloom.from_bytes(blob, seed=seed)
-                cache[int(s)] = cb
-            m = shards == s
-            verdict[m] = cb.check_hashed(h1[m], h2[m])
-        if keys.null_count:
-            # NULL keys are definite non-members (parity with the
-            # cogroup path's mask)
-            verdict &= ~np.asarray(pa.compute.is_null(keys))
-        return verdict
+        # floor div/mod decode negative layers (pre-1970 generations)
+        for code, a, b, *i in runs(layers * num_shards + shards, h1, h2, *ids):
+            layer, shard = divmod(code, num_shards)
+            yield (shard, layer), a, b, (i[0] if i else None)
+
+    enc = PieceEncoder(
+        ["shard", "layer"], lambda k: geometry(k[1]), on_overflow=on_overflow
+    )
+    return sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
+
+
+def build_layers(
+    keyed: DataFrame,
+    num_shards: int,
+    geometry: Geometry,
+    row: Callable[[int, int, CountingBloom, int], dict],
+    schema: str,
+    seed: int = DABLOOMS_SEED,
+    width: int = 0,
+    gate: DataFrame | None = None,
+    on_overflow: str = "saturate",
+) -> DataFrame:
+    """Build a layered sharded filter from `keyed` (see layer_pieces):
+    the pieces fold per (shard, layer) into one CountingBloom each
+    (first_id = layer·width), projected to an output row by
+    `row(shard, layer, bloom, max_id)`. The fold runs on the driver
+    when `gate` (default: `keyed`) is small, else in one exchange."""
+
+    def merge_layer(pdf: pd.DataFrame) -> pd.DataFrame:
+        shard, layer = int(pdf.shard.iloc[0]), int(pdf.layer.iloc[0])
+        g = geometry(layer)
+        cb = CountingBloom(
+            g.capacity, g.error_rate, first_id=layer * width, seed=seed,
+            _counters=fold(pdf, g.size, on_overflow),
+            _count=int(pdf.n.sum()), on_overflow=on_overflow,
+        )
+        out = row(shard, layer, cb, int(pdf.max_id.max()))
+        return pd.DataFrame({c: [v] for c, v in out.items()})
+
+    pieces = layer_pieces(keyed, num_shards, geometry, seed, on_overflow)
+    return fold_or_exchange(
+        pieces, ["shard", "layer"], merge_layer, schema,
+        gate=keyed if gate is None else gate,
+    )
+
+
+def _walk_layers(
+    blooms: Iterable[CountingBloom], h1: np.ndarray, h2: np.ndarray
+) -> np.ndarray:
+    """Membership against a shard's layers, newest first: a key that
+    answers "present" drops out of every older layer's check, and the
+    walk pulls no further layer once every key has."""
+    verdict = np.zeros(len(h1), dtype=bool)
+    pos = np.arange(len(h1))
+    for cb in blooms:
+        if not len(pos):
+            break
+        hit = cb.check_hashed(h1, h2)
+        verdict[pos[hit]] = True
+        miss = ~hit
+        pos, h1, h2 = pos[miss], h1[miss], h2[miss]
+    return verdict
+
+
+def _verdicts(keys: pa.Array, shards: np.ndarray, layers_of, seed: int) -> np.ndarray:
+    """Membership of string `keys` routed to `shards`, each walking
+    `layers_of(shard)` (newest first); NULL keys are definite
+    negatives. Both probe topologies run exactly this."""
+    buf, offs, lens = arrow_byte_view(keys)
+    h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
+    verdict = np.zeros(len(shards), dtype=bool)
+    for s in np.unique(shards).tolist():
+        idx = np.flatnonzero(shards == s)
+        verdict[idx] = _walk_layers(layers_of(s), h1[idx], h2[idx])
+    if keys.null_count:
+        verdict &= ~np.asarray(pa.compute.is_null(keys))
+    return verdict
+
+
+def _broadcast_probe_udf(spark, shard_layers: dict, seed: int):
+    """Arrow UDF over (key_str, shard) against a broadcast {shard:
+    [layer blobs newest first]}; layers deserialize once per task."""
+    bc = spark.sparkContext.broadcast(shard_layers)
 
     @arrow_udf("boolean")
     def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
         cache: dict = {}
+
+        def layers_of(s: int) -> list[CountingBloom]:
+            if s not in cache:
+                cache[s] = [CountingBloom.from_bytes(b, seed=seed)
+                            for b in bc.value.get(s, [])]
+            return cache[s]
+
         for keys, shards in it:
             sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-            yield pa.array(probe_batch(keys, sh, cache))
+            yield pa.array(_verdicts(keys, sh, layers_of, seed))
 
     return probe
 
 
-def build_sharded_counting_bloom(
-    df: DataFrame,
-    key_col: str,
-    capacity: int,
-    error_rate: float,
-    num_shards: int = 64,
-    seed: int = DABLOOMS_SEED,
-    on_overflow: str = "saturate",
-) -> DataFrame:
-    """DataFrame(shard long, blob binary, n long): one counting bloom
-    per key-hash shard, each sized capacity/num_shards. Rows never
-    shuffle — partitions emit per-shard partial blobs, one blob-only
-    shuffle merges them.
-
-    on_overflow='error' extends the reference's bitmap_increment
-    refusal (≈L108) to the sharded topology: partial adds raise
-    executor-side, the strict flag rides each blob header, and the
-    per-shard merge_blobs re-checks cross-partition sums."""
-    if on_overflow not in ("saturate", "error"):
-        raise ValueError("on_overflow must be 'saturate' or 'error'")
-    cap_shard = max(1, capacity // num_shards)
-    sdf = df.select(
-        F.col(key_col).cast("string").alias("key")
-    ).filter(F.col("key").isNotNull()).withColumn(
-        "shard", _shard_expr(F.col("key"), num_shards)
-    )
-
-    def build_partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        filters: dict[int, CountingBloom] = {}
-        for batch in batches:
-            buf, offs, lens = arrow_byte_view(batch.column(0))
-            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-            shards = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.argsort(shards, kind="stable")
-            ss, h1s, h2s = shards[order], h1[order], h2[order]
-            bounds = np.searchsorted(ss, np.arange(num_shards + 1))
-            for s in np.unique(ss):
-                lo, hi = bounds[s], bounds[s + 1]
-                cb = filters.get(int(s))
-                if cb is None:
-                    cb = CountingBloom(
-                        cap_shard, error_rate, seed=seed, on_overflow=on_overflow
-                    )
-                    filters[int(s)] = cb
-                cb.add_hashed(h1s[lo:hi], h2s[lo:hi])
-        if filters:
-            items = sorted(filters.items())
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "shard": [s for s, _ in items],
-                    "blob": [cb.to_bytes() for _, cb in items],
-                    "n": [cb.count for _, cb in items],
-                },
-                schema=pa.schema(
-                    [("shard", pa.int64()), ("blob", pa.large_binary()), ("n", pa.int64())]
-                ),
-            )
-
-    partials = sdf.mapInArrow(build_partials, schema="shard long, blob binary, n long")
-
-    def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = CountingBloom.merge_blobs([bytes(b) for b in pdf.blob], seed=seed)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf.shard.iloc[0])],
-                "blob": [merged.to_bytes()],
-                "n": [int(pdf.n.sum())],
-            }
-        )
-
-    # small inputs (gated on the projected key frame) merge the
-    # per-(partition, shard) partials on the driver — bit-identical:
-    # the merge is an order-invariant saturating counter sum
-    return fold_or_exchange(
-        partials, ["shard"], merge_shard, "shard long, blob binary, n long",
-        gate=sdf,
-    )
-
-
-def sharded_bloom_remove(
-    blobs_df: DataFrame,
-    deletions: DataFrame,
-    key_col: str,
-    capacity: int,
-    error_rate: float,
-    num_shards: int = 64,
-    seed: int = DABLOOMS_SEED,
-    on_overflow: str = "saturate",
-) -> DataFrame:
-    """Counter-decrement deletions against a sharded counting filter,
-    fully in the cluster — counting_bloom_remove (src/dablooms.c
-    ≈L220) at the sharded topology. Returns the new (shard, blob, n)
-    DataFrame; no blob ever visits the driver.
-
-    Deletions run the SAME build pipeline (per-shard deletion-count
-    filters, blob-only shuffle), then each shard cogroup subtracts
-    counter-wise, floored at zero. capacity/error_rate/num_shards/seed
-    must match the build's — sharding and geometry are derived from
-    them. Over-removal (keys never inserted) floors, mirroring the
-    non-strict decrement; pass on_overflow='error' when removing from
-    a strict filter so a deletion key repeated past 15 raises instead
-    of clipping (a clipped deletion count would mask the over-removal
-    the strict mode exists to refuse)."""
-    del_blobs = build_sharded_counting_bloom(
-        deletions, key_col, capacity, error_rate, num_shards, seed, on_overflow
-    )
-    cols = ["shard", "blob", "n"]
-
-    def apply_deletions(keys, blob_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blob_pdf.empty:
-            # deletions routed to a shard that holds no keys: floor
-            return pd.DataFrame(columns=cols)
-        if del_pdf.empty:
-            return blob_pdf[cols]
-        cb = CountingBloom.from_bytes(bytes(blob_pdf.blob.iloc[0]), seed=seed)
-        dl = CountingBloom.merge_blobs([bytes(b) for b in del_pdf.blob], seed=seed)
-        # subtract() floors count at 0 itself (from_bytes restored the
-        # build-side n; merge_blobs summed the deletion partials')
-        cb = cb.subtract(dl)
-        return pd.DataFrame(
-            {"shard": [int(blob_pdf.shard.iloc[0])], "blob": [cb.to_bytes()],
-             "n": [cb.count]}
-        )
-
-    return (
-        blobs_df.groupBy("shard")
-        .cogroup(del_blobs.groupBy("shard"))
-        .applyInPandas(apply_deletions, schema="shard long, blob binary, n long")
-    )
-
-
-def sharded_bloom_probe(
+def probe_layers(
     probe_df: DataFrame,
-    key_col: str,
-    blobs_df: DataFrame,
-    num_shards: int = 64,
+    key,
+    layers: DataFrame,
+    num_shards: int,
     salt: int = 8,
     seed: int = DABLOOMS_SEED,
     out_col: str = "is_member",
-    key_cast: str | None = None,
 ) -> DataFrame:
-    """probe_df + a Boolean membership column, for a sharded filter.
-
-    Probe rows co-group with their shard's blob on (shard, salt): the
-    blob side replicates `salt` ways so a hot shard splits across
-    tasks and no task materializes more than ~rows/(S·salt) as pandas.
-    No false negatives; FPs ≤ the per-shard bound.
-
-    `key_cast`: optional intermediate type applied BEFORE the string
-    cast — must match the build side's cast (see bloom_probe_column).
-
-    Topology is SIZE-ADAPTIVE (guide §2.4): when the filter's total
-    blob bytes fit spark.dablooms.probe.autoBroadcastBytes (default
-    64 MiB, '0' disables) the blobs are collected + broadcast and the
-    verdict is a vectorized UDF column — zero shuffle of the probe
-    side. Bigger filters keep the cogroup topology below, which never
-    materializes the filter in one place. Verdicts are identical
-    either way (same blobs, same hash kernel, same NULL handling).
-    """
-    key = F.col(key_col)
-    if key_cast is not None:
-        key = key.cast(key_cast)
-    key = key.cast("string")
-    spark = probe_df.sparkSession
-    thr = _probe_broadcast_bytes(spark)
+    """probe_df + a Boolean `out_col`: is the string Column `key` in
+    the layered filter `layers` (shard, layer, blob, num_shards)?
+    SIZE-ADAPTIVE (guide §2.4): layers whose blobs fit
+    autoBroadcastBytes are broadcast to a UDF (no probe-side shuffle);
+    bigger ones co-group on (shard, salt), the layer side replicated
+    `salt` ways so no task holds more than ~rows/(S·salt) probe rows.
+    Both give the same verdicts (same blobs, walk and NULL handling)."""
+    thr = _probe_broadcast_bytes(probe_df.sparkSession)
     if thr > 0:
-        blobs_df, total = _measure_blobs(blobs_df)
-        if total <= thr:
-            rows = blobs_df.collect()
-            blobs_df.unpersist()
-            shard_blobs = {int(r["shard"]): bytes(r["blob"]) for r in rows}
-            probe = _broadcast_counting_probe_udf(spark, shard_blobs, seed)
+        # persist: the size check and the probe share ONE computation
+        # of the build lineage (the cache stays for the cogroup probe)
+        layers = layers.persist()
+        total = layers.agg(F.sum(F.length("blob")).alias("b")).first()["b"]
+        if (total or 0) <= thr:
+            rows = layers.collect()
+            layers.unpersist()
+            shard_layers: dict[int, list[bytes]] = {}
+            for r in sorted(rows, key=lambda r: -int(r["layer"])):
+                _check_num_shards(r["num_shards"], num_shards)
+                shard_layers.setdefault(int(r["shard"]), []).append(bytes(r["blob"]))
+            probe = _broadcast_probe_udf(probe_df.sparkSession, shard_layers, seed)
             return probe_df.withColumn(
                 out_col, probe(key, _shard_expr(key, num_shards))
             )
@@ -316,47 +275,204 @@ def sharded_bloom_probe(
         )
     )
     # __salt MUST be long on both sides: cogroup hash-partitions each
-    # side independently and int 0 / long 0 hash to different shuffle
-    # partitions — an int salt silently splits groups into a
-    # probe-only half (all-False verdicts) and an orphan blob half
-    # whenever the sides don't coalesce into one partition
-    b = blobs_df.select(
+    # side independently and int 0 / long 0 hash apart — an int salt
+    # splits groups into a probe-only half (all-False verdicts) and an
+    # orphan layer half whenever the sides don't share a partition
+    b = layers.select(
         F.col("shard").cast("long").alias("__shard"),
         F.explode(
             F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long"))
         ).alias("__salt"),
-        "blob",
+        "layer", "blob", "num_shards",
     )
     out_schema = StructType(
         list(probe_df.schema.fields) + [StructField(out_col, BooleanType())]
     )
     in_cols = [f.name for f in probe_df.schema.fields]
 
-    def probe_group(keys, probe_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
+    def probe_group(keys, probe_pdf: pd.DataFrame, layer_pdf: pd.DataFrame) -> pd.DataFrame:
         if probe_pdf.empty:
             return pd.DataFrame(columns=in_cols + [out_col])
         out = probe_pdf[in_cols]
-        if blob_pdf.empty:
+        if layer_pdf.empty:
             # shard holds no keys: every probe is a definite negative
             return out.assign(**{out_col: False})
-        cb = CountingBloom.from_bytes(bytes(blob_pdf.blob.iloc[0]), seed=seed)
-        keys_str = probe_pdf["__key_str"]
-        arr = pa.array(keys_str.astype(str), type=pa.large_string())
-        buf, offs, lens = arrow_byte_view(arr)
-        h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-        verdict = cb.check_hashed(h1, h2)
-        # a NULL key is a definite non-member — astype(str) renders it
-        # as the literal 'None'/'nan', which must not alias a real key
-        # (mirrors _check_arrow's null handling in bloom_probe)
-        nulls = keys_str.isna().to_numpy()
-        if nulls.any():
-            verdict &= ~nulls
+        _check_num_shards(layer_pdf["num_shards"].iloc[0], num_shards)
+        blobs = layer_pdf.sort_values("layer", ascending=False).blob
+        verdict = _verdicts(
+            pa.Array.from_pandas(probe_pdf["__key_str"], type=pa.large_string()),
+            probe_pdf["__shard"].to_numpy(),
+            lambda _s: (CountingBloom.from_bytes(bytes(b), seed=seed) for b in blobs),
+            seed,
+        )
         return out.assign(**{out_col: verdict})
 
     return (
         p.groupBy("__shard", "__salt")
         .cogroup(b.groupBy("__shard", "__salt"))
         .applyInPandas(probe_group, schema=out_schema)
+    )
+
+
+def confirm(
+    probed: DataFrame,
+    key_col: str,
+    exact_df: DataFrame | None = None,
+    exact_key: str | None = None,
+    anti: bool = False,
+    hit: str = "__hit",
+) -> DataFrame:
+    """The semi/anti join over a bloom verdict column `hit`. Semi:
+    the hits, confirmed exactly against exact_df when given. Anti:
+    the misses (definite negatives) plus, with exact_df, the ε-sized
+    hit set that a real anti join finds absent."""
+    hits = probed.filter(F.col(hit)).drop(hit)
+    misses = probed.filter(~F.col(hit)).drop(hit) if anti else None
+    if exact_df is None:
+        return misses if anti else hits
+    confirmed = hits.join(
+        _semi_dim(exact_df, exact_key or key_col),
+        on=F.col(key_col) == F.col("__ek"),
+        how="left_anti" if anti else "left_semi",
+    )
+    return misses.unionByName(confirmed) if anti else confirmed
+
+
+def remove_layers(
+    rows: DataFrame,
+    pieces: DataFrame,
+    geometry: Geometry,
+    schema: str,
+    seed: int = DABLOOMS_SEED,
+    validate: Callable[[pd.Series], None] | None = None,
+    on_overflow: str = "saturate",
+) -> DataFrame:
+    """Subtract deletion `pieces` (layer_pieces over the deleted rows)
+    from the layer `rows` they co-group with on (shard, layer),
+    floored at zero (a strict blob refuses instead); n drops by the
+    deletions applied. `validate(row)` may refuse a row first.
+    Deletions with no layer row target keys never inserted there and
+    are dropped. Returns `schema` rows; no blob visits the driver."""
+    cols = [c.strip().split()[0] for c in schema.split(",")]
+
+    def apply_deletions(keys, row_pdf: pd.DataFrame, piece_pdf: pd.DataFrame) -> pd.DataFrame:
+        if row_pdf.empty:
+            return pd.DataFrame(columns=cols)
+        row = row_pdf.iloc[0]
+        if validate is not None:
+            validate(row)
+        if piece_pdf.empty:
+            return row_pdf[cols]
+        cb = CountingBloom.from_bytes(bytes(row["blob"]), seed=seed)
+        g = geometry(int(row["layer"]))
+        # subtract() refuses a deletion filter of another geometry
+        cb.subtract(CountingBloom(
+            g.capacity, g.error_rate, first_id=cb.first_id, seed=seed,
+            _counters=fold(piece_pdf, g.size, on_overflow),
+            _count=int(piece_pdf.n.sum()),
+        ))
+        new = row_pdf.iloc[[0]].copy()
+        new["blob"] = [cb.to_bytes()]
+        new["n"] = [cb.count]
+        return new[cols]
+
+    return (
+        rows.groupBy("shard", "layer")
+        .cogroup(pieces.groupBy("shard", "layer"))
+        .applyInPandas(apply_deletions, schema=schema)
+    )
+
+
+def _counting(df: DataFrame, key_col: str, capacity: int, error_rate: float,
+              num_shards: int, layer=None):
+    """(keyed frame, geometry) of sharded counting layers, each shard's
+    layer sized capacity/num_shards; `layer` defaults to 0."""
+    g = BloomGeometry(max(1, capacity // num_shards), error_rate)
+    keyed = df.select(
+        F.col(key_col).cast("string").alias("key"),
+        (F.lit(0).cast("long") if layer is None else layer).alias("layer"),
+    )
+    return keyed, lambda _layer: g
+
+
+def _as_layers(blobs_df: DataFrame, num_shards: int) -> DataFrame:
+    return blobs_df.select(
+        "shard", F.lit(0).cast("long").alias("layer"), "blob", "n",
+        F.lit(num_shards).cast("long").alias("num_shards"),
+    )
+
+
+def build_sharded_counting_bloom(
+    df: DataFrame,
+    key_col: str,
+    capacity: int,
+    error_rate: float,
+    num_shards: int = 64,
+    seed: int = DABLOOMS_SEED,
+    on_overflow: str = "saturate",
+) -> DataFrame:
+    """DataFrame(shard long, blob binary, n long): one counting bloom
+    per key-hash shard, each sized capacity/num_shards (build_layers;
+    rows never shuffle). on_overflow='error' extends the reference's bitmap_increment
+    refusal (≈L108) to the sharded topology: a counter whose count
+    passes 15 within one partition's piece or across the folded
+    pieces raises, and the strict flag rides each blob header."""
+    keyed, geometry = _counting(df, key_col, capacity, error_rate, num_shards)
+    return build_layers(
+        keyed, num_shards, geometry,
+        lambda s, _layer, cb, _max_id: {"shard": s, "blob": cb.to_bytes(), "n": cb.count},
+        _BLOB_SCHEMA, seed, on_overflow=on_overflow,
+    )
+
+
+def sharded_bloom_remove(
+    blobs_df: DataFrame,
+    deletions: DataFrame,
+    key_col: str,
+    capacity: int,
+    error_rate: float,
+    num_shards: int = 64,
+    seed: int = DABLOOMS_SEED,
+    on_overflow: str = "saturate",
+) -> DataFrame:
+    """Counter-decrement deletions against a sharded counting filter
+    (remove_layers) — counting_bloom_remove (src/dablooms.c ≈L220) at
+    the sharded topology; returns the new (shard, blob, n) DataFrame.
+    capacity/error_rate/num_shards/seed must match the build's.
+    Over-removal (keys never inserted) floors, mirroring the
+    non-strict decrement; pass on_overflow='error' when removing from
+    a strict filter so a deletion key repeated past 15 raises instead
+    of clipping (a clipped deletion count would mask the over-removal
+    the strict mode exists to refuse)."""
+    keyed, geometry = _counting(deletions, key_col, capacity, error_rate, num_shards)
+    pieces = layer_pieces(keyed, num_shards, geometry, seed, on_overflow)
+    return remove_layers(
+        _as_layers(blobs_df, num_shards), pieces, geometry, _BLOB_SCHEMA, seed,
+        on_overflow=on_overflow,
+    )
+
+
+def sharded_bloom_probe(
+    probe_df: DataFrame,
+    key_col: str,
+    blobs_df: DataFrame,
+    num_shards: int = 64,
+    salt: int = 8,
+    seed: int = DABLOOMS_SEED,
+    out_col: str = "is_member",
+    key_cast: str | None = None,
+) -> DataFrame:
+    """probe_df + a Boolean membership column for a sharded counting
+    filter (probe_layers over one layer per shard). No false
+    negatives; FPs ≤ the per-shard bound. `key_cast`: optional type
+    cast BEFORE the string cast — must match the build side's (see
+    bloom_probe_column)."""
+    key = F.col(key_col)
+    if key_cast is not None:
+        key = key.cast(key_cast)
+    return probe_layers(
+        probe_df, key.cast("string"), _as_layers(blobs_df, num_shards),
+        num_shards, salt, seed, out_col,
     )
 
 
@@ -372,22 +488,11 @@ def sharded_semi_join(
     key_cast: str | None = None,
 ) -> DataFrame:
     """Semi join against a sharded filter: bloom-prune (no false
-    negatives), then optionally confirm survivors exactly — the
-    bloom_semi_join contract at filter sizes broadcast can't reach."""
+    negatives), then optionally confirm survivors exactly."""
     out = sharded_bloom_probe(
         probe_df, key_col, blobs_df, num_shards, salt, seed, "__hit", key_cast
     )
-    out = out.filter(F.col("__hit")).drop("__hit")
-    if exact_df is not None:
-        ek = exact_key or key_col
-        from dablooms_spark.operators.bloom_probe import _semi_dim
-
-        out = out.join(
-            _semi_dim(exact_df, ek),
-            on=F.col(key_col) == F.col("__ek"),
-            how="left_semi",
-        )
-    return out
+    return confirm(out, key_col, exact_df, exact_key)
 
 
 def sharded_anti_join(
@@ -403,20 +508,8 @@ def sharded_anti_join(
 ) -> DataFrame:
     """LEFT ANTI against a sharded filter: bloom misses pass straight
     through (definite negatives); with exact_df only the ε-sized hit
-    set pays for an exact anti join — bloom_anti_join's contract at
-    filter sizes broadcast can't reach."""
+    set pays for an exact anti join."""
     out = sharded_bloom_probe(
         probe_df, key_col, blobs_df, num_shards, salt, seed, "__hit", key_cast
     )
-    misses = out.filter(~F.col("__hit")).drop("__hit")
-    if exact_df is None:
-        return misses
-    ek = exact_key or key_col
-    from dablooms_spark.operators.bloom_probe import _semi_dim
-
-    dim = _semi_dim(exact_df, ek)
-    candidates = out.filter(F.col("__hit")).drop("__hit")
-    confirmed_absent = candidates.join(
-        dim, on=F.col(key_col) == F.col("__ek"), how="left_anti"
-    )
-    return misses.unionByName(confirmed_absent)
+    return confirm(out, key_col, exact_df, exact_key, anti=True)

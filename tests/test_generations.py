@@ -85,10 +85,30 @@ def test_build_and_window_probe(spark):
     assert hits(g0 + 1, 2) == {"a", "b", "c"}
     gens.unpersist()
 
+    # a pre-1970 timestamp lands in a negative generation, which the
+    # (shard, layer) route carries like any other
+    old = spark.createDataFrame(
+        [("p", dt.datetime(1969, 12, 30, 6, 0, 0))], "key string, ts timestamp"
+    )
+    neg = build_generation_filters(
+        df.unionByName(old), "key", "ts", "1 day", capacity=64,
+        error_rate=0.01, num_shards=4,
+    ).cache()
+    assert min(r.gen for r in neg.collect()) == -2
+    probe_p = spark.createDataFrame([("p",), ("a",)], "key string")
+    got = {
+        r.key: r.is_member
+        for r in generation_window_probe(
+            probe_p, "key", neg, -1, 2, num_shards=4
+        ).collect()
+    }
+    assert got == {"p": True, "a": False}
+    neg.unpersist()
+
 
 def test_window_membership_monotone(spark):
-    """Widening the window can only add members (counter-sum merge
-    preserves membership-OR)."""
+    """Widening the window can only add members (each generation it
+    adds is one more layer of the membership-OR)."""
     df, g0 = _fixture(spark)
     gens = build_generation_filters(
         df, "key", "ts", "1 day", capacity=64, error_rate=0.01, num_shards=2
@@ -199,14 +219,19 @@ def test_artifact_roundtrip_prunes_partitions(spark, tmp_path_factory):
 
 
 def test_build_plan_is_blob_only(spark):
-    """The generation build's only Exchange moves per-(gen, shard)
-    blobs, never rows: below it the plan is scan -> project ->
-    MapInArrow, sort-free."""
+    """The generation build's only Exchange moves per-(shard, gen)
+    counter pieces, never rows: below it the plan is scan -> project
+    -> MapInArrow, sort-free. Forces the exchange (small inputs fold
+    on the driver)."""
     df, _ = _fixture(spark)
     gens = build_generation_filters(
         df, "key", "ts", "1 day", capacity=64, error_rate=0.01, num_shards=4
     )
-    plan = gens._jdf.queryExecution().executedPlan().toString()
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+    try:
+        plan = gens._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
     assert plan.count("Exchange") == 1, plan
     below = plan.split("Exchange", 1)[1]
     assert "MapInArrow" in below and "Sort" not in below, plan
@@ -222,3 +247,44 @@ def test_bad_window_rejected(spark):
             spark.createDataFrame([("a",)], "key string"),
             "key", gens, g0, 0, num_shards=2,
         )
+
+
+def test_window_fp_within_summed_generation_budget(spark):
+    """A window probe checks each live generation as its own layer, so
+    its FP is bounded by the sum of the per-generation ε: G=4
+    generations, each loaded to half its capacity, probed with 20,000
+    never-inserted keys, stay within 4·ε on both probe topologies.
+    (Counter-summing the window into one filter per shard loads one
+    geometry with all four generations' keys and reads FP ≈ 0.15.)"""
+    from pyspark.sql import functions as F
+
+    G, cap, eps, per_gen = 4, 8_000, 0.01, 4_000
+    base = 1_700_000_000 // DAY * DAY
+    rows = spark.range(0, G * per_gen, 1, 4).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        (F.lit(base) + F.floor(F.col("id") / per_gen) * DAY + F.col("id") % 1_000)
+        .cast("timestamp").alias("ts"),
+    )
+    gens = build_generation_filters(
+        rows, "key", "ts", "1 day", capacity=cap, error_rate=eps, num_shards=4
+    ).cache()
+    g_last = base // DAY + G - 1
+    assert sorted({r.gen for r in gens.collect()}) == list(range(g_last - 3, g_last + 1))
+    absent = spark.range(0, 20_000, 1, 4).select(
+        F.concat(F.lit("z"), F.col("id")).alias("key")
+    )
+    conf = "spark.dablooms.probe.autoBroadcastBytes"
+    try:
+        for bcast in ("64m", "0"):  # broadcast UDF, then the cogroup
+            spark.conf.set(conf, bcast)
+            fp = generation_window_probe(
+                absent, "key", gens, g_last, G, num_shards=4
+            ).filter("is_member").count() / 20_000
+            assert fp <= G * eps, (bcast, fp)
+            missed = generation_window_probe(
+                rows.select("key"), "key", gens, g_last, G, num_shards=4
+            ).filter("NOT is_member").count()
+            assert missed == 0, (bcast, missed)
+    finally:
+        spark.conf.unset(conf)
+    gens.unpersist()

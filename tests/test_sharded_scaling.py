@@ -546,3 +546,26 @@ def test_counting_driver_fold_matches_distributed(spark):
     for s in a:
         assert bytes(a[s].blob) == bytes(b[s].blob), s
         assert a[s].n == b[s].n
+
+    # generation filters take the same gate (projected (key, gen) frame)
+    from dablooms_spark.operators.generations import build_generation_filters
+
+    events = rows.withColumn("ts", (F.col("id") * 37).cast("timestamp"))
+
+    def gens():
+        return sorted(
+            (r.gen, r.shard, bytes(r.blob), r.n)
+            for r in build_generation_filters(
+                events, "k", "ts", "1 hour", capacity=2_000, error_rate=0.02,
+                num_shards=SHARDS,
+            ).collect()
+        )
+
+    drv_g = gens()
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+    try:
+        dist_g = gens()
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+    assert len(drv_g) > SHARDS
+    assert drv_g == dist_g

@@ -96,10 +96,9 @@ def main():
 
 This file is overwritten by every `tools/bench_scaling.py` invocation
 and shows ONE run under whatever host conditions prevailed — read
-`BENCH/BASELINE.md` (curated, min-per-level across runs) and
-`BENCH/paired_evidence.jsonl` + `tools/paired_summary.py` (the
-same-window paired protocol that supersedes lone runs for ratio
-claims) for the evidence of record.
+`BENCH/BASELINE.md` (curated, min-per-level across runs) and the
+`BENCH/paired_evidence.jsonl` ledger (same-window paired runs, which
+supersede lone runs for ratio claims) for the evidence of record.
 
 Job: counting-bloom and scaling-bloom build+merge over an identical
 deterministic {n_rows:,}-row synthetic CC-style `webpages` corpus
