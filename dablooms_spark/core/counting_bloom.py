@@ -437,20 +437,22 @@ class CountingBloom:
         from dablooms_spark.core.codec import delta_encode
 
         g = self.geometry
-        nz = np.flatnonzero(self.counters)
-        nnz = len(nz)
+        nnz = int(np.count_nonzero(self.counters))
         idx_width = 8 if g.size > 0xFFFFFFFF else 4
         sparse_bytes = 8 + nnz * (idx_width + 1)
-        gaps_b = exc_b = b""
-        gaps_bytes = None
-        if g.size <= 0xFFFFFFFF:
-            gaps_b, exc_b = delta_encode(nz.astype(np.int64))
-            gaps_bytes = 24 + len(gaps_b) + len(exc_b) + nnz
-        candidates = [(g.num_nibble_bytes, _KIND_COUNTING),
-                      (sparse_bytes, _KIND_COUNTING_SPARSE)]
-        if gaps_bytes is not None:
-            candidates.append((gaps_bytes, _KIND_COUNTING_SPARSE_GAPS))
-        kind = min(candidates)[1]
+        # gaps cost >= 1 B per nonzero: a dense payload within both
+        # sparse floors wins (ties go dense) without coding the nonzeros
+        kind = _KIND_COUNTING
+        if g.num_nibble_bytes > min(24 + 2 * nnz, sparse_bytes):
+            nz = np.flatnonzero(self.counters)
+            vals = self.counters[nz]
+            candidates = [(g.num_nibble_bytes, _KIND_COUNTING),
+                          (sparse_bytes, _KIND_COUNTING_SPARSE)]
+            if g.size <= 0xFFFFFFFF:
+                gaps_b, exc_b = delta_encode(nz.astype(np.int64))
+                candidates.append((24 + len(gaps_b) + len(exc_b) + nnz,
+                                   _KIND_COUNTING_SPARSE_GAPS))
+            kind = min(candidates)[1]
         flags = _FLAG_STRICT_OVERFLOW if self.on_overflow == "error" else 0
         header = _HDR.pack(
             _MAGIC,
@@ -466,7 +468,6 @@ class CountingBloom:
             self.count,
         )
         if kind == _KIND_COUNTING_SPARSE_GAPS:
-            vals = self.counters[nz]
             return (
                 header
                 + struct.pack("<QQQ", nnz, len(gaps_b), len(exc_b))
@@ -475,7 +476,6 @@ class CountingBloom:
                 + vals.tobytes()
             )
         if kind == _KIND_COUNTING_SPARSE:
-            vals = self.counters[nz]
             idx = nz.astype(np.uint64 if idx_width == 8 else np.uint32)
             return header + struct.pack("<Q", nnz) + idx.tobytes() + vals.tobytes()
         c = self.counters

@@ -10,7 +10,7 @@ src/dablooms.c:≈487). The Spark-native equivalent (SURVEY.md §4.3):
       encoded by core/pieces.py). The wide text column never
       shuffles; only blobs or pieces do.
   stage 2 (merge, operators/merge.py): pieces fold per key — on the
-      driver when the input estimate is small, else in one
+      driver when their measured bytes are small, else in one
       groupBy(key) exchange — and blobs merge through the blob tree:
       log_fanin(P) rounds of blob-only groupBy(shard // fanin)
       shuffles, then a driver-side merge of the last ≤ fanin blobs.
@@ -77,7 +77,6 @@ def _static_num_partitions(df: DataFrame) -> int | None:
 
 
 def _chunked_counting_build(
-    df: DataFrame,
     sdf: DataFrame,
     capacity: int,
     error_rate: float,
@@ -86,7 +85,7 @@ def _chunked_counting_build(
 ) -> CountingBloom:
     """Wide-filter build: each task emits its partial counters as
     pieces of `num_chunks` counter-range chunks (core/pieces.py); the
-    merge folds each chunk — on the driver for small inputs, else in
+    merge folds each chunk — on the driver for small pieces, else in
     ONE groupBy(chunk) exchange, num_chunks-way parallel and
     independent of shard count, no task ever holding more than (chunk
     width + its pieces) — and the driver concatenates the chunks.
@@ -116,11 +115,9 @@ def _chunked_counting_build(
             {"chunk": [c], "dense": [counters.tobytes()], "n": [int(pdf.n.sum())]}
         )
 
-    # small inputs skip the piece exchange entirely (gated on the
-    # caller's frame; bit-identical either way)
     rows = fold_or_exchange(
         pieces, ["chunk"], merge_chunk, "chunk long, dense binary, n long",
-        gate=df, collect=True,
+        collect=True,
     )
     counters = np.zeros(g.size, dtype=np.uint8)
     total = 0
@@ -248,7 +245,7 @@ def build_counting_bloom(
         # wide filter: chunked merge — one shuffle, counter-range
         # parallelism, no multi-round tree, no fat blobs to the driver
         num_chunks = max(df.sparkSession.sparkContext.defaultParallelism, 16)
-        return _chunked_counting_build(df, sdf, capacity, error_rate, seed, num_chunks)
+        return _chunked_counting_build(sdf, capacity, error_rate, seed, num_chunks)
     blob_df = counting_bloom_partials(
         df, key_col, capacity, error_rate, seed,
         num_build_partitions or auto_parts, on_overflow,
@@ -691,13 +688,11 @@ def build_scaling_bloom(
     layer-row checkpoint write when the filter is too big to
     collect."""
     if id_layout == "dense":
-        # small inputs fold the pieces on the driver, skipping the
-        # groupBy(layer) exchange + pandas stage (bit-identical)
         pieces, merge_layer = _fixed_pieces(
             df, key_col, id_col, capacity, error_rate, seed, expected_layers
         )
         rows = fold_or_exchange(
-            pieces, ["layer"], merge_layer, _LAYER_SCHEMA, gate=df, collect=True
+            pieces, ["layer"], merge_layer, _LAYER_SCHEMA, collect=True
         )
         if not rows:
             return ScalingBloom(capacity, error_rate, seed=seed)

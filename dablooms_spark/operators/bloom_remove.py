@@ -11,12 +11,10 @@ Two paths:
   stream would be 160 GB on the driver — not fine.
 - `bloom_remove_distributed` (any size): builds a DELETION-COUNT
   filter in the cluster — per-partition counter pieces
-  (core/pieces.py), folded per layer on the driver for small
-  deletion frames or in one piece-only shuffle otherwise
-  (operators/merge.py) — and subtracts blobs on the driver. Above
-  the fold gate, driver traffic is bounded by (num_layers × layer
-  blob size) regardless of deletion count, the same shape as the
-  build.
+  (core/pieces.py), folded per layer on the driver while their
+  measured bytes fit the fold ceiling, else in one piece-only shuffle
+  (operators/merge.py) — and subtracts blobs on the driver. Driver
+  traffic is bounded regardless of deletion count, as in the build.
   Exactness: counters never exceed 15, so subtracting the saturated
   deletion multiplicities is bit-identical to row-at-a-time removal
   (max(c - min(d,15), 0) == max(c - d, 0); property-tested).
@@ -137,9 +135,9 @@ def _scaling_deletion_blobs(
     """Rows (layer, blob, n): one deletion-count filter per TOUCHED
     layer of the target's layer skeleton. Stage 1 is
     _deletion_pieces; stage 2 folds each layer's pieces into one
-    self-describing deletion blob — on the driver when the deletions
-    frame is small, else in one groupBy(layer) exchange (pieces, never
-    rows)."""
+    self-describing deletion blob — on the driver when the pieces'
+    measured bytes are small, else in one groupBy(layer) exchange
+    (pieces, never rows)."""
     from dablooms_spark.core.counting_bloom import CountingBloom
 
     geoms = [BloomGeometry(cap, eps) for _, cap, eps in skeleton]
@@ -160,7 +158,7 @@ def _scaling_deletion_blobs(
 
     return fold_or_exchange(
         pieces, ["layer"], merge_layer, "layer long, blob binary, n long",
-        gate=deletions, collect=True,
+        collect=True,
     )
 
 

@@ -2,15 +2,16 @@
 
 Every distributed build and remove ends the same way: a DataFrame of
 partials (counter pieces or serialized sketches) keyed by some group
-columns, folded per group. Small inputs collect the partials and fold
-them on the driver — no exchange, no pandas stage; bigger ones run
+columns, folded per group. The partials are persisted and measured —
+one JVM job fills the cache and counts the bytes it holds — and within
+the ceiling they are collected and folded on the driver (no exchange,
+no pandas stage); above it the same cached partials go through
 `groupBy(keys).applyInPandas(fold)`, which keeps the driver out of
-the data path. The per-group fold is the same function either way, so
-both topologies give identical rows (order-invariant merges).
+the data path. The per-group fold is the same function either way,
+so both topologies give identical rows (order-invariant merges).
 
 This module is the only reader of the driver-fold ceiling
-(spark.dablooms.build.driverMergeMaxBytes) and of the Catalyst size
-estimate it is compared with.
+(spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
 """
 
 from __future__ import annotations
@@ -37,11 +38,11 @@ _BLOB_SCHEMA_PA = pa.schema(
 
 
 def _driver_merge_max_bytes(spark) -> int:
-    """Catalyst-estimated input ceiling under which partials are
-    collected and folded DRIVER-SIDE instead of through a groupBy
-    exchange (spark.dablooms.build.driverMergeMaxBytes, size string,
-    default 32 MiB; '0' disables). Interleaved same-session A/B on the
-    bench build: driver fold 0.869 s vs distributed merge 0.958 s
+    """Ceiling on the MEASURED partial bytes (_partial_bytes) collected
+    and folded DRIVER-SIDE instead of through a groupBy exchange
+    (spark.dablooms.build.driverMergeMaxBytes, size string, default
+    32 MiB; '0' forces the exchange). Interleaved same-session A/B on
+    the bench build: driver fold 0.869 s vs distributed merge 0.958 s
     end-to-end — the fold also removes a stage, a shuffle and a pandas
     round-trip. Above the ceiling the distributed merge keeps the
     driver out of the data path."""
@@ -55,14 +56,20 @@ def _driver_merge_max_bytes(spark) -> int:
         return 32 << 20
 
 
-def _est_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate, or None."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
+def _partial_bytes(partials: DataFrame) -> int:
+    """Bytes of the PERSISTED `partials`, measured while one JVM job
+    (a row count over the cached scan: no exchange) fills the cache —
+    the cache builder adds up every value it stores (a binary's length
+    + 4, 8 per long), within a few bytes a row of what a collect moves.
+    An aggregate instead would split into three adaptive jobs."""
+    partials.select("*")._jdf.queryExecution().toRdd().count()
+    cached = partials.sparkSession._jsparkSession.sharedState().cacheManager()
+    entry = cached.lookupCachedData(partials._jdf).get()
+    return int(entry.cachedRepresentation().cacheBuilder().sizeInBytesStats().value())
+
+
+def _exchange(partials: DataFrame, keys: list[str], fold, schema: str) -> DataFrame:
+    return partials.groupBy(*keys).applyInPandas(fold, schema=schema)
 
 
 def fold_or_exchange(
@@ -70,28 +77,38 @@ def fold_or_exchange(
     keys: list[str],
     fold: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    gate: DataFrame,
     collect: bool = False,
 ):
     """Fold `partials` per `keys` group with `fold` (one group's rows
-    in, output rows out, `schema`-shaped) — on the driver when `gate`'s
-    size estimate fits driverMergeMaxBytes, else through
-    groupBy(keys).applyInPandas.
-
-    `gate` is the frame whose estimate decides (the caller's input or
-    its projected key frame — each caller keeps its own, since the
-    two differ several-fold on wide rows): the collected bytes are
-    bounded by partitions × groups × piece size, which only threatens
-    the driver when that input is large. Returns the merged
-    DataFrame, or with collect=True the merged rows (attribute
-    access by column name) — the driver fold then never round-trips
-    through createDataFrame."""
+    in, output rows out, `schema`-shaped). Persisted and measured, the
+    partials fold on the driver when their bytes fit
+    driverMergeMaxBytes, else the same cached partials go through
+    groupBy(keys).applyInPandas ('0': lazily, unmeasured). Returns the
+    merged DataFrame, or with collect=True the merged rows (attribute
+    access by column name). The partials' cache is released on return;
+    a measured exchange comes back persisted and counted, for the
+    caller to unpersist."""
     spark = partials.sparkSession
-    est = _est_plan_bytes(gate)
-    if est is None or not 0 <= est <= _driver_merge_max_bytes(spark):
-        merged = partials.groupBy(*keys).applyInPandas(fold, schema=schema)
+    cap = _driver_merge_max_bytes(spark)
+    if cap <= 0:
+        merged = _exchange(partials, keys, fold, schema)
         return merged.collect() if collect else merged
-    pdf = pd.DataFrame.from_records(partials.collect(), columns=partials.columns)
+    partials = partials.persist()
+    try:
+        if _partial_bytes(partials) > cap:
+            merged = _exchange(partials, keys, fold, schema)
+            if collect:
+                return merged.collect()
+            merged = merged.persist()
+            try:
+                merged.count()
+                return merged
+            except BaseException:  # a strict fold's overflow must not pin it
+                merged.unpersist()
+                raise
+        pdf = pd.DataFrame.from_records(partials.collect(), columns=partials.columns)
+    finally:
+        partials.unpersist()
     groups = pdf.groupby(keys, sort=True) if len(pdf) else []
     rows = [r for _, g in groups for r in fold(g).itertuples(index=False)]
     return rows if collect else spark.createDataFrame(rows, schema=schema)

@@ -20,8 +20,9 @@ the row projection.
 
 - build_layers: one map stage (layer_pieces) emits counter pieces
   (core/pieces.py) per touched (shard, layer) and input partition;
-  they fold per (shard, layer) on the driver or in one piece-only
-  exchange (merge.fold_or_exchange). Rows never shuffle; the fold is
+  they fold per (shard, layer) on the driver while their measured
+  bytes fit the fold ceiling, else in one piece-only exchange
+  (merge.fold_or_exchange). Rows never shuffle; the fold is
   an exact saturating counter sum, bit-identical to one node's build.
 - probe_layers: a key walks its shard's layers newest first and stops
   at the first that answers "present" — in a broadcast UDF when the
@@ -59,7 +60,7 @@ from dablooms_spark.core.pieces import PieceEncoder, fold, runs
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
 from dablooms_spark.operators.bloom_probe import _parse_size_bytes, _semi_dim
-from dablooms_spark.operators.merge import _BLOB_SCHEMA, fold_or_exchange
+from dablooms_spark.operators.merge import _BLOB_SCHEMA, _partial_bytes, fold_or_exchange
 
 _SHARD_SEED = 0x5D
 
@@ -149,14 +150,14 @@ def build_layers(
     schema: str,
     seed: int = DABLOOMS_SEED,
     width: int = 0,
-    gate: DataFrame | None = None,
     on_overflow: str = "saturate",
 ) -> DataFrame:
     """Build a layered sharded filter from `keyed` (see layer_pieces):
     the pieces fold per (shard, layer) into one CountingBloom each
     (first_id = layer·width), projected to an output row by
     `row(shard, layer, bloom, max_id)`. The fold runs on the driver
-    when `gate` (default: `keyed`) is small, else in one exchange."""
+    when the pieces' measured bytes are small, else in one exchange
+    whose result comes back persisted (merge.fold_or_exchange)."""
 
     def merge_layer(pdf: pd.DataFrame) -> pd.DataFrame:
         shard, layer = int(pdf.shard.iloc[0]), int(pdf.layer.iloc[0])
@@ -170,10 +171,7 @@ def build_layers(
         return pd.DataFrame({c: [v] for c, v in out.items()})
 
     pieces = layer_pieces(keyed, num_shards, geometry, seed, on_overflow)
-    return fold_or_exchange(
-        pieces, ["shard", "layer"], merge_layer, schema,
-        gate=keyed if gate is None else gate,
-    )
+    return fold_or_exchange(pieces, ["shard", "layer"], merge_layer, schema)
 
 
 def _walk_layers(
@@ -252,8 +250,7 @@ def probe_layers(
         # persist: the size check and the probe share ONE computation
         # of the build lineage (the cache stays for the cogroup probe)
         layers = layers.persist()
-        total = layers.agg(F.sum(F.length("blob")).alias("b")).first()["b"]
-        if (total or 0) <= thr:
+        if _partial_bytes(layers) <= thr:
             rows = layers.collect()
             layers.unpersist()
             shard_layers: dict[int, list[bytes]] = {}

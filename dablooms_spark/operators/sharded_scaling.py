@@ -132,7 +132,7 @@ def build_sharded_scaling_layers(
     polynomial to uniform (see bloom_build.fixed_layer_eps — ~20%
     less hash/index work at 80 layers, more at scale). build_layers:
     one map stage of counter pieces, folded per (shard, layer) on the
-    driver when `df` is small, else in one piece-only exchange."""
+    driver when the pieces are small, else in one piece-only exchange."""
     keyed, geometry, width = _scaling_layers(
         df, key_col, id_col, capacity, error_rate, num_shards, expected_layers
     )
@@ -146,8 +146,7 @@ def build_sharded_scaling_layers(
         }
 
     return build_layers(
-        keyed, num_shards, geometry, row, _ROW_SCHEMA, seed, width=width,
-        gate=df,
+        keyed, num_shards, geometry, row, _ROW_SCHEMA, seed, width=width
     )
 
 

@@ -321,14 +321,8 @@ def _grouped_merge_finalize(
             sk = sk.merge(_loads_any(b))
         return finalize(pdf.g.iloc[0], sk)
 
-    # Small inputs (gated on the projected (g, v) frame) skip the
-    # groupBy exchange + pandas stage and fold + finalize on the
-    # driver: collected bytes are bounded by partitions x groups x
-    # blob size, which only threatens the driver when the input itself
-    # is large. Results identical — all sketches here merge
-    # associatively, and the per-group fold order was already
-    # shuffle-arrival order (arbitrary) on the exchange path.
-    return fold_or_exchange(partials, ["g"], merge_finalize, out_schema, gate=sdf)
+    # identical on either path: every sketch here merges associatively
+    return fold_or_exchange(partials, ["g"], merge_finalize, out_schema)
 
 
 def approx_distinct_by(

@@ -261,3 +261,86 @@ def test_strict_overflow_mode_survives_serde():
     sat = CountingBloom(100, 0.05)
     sat.add([b"x"])
     assert CountingBloom.from_bytes(sat.to_bytes()).on_overflow == "saturate"
+
+
+def _reference_to_bytes(cb) -> bytes:
+    """The serializer spelled out: build all three candidate payloads
+    in full — dense nibbles, u32/u64 index + count, gap-coded — and
+    keep the smallest (ties to the lower kind, so dense first)."""
+    import struct
+
+    from dablooms_spark.core.codec import delta_encode
+
+    g, c = cb.geometry, cb.counters
+    nz = np.flatnonzero(c)
+    vals = c[nz].tobytes()
+    padded = np.concatenate([c, np.zeros(len(c) % 2, np.uint8)])
+    cands = [
+        (1, ((padded[0::2] << 4) | padded[1::2]).tobytes()),
+        (2, struct.pack("<Q", len(nz))
+         + nz.astype(np.uint64 if g.size > 0xFFFFFFFF else np.uint32).tobytes()
+         + vals),
+    ]
+    if g.size <= 0xFFFFFFFF:
+        gaps, exc = delta_encode(nz.astype(np.int64))
+        cands.append(
+            (3, struct.pack("<QQQ", len(nz), len(gaps), len(exc)) + gaps + exc + vals)
+        )
+    kind, payload = min(cands, key=lambda kp: (len(kp[1]), kp[0]))
+    header = struct.pack(
+        "<4sHBBQdIIQQQ", b"DBSK", 1, kind, int(cb.on_overflow == "error"),
+        g.capacity, g.error_rate, g.nfuncs, 0, g.counts_per_func,
+        cb.first_id, cb.count,
+    )
+    return header + payload
+
+
+def _with_counters(cap, eps, idx, rng, **kw):
+    g = BloomGeometry(cap, eps)
+    c = np.zeros(g.size, np.uint8)
+    c[idx] = rng.integers(1, 16, size=len(idx), dtype=np.uint8)
+    return CountingBloom(cap, eps, _counters=c, _count=len(idx), **kw)
+
+
+def test_to_bytes_matches_three_candidate_reference():
+    """to_bytes skips locating and delta-coding the nonzeros whenever
+    the dense payload already fits both sparse floors; the blob must
+    stay byte-identical to building every candidate and keeping the
+    smallest, across fills, ε and capacities, at the empty filter, at
+    the dense/gap tie and where each sparse form wins."""
+    rng = np.random.default_rng(7)
+    kinds = set()
+
+    def check(cb):
+        blob = cb.to_bytes()
+        assert blob == _reference_to_bytes(cb)
+        kinds.add(blob[6])
+        return blob[6]
+
+    for cap in (1, 64, 1_000, 50_000, 300_000):
+        for eps in (0.5, 0.01, 1e-4):
+            size = BloomGeometry(cap, eps).size
+            for fill in (0.0, 0.0005, 0.01, 0.08, 0.2, 0.5, 1.0):
+                idx = rng.choice(size, size=int(fill * size), replace=False)
+                check(_with_counters(cap, eps, idx, rng, first_id=cap))
+    # tiny filters at every nonzero count: both sparse floors' ties
+    for cap in range(1, 12):
+        for eps in (0.5, 0.1, 0.05):
+            size = BloomGeometry(cap, eps).size
+            for nnz in range(size + 1):
+                check(_with_counters(cap, eps, rng.choice(size, nnz, replace=False), rng))
+    # empty: the 8-byte u32 index form beats both others
+    assert check(CountingBloom(1_000, 0.01, on_overflow="error")) == 2
+    # nonzeros >= 255 apart: every gap is an exception, u32 index wins
+    g = BloomGeometry(300_000, 0.01)
+    assert check(_with_counters(300_000, 0.01, np.arange(0, g.size, 1_000), rng)) == 2
+    # the dense / gap tie: 24 + 2·nnz == nibble bytes with no
+    # exceptions goes dense; one nonzero fewer and the gap form wins
+    for cap in (1_000, 50_000):
+        while BloomGeometry(cap, 0.01).num_nibble_bytes % 2:
+            cap += 1
+        tie = (BloomGeometry(cap, 0.01).num_nibble_bytes - 24) // 2
+        assert check(_with_counters(cap, 0.01, np.arange(tie), rng)) == 1
+        assert check(_with_counters(cap, 0.01, np.arange(tie - 1), rng)) == 3
+        assert check(_with_counters(cap, 0.01, np.arange(tie + 1), rng)) == 1
+    assert kinds == {1, 2, 3}

@@ -221,14 +221,14 @@ def test_artifact_roundtrip_prunes_partitions(spark, tmp_path_factory):
 def test_build_plan_is_blob_only(spark):
     """The generation build's only Exchange moves per-(shard, gen)
     counter pieces, never rows: below it the plan is scan -> project
-    -> MapInArrow, sort-free. Forces the exchange (small inputs fold
-    on the driver)."""
+    -> MapInArrow, sort-free. Forces the exchange before the build
+    (small pieces fold on the driver)."""
     df, _ = _fixture(spark)
-    gens = build_generation_filters(
-        df, "key", "ts", "1 day", capacity=64, error_rate=0.01, num_shards=4
-    )
     spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
     try:
+        gens = build_generation_filters(
+            df, "key", "ts", "1 day", capacity=64, error_rate=0.01, num_shards=4
+        )
         plan = gens._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")

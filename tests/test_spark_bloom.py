@@ -813,3 +813,125 @@ def test_driver_merge_routing_bit_identical(spark):
         spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
     assert rdrv.to_bytes() != sdrv.to_bytes()
     assert rdrv.to_bytes() == rdist.to_bytes()
+
+
+def _merge_spy(monkeypatch):
+    """Record the measured partial bytes and whether the exchange ran,
+    for every fold_or_exchange call."""
+    from dablooms_spark.operators import merge
+
+    seen = {"bytes": [], "exchange": 0}
+    measure, exchange = merge._partial_bytes, merge._exchange
+
+    def spy_measure(partials):
+        seen["bytes"].append(measure(partials))
+        return seen["bytes"][-1]
+
+    def spy_exchange(*args):
+        seen["exchange"] += 1
+        return exchange(*args)
+
+    monkeypatch.setattr(merge, "_partial_bytes", spy_measure)
+    monkeypatch.setattr(merge, "_exchange", spy_exchange)
+    return seen
+
+
+def _forced_exchange_bytes(spark, build):
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+    try:
+        return build().to_bytes()
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+
+
+def _plan_estimate(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def test_stats_less_input_with_small_pieces_folds_on_driver(spark, monkeypatch):
+    """A list-built frame has no statistics (estimate Long.MaxValue),
+    yet its pieces are a few KB: the measured gate folds them on the
+    driver, bit-identical to the forced exchange."""
+    df = spark.createDataFrame([(f"key-{i}",) for i in range(2_000)], "key string")
+    assert _plan_estimate(df) > 32 << 20  # the estimate says "huge"
+
+    def build():
+        return build_counting_bloom(df, "key", capacity=300_000, error_rate=0.01)
+
+    seen = _merge_spy(monkeypatch)
+    drv = build()
+    assert seen["exchange"] == 0 and 0 < seen["bytes"][0] <= 32 << 20
+    assert drv.count == 2_000
+    assert drv.to_bytes() == _forced_exchange_bytes(spark, build)
+
+
+def test_pieces_over_ceiling_take_exchange_despite_small_estimate(
+    spark, monkeypatch
+):
+    """An input whose estimate sits under the ceiling while its
+    measured pieces sit over it takes the exchange: the ceiling caps
+    the bytes the driver would collect, not the estimate."""
+    df = spark.range(0, 20_000, 1, 4).select(
+        F.concat_ws(":", F.col("id"), F.lit("k")).alias("key")
+    )
+
+    def build():
+        return build_counting_bloom(df, "key", capacity=100_000, error_rate=1e-6)
+
+    seen = _merge_spy(monkeypatch)
+    first = build()  # default ceiling: learn the measured piece bytes
+    est, pieces = _plan_estimate(df), seen["bytes"][0]
+    assert est < pieces, (est, pieces)
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", str((est + pieces) // 2))
+    try:
+        capped = build()
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+    assert seen["exchange"] == 1
+    assert capped.to_bytes() == first.to_bytes() == _forced_exchange_bytes(spark, build)
+
+
+def test_measured_merge_pins_no_cache(spark, monkeypatch):
+    """The partials are persisted to be measured; on either path the
+    session holds no extra cached entry once the caller has released
+    what it got back, nor after a strict fold raises. '1b' forces the
+    measured exchange."""
+    import copy
+
+    from dablooms_spark.operators.bloom_remove import bloom_remove_distributed
+    from dablooms_spark.operators.sharded import build_sharded_counting_bloom
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.range(0, 6_000, 1, 4).select(
+        F.concat_ws(":", F.col("id"), F.lit("c")).alias("key"), F.col("id")
+    )
+    sb = build_scaling_bloom(
+        df, "key", "id", capacity=2_000, error_rate=0.02,
+        id_layout="dense", expected_layers=3,
+    )
+    hot = spark.range(32, numPartitions=4).select(F.lit("dup").alias("k"))
+    seen = _merge_spy(monkeypatch)
+    for ceiling, exchanges in (("32m", 0), ("1b", 1)):
+        spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
+        try:
+            for case in ("build", "remove", "sharded", "strict"):
+                before, seen["exchange"] = cache.numCachedEntries(), 0
+                if case == "build":
+                    build_counting_bloom(df, "key", capacity=300_000, error_rate=0.01)
+                elif case == "remove":
+                    bloom_remove_distributed(
+                        copy.deepcopy(sb), df.filter("id % 2 = 0"), "key", id_col="id"
+                    )
+                elif case == "sharded":
+                    blobs = build_sharded_counting_bloom(df, "key", 6_000, 0.01, num_shards=4)
+                    assert blobs.count() == 4
+                    blobs.unpersist()
+                else:  # a strict fold that refuses an overflow
+                    with pytest.raises(Exception, match="overflow"):
+                        build_sharded_counting_bloom(
+                            hot, "k", 2_000, 0.01, num_shards=4, on_overflow="error"
+                        )
+                assert seen["exchange"] == exchanges, (ceiling, case)
+                assert cache.numCachedEntries() == before, (ceiling, case)
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
