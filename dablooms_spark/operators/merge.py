@@ -5,10 +5,11 @@ partials (counter pieces or serialized sketches) keyed by some group
 columns, folded per group. The partials are persisted and measured —
 one JVM job fills the cache and counts the bytes it holds — and within
 the ceiling they are collected and folded on the driver (no exchange,
-no pandas stage); above it the same cached partials go through
+no pandas stage); above it they go through
 `groupBy(keys).applyInPandas(fold)`, which keeps the driver out of
 the data path. The per-group fold is the same function either way,
 so both topologies give identical rows (order-invariant merges).
+Nothing stays cached once a merge returns.
 
 This module is the only reader of the driver-fold ceiling
 (spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
@@ -58,10 +59,16 @@ def _driver_merge_max_bytes(spark) -> int:
 
 def _partial_bytes(partials: DataFrame) -> int:
     """Bytes of the PERSISTED `partials`, measured while one JVM job
-    (a row count over the cached scan: no exchange) fills the cache —
-    the cache builder adds up every value it stores (a binary's length
-    + 4, 8 per long), within a few bytes a row of what a collect moves.
-    An aggregate instead would split into three adaptive jobs."""
+    (a row count over the cached scan: no exchange; an aggregate would
+    split into three adaptive jobs) fills the cache — the cache builder
+    adds up every value it stores (a binary or string's length + 4, 8
+    per long), within a few bytes a row of what a collect moves.
+    Reads Spark 4.1 internals on purpose (lookupCachedData,
+    sizeInBytesStats, toRdd); a test pins the value to the public
+    octet_length sum, so an upgrade that moves them fails loudly. The
+    accumulator only grows (a recomputed block adds again), so with
+    the default, uncompressed cache serializer a drift can only pick
+    the exchange, never flood the driver."""
     partials.select("*")._jdf.queryExecution().toRdd().count()
     cached = partials.sparkSession._jsparkSession.sharedState().cacheManager()
     entry = cached.lookupCachedData(partials._jdf).get()
@@ -82,33 +89,23 @@ def fold_or_exchange(
     """Fold `partials` per `keys` group with `fold` (one group's rows
     in, output rows out, `schema`-shaped). Persisted and measured, the
     partials fold on the driver when their bytes fit
-    driverMergeMaxBytes, else the same cached partials go through
-    groupBy(keys).applyInPandas ('0': lazily, unmeasured). Returns the
-    merged DataFrame, or with collect=True the merged rows (attribute
-    access by column name). The partials' cache is released on return;
-    a measured exchange comes back persisted and counted, for the
-    caller to unpersist."""
+    driverMergeMaxBytes, else through groupBy(keys).applyInPandas
+    ('0' skips the measure). Returns the merged DataFrame, or with
+    collect=True the merged rows (attribute access by column name).
+    The partials are released on return: a collect=True exchange
+    reads them from the cache, a returned exchange frame is lazy."""
     spark = partials.sparkSession
     cap = _driver_merge_max_bytes(spark)
-    if cap <= 0:
-        merged = _exchange(partials, keys, fold, schema)
-        return merged.collect() if collect else merged
-    partials = partials.persist()
+    if cap > 0:
+        partials = partials.persist()
     try:
-        if _partial_bytes(partials) > cap:
+        if cap <= 0 or _partial_bytes(partials) > cap:
             merged = _exchange(partials, keys, fold, schema)
-            if collect:
-                return merged.collect()
-            merged = merged.persist()
-            try:
-                merged.count()
-                return merged
-            except BaseException:  # a strict fold's overflow must not pin it
-                merged.unpersist()
-                raise
+            return merged.collect() if collect else merged
         pdf = pd.DataFrame.from_records(partials.collect(), columns=partials.columns)
     finally:
-        partials.unpersist()
+        if cap > 0:
+            partials.unpersist()
     groups = pdf.groupby(keys, sort=True) if len(pdf) else []
     rows = [r for _, g in groups for r in fold(g).itertuples(index=False)]
     return rows if collect else spark.createDataFrame(rows, schema=schema)

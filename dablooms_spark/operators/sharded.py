@@ -157,7 +157,7 @@ def build_layers(
     (first_id = layer·width), projected to an output row by
     `row(shard, layer, bloom, max_id)`. The fold runs on the driver
     when the pieces' measured bytes are small, else in one exchange
-    whose result comes back persisted (merge.fold_or_exchange)."""
+    (merge.fold_or_exchange)."""
 
     def merge_layer(pdf: pd.DataFrame) -> pd.DataFrame:
         shard, layer = int(pdf.shard.iloc[0]), int(pdf.layer.iloc[0])

@@ -892,46 +892,119 @@ def test_pieces_over_ceiling_take_exchange_despite_small_estimate(
 
 
 def test_measured_merge_pins_no_cache(spark, monkeypatch):
-    """The partials are persisted to be measured; on either path the
-    session holds no extra cached entry once the caller has released
-    what it got back, nor after a strict fold raises. '1b' forces the
-    measured exchange."""
+    """The partials are persisted to be measured; on either path every
+    result matches and the session holds no extra cached entry after
+    the call, with nothing released by hand — also after a strict
+    fold raises. '1b' forces the measured exchange."""
     import copy
 
     from dablooms_spark.operators.bloom_remove import bloom_remove_distributed
+    from dablooms_spark.operators.generations import build_generation_filters
     from dablooms_spark.operators.sharded import build_sharded_counting_bloom
+    from dablooms_spark.operators.sharded_scaling import build_sharded_scaling_layers
+    from dablooms_spark.operators.sketch_agg import approx_distinct_by
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     df = spark.range(0, 6_000, 1, 4).select(
-        F.concat_ws(":", F.col("id"), F.lit("c")).alias("key"), F.col("id")
+        F.concat_ws(":", F.col("id"), F.lit("c")).alias("key"), F.col("id"),
+        (F.col("id") * 3_600).cast("timestamp").alias("ts"),
+        (F.col("id") % 7).alias("g"),
     )
     sb = build_scaling_bloom(
         df, "key", "id", capacity=2_000, error_rate=0.02,
         id_layout="dense", expected_layers=3,
     )
     hot = spark.range(32, numPartitions=4).select(F.lit("dup").alias("k"))
+    cases = {
+        "build": lambda: build_counting_bloom(
+            df, "key", capacity=300_000, error_rate=0.01
+        ).to_bytes(),
+        "remove": lambda: bloom_remove_distributed(
+            copy.deepcopy(sb), df.filter("id % 2 = 0"), "key", id_col="id"
+        ).to_bytes(),
+        "sharded": lambda: build_sharded_counting_bloom(
+            df, "key", 6_000, 0.01, num_shards=4
+        ),
+        "sharded_scaling": lambda: build_sharded_scaling_layers(
+            df, "key", "id", capacity=1_000, error_rate=0.02, num_shards=4
+        ),
+        "generations": lambda: build_generation_filters(
+            df, "key", "ts", "1 day", capacity=64, error_rate=0.02, num_shards=4
+        ),
+        "sketch_agg": lambda: approx_distinct_by(df, "g", "key", p=10),
+    }
     seen = _merge_spy(monkeypatch)
+    got = {}
     for ceiling, exchanges in (("32m", 0), ("1b", 1)):
         spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
         try:
-            for case in ("build", "remove", "sharded", "strict"):
+            for case, run in cases.items():
                 before, seen["exchange"] = cache.numCachedEntries(), 0
-                if case == "build":
-                    build_counting_bloom(df, "key", capacity=300_000, error_rate=0.01)
-                elif case == "remove":
-                    bloom_remove_distributed(
-                        copy.deepcopy(sb), df.filter("id % 2 = 0"), "key", id_col="id"
-                    )
-                elif case == "sharded":
-                    blobs = build_sharded_counting_bloom(df, "key", 6_000, 0.01, num_shards=4)
-                    assert blobs.count() == 4
-                    blobs.unpersist()
-                else:  # a strict fold that refuses an overflow
-                    with pytest.raises(Exception, match="overflow"):
-                        build_sharded_counting_bloom(
-                            hot, "k", 2_000, 0.01, num_shards=4, on_overflow="error"
-                        )
+                out = run()
                 assert seen["exchange"] == exchanges, (ceiling, case)
                 assert cache.numCachedEntries() == before, (ceiling, case)
+                if not isinstance(out, bytes):
+                    out = sorted(map(tuple, out.collect()))
+                got.setdefault(case, []).append(out)
+            before = cache.numCachedEntries()
+            with pytest.raises(Exception, match="overflow"):  # a strict fold refuses
+                build_sharded_counting_bloom(
+                    hot, "k", 2_000, 0.01, num_shards=4, on_overflow="error"
+                ).collect()
+            assert cache.numCachedEntries() == before, ceiling
         finally:
             spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+    for case, (folded, exchanged) in got.items():
+        assert folded == exchanged, case
+
+
+def test_ingest_loop_at_measured_exchange_pins_no_cache(spark, tmp_path):
+    """A streaming-style ingest loop whose merges all take the measured
+    exchange leaves the session's cache as it found it, batch after
+    batch, with nothing released by hand."""
+    from dablooms_spark.operators.ingest import incremental_ingest_sharded_scaling
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def batch(lo, hi):
+        return spark.range(lo, hi, 1, 4).select(
+            F.concat(F.lit("k"), F.col("id")).alias("key"), F.col("id").alias("rid")
+        )
+
+    before = cache.numCachedEntries()
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "1b")
+    try:
+        for seq, (lo, hi) in enumerate(((0, 800), (400, 1_300), (1_300, 1_600)), 1):
+            new, got = incremental_ingest_sharded_scaling(
+                batch(lo, hi), "key", "rid", str(tmp_path / "ck"), "run",
+                500, 0.05, num_shards=4,
+            )
+            assert got == seq and new.count() > 0
+            assert cache.numCachedEntries() == before, seq
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+
+
+def test_partial_bytes_matches_octet_length(spark):
+    """The merge gate's measure reads Spark's cache builder (internal
+    API): it must equal the public count of the same bytes — a
+    binary or string value's length + 4, 8 per long — so a Spark
+    upgrade that changes either fails here, not silently."""
+    from dablooms_spark.operators.merge import _partial_bytes
+
+    parts = spark.range(0, 500, 1, 3).select(
+        F.col("id").alias("shard"),
+        F.expr("unhex(repeat('ab', cast(id % 97 as int)))").alias("blob"),
+        F.concat(F.lit("key-"), F.col("id")).alias("name"),
+        (F.col("id") * 3).alias("n"),
+    )
+    want = parts.select(
+        F.sum(F.octet_length("blob") + F.octet_length("name")).alias("b"),
+        F.count(F.lit(1)).alias("rows"),
+    ).first()
+    parts = parts.persist()
+    try:
+        got = _partial_bytes(parts)
+    finally:
+        parts.unpersist()
+    assert got == want["b"] + (4 + 4 + 8 + 8) * want["rows"]
