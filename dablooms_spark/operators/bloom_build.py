@@ -4,18 +4,18 @@ The reference is a single-process writer (scaling_bloom_add,
 src/dablooms.c:≈487). The Spark-native equivalent (SURVEY.md §4.3):
 
   stage 1 (no shuffle of text):  mapInArrow over input partitions —
-      each task hashes its Arrow batches zero-copy and emits either
-      one partition-local filter blob or counter PIECES (sparse
-      gap-coded or dense clipped counters per touched layer/chunk,
-      encoded by core/pieces.py). The wide text column never
-      shuffles; only blobs or pieces do.
+      each task hashes its Arrow batches zero-copy and emits counter
+      PIECES (sparse gap-coded or dense clipped counters per touched
+      layer or counter-range chunk, encoded by core/pieces.py) or, on
+      the range scaling build, one partition-local filter blob. The
+      wide text column never shuffles; only pieces or blobs do.
   stage 2 (merge, operators/merge.py): pieces fold per key — on the
       driver when their measured bytes are small, else in one
-      groupBy(key) exchange — and blobs merge through the blob tree:
-      log_fanin(P) rounds of blob-only groupBy(shard // fanin)
-      shuffles, then a driver-side merge of the last ≤ fanin blobs.
-      At P=10k input partitions and fanin 64 that is two tiny shuffle
-      rounds; at local scale usually zero.
+      groupBy(key) exchange. Every counting build takes this path at
+      any size and in both overflow modes. The range scaling build's
+      blobs merge through the blob tree: log_fanin(P) rounds of
+      blob-only groupBy(shard // fanin) shuffles, then a driver-side
+      merge of the last ≤ fanin blobs.
 
 This is the map-side-combine shape Catalyst builds for its own
 partial aggregates, expressed for a Python UDAF whose state (the
@@ -47,89 +47,6 @@ from dablooms_spark.operators.merge import (
 from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
 
 
-#: optimized-logical-plan nodes that are NARROW (no exchange, no
-#: broadcast, no Python stage) — the only shapes for which calling
-#: .rdd.getNumPartitions() is guaranteed job-free under AQE. Anything
-#: else (joins, aggregates, repartitions, mapInArrow, ...) could have
-#: its query stages EXECUTED by the .rdd conversion, silently running
-#: the plan twice, so those fall back to the dynamic count path.
-_NARROW_PLAN_NODES = frozenset(
-    {"Project", "Filter", "Relation", "Range", "LocalRelation", "LogicalRDD"}
-)
-
-
-def _static_num_partitions(df: DataFrame) -> int | None:
-    """Partition count of a provably-narrow plan, else None.
-
-    Used to size merge trees without a count() job (guide §1/§2.4: the
-    dynamic path pays persist + one full extra job over the input just
-    to learn a number the plan already knows). Returning None is always
-    safe — callers keep the dynamic persist+count path."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        for line in plan.splitlines():
-            node = line.lstrip(" :+-*").split(" ", 1)[0].rstrip(",")
-            if node and node not in _NARROW_PLAN_NODES:
-                return None
-        return int(df.rdd.getNumPartitions())
-    except Exception:
-        return None
-
-
-def _chunked_counting_build(
-    sdf: DataFrame,
-    capacity: int,
-    error_rate: float,
-    seed: int,
-    num_chunks: int,
-) -> CountingBloom:
-    """Wide-filter build: each task emits its partial counters as
-    pieces of `num_chunks` counter-range chunks (core/pieces.py); the
-    merge folds each chunk — on the driver for small pieces, else in
-    ONE groupBy(chunk) exchange, num_chunks-way parallel and
-    independent of shard count, no task ever holding more than (chunk
-    width + its pieces) — and the driver concatenates the chunks.
-
-    Tasks never materialize the full counter array: with capacity >>
-    per-task rows it is O(size) of random-scatter writes per task —
-    32 concurrent 77MB working sets thrash a single socket's cache —
-    so the encoder collects banded indices and sorts once per drain."""
-    g = BloomGeometry(capacity, error_rate)
-    bounds = chunk_bounds(g.size, num_chunks)
-
-    def route(batch: pa.RecordBatch):
-        buf, offs, lens = arrow_byte_view(batch.column(0))
-        if len(lens):
-            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-            yield (), h1, h2, None
-
-    enc = PieceEncoder(["chunk"], lambda key: g, chunks=num_chunks)
-    pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
-
-    def merge_chunk(pdf):
-        import pandas as pd
-
-        c = int(pdf.chunk.iloc[0])
-        counters = fold(pdf, int(bounds[c + 1] - bounds[c]))
-        return pd.DataFrame(
-            {"chunk": [c], "dense": [counters.tobytes()], "n": [int(pdf.n.sum())]}
-        )
-
-    rows = fold_or_exchange(
-        pieces, ["chunk"], merge_chunk, "chunk long, dense binary, n long",
-        collect=True,
-    )
-    counters = np.zeros(g.size, dtype=np.uint8)
-    total = 0
-    for r in rows:
-        c = int(r.chunk)
-        counters[bounds[c] : bounds[c + 1]] = np.frombuffer(r.dense, dtype=np.uint8)
-        total += int(r.n)
-    return CountingBloom(
-        capacity, error_rate, seed=seed, _counters=counters, _count=total
-    )
-
-
 def counting_bloom_partials(
     df: DataFrame,
     key_col: str,
@@ -144,9 +61,10 @@ def counting_bloom_partials(
 
     on_overflow='error' builds strict partials: a 4-bit overflow
     raises in the executor (reference bitmap_increment refusal), the
-    strict flag rides the blob header, and merge_blobs re-checks
+    strict flag rides the blob header, and merge_blobs_df re-checks
     cross-partition sums — the distributed form of the reference's
-    single-node refusal."""
+    single-node refusal. build_counting_bloom does not use this stage:
+    it folds counter pieces instead."""
     if on_overflow not in ("saturate", "error"):
         raise ValueError("on_overflow must be 'saturate' or 'error'")
     sdf = df.select(F.col(key_col).alias("key")).filter(F.col("key").isNotNull())
@@ -178,86 +96,72 @@ def build_counting_bloom(
     error_rate: float,
     seed: int = DABLOOMS_SEED,
     num_build_partitions: int | None = None,
-    merge_fanin: int = 8,
     on_overflow: str = "saturate",
 ) -> CountingBloom:
     """Build one counting bloom over a key column, distributed.
 
-    Exactness: the saturating counter-sum merge makes the result
+    Each task emits its partial counters as pieces of counter-range
+    chunks (core/pieces.py); the merge folds each chunk — on the
+    driver for small pieces, else in ONE groupBy(chunk) exchange,
+    chunk-way parallel and independent of the input's partition count,
+    no task ever holding more than (chunk width + its pieces) — and the
+    driver concatenates the chunks. Tasks never materialize the full
+    counter array: with capacity >> per-task rows that is O(size) of
+    random-scatter writes per task, so the encoder collects banded
+    indices and sorts once per drain.
+
+    Exactness: the saturating counter-sum fold makes the result
     bit-identical to a single-process dablooms build over the same
-    keys (any partitioning, any merge order), so no repartition is
-    needed — each input partition builds locally and only blobs move.
+    keys (any partitioning, any piece boundaries), so no repartition
+    is needed; pass num_build_partitions to fan an input of a few fat
+    partitions out across the cores.
 
     on_overflow='error' reproduces the reference's refusal to push a
-    4-bit counter past 15 (bitmap_increment ≈L108) distributed:
-    partial builds raise executor-side, and cross-partition merge sums
-    re-check before clipping. Standard-path only — the chunked wide-
-    filter merge stays saturate-mode (its pieces clip before the
-    strict flag could see the true sum)."""
-    if on_overflow not in ("saturate", "error"):
-        raise ValueError("on_overflow must be 'saturate' or 'error'")
-    # SCALE-ADAPTIVE stage-1 parallelism (guide §2.5 input skew /
-    # §6 split size): parquet splits at row-group granularity, so an
-    # input written as few fat row groups hash+expands on fewer cores
-    # than the cluster has. When the (narrow) input plan has fewer
-    # partitions than cores AND is big enough that per-task compute
-    # dwarfs an exchange (spark.dablooms.build.fanoutMinBytes, default
-    # 256 MiB of Catalyst-estimated input), repartition the PROJECTED
-    # key column — a few bytes per row, never the payload — across the
-    # cores. The size gate matters: an interleaved A/B showed the
-    # ungated version costs small builds ~25-35% (two extra stages
-    # on a box where a stage round-trip is ~0.2 s) while small inputs
-    # have nothing to gain from fan-out. At real scale inputs carry
-    # >> cores partitions and this is a no-op either way; the filter
-    # is bit-identical under any partitioning (saturating counter-sum
-    # merge, property-tested).
-    auto_parts = None
-    if num_build_partitions is None:
-        spark = df.sparkSession
-        dp = spark.sparkContext.defaultParallelism
-        np_ = _static_num_partitions(df)
-        if np_ is not None and 0 < np_ < dp:
-            from dablooms_spark.operators.bloom_probe import _parse_size_bytes
-
-            try:
-                min_bytes = _parse_size_bytes(
-                    spark.conf.get("spark.dablooms.build.fanoutMinBytes", "256m")
-                )
-                est = int(
-                    df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                )
-            except Exception:
-                min_bytes, est = 1, 0
-            if est >= min_bytes:
-                auto_parts = dp
+    4-bit counter past 15 (bitmap_increment ≈L108) distributed: the
+    piece encoder raises executor-side when one task's count passes
+    15, the fold when the cross-task sum does, and the strict flag
+    rides the result's header."""
     g = BloomGeometry(capacity, error_rate)
-    if g.size > 2_000_000:
-        if on_overflow == "error":
-            raise ValueError(
-                "on_overflow='error' is not supported on the chunked "
-                "wide-filter path (pieces clip before a strict check "
-                "could see true sums); use saturate mode or a smaller "
-                "geometry"
-            )
-        sdf = df.select(F.col(key_col).alias("key")).filter(F.col("key").isNotNull())
-        if num_build_partitions or auto_parts:
-            sdf = sdf.repartition(num_build_partitions or auto_parts)
-        # wide filter: chunked merge — one shuffle, counter-range
-        # parallelism, no multi-round tree, no fat blobs to the driver
-        num_chunks = max(df.sparkSession.sparkContext.defaultParallelism, 16)
-        return _chunked_counting_build(sdf, capacity, error_rate, seed, num_chunks)
-    blob_df = counting_bloom_partials(
-        df, key_col, capacity, error_rate, seed,
-        num_build_partitions or auto_parts, on_overflow,
+    sdf = df.select(F.col(key_col).alias("key")).filter(F.col("key").isNotNull())
+    if num_build_partitions:
+        sdf = sdf.repartition(num_build_partitions)
+    num_chunks = max(df.sparkSession.sparkContext.defaultParallelism, 16)
+    bounds = chunk_bounds(g.size, num_chunks)
+
+    def route(batch: pa.RecordBatch):
+        buf, offs, lens = arrow_byte_view(batch.column(0))
+        if len(lens):
+            h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
+            yield (), h1, h2, None
+
+    enc = PieceEncoder(
+        ["chunk"], lambda key: g, chunks=num_chunks, on_overflow=on_overflow
     )
-    # static tree sizing: partials emit <= 1 blob per input partition,
-    # so the partition count bounds the blob count — one action total
-    # instead of persist + count + collect (guide §1.2: fewer passes)
-    num_blobs = num_build_partitions or auto_parts or _static_num_partitions(df)
-    filt, _ = merge_blobs(blob_df, seed, merge_fanin, num_blobs=num_blobs)
-    if filt is None:
-        return CountingBloom(capacity, error_rate, seed=seed, on_overflow=on_overflow)
-    return filt
+    pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
+
+    def merge_chunk(pdf):
+        import pandas as pd
+
+        c = int(pdf.chunk.iloc[0])
+        counters = fold(pdf, int(bounds[c + 1] - bounds[c]), on_overflow)
+        return pd.DataFrame(
+            {"chunk": [c], "dense": [counters.tobytes()], "n": [int(pdf.n.sum())]}
+        )
+
+    rows = fold_or_exchange(
+        pieces, ["chunk"], merge_chunk, "chunk long, dense binary, n long",
+        collect=True,
+    )
+    counters = np.zeros(g.size, dtype=np.uint8)
+    total = 0
+    for r in rows:
+        c = int(r.chunk)
+        counters[bounds[c] : bounds[c + 1]] = np.frombuffer(r.dense, dtype=np.uint8)
+        total += int(r.n)
+    return CountingBloom(
+        capacity, error_rate, seed=seed, _counters=counters, _count=total,
+        on_overflow=on_overflow,
+    )
 
 
 def scaling_bloom_partials(

@@ -166,7 +166,8 @@ def bloom_anti_join(
 
 
 def _parse_size_bytes(v: str) -> int:
-    """Spark size-string to bytes ('10m', '1g', '10485760b', '-1')."""
+    """Spark size-string to bytes ('10m', '1g', '0.5g', '10485760b',
+    '-1'); a fractional size scales before it truncates."""
     s = str(v).strip().lower()
     mult = 1
     for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
@@ -175,7 +176,7 @@ def _parse_size_bytes(v: str) -> int:
             s = s[: -len(suffix)]
             mult = m
             break
-    return int(float(s)) * mult
+    return int(float(s) * mult)
 
 
 def _semi_dim(exact_df: DataFrame, ek: str):

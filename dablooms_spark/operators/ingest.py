@@ -17,10 +17,11 @@ Scale shape per batch (none of these steps collect rows):
                    new keys (no false negatives); with exact_seen_df
                    the ε-sized hit set is verified by a real anti join,
                    making the split exact
-  * add + commit — per-partition partial blobs over the batch, unioned
-                   with the prior blob, counter-sum merged cluster-side
-                   to one row, committed under the next seqnum with
-                   parent lineage
+  * add + commit — the batch filter is built like any counting filter
+                   (build_counting_bloom: counter pieces, one fold),
+                   counter-sum merged into the restored prior on the
+                   driver and committed as one row under the next
+                   seqnum with parent lineage
 
 Counter-sum merge associativity makes the committed filter
 bit-identical to a single build over the concatenation of every batch
@@ -35,8 +36,9 @@ from pyspark.sql import functions as F
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
-from dablooms_spark.operators.bloom_build import counting_bloom_partials, merge_blobs_df
+from dablooms_spark.operators.bloom_build import build_counting_bloom
 from dablooms_spark.operators.bloom_probe import bloom_anti_join
+from dablooms_spark.operators.merge import _BLOB_SCHEMA
 from dablooms_spark.operators.sharded import confirm
 from dablooms_spark.sources.checkpoint import CheckpointManager
 
@@ -118,8 +120,8 @@ def incremental_ingest(
     genuinely-new rows may be misclassified seen — never the reverse).
 
     The returned DataFrame is lazy; the filter update is committed
-    eagerly (blob algebra only — the batch is scanned once for
-    partials, new_rows evaluate on the caller's schedule).
+    eagerly (the batch is scanned once for the build; new_rows
+    evaluate on the caller's schedule).
     """
     spark = batch_df.sparkSession
     prior, manifest = restore_filter(spark, checkpoint_path, run_id, seed)
@@ -137,12 +139,9 @@ def incremental_ingest(
             exact_df=exact_seen_df, exact_key=exact_key, seed=seed,
         )
 
-    # update side: batch partials ∪ prior blob → one merged row
-    partials = counting_bloom_partials(batch_df, key_col, capacity, error_rate, seed)
-    # size the merge tree without a count() action (merge_blobs_df
-    # would otherwise materialize the partials stage twice): partials
-    # emit at most one blob per input partition, plus the prior row
-    n_blobs = batch_df.rdd.getNumPartitions() + 1
+    # update side: batch filter + prior → one merged row. The prior
+    # is already on the driver (restore loaded it), so the merge is one
+    # counter sum there
     if prior is not None:
         g = prior.geometry
         if (g.capacity, g.error_rate) != (capacity, error_rate):
@@ -150,12 +149,12 @@ def incremental_ingest(
                 "geometry drift: checkpoint was built with "
                 f"capacity={g.capacity}, error_rate={g.error_rate}"
             )
-        prior_row = spark.createDataFrame(
-            [(int(-1), bytearray(prior.to_bytes()), int(prior.count))],
-            "shard long, blob binary, n long",
-        )
-        partials = partials.unionByName(prior_row)
-    merged = merge_blobs_df(partials, seed=seed, num_blobs=n_blobs)
+    filt = build_counting_bloom(batch_df, key_col, capacity, error_rate, seed)
+    if prior is not None:
+        filt = prior.merge(filt)
+    merged = spark.createDataFrame(
+        [(0, bytearray(filt.to_bytes()), int(filt.count))], _BLOB_SCHEMA
+    )
 
     mgr = CheckpointManager(checkpoint_path)
     seq = mgr.commit(

@@ -111,6 +111,36 @@ def fold_or_exchange(
     return rows if collect else spark.createDataFrame(rows, schema=schema)
 
 
+#: optimized-logical-plan nodes that are NARROW (no exchange, no
+#: broadcast, no Python stage) — the only shapes for which calling
+#: .rdd.getNumPartitions() is guaranteed job-free under AQE. Anything
+#: else (joins, aggregates, repartitions, mapInArrow, ...) could have
+#: its query stages EXECUTED by the .rdd conversion, silently running
+#: the plan twice, so those fall back to the dynamic count path.
+_NARROW_PLAN_NODES = frozenset(
+    {"Project", "Filter", "Relation", "Range", "LocalRelation", "LogicalRDD"}
+)
+
+
+def _static_num_partitions(df: DataFrame) -> int | None:
+    """Partition count of a provably-narrow plan, else None.
+
+    Used to size the blob tree without a count() job (guide §1/§2.4:
+    the dynamic path pays persist + one full extra job over the input
+    just to learn a number the plan already knows). Returning None is
+    always safe — merge_blobs then keeps the dynamic persist+count
+    path."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        for line in plan.splitlines():
+            node = line.lstrip(" :+-*").split(" ", 1)[0].rstrip(",")
+            if node and node not in _NARROW_PLAN_NODES:
+                return None
+        return int(df.rdd.getNumPartitions())
+    except Exception:
+        return None
+
+
 def _merge_blobs_to_bytes(blobs: list[bytes], seed: int) -> bytes:
     """Fold serialized (self-describing) sketches to a serialized
     result, using the no-densify fast paths: counting blooms

@@ -33,7 +33,11 @@ from dablooms_spark.core.mg import MisraGries
 from dablooms_spark.core.tdigest import TDigest
 from dablooms_spark.core.theta import ThetaSketch
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
-from dablooms_spark.operators.merge import fold_or_exchange, merge_blobs
+from dablooms_spark.operators.merge import (
+    _static_num_partitions,
+    fold_or_exchange,
+    merge_blobs,
+)
 
 _KINDS = {
     "hll": (HyperLogLog, "string"),
@@ -101,8 +105,6 @@ def sketch_agg(df: DataFrame, col: str, kind: str, **params):
     # merge_blobs dispatches via blob magic; static sizing from the
     # (narrow) input plan's partition count skips the persist+count
     # job the dynamic path pays just to learn the blob count
-    from dablooms_spark.operators.bloom_build import _static_num_partitions
-
     sk, _n = merge_blobs(
         blob_df, seed=0, fanin=8, num_blobs=_static_num_partitions(sdf)
     )

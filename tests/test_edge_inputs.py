@@ -63,6 +63,23 @@ def test_incremental_ingest_empty_batch(spark, tmp_path):
     assert filt.count == 2  # prior keys survive an empty round
 
 
+def test_incremental_ingest_empty_first_batch(spark, tmp_path):
+    """An empty first batch commits one empty-filter row, which the
+    next batch merges into like any prior."""
+    from dablooms_spark.operators.ingest import incremental_ingest, restore_filter
+
+    path = str(tmp_path / "ck")
+    empty = spark.createDataFrame([], "key string")
+    new_rows, seq = incremental_ingest(empty, "key", path, "run", 100, 0.05)
+    assert new_rows.count() == 0 and seq == 1
+    filt, _ = restore_filter(spark, path, "run")
+    assert filt.count == 0 and not filt.counters.any()
+    b = spark.createDataFrame([("a",), ("b",)], "key string")
+    new_rows, seq = incremental_ingest(b, "key", path, "run", 100, 0.05)
+    assert new_rows.count() == 2 and seq == 2
+    assert restore_filter(spark, path, "run")[0].count == 2
+
+
 def test_incremental_ingest_scaling_empty_batch(spark, tmp_path):
     from dablooms_spark.operators.ingest import (
         incremental_ingest_scaling,

@@ -30,6 +30,15 @@ def test_distributed_counting_build_matches_local(spark, docs):
     assert filt.to_bytes() == local.to_bytes(), "distributed != single-node build"
     assert filt.count == len(texts)
 
+    # tiny geometries: fewer counters than counter-range chunks, so
+    # some chunks are empty (and every counter saturates at capacity 1)
+    for capacity in (1, 3, 17):
+        filt = build_counting_bloom(docs, "text", capacity=capacity, error_rate=0.05)
+        local = CountingBloom(capacity, 0.05)
+        local.add(texts)
+        assert filt.to_bytes() == local.to_bytes(), capacity
+        assert filt.count == len(texts)
+
 
 def test_probe_column_no_false_negatives(spark, docs):
     filt = build_counting_bloom(docs, "text", capacity=600, error_rate=0.05)
@@ -529,6 +538,20 @@ def test_strict_overflow_distributed_build(spark):
     ok = build_counting_bloom(hot2, "k", 500, 0.01)
     assert ok.check([b"dup"])[0]
 
+    # strict holds at every size: a geometry above 2M counters
+    wide = spark.range(2_000, numPartitions=4).select(
+        F.concat(F.lit("w"), F.col("id")).alias("k")
+    )
+    strict = build_counting_bloom(wide, "k", 300_000, 0.01, on_overflow="error")
+    assert strict.geometry.size > 2_000_000
+    assert strict.on_overflow == "error"
+    assert CountingBloom.from_bytes(strict.to_bytes()).on_overflow == "error"
+    loose = build_counting_bloom(wide, "k", 300_000, 0.01)
+    assert np.array_equal(strict.counters, loose.counters)
+    assert strict.count == loose.count == 2_000
+    with _pytest.raises(Exception, match="overflow"):
+        build_counting_bloom(hot2, "k", 300_000, 0.01, on_overflow="error")
+
 
 def test_chunked_piece_flush_bit_identical(spark, monkeypatch):
     """Worker memory in the sparse-piece stages is bounded by
@@ -605,6 +628,43 @@ def test_chunked_piece_flush_bit_identical(spark, monkeypatch):
     assert all(r.pieces > 1 for r in spanning), per_layer
     # no piece carries more than two batches of rows
     assert max(r.piece_rows for r in per_layer) <= 1_000
+
+
+def test_parse_size_bytes_scales_before_truncating():
+    """A fractional size string scales before it truncates: '0.5g' is
+    half a GiB, not 0 (which the driver-fold ceiling reads as "force
+    the exchange" and the broadcast gate as "broadcast off")."""
+    from dablooms_spark.operators.bloom_probe import _parse_size_bytes
+
+    assert _parse_size_bytes("0.5g") == 1 << 29
+    assert _parse_size_bytes("1.5m") == 3 << 19
+    assert _parse_size_bytes("32m") == 32 << 20
+    assert _parse_size_bytes("1b") == 1
+    assert _parse_size_bytes("0") == 0
+    assert _parse_size_bytes("-1") == -1
+    assert _parse_size_bytes("10485760b") == 10 << 20
+
+
+def test_spark_conf_keys_are_the_two_measured_ceilings():
+    """The library reads exactly two spark.dablooms.* keys, both caps on
+    measured bytes; a new knob has to be a deliberate edit here."""
+    import ast
+    import pathlib
+    import re
+
+    import dablooms_spark
+
+    key = re.compile(r"spark\.dablooms(\.\w+)+")
+    found = set()
+    for path in pathlib.Path(dablooms_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if key.fullmatch(node.value):
+                    found.add(node.value)
+    assert found == {
+        "spark.dablooms.build.driverMergeMaxBytes",
+        "spark.dablooms.probe.autoBroadcastBytes",
+    }
 
 
 def test_approx_n_keys_slack_covers_undershoot(spark):
@@ -757,11 +817,11 @@ def test_fixed_partials_uniform_schedule_membership(spark, tmp_path):
 
 
 def test_driver_merge_routing_bit_identical(spark):
-    """Small inputs route the wide counting build and the dense scaling
-    build through a driver-side piece fold (no merge exchange); the
-    resulting filter must be bit-identical to the distributed merge
-    (piece-boundary invariance: min(15, sum(min(15, t))) == min(15,
-    sum(t)))."""
+    """Pieces whose measured bytes fit the ceiling fold on the driver
+    (no merge exchange) for the counting build, at any size, and the
+    dense scaling build; the resulting filter must be bit-identical to
+    the distributed merge (piece-boundary invariance: min(15,
+    sum(min(15, t))) == min(15, sum(t)))."""
     import numpy as _np
     from pyspark.sql import functions as F
 
@@ -771,15 +831,19 @@ def test_driver_merge_routing_bit_identical(spark):
         F.concat_ws(":", F.col("id"), F.lit("x")).alias("key"),
         F.col("id").alias("id"),
     )
-    # capacity chosen to cross the wide-filter (chunked) threshold
-    drv = build_counting_bloom(df, "key", capacity=300_000, error_rate=0.01)
-    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
-    try:
-        dist = build_counting_bloom(df, "key", capacity=300_000, error_rate=0.01)
-    finally:
-        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
-    assert drv.count == dist.count == 30_000
-    assert _np.array_equal(drv.counters, dist.counters)
+    # a filter above 2M counters and a small one take the same path
+    for capacity in (300_000, 3_000):
+        drv = build_counting_bloom(df, "key", capacity=capacity, error_rate=0.01)
+        spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+        try:
+            dist = build_counting_bloom(
+                df, "key", capacity=capacity, error_rate=0.01
+            )
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+        assert drv.count == dist.count == 30_000
+        assert _np.array_equal(drv.counters, dist.counters), capacity
+        assert drv.to_bytes() == dist.to_bytes(), capacity
 
     sdrv = build_scaling_bloom(
         df, "key", "id", capacity=8_000, error_rate=0.02,
