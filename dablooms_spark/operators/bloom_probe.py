@@ -17,6 +17,7 @@ negatives so no row is lost.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -165,18 +166,29 @@ def bloom_anti_join(
     return misses.unionByName(confirmed_absent)
 
 
+_SIZE = re.compile(r"(-?(?:\d+\.?\d*|\.\d+))([kmgtp]?b|[kmgtp])?")
+_SIZE_UNITS = {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40, "p": 1 << 50}
+
+
 def _parse_size_bytes(v: str) -> int:
-    """Spark size-string to bytes ('10m', '1g', '0.5g', '10485760b',
-    '-1'); a fractional size scales before it truncates."""
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(float(s) * mult)
+    """Spark size-string to bytes ('10m', '1g', '0.5g', '2tb',
+    '10485760b', '-1'); a fractional size scales before it truncates.
+    Anything else raises a ValueError."""
+    m = _SIZE.fullmatch(str(v).strip().lower())
+    if m is None:
+        raise ValueError(f"{v!r} is not a size: use bytes or a b/k/m/g/t/p(b) suffix")
+    return int(float(m.group(1)) * _SIZE_UNITS[(m.group(2) or "")[:1]])
+
+
+def _conf_size_bytes(spark, key: str, default: str) -> int:
+    """A spark.dablooms.* size key, parsed; a value that does not parse
+    raises, naming the key, rather than silently meaning the default."""
+    v = spark.conf.get(key, default)
+    try:
+        return _parse_size_bytes(v)
+    except ValueError as e:
+        raise ValueError(f"{key}={e}") from None
 
 
 def _semi_dim(exact_df: DataFrame, ek: str):

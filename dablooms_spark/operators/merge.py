@@ -4,12 +4,16 @@ Every distributed build and remove ends the same way: a DataFrame of
 partials (counter pieces or serialized sketches) keyed by some group
 columns, folded per group. The partials are persisted and measured —
 one JVM job fills the cache and counts the bytes it holds — and within
-the ceiling they are collected and folded on the driver (no exchange,
-no pandas stage); above it they go through
+the ceiling they are folded on the driver; above it they go through
 `groupBy(keys).applyInPandas(fold)`, which keeps the driver out of
 the data path. The per-group fold is the same function either way,
 so both topologies give identical rows (order-invariant merges).
 Nothing stays cached once a merge returns.
+
+The driver path moves bytes with no Python stage on either side: the
+cached pieces come in as Arrow (`toArrow`), and a returned frame goes
+out as pickled rows the JVM unpickles itself (`_local_frame`), so its
+first action runs JVM tasks only.
 
 This module is the only reader of the driver-fold ceiling
 (spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
@@ -22,8 +26,10 @@ from collections.abc import Callable
 
 import pandas as pd
 import pyarrow as pa
+from pyspark.serializers import AutoBatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.scaling_bloom import ScalingBloom
@@ -42,19 +48,14 @@ def _driver_merge_max_bytes(spark) -> int:
     """Ceiling on the MEASURED partial bytes (_partial_bytes) collected
     and folded DRIVER-SIDE instead of through a groupBy exchange
     (spark.dablooms.build.driverMergeMaxBytes, size string, default
-    32 MiB; '0' forces the exchange). Interleaved same-session A/B on
-    the bench build: driver fold 0.869 s vs distributed merge 0.958 s
-    end-to-end — the fold also removes a stage, a shuffle and a pandas
-    round-trip. Above the ceiling the distributed merge keeps the
-    driver out of the data path."""
-    from dablooms_spark.operators.bloom_probe import _parse_size_bytes
+    32 MiB; '0' forces the exchange). The fold removes a stage, a
+    shuffle and a pandas round-trip: interleaved perfbench
+    ingest_webpages runs, 4-core host, BENCH/ab_arrow_driver_fold.jsonl
+    set fold_vs_exchange. Above the ceiling the distributed merge keeps
+    the driver out of the data path."""
+    from dablooms_spark.operators.bloom_probe import _conf_size_bytes
 
-    try:
-        return _parse_size_bytes(
-            spark.conf.get("spark.dablooms.build.driverMergeMaxBytes", "32m")
-        )
-    except Exception:
-        return 32 << 20
+    return _conf_size_bytes(spark, "spark.dablooms.build.driverMergeMaxBytes", "32m")
 
 
 def _partial_bytes(partials: DataFrame) -> int:
@@ -92,8 +93,10 @@ def fold_or_exchange(
     driverMergeMaxBytes, else through groupBy(keys).applyInPandas
     ('0' skips the measure). Returns the merged DataFrame, or with
     collect=True the merged rows (attribute access by column name).
-    The partials are released on return: a collect=True exchange
-    reads them from the cache, a returned exchange frame is lazy."""
+    The driver fold reads the cached pieces as Arrow and returns a
+    frame of JVM-side rows with no Python stage behind it. The
+    partials are released on return: a collect=True exchange reads
+    them from the cache, a returned exchange frame is lazy."""
     spark = partials.sparkSession
     cap = _driver_merge_max_bytes(spark)
     if cap > 0:
@@ -102,13 +105,45 @@ def fold_or_exchange(
         if cap <= 0 or _partial_bytes(partials) > cap:
             merged = _exchange(partials, keys, fold, schema)
             return merged.collect() if collect else merged
-        pdf = pd.DataFrame.from_records(partials.collect(), columns=partials.columns)
+        pdf = partials.toArrow().to_pandas()
     finally:
         if cap > 0:
             partials.unpersist()
     groups = pdf.groupby(keys, sort=True) if len(pdf) else []
     rows = [r for _, g in groups for r in fold(g).itertuples(index=False)]
-    return rows if collect else spark.createDataFrame(rows, schema=schema)
+    return rows if collect else _local_frame(spark, rows, schema)
+
+
+def _local_frame(spark, rows: list, schema: str) -> DataFrame:
+    """`spark.createDataFrame(rows, schema)` — the same type check,
+    internal conversion, rows, schema and partition count — minus its
+    Python stage: createDataFrame pickles with parallelize's batch
+    serializer, so the frame's first action re-pickles every row in an
+    identity map on the Python workers. Pickled here with the
+    serializer `RDD._to_java_object_rdd` expects, the rows unpickle in
+    the JVM. The plan is a LogicalRDD (not a LocalRelation), so a
+    filter on the frame stays a Filter. Reads PySpark 4.1 internals on
+    purpose; a test pins the result to createDataFrame's."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    struct = spark._parse_ddl(schema)
+    verify, convert = _make_type_verifier(struct), _create_converter(struct)
+    data = []
+    for r in rows:
+        verify(r)
+        data.append(struct.toInternal(convert(r)))
+    n = sc.defaultParallelism
+    pickled = sc._serialize_to_jvm(
+        data,
+        AutoBatchedSerializer(CPickleSerializer()),
+        lambda path: jvm.PythonRDD.readRDDFromFile(sc._jsc, path, n),
+        lambda: jvm.PythonParallelizeServer(sc._jsc.sc(), n),
+    )
+    jrows = jvm.SerDeUtil.toJavaArray(jvm.SerDeUtil.pythonToJava(pickled, True))
+    jdf = spark._jsparkSession.applySchemaToPythonRDD(jrows.rdd(), struct.json())
+    df = DataFrame(jdf, spark)
+    df._schema = struct
+    return df
 
 
 #: optimized-logical-plan nodes that are NARROW (no exchange, no

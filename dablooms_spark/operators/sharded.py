@@ -59,7 +59,7 @@ from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.core.pieces import PieceEncoder, fold, runs
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-from dablooms_spark.operators.bloom_probe import _parse_size_bytes, _semi_dim
+from dablooms_spark.operators.bloom_probe import _conf_size_bytes, _semi_dim
 from dablooms_spark.operators.merge import _BLOB_SCHEMA, _partial_bytes, fold_or_exchange
 
 _SHARD_SEED = 0x5D
@@ -77,12 +77,7 @@ def _probe_broadcast_bytes(spark) -> int:
     """Blob bytes under which a sharded filter is broadcast instead of
     co-grouped with every probe row (spark.dablooms.probe.
     autoBroadcastBytes, default 64 MiB, executor-memory bound; '0' off)."""
-    try:
-        return _parse_size_bytes(
-            spark.conf.get("spark.dablooms.probe.autoBroadcastBytes", "64m")
-        )
-    except Exception:
-        return 64 << 20
+    return _conf_size_bytes(spark, "spark.dablooms.probe.autoBroadcastBytes", "64m")
 
 
 def _check_num_shards(built: int, num_shards: int) -> None:

@@ -1072,3 +1072,120 @@ def test_partial_bytes_matches_octet_length(spark):
     finally:
         parts.unpersist()
     assert got == want["b"] + (4 + 4 + 8 + 8) * want["rows"]
+
+
+def test_size_keys_raise_on_unparseable_values(spark):
+    """Both spark.dablooms.* size keys take Spark's suffixes up to
+    t/tb/p/pb, and a value that does not parse raises a ValueError
+    naming the key and the value instead of silently meaning the
+    default."""
+    from dablooms_spark.operators.merge import _driver_merge_max_bytes
+    from dablooms_spark.operators.sharded import _probe_broadcast_bytes
+
+    for key, read in (
+        ("spark.dablooms.build.driverMergeMaxBytes", _driver_merge_max_bytes),
+        ("spark.dablooms.probe.autoBroadcastBytes", _probe_broadcast_bytes),
+    ):
+        try:
+            for value, want in (("1t", 1 << 40), ("2tb", 2 << 40), ("1p", 1 << 50),
+                                ("1pb", 1 << 50), ("48MB", 48 << 20)):
+                spark.conf.set(key, value)
+                assert read(spark) == want, (key, value)
+            for value in ("2GiB", "32 megs", "fast"):
+                spark.conf.set(key, value)
+                with pytest.raises(ValueError) as err:
+                    read(spark)
+                assert key in str(err.value) and repr(value) in str(err.value)
+        finally:
+            spark.conf.unset(key)
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "2GiB")
+    try:
+        with pytest.raises(ValueError, match="driverMergeMaxBytes"):
+            build_counting_bloom(
+                spark.range(10).selectExpr("string(id) AS k"), "k", 10, 0.01
+            )
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+
+
+def test_driver_folded_frames_run_no_python_stage(spark, monkeypatch):
+    """At the default ceiling the frame a driver fold returns is rows
+    the JVM already holds: its plan's RDD lineage has no PythonRDD, so
+    its first action runs JVM tasks only."""
+    import re
+
+    from dablooms_spark.operators.generations import build_generation_filters
+    from dablooms_spark.operators.sharded import build_sharded_counting_bloom
+    from dablooms_spark.operators.sharded_scaling import build_sharded_scaling_layers
+    from dablooms_spark.operators.sketch_agg import approx_distinct_by
+
+    df = spark.range(0, 4_000, 1, 4).select(
+        F.concat_ws(":", F.col("id"), F.lit("p")).alias("key"), F.col("id"),
+        (F.col("id") * 3_600).cast("timestamp").alias("ts"),
+        (F.col("id") % 5).alias("g"),
+    )
+    cases = {
+        "sharded": lambda: build_sharded_counting_bloom(
+            df, "key", 4_000, 0.01, num_shards=4
+        ),
+        "sharded_scaling": lambda: build_sharded_scaling_layers(
+            df, "key", "id", capacity=1_000, error_rate=0.02, num_shards=4
+        ),
+        "generations": lambda: build_generation_filters(
+            df, "key", "ts", "1 day", capacity=64, error_rate=0.02, num_shards=4
+        ),
+        "sketch_agg": lambda: approx_distinct_by(df, "g", "key", p=10),
+    }
+    seen = _merge_spy(monkeypatch)
+    for case, run in cases.items():
+        out = run()
+        assert seen["exchange"] == 0, case
+        lineage = out._jdf.queryExecution().toRdd().toDebugString()
+        assert not re.search(r"\bPythonRDD\[", lineage), (case, lineage)
+        assert out.count() > 0, case
+
+
+def test_local_frame_equals_create_dataframe(spark):
+    """The driver fold's frame builder gives the rows, schema and
+    partition count of spark.createDataFrame(rows, schema), for every
+    row shape fold_or_exchange returns and for no rows; bad rows fail
+    createDataFrame's type check. Pins the PySpark internals it calls."""
+    import pandas as pd
+
+    from dablooms_spark.operators.merge import _BLOB_SCHEMA, _local_frame
+    from dablooms_spark.operators.sharded_scaling import _ROW_SCHEMA
+
+    def rows_of(cols):
+        return list(pd.DataFrame(cols).itertuples(index=False))
+
+    blob = bytes(range(256)) * 40
+    shapes = {
+        _BLOB_SCHEMA: rows_of({"shard": [0, 3], "blob": [blob, b""], "n": [7, 0]}),
+        _ROW_SCHEMA: rows_of({
+            "shard": [1, 2], "first_id": [0, 1 << 40], "layer_eps": [0.01, 0.005],
+            "capacity": [1_000, 2_000], "max_id": [999, -1], "sb_eps": [0.02, 0.02],
+            "blob": [blob, b"\x00"], "n": [10, 0], "num_shards": [4, 4],
+        }),
+        "gen long, shard long, blob binary, n long": rows_of(
+            {"gen": [-3, 19_800], "shard": [0, 1], "blob": [blob, blob[:9]],
+             "n": [1, 2]}
+        ),
+        "g string, approx_distinct long": rows_of(
+            {"g": ["a", "é"], "approx_distinct": [5, 0]}
+        ),
+        "g string, q double, value double": rows_of(
+            {"g": ["a", "a", "b"], "q": [0.5, 0.9, 0.5],
+             "value": [1.5, float("nan"), None]}
+        ),
+        "layer long, blob binary, n long": rows_of(
+            {"layer": [0], "blob": [blob], "n": [3]}
+        ),
+    }
+    for schema, rows in shapes.items():
+        for r in (rows, []):
+            got, want = _local_frame(spark, r, schema), spark.createDataFrame(r, schema)
+            assert got.schema == want.schema, schema
+            assert got.rdd.getNumPartitions() == want.rdd.getNumPartitions(), schema
+            assert repr(got.collect()) == repr(want.collect()), schema
+    with pytest.raises(Exception, match="LongType"):
+        _local_frame(spark, [("x", b"", 1)], _BLOB_SCHEMA)
