@@ -11,7 +11,11 @@ applyInPandas / pandas_udf) — never per-row Python.
 Reference semantics: public bitly/dablooms v0.9.1 (see SURVEY.md).
 """
 
+from dablooms_spark._zipguard import install_in_worker as _install_in_worker
+
 __version__ = "0.1.0"
+
+_install_in_worker()
 
 
 def dablooms_version() -> str:
