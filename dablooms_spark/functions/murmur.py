@@ -12,30 +12,37 @@ Two implementations:
 
 - :func:`murmur3_x64_128_scalar` — straight pure-Python transcription
   of the canonical algorithm; the test oracle (slow path).
-- :func:`murmur3_x64_128` — vectorized over a whole batch of byte
-  strings. Strategy: concatenate all keys into one uint8 buffer, sort
-  rows descending by 16-byte block count, then for block j gather the
-  j-th block of every row that has one (a descending-sorted prefix) —
-  total gather work is exactly total_bytes/16 block rows, no padding
-  waste. Tail bytes (< 16) are gathered into a zero-padded (N, 16)
-  array; reading that as two little-endian uint64 words is equivalent
-  to the canonical byte-by-byte tail switch because missing bytes
-  contribute zero. All arithmetic is np.uint64 with wrapping
-  semantics, matching C unsigned overflow.
+- :func:`murmur3_x64_128_buffer` — vectorized over a whole batch of
+  (offset, length) rows of one flat byte buffer, the Arrow
+  string/binary layout; :func:`murmur3_x64_128` feeds it a list of
+  keys. Like the reference body, which reads its input with
+  `getblock64` (src/murmur.c), it works on 64-bit little-endian words,
+  never on single bytes: the batch's used byte range is copied once
+  into a zero-tailed uint64 array, and the word at any byte offset is
+  two word loads and two shifts. Rows are sorted by descending 16-byte
+  block count, so the rows that have block j form a prefix and each
+  round runs over that prefix. The 0–15 tail bytes are the same word
+  loads masked to the row's remaining length; masked-off bytes are
+  zero, which is what the canonical byte-by-byte tail switch mixes in.
+  All arithmetic is np.uint64 with wrapping semantics, matching C
+  unsigned overflow.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+
+from dablooms_spark.functions.arrow_utils import arrow_byte_view
 
 # dablooms SALT_CONSTANT (src/dablooms.c:≈20)
 DABLOOMS_SEED = 0x97C29B3A
 
 _C1 = np.uint64(0x87C37B91114253D5)
 _C2 = np.uint64(0x4CF5AD432745937F)
-_M = np.uint64(0xFFFFFFFFFFFFFFFF)  # 64-bit mask for scalar path
 
-_AR16 = np.arange(16, dtype=np.int64)
+#: low-m-bytes masks, m = 0..8 (a shift by 64 would be undefined)
+_BYTE_MASK = np.array([(1 << (8 * m)) - 1 for m in range(9)], dtype=np.uint64)
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -52,12 +59,21 @@ def _fmix(k: np.ndarray) -> np.ndarray:
     return k
 
 
-def _as_byte_buffer(keys) -> tuple[np.ndarray, np.ndarray]:
-    """(concatenated uint8 buffer, int64 lengths) for a batch of keys.
+def _as_byte_buffer(keys) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(uint8 buffer, int64 offsets, int64 lengths) for a batch of keys.
 
     Accepts a list/ndarray/pandas-Series of ``bytes`` or ``str``
     (str is UTF-8 encoded — the engine's byte-identical-text rule).
+    A batch Arrow reads as one string/binary column with no null is
+    built by Arrow; any other batch (``None``, non-text keys) takes
+    the per-key loop. Both give the same bytes for every key.
     """
+    try:
+        arr = pa.array(keys)
+    except (pa.ArrowException, TypeError, ValueError):
+        arr = None
+    if isinstance(arr, pa.Array) and arr.type in (pa.string(), pa.binary()) and not arr.null_count:
+        return arrow_byte_view(arr)
     n = len(keys)
     lengths = np.empty(n, dtype=np.int64)
     parts = []
@@ -69,7 +85,9 @@ def _as_byte_buffer(keys) -> tuple[np.ndarray, np.ndarray]:
         lengths[i] = len(k)
         parts.append(k)
     buf = np.frombuffer(b"".join(parts), dtype=np.uint8) if parts else np.empty(0, np.uint8)
-    return buf, lengths
+    offsets = np.zeros(n, dtype=np.int64)
+    np.cumsum(lengths[:-1], out=offsets[1:])
+    return buf, offsets, lengths
 
 
 def murmur3_x64_128(keys, seed: int = DABLOOMS_SEED) -> tuple[np.ndarray, np.ndarray]:
@@ -78,22 +96,7 @@ def murmur3_x64_128(keys, seed: int = DABLOOMS_SEED) -> tuple[np.ndarray, np.nda
     Returns (out1, out2): the two uint64 words of each 128-bit hash,
     matching the canonical C output layout ((uint64_t*)out)[0|1].
     """
-    buf, lengths = _as_byte_buffer(keys)
-    n = len(lengths)
-    if n == 0:
-        e = np.empty(0, np.uint64)
-        return e, e
-    offsets = np.zeros(n, dtype=np.int64)
-    np.cumsum(lengths[:-1], out=offsets[1:])
-    return murmur3_x64_128_buffer(buf, offsets, lengths, seed)
-
-
-#: Padded-matrix ceiling: above this many bytes (n rows x the longest
-#: row, 16-byte aligned) the one-shot padded layout would blow memory
-#: under length skew (one 1 GB document in a 20k-row batch), so those
-#: batches take the per-block gather path whose work tracks TOTAL
-#: bytes, not n x max.
-_PAD_MATRIX_MAX_BYTES = 256 << 20
+    return murmur3_x64_128_buffer(*_as_byte_buffer(keys), seed)
 
 
 def murmur3_x64_128_buffer(
@@ -107,135 +110,91 @@ def murmur3_x64_128_buffer(
     string/binary column is exactly this layout, so the Spark-side
     kernels never materialize per-row Python objects.
 
-    Layout strategy (profiled on the bench keys, guide §4.2 "hand
-    whole batches to vectorized native code"): the rows are first
-    scattered ONCE into a zero-padded (n, ceil(max_len/16)*16) uint8
-    matrix — after that every 16-byte block round and the tail are
-    contiguous column slices, where the old code paid a fancy
-    16-byte-index gather (plus index-matrix allocation) per block
-    round and a masked double-gather for the tail. Fixed-length
-    contiguous batches (Arrow guarantees back-to-back rows) skip even
-    that scatter: one reshape + one memcpy. Severely length-skewed
-    batches where n x max_len explodes fall back to the per-block
-    gather path (work proportional to total bytes).
+    Word-gather layout (the reference's `getblock64`): the used byte
+    range [min offset, max end) is copied once into ``W``, a
+    little-endian uint64 array with two zero words past the end, and
+    the offsets are rebased into it. The word at byte p is
+    ``(W[p>>3] >> 8r) | ((W[(p>>3)+1] << 1) << (63 - 8r))`` with
+    r = p & 7; the split shift keeps every shift below 64. A row's
+    blocks all share its r, so the shifts are computed once per row.
+    Memory is O(used bytes / 8 + n) at any length skew.
     """
     n = len(lengths)
     if n == 0:
         e = np.empty(0, np.uint64)
         return e, e
 
-    max_len = int(lengths.max())
-    pad16 = (max_len + 15) & ~15
-    if pad16 == 0:
-        pad16 = 16
-    if n * pad16 > _PAD_MATRIX_MAX_BYTES:
-        return _murmur3_buffer_gather(buf, offsets, lengths, seed)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    lo = int(offsets.min())
+    used = int((offsets + lengths).max()) - lo
+    raw = np.zeros(((used >> 3) + 3) << 3, dtype=np.uint8)
+    raw[:used] = buf[lo: lo + used]
+    W = raw.view("<u8")
+
+    nblocks = lengths >> 4
+    max_blocks = int(nblocks.max())
+    if int(nblocks.min()) == max_blocks:
+        # every row has the same block count: no reorder needed
+        order = None
+        starts, lens_s = offsets - lo, lengths
+    else:
+        # descending block count: the rows that have block j are a prefix
+        # (a uint8/uint16 key sorts by radix)
+        key = (max_blocks - nblocks).astype(np.min_scalar_type(max_blocks))
+        order = np.argsort(key, kind="stable")
+        starts, lens_s = offsets[order] - lo, lengths[order]
+    nb_s = lens_s >> 4
+    q = starts >> 3  # word index of each row's next block
+    rs = ((starts & 7) << 3).astype(np.uint64)
+    ls = np.uint64(63) - rs
+    one = np.uint64(1)
 
     with np.errstate(over="ignore"):
-        lengths = np.asarray(lengths, dtype=np.int64)
-        offsets = np.asarray(offsets, dtype=np.int64)
-        nblocks = lengths >> 4
-        max_blocks = int(nblocks.max())
-        if max_blocks == 0 or int(nblocks.min()) == max_blocks:
-            # every row has the same block count: rounds touch all rows,
-            # no reorder needed
-            order = None
-            off_s, lens_s = offsets, lengths
-        else:
-            # Descending block-count order: rows needing block j form a
-            # prefix, so each round is a contiguous head slice.
-            order = np.argsort(-nblocks, kind="stable")
-            off_s, lens_s = offsets[order], lengths[order]
-        nb_s = lens_s >> 4
-
-        # --- one-shot padded layout -----------------------------------
-        if (
-            order is None
-            and int(lengths.min()) == max_len
-            and n * max_len == int(lengths.sum())
-            and (n == 1 or bool((np.diff(offsets) == max_len).all()))
-        ):
-            # fixed-length contiguous rows: reshape + one memcpy
-            block = buf[int(offsets[0]): int(offsets[0]) + n * max_len]
-            if max_len == pad16:
-                padded = np.ascontiguousarray(block).reshape(n, pad16)
-            else:
-                padded = np.zeros((n, pad16), dtype=np.uint8)
-                padded[:, :max_len] = block.reshape(n, max_len)
-        else:
-            padded = np.zeros((n, pad16), dtype=np.uint8)
-            total = int(lens_s.sum())
-            if total:
-                row_of = np.repeat(
-                    np.arange(n, dtype=np.int64) * pad16, lens_s
-                )
-                starts = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens_s[:-1], out=starts[1:])
-                col_of = np.arange(total, dtype=np.int64) - np.repeat(
-                    starts, lens_s
-                )
-                if order is None and bool(
-                    np.array_equal(starts + off_s[0], off_s)
-                ):
-                    # rows are back-to-back in the buffer (the Arrow
-                    # layout): skip the per-byte source gather
-                    data = buf[int(off_s[0]): int(off_s[0]) + total]
-                else:
-                    data = buf[np.repeat(off_s, lens_s) + col_of]
-                padded.reshape(-1)[row_of + col_of] = data
-        words = padded.view("<u8")  # (n, pad16 // 8)
-
         h1 = np.full(n, np.uint64(seed))
         h2 = np.full(n, np.uint64(seed))
 
-        if max_blocks:
-            asc = nb_s[::-1]
-            for j in range(max_blocks):
-                cnt = n - int(np.searchsorted(asc, j, side="right"))
-                if cnt == 0:
-                    break
-                k1 = words[:cnt, 2 * j].astype(np.uint64, copy=True)
-                k2 = words[:cnt, 2 * j + 1].astype(np.uint64, copy=True)
+        asc = nb_s[::-1]
+        w0 = W[q]  # each row's next word; a block's third word starts the next block
+        for j in range(max_blocks):
+            cnt = n - int(np.searchsorted(asc, j, side="right"))
+            qc, r, l_ = q[:cnt], rs[:cnt], ls[:cnt]
+            w1, w2 = W[qc + 1], W[qc + 2]
+            k1 = (w0[:cnt] >> r) | ((w1 << one) << l_)
+            k2 = (w1 >> r) | ((w2 << one) << l_)
+            qc += 2
+            w0 = w2
+            a, b = h1[:cnt], h2[:cnt]
 
-                k1 *= _C1
-                k1 = _rotl(k1, 31)
-                k1 *= _C2
-                h1[:cnt] ^= k1
-                h1[:cnt] = _rotl(h1[:cnt], 27) + h2[:cnt]
-                h1[:cnt] = h1[:cnt] * np.uint64(5) + np.uint64(0x52DCE729)
-
-                k2 *= _C2
-                k2 = _rotl(k2, 33)
-                k2 *= _C1
-                h2[:cnt] ^= k2
-                h2[:cnt] = _rotl(h2[:cnt], 31) + h1[:cnt]
-                h2[:cnt] = h2[:cnt] * np.uint64(5) + np.uint64(0x38495AB5)
-
-        # Tail (len & 15 trailing bytes): the padded matrix is already
-        # zero beyond each row's length, which matches the canonical
-        # byte-switch (absent bytes contribute 0).
-        has_tail = (lens_s & 15) > 0
-        if bool(has_tail.any()):
-            # tail-less rows have no tail word to read — and a row whose
-            # length is exactly max blocks*16 would index past the last
-            # column; clamp those to column 0 (value discarded by the
-            # np.where below)
-            wi = np.where(has_tail, nb_s << 1, 0).astype(np.int64)
-            if max_blocks == 0:
-                k1 = words[:, 0].astype(np.uint64, copy=True)
-                k2 = words[:, 1].astype(np.uint64, copy=True)
-            else:
-                rows_i = np.arange(n, dtype=np.int64)
-                k1 = words[rows_i, wi].astype(np.uint64, copy=True)
-                k2 = words[rows_i, wi + 1].astype(np.uint64, copy=True)
-            k2 *= _C2
-            k2 = _rotl(k2, 33)
-            k2 *= _C1
-            h2 = h2 ^ np.where(has_tail, k2, np.uint64(0))
             k1 *= _C1
             k1 = _rotl(k1, 31)
             k1 *= _C2
-            h1 = h1 ^ np.where(has_tail, k1, np.uint64(0))
+            a ^= k1
+            a[:] = _rotl(a, 27) + b
+            a[:] = a * np.uint64(5) + np.uint64(0x52DCE729)
+
+            k2 *= _C2
+            k2 = _rotl(k2, 33)
+            k2 *= _C1
+            b ^= k2
+            b[:] = _rotl(b, 31) + a
+            b[:] = b * np.uint64(5) + np.uint64(0x38495AB5)
+
+        # Tail: the len & 15 trailing bytes, masked out of the same word
+        # loads. A row with no tail reads k1 = k2 = 0, which mixes to 0
+        # and leaves h1, h2 as the canonical switch does.
+        tail = lens_s & 15
+        w0, w1, w2 = W[q], W[q + 1], W[q + 2]
+        k1 = ((w0 >> rs) | ((w1 << one) << ls)) & _BYTE_MASK[np.minimum(tail, 8)]
+        k2 = ((w1 >> rs) | ((w2 << one) << ls)) & _BYTE_MASK[np.maximum(tail - 8, 0)]
+        k2 *= _C2
+        k2 = _rotl(k2, 33)
+        k2 *= _C1
+        h2 ^= k2
+        k1 *= _C1
+        k1 = _rotl(k1, 31)
+        k1 *= _C2
+        h1 ^= k1
 
         # Finalization
         ln_s = lens_s.astype(np.uint64)
@@ -254,98 +213,6 @@ def murmur3_x64_128_buffer(
     out2 = np.empty(n, np.uint64)
     out1[order] = h1
     out2[order] = h2
-    return out1, out2
-
-
-def _murmur3_buffer_gather(
-    buf: np.ndarray,
-    offsets: np.ndarray,
-    lengths: np.ndarray,
-    seed: int = DABLOOMS_SEED,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-block gather fallback for severely length-skewed batches:
-    work tracks total bytes (each block round gathers only the rows
-    that have that block), at the cost of a fancy 16-byte gather per
-    round. Bit-identical to the padded path (property-tested)."""
-    n = len(lengths)
-    nblocks = lengths >> 4
-
-    with np.errstate(over="ignore"):
-        h1 = np.full(n, np.uint64(seed))
-        h2 = np.full(n, np.uint64(seed))
-
-        # Descending block-count order: rows needing block j form a prefix.
-        order = np.argsort(-nblocks, kind="stable")
-        nb_s = nblocks[order]
-        off_s = offsets[order]
-        h1_s = h1  # alias: we operate on sorted views then un-sort at the end
-        h2_s = h2
-
-        max_blocks = int(nb_s[0]) if n else 0
-        # counts[j] = number of rows with nblocks > j (prefix length at block j)
-        asc = nb_s[::-1]
-        for j in range(max_blocks):
-            cnt = n - int(np.searchsorted(asc, j, side="right"))
-            if cnt == 0:
-                break
-            pos = off_s[:cnt] + (j << 4)
-            g = buf[pos[:, None] + _AR16]  # (cnt, 16) contiguous
-            kk = g.view("<u8")  # (cnt, 2) little-endian
-            k1 = kk[:, 0].astype(np.uint64, copy=True)
-            k2 = kk[:, 1].astype(np.uint64, copy=True)
-
-            k1 *= _C1
-            k1 = _rotl(k1, 31)
-            k1 *= _C2
-            h1_s[:cnt] ^= k1
-            h1_s[:cnt] = _rotl(h1_s[:cnt], 27) + h2_s[:cnt]
-            h1_s[:cnt] = h1_s[:cnt] * np.uint64(5) + np.uint64(0x52DCE729)
-
-            k2 *= _C2
-            k2 = _rotl(k2, 33)
-            k2 *= _C1
-            h2_s[:cnt] ^= k2
-            h2_s[:cnt] = _rotl(h2_s[:cnt], 31) + h1_s[:cnt]
-            h2_s[:cnt] = h2_s[:cnt] * np.uint64(5) + np.uint64(0x38495AB5)
-
-        # Tail (len & 15 trailing bytes), zero-padded to 16 — equivalent
-        # to the canonical byte-by-byte tail switch because missing
-        # bytes contribute zero.
-        tail_len_s = (lengths[order] & 15).astype(np.int64)
-        tails = np.zeros((n, 16), dtype=np.uint8)
-        has_tail = tail_len_s > 0
-        if np.any(has_tail):
-            cols = _AR16[None, :]
-            mask = cols < tail_len_s[:, None]
-            src = (off_s + (nb_s << 4))[:, None] + cols
-            tails[mask] = buf[src[mask]]
-        tk = tails.view("<u8")
-        k1 = tk[:, 0].astype(np.uint64, copy=True)
-        k2 = tk[:, 1].astype(np.uint64, copy=True)
-        k2 *= _C2
-        k2 = _rotl(k2, 33)
-        k2 *= _C1
-        h2_s = h2_s ^ np.where(has_tail, k2, np.uint64(0))
-        k1 *= _C1
-        k1 = _rotl(k1, 31)
-        k1 *= _C2
-        h1_s = h1_s ^ np.where(has_tail, k1, np.uint64(0))
-
-        # Finalization
-        ln_s = lengths[order].astype(np.uint64)
-        h1_s ^= ln_s
-        h2_s ^= ln_s
-        h1_s += h2_s
-        h2_s += h1_s
-        h1_s = _fmix(h1_s)
-        h2_s = _fmix(h2_s)
-        h1_s += h2_s
-        h2_s += h1_s
-
-    out1 = np.empty(n, np.uint64)
-    out2 = np.empty(n, np.uint64)
-    out1[order] = h1_s
-    out2[order] = h2_s
     return out1, out2
 
 

@@ -9,12 +9,17 @@ adversarial lengths (0, 1, 15, 16, 17, multi-block, long).
 
 import random
 
+import tracemalloc
+
 import numpy as np
+import pyarrow as pa
 import pytest
 
+from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import (
     DABLOOMS_SEED,
     murmur3_x64_128,
+    murmur3_x64_128_buffer,
     murmur3_x64_128_scalar,
     dablooms_hash_words,
 )
@@ -98,11 +103,11 @@ def test_km_indexes_match_slow_oracle():
 
 
 def test_padded_layout_edge_cases_match_scalar():
-    """The padded-matrix kernel (one-shot scatter + column slices) must
-    be bit-identical to the canonical scalar transcription across its
-    special cases: empty keys, tail-only rows, a max-length row that is
-    an exact 16-multiple while other rows carry tails (the tail-word
-    column-clamp path), and fixed-length contiguous batches."""
+    """The word-gather kernel must be bit-identical to the canonical
+    scalar transcription on batches that mix block counts and tails:
+    empty keys, tail-only rows, a longest row that is an exact
+    16-multiple while other rows carry tails, and a batch whose rows
+    all have one length (the no-reorder case)."""
     from dablooms_spark.functions.murmur import murmur3_x64_128_scalar
 
     batches = [
@@ -118,17 +123,85 @@ def test_padded_layout_edge_cases_match_scalar():
             assert int(o1[i]) == s1 and int(o2[i]) == s2, (keys, i)
 
 
-def test_gather_fallback_matches_padded():
-    """Severely length-skewed batches fall back to the per-block gather
-    path; both paths must agree bit-for-bit."""
+def _assert_matches_scalar(arr, seed, keys):
+    o1, o2 = murmur3_x64_128_buffer(*arrow_byte_view(arr), seed)
+    assert len(o1) == len(keys)
+    for i, k in enumerate(keys):
+        s1, s2 = murmur3_x64_128_scalar(b"" if k is None else k, seed)
+        assert (int(o1[i]), int(o2[i])) == (s1, s2), (i, None if k is None else len(k))
+
+
+@pytest.mark.parametrize("seed", [0, 0xFFFFFFFF])
+def test_word_kernel_edges_match_scalar(seed):
+    """The word-gather kernel against the scalar oracle on the layouts
+    that move its word loads: every length 0-300 (each multiple of 8
+    and 16), rows starting at every byte offset mod 8, a sliced Arrow
+    array whose data buffer is larger than the slice, large_string,
+    null rows (hashed as empty), one 64 KiB key among short ones, and
+    non-ASCII text."""
+    rng = random.Random(seed)
+    keys = [bytes(rng.randrange(256) for _ in range(ln)) for ln in range(301)]
+    rng.shuffle(keys)
+    _assert_matches_scalar(pa.array(keys, type=pa.binary()), seed, keys)
+
+    # odd start offsets: a 1-7 byte pad row before each probe row
+    odd = []
+    for i, ln in enumerate([1, 7, 8, 9, 15, 16, 17, 24, 31, 32, 33, 64]):
+        odd += [b"p" * (i % 7 + 1), bytes(rng.randrange(256) for _ in range(ln))]
+    _assert_matches_scalar(pa.array(odd, type=pa.binary()), seed, odd)
+
+    parent = pa.array(keys, type=pa.binary())
+    sliced = parent.slice(97, 101)
+    assert sliced.offset > 0
+    assert sliced.buffers()[2].size > sum(len(k) for k in keys[97:198])
+    _assert_matches_scalar(sliced, seed, keys[97:198])
+
+    # the kernel copies the slice's bytes, not its parent's buffer
+    big = pa.array([b"B" * (8 << 20)] + keys, type=pa.binary()).slice(1)
+    view = arrow_byte_view(big)
+    tracemalloc.start()
+    try:
+        murmur3_x64_128_buffer(*view, seed)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < (1 << 20), peak
+
+    text = ["héllo wörld", "", "日本語のキー" * 5, "x" * 33, "ü" * 8]
+    enc = [t.encode("utf-8") for t in text]
+    _assert_matches_scalar(pa.array(text, type=pa.large_string()), seed, enc)
+    _assert_matches_scalar(pa.array(text, type=pa.string()), seed, enc)
+
+    with_nulls = [b"abc", None, b"0123456789abcdef0", None, b""]
+    _assert_matches_scalar(pa.array(with_nulls, type=pa.binary()), seed, with_nulls)
+
+    skewed = [b"a", b"bb" * 9, bytes(rng.randrange(256) for _ in range(64 << 10)), b"", b"c" * 16]
+    _assert_matches_scalar(pa.array(skewed, type=pa.binary()), seed, skewed)
+
+
+def test_list_routes_give_identical_hashes(monkeypatch):
+    """A batch of only str or only bytes is laid out by Arrow; a batch
+    with None or a non-text key takes the per-key loop. Both routes
+    must hash str (as UTF-8), bytes, non-ASCII and empty keys to the
+    same words."""
     import dablooms_spark.functions.murmur as M
 
-    keys = [b"short", b"L" * 5000, b"", b"mid" * 7]
-    p1, p2 = M.murmur3_x64_128(keys)
-    saved = M._PAD_MATRIX_MAX_BYTES
-    try:
-        M._PAD_MATRIX_MAX_BYTES = 1
-        g1, g2 = M.murmur3_x64_128(keys)
-    finally:
-        M._PAD_MATRIX_MAX_BYTES = saved
-    assert np.array_equal(p1, g1) and np.array_equal(p2, g2)
+    arrow_calls = []
+    view = M.arrow_byte_view
+    monkeypatch.setattr(M, "arrow_byte_view", lambda a: arrow_calls.append(a.type) or view(a))
+
+    text = ["plain", "", "héllo wörld", "日本語" * 7, "x" * 16, "0123456789abcdef0"]
+    raw = [t.encode("utf-8") for t in text]
+    expect = [murmur3_x64_128_scalar(b) for b in raw]
+    for keys in (text, raw, np.array(text, dtype=object)):
+        arrow_calls.clear()
+        o1, o2 = M.murmur3_x64_128(keys)
+        assert arrow_calls, "a str-only or bytes-only batch takes the Arrow route"
+        assert [(int(a), int(b)) for a, b in zip(o1, o2)] == expect
+    for keys in (text + [7], raw + [7]):  # an int key: the per-key loop
+        arrow_calls.clear()
+        o1, o2 = M.murmur3_x64_128(keys)
+        assert not arrow_calls
+        assert [(int(a), int(b)) for a, b in zip(o1, o2)][:len(raw)] == expect
+    with pytest.raises(TypeError):
+        M.murmur3_x64_128(["a", None])
