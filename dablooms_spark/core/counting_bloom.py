@@ -30,7 +30,9 @@ import struct
 
 import numpy as np
 
+from dablooms_spark.core.codec import delta_decode, delta_encode
 from dablooms_spark.core.geometry import BloomGeometry
+from dablooms_spark.core.pieces import scatter, settle
 from dablooms_spark.functions.hashing import km_expand, km_indexes
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 
@@ -251,65 +253,35 @@ class CountingBloom:
 
     @classmethod
     def merge_blobs(cls, blobs: list[bytes], seed: int = DABLOOMS_SEED) -> "CountingBloom":
-        """Merge serialized filters without densifying each one: sparse
-        payloads scatter-add straight into a single accumulator, dense
-        payloads add vectorized. Traffic = one accumulator pass plus
-        Σ nnz — the shape a 1000-shard merge needs."""
-        first = _HDR.unpack_from(blobs[0], 0)
-        (_m, _v, _k, _p, capacity, error_rate, nfuncs, _p2, cpf, _fid, _cnt) = first
-        g = BloomGeometry(capacity, error_rate)
-        acc = np.zeros(g.size, dtype=np.int32)
-        count = 0
-        first_id = None
-        strict = None
+        """Merge serialized filters without densifying a sparse one:
+        every payload is a counter piece (kinds 2 and 3 sparse, the
+        nibble kind dense) scattered into ONE accumulator by the fold
+        step of core/pieces.py. Traffic = one accumulator pass plus
+        Σ nnz — the shape a 1000-shard merge needs. Any strict input
+        makes the merge strict, and a mixed merge is refused: a
+        saturate blob may carry clipped counters."""
+        acc = None
         for blob in blobs:
-            (magic, _ver, kind, flags_i, cap_i, err_i, nf_i, _pp, cpf_i, fid_i, cnt_i) = (
-                _HDR.unpack_from(blob, 0)
-            )
-            if magic != _MAGIC or (cap_i, err_i) != (capacity, error_rate):
+            hdr, g, idx, vals = _payload(blob)
+            _m, _v, _k, flags, capacity, error_rate, _nf, _p, _cpf, fid, cnt = hdr
+            b_strict = bool(flags & _FLAG_STRICT_OVERFLOW)
+            if acc is None:
+                geometry, strict = (capacity, error_rate), b_strict
+                acc, count, first_id = np.zeros(g.size, dtype=np.int32), 0, fid
+            elif (capacity, error_rate) != geometry:
                 raise ValueError("cannot merge counting blooms with different geometry")
-            count += cnt_i
-            first_id = fid_i if first_id is None else min(first_id, fid_i)
-            b_strict = bool(flags_i & _FLAG_STRICT_OVERFLOW)
-            if strict is None:
-                strict = b_strict
-            elif strict != b_strict:
-                # see merge(): a saturate blob may carry clipped
-                # counters — a mixed merge cannot honestly be strict
-                raise ValueError(
-                    "cannot merge blobs with different on_overflow modes"
-                )
-            if kind == _KIND_COUNTING_SPARSE_GAPS:
-                idx, vals = cls._decode_sparse_gaps(blob)
-                np.add.at(acc, idx, vals.astype(np.int32))
-            elif kind == _KIND_COUNTING_SPARSE:
-                (nnz,) = struct.unpack_from("<Q", blob, _HDR.size)
-                idx_dtype = np.uint64 if g.size > 0xFFFFFFFF else np.uint32
-                off = _HDR.size + 8
-                idx = np.frombuffer(blob, dtype=idx_dtype, count=nnz, offset=off)
-                off += nnz * idx.itemsize
-                vals = np.frombuffer(blob, dtype=np.uint8, count=nnz, offset=off)
-                np.add.at(acc, idx.astype(np.int64), vals.astype(np.int32))
-            else:
-                packed = np.frombuffer(blob, dtype=np.uint8, offset=_HDR.size)
-                acc[0::2] += packed[: (g.size + 1) // 2] >> 4
-                acc[1::2] += (packed[: g.size // 2] & 0x0F).astype(np.int32)
-        if strict and acc.max(initial=0) > 15:
-            # any strict input makes the merge strict: a cross-shard
-            # sum past 15 is the same 4-bit overflow the reference
-            # refuses single-node (bitmap_increment ≈L108) — clipping
-            # here would silently break remove-safety
-            raise OverflowError(
-                "merge would overflow a 4-bit counter "
-                "(strict on_overflow='error' blob in the merge set)"
-            )
-        np.clip(acc, 0, 15, out=acc)
+            elif b_strict != strict:
+                raise ValueError("cannot merge blobs with different on_overflow modes")
+            count += cnt
+            first_id = min(first_id, fid)
+            scatter(acc, vals, idx)
         return cls(
-            capacity,
-            error_rate,
-            first_id=first_id or 0,
+            *geometry,
+            first_id=first_id,
             seed=seed,
-            _counters=acc.astype(np.uint8),
+            # a strict cross-shard sum past 15 is the overflow the
+            # reference refuses single-node (bitmap_increment ≈L108)
+            _counters=settle(acc, strict),
             _count=count,
             on_overflow="error" if strict else "saturate",
         )
@@ -411,21 +383,6 @@ class CountingBloom:
 
     # ---- serde ---------------------------------------------------------
 
-    @staticmethod
-    def _decode_sparse_gaps(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-        """(absolute int64 indices, u8 counts) from a kind-3 payload."""
-        from dablooms_spark.core.codec import delta_decode
-
-        nnz, gl, el = struct.unpack_from("<QQQ", blob, _HDR.size)
-        off = _HDR.size + 24
-        gaps = blob[off : off + gl]
-        off += gl
-        exc = blob[off : off + el]
-        off += el
-        idx = delta_decode(gaps, exc)
-        vals = np.frombuffer(blob, dtype=np.uint8, count=nnz, offset=off)
-        return idx, vals
-
     def to_bytes(self) -> bytes:
         """Self-describing blob; picks dense nibble packing (the
         dablooms file layout) or a sparse (index, count) encoding,
@@ -434,8 +391,6 @@ class CountingBloom:
         counters out of N·k/ln2 — stage-1 partial blobs shrink ~10x,
         which is exactly the bytes the merge shuffle and the driver
         collect pay for."""
-        from dablooms_spark.core.codec import delta_encode
-
         g = self.geometry
         nnz = int(np.count_nonzero(self.counters))
         idx_width = 8 if g.size > 0xFFFFFFFF else 4
@@ -486,45 +441,13 @@ class CountingBloom:
 
     @classmethod
     def from_bytes(cls, blob: bytes, seed: int = DABLOOMS_SEED) -> "CountingBloom":
-        (
-            magic,
-            version,
-            kind,
-            flags,
-            capacity,
-            error_rate,
-            nfuncs,
-            _pad2,
-            cpf,
-            first_id,
-            count,
-        ) = _HDR.unpack_from(blob, 0)
-        if magic != _MAGIC or kind not in (
-            _KIND_COUNTING, _KIND_COUNTING_SPARSE, _KIND_COUNTING_SPARSE_GAPS
-        ):
-            raise ValueError("not a counting-bloom blob")
-        g = BloomGeometry(capacity, error_rate)
-        if g.nfuncs != nfuncs or g.counts_per_func != cpf:
-            raise ValueError("blob geometry does not match its config")
-        if kind == _KIND_COUNTING_SPARSE_GAPS:
-            idx, vals = cls._decode_sparse_gaps(blob)
+        hdr, g, idx, vals = _payload(blob)
+        _m, _v, _k, flags, capacity, error_rate, _nf, _p, _cpf, first_id, count = hdr
+        if idx is None:
+            counters = vals
+        else:
             counters = np.zeros(g.size, dtype=np.uint8)
             counters[idx] = vals
-        elif kind == _KIND_COUNTING_SPARSE:
-            (nnz,) = struct.unpack_from("<Q", blob, _HDR.size)
-            idx_dtype = np.uint64 if g.size > 0xFFFFFFFF else np.uint32
-            off = _HDR.size + 8
-            idx = np.frombuffer(blob, dtype=idx_dtype, count=nnz, offset=off)
-            off += nnz * idx.itemsize
-            vals = np.frombuffer(blob, dtype=np.uint8, count=nnz, offset=off)
-            counters = np.zeros(g.size, dtype=np.uint8)
-            counters[idx.astype(np.int64)] = vals
-        else:
-            packed = np.frombuffer(blob, dtype=np.uint8, offset=_HDR.size)
-            counters = np.empty(len(packed) * 2, dtype=np.uint8)
-            counters[0::2] = packed >> 4
-            counters[1::2] = packed & 0x0F
-            counters = counters[: g.size].copy()
         return cls(
             capacity,
             error_rate,
@@ -542,3 +465,41 @@ class CountingBloom:
             f"nfuncs={g.nfuncs}, cpf={g.counts_per_func}, count={self.count}, "
             f"first_id={self.first_id})"
         )
+
+
+def _payload(blob: bytes) -> tuple[tuple, BloomGeometry, np.ndarray | None, np.ndarray]:
+    """The one payload reader (from_bytes, merge_blobs): (header
+    fields, the geometry they name, indices, u8 counts) — the counts
+    as a counter piece: sorted int64 indices with kinds 2 and 3 (the
+    kind-3 gap stream is the sparse piece's, decoded by the same
+    codec), or None and the whole unpacked counter array with the
+    nibble kind. Raises on a foreign magic or kind byte and on a
+    header whose nfuncs/counts_per_func do not match its capacity and
+    error rate."""
+    hdr = _HDR.unpack_from(blob, 0)
+    magic, _v, kind, _f, capacity, error_rate, nfuncs, _p, cpf, _fid, _cnt = hdr
+    if magic != _MAGIC or kind not in (
+        _KIND_COUNTING, _KIND_COUNTING_SPARSE, _KIND_COUNTING_SPARSE_GAPS
+    ):
+        raise ValueError("not a counting-bloom blob")
+    g = BloomGeometry(capacity, error_rate)
+    if g.nfuncs != nfuncs or g.counts_per_func != cpf:
+        raise ValueError("blob geometry does not match its config")
+    off = _HDR.size
+    if kind == _KIND_COUNTING_SPARSE_GAPS:
+        nnz, gl, el = struct.unpack_from("<QQQ", blob, off)
+        off += 24
+        idx = delta_decode(blob[off : off + gl], blob[off + gl : off + gl + el])
+        vals = np.frombuffer(blob, dtype=np.uint8, count=nnz, offset=off + gl + el)
+        return hdr, g, idx, vals
+    if kind == _KIND_COUNTING_SPARSE:
+        (nnz,) = struct.unpack_from("<Q", blob, off)
+        idx_dtype = np.uint64 if g.size > 0xFFFFFFFF else np.uint32
+        idx = np.frombuffer(blob, dtype=idx_dtype, count=nnz, offset=off + 8)
+        vals = np.frombuffer(blob, dtype=np.uint8, count=nnz, offset=off + 8 + idx.nbytes)
+        return hdr, g, idx.astype(np.int64), vals
+    packed = np.frombuffer(blob, dtype=np.uint8, offset=off)
+    counters = np.empty(len(packed) * 2, dtype=np.uint8)
+    counters[0::2] = packed >> 4  # even index → high nibble
+    counters[1::2] = packed & 0x0F
+    return hdr, g, None, counters[: g.size]

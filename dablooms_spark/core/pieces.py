@@ -251,6 +251,30 @@ class PieceEncoder:
         return stage
 
 
+def scatter(acc: np.ndarray, vals: np.ndarray, idx: np.ndarray | None = None) -> None:
+    """Add one piece's u8 counts into a key's int32 accumulator: at its
+    indices (sparse), or cell for cell when idx is None (dense, the
+    whole counter array). The one counter scatter: `fold` feeds it
+    pieces, CountingBloom.merge_blobs blob payloads."""
+    if idx is not None:
+        np.add.at(acc, idx, vals.astype(np.int32))
+    elif vals.size:
+        if vals.size != acc.size:
+            raise ValueError(
+                f"dense piece has {vals.size} counters, geometry "
+                f"expects {acc.size}"
+            )
+        acc += vals
+
+
+def settle(acc: np.ndarray, strict: bool) -> np.ndarray:
+    """The summed counters as clipped uint8; `strict` raises where one
+    passes 15."""
+    _refuse_overflow(acc, strict)
+    np.clip(acc, 0, 15, out=acc)
+    return acc.astype(np.uint8)
+
+
 def fold(pieces, size: int, on_overflow: str = "saturate") -> np.ndarray:
     """The one fold: sum a key's pieces (any sparse/dense mix — a
     pandas group or any object with idx/exc/vals columns) into its
@@ -259,15 +283,5 @@ def fold(pieces, size: int, on_overflow: str = "saturate") -> np.ndarray:
     acc = np.zeros(size, dtype=np.int32)
     for idx, exc, vals in zip(pieces.idx, pieces.exc, pieces.vals):
         v = np.frombuffer(vals, dtype=np.uint8)
-        if len(idx):
-            np.add.at(acc, delta_decode(idx, exc), v.astype(np.int32))
-        elif v.size:
-            if v.size != size:
-                raise ValueError(
-                    f"dense piece has {v.size} counters, geometry "
-                    f"expects {size}"
-                )
-            acc += v
-    _refuse_overflow(acc, on_overflow == "error")
-    np.clip(acc, 0, 15, out=acc)
-    return acc.astype(np.uint8)
+        scatter(acc, v, delta_decode(idx, exc) if len(idx) else None)
+    return settle(acc, on_overflow == "error")

@@ -28,9 +28,11 @@ each shard an ε budget of ε/S — since nfuncs = ceil(log2(1/ε)), a
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 import numpy as np
 
+from dablooms_spark.core.counting_bloom import _HDR as _LAYER_HDR
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import ERROR_TIGHTENING_RATIO, BloomGeometry
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words
@@ -40,6 +42,8 @@ _VERSION = 1
 # magic 4s | version u16 | pad u16 | capacity u64 | error f64 | max_id u64 |
 # num_layers u32 | pad u32
 _HDR = struct.Struct("<4sHHQdQII")
+# then num_layers records of: length u64 | counting-bloom blob
+_LEN = struct.Struct("<Q")
 
 
 class ScalingBloom:
@@ -254,35 +258,20 @@ class ScalingBloom:
 
         Layers serialize independently, and disjoint-range shard layers
         never share (first_id, error_rate), so the common case is a
-        pure splice: parse headers, sort layer records by key, and
+        pure splice: read the layer records, sort them by key, and
         concatenate layer bytes — zero numpy work, zero unpack/repack.
         Colliding layers (same first_id AND error_rate) fall back to
         CountingBloom.merge_blobs for that group. Returns the merged
         blob (callers needing the object deserialize once)."""
         metas = []
-        layer_recs: list[tuple[tuple, bytes]] = []
+        by_key: dict[tuple, list[bytes]] = {}
         for blob in blobs:
-            magic, _ver, _pad, capacity, error_rate, max_id, nlayers, _p2 = (
-                _HDR.unpack_from(blob, 0)
-            )
-            if magic != _MAGIC:
-                raise ValueError("not a scaling-bloom blob")
+            capacity, error_rate, max_id, records = layer_records(blob)
             metas.append((capacity, error_rate, max_id))
-            off = _HDR.size
-            for _ in range(nlayers):
-                (ln,) = struct.unpack_from("<Q", blob, off)
-                off += 8
-                rec = blob[off : off + ln]
-                off += ln
-                # counting-bloom header: error_rate at byte 16, first_id at 40
-                (l_err,) = struct.unpack_from("<d", rec, 16)
-                (l_fid,) = struct.unpack_from("<Q", rec, 40)
-                layer_recs.append(((l_fid, -l_err), bytes(rec)))
+            for l_fid, l_eps, _cnt, rec in records:
+                by_key.setdefault((l_fid, -l_eps), []).append(bytes(rec))
         if len({(m[0]) for m in metas}) != 1:
             raise ValueError("cannot merge scaling blooms with different capacity")
-        by_key: dict[tuple, list[bytes]] = {}
-        for key, rec in layer_recs:
-            by_key.setdefault(key, []).append(rec)
         merged_layers = []
         for key in sorted(by_key):
             group = by_key[key]
@@ -302,7 +291,7 @@ class ScalingBloom:
             )
         ]
         for rec in merged_layers:
-            parts.append(struct.pack("<Q", len(rec)))
+            parts.append(_LEN.pack(len(rec)))
             parts.append(rec)
         return b"".join(parts)
 
@@ -323,24 +312,14 @@ class ScalingBloom:
         ]
         for layer in self.layers:
             blob = layer.to_bytes()
-            parts.append(struct.pack("<Q", len(blob)))
+            parts.append(_LEN.pack(len(blob)))
             parts.append(blob)
         return b"".join(parts)
 
     @classmethod
     def from_bytes(cls, blob: bytes, seed: int = DABLOOMS_SEED) -> "ScalingBloom":
-        magic, version, _pad, capacity, error_rate, max_id, nlayers, _p2 = (
-            _HDR.unpack_from(blob, 0)
-        )
-        if magic != _MAGIC:
-            raise ValueError("not a scaling-bloom blob")
-        off = _HDR.size
-        layers = []
-        for _ in range(nlayers):
-            (ln,) = struct.unpack_from("<Q", blob, off)
-            off += 8
-            layers.append(CountingBloom.from_bytes(blob[off : off + ln], seed=seed))
-            off += ln
+        capacity, error_rate, max_id, records = layer_records(blob)
+        layers = [CountingBloom.from_bytes(rec, seed=seed) for *_, rec in records]
         return cls(capacity, error_rate, seed=seed, layers=layers, max_id=max_id)
 
     def __repr__(self):
@@ -348,3 +327,26 @@ class ScalingBloom:
             f"ScalingBloom(capacity={self.capacity}, error_rate={self.error_rate:g}, "
             f"layers={len(self.layers)}, count={self.count}, max_id={self.max_id})"
         )
+
+
+def layer_records(blob: bytes) -> tuple[int, float, int, Iterator[tuple]]:
+    """The one reader of the scaling-blob layout: (capacity,
+    error_rate, max_id, records), where records yields each layer as
+    (first_id, layer error rate, count, counting-bloom blob bytes),
+    the fields read from the layer's own counting-bloom header. Raises
+    on a foreign magic before any record is read."""
+    magic, _ver, _pad, capacity, error_rate, max_id, nlayers, _p2 = _HDR.unpack_from(blob, 0)
+    if magic != _MAGIC:
+        raise ValueError("not a scaling-bloom blob")
+
+    def records() -> Iterator[tuple]:
+        off = _HDR.size
+        for _ in range(nlayers):
+            (ln,) = _LEN.unpack_from(blob, off)
+            off += _LEN.size
+            rec = blob[off : off + ln]
+            off += ln
+            h = _LAYER_HDR.unpack_from(rec, 0)
+            yield h[9], h[5], h[10], rec
+
+    return capacity, error_rate, max_id, records()

@@ -13,9 +13,8 @@ src/dablooms.c:≈487). The Spark-native equivalent (SURVEY.md §4.3):
       driver when their measured bytes are small, else in one
       groupBy(key) exchange. Every counting build takes this path at
       any size and in both overflow modes. The range scaling build's
-      blobs merge through the blob tree: log_fanin(P) rounds of
-      blob-only groupBy(shard // fanin) shuffles, then a driver-side
-      merge of the last ≤ fanin blobs.
+      blobs explode into layer rows that fold per (first_id, layer_eps)
+      the same way, so both scaling layouts end in one per-layer fold.
 
 This is the map-side-combine shape Catalyst builds for its own
 partial aggregates, expressed for a Python UDAF whose state (the
@@ -35,14 +34,13 @@ from pyspark.sql import functions as F
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.core.pieces import PieceEncoder, chunk_bounds, fold, runs
-from dablooms_spark.core.scaling_bloom import ScalingBloom
+from dablooms_spark.core.scaling_bloom import ScalingBloom, layer_records
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
 from dablooms_spark.operators.merge import (
     _BLOB_SCHEMA,
     _BLOB_SCHEMA_PA,
     fold_or_exchange,
-    merge_blobs,
 )
 from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
 
@@ -426,86 +424,42 @@ def scaling_bloom_fixed_partials(
     return pieces.groupBy("layer").applyInPandas(merge_layer, schema=_LAYER_SCHEMA)
 
 
-def scaling_layers_df(blob_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
-    """Merge a (shard, blob, n) DataFrame of scaling-bloom partials
-    into the filter's canonical LAYER-ROW form — one row per
-    (first_id, layer_eps) layer — entirely in parallel.
+_LAYER_SCHEMA_PA = pa.schema(
+    [
+        ("first_id", pa.int64()),
+        ("layer_eps", pa.float64()),
+        ("capacity", pa.int64()),
+        ("max_id", pa.int64()),
+        ("sb_eps", pa.float64()),
+        ("blob", pa.large_binary()),
+        ("n", pa.int64()),
+    ]
+)
 
-    This is the merge+checkpoint shape that scales: a scaling filter
-    over 10^12 rows is tens of GB, so the one-blob artifact
-    (merge_blobs_df) funnels every byte through a single final task,
-    while layers are the filter's natural parallel unit — id-disjoint
-    shards NEVER share (first_id, eps), so the merge is a pure
-    repartition (colliding layers, e.g. from a resumed build over the
-    same id range, counter-sum in their own group) and the write
-    spreads one task per layer. Restore with
-    restore_scaling_bloom_layers; equality with the one-blob path is
-    property-tested bit-identically.
-    """
-    def explode_layers(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import struct as _struct
 
+def _explode_layers(blob_df: DataFrame) -> DataFrame:
+    """One _LAYER_SCHEMA row per layer of each scaling-bloom blob in a
+    (shard, blob, n) DataFrame, unmerged."""
+
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            fids, epss, caps, mids, sbes, blobs, ns = [], [], [], [], [], [], []
+            rows = []
             for blob in batch.column(1):
-                blob = blob.as_py()
-                magic, _ver, _pad, capacity, sb_eps, max_id, nlayers, _p2 = (
-                    _struct.unpack_from("<4sHHQdQII", blob, 0)
-                )
-                if magic != b"DBSC":
-                    raise ValueError("scaling_layers_df expects scaling-bloom blobs")
-                off = _struct.calcsize("<4sHHQdQII")
-                for _ in range(nlayers):
-                    (ln,) = _struct.unpack_from("<Q", blob, off)
-                    off += 8
-                    rec = blob[off : off + ln]
-                    off += ln
-                    # counting-bloom header: error_rate f64 at byte 16,
-                    # first_id u64 at 40, count u64 at 48
-                    (l_eps,) = _struct.unpack_from("<d", rec, 16)
-                    (l_fid,) = _struct.unpack_from("<Q", rec, 40)
-                    (l_cnt,) = _struct.unpack_from("<Q", rec, 48)
-                    fids.append(l_fid)
-                    epss.append(l_eps)
-                    caps.append(capacity)
-                    mids.append(max_id)
-                    sbes.append(sb_eps)
-                    blobs.append(rec)
-                    ns.append(l_cnt)
-            if fids:
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "first_id": fids,
-                        "layer_eps": epss,
-                        "capacity": caps,
-                        "max_id": mids,
-                        "sb_eps": sbes,
-                        "blob": blobs,
-                        "n": ns,
-                    },
-                    schema=pa.schema(
-                        [
-                            ("first_id", pa.int64()),
-                            ("layer_eps", pa.float64()),
-                            ("capacity", pa.int64()),
-                            ("max_id", pa.int64()),
-                            ("sb_eps", pa.float64()),
-                            ("blob", pa.large_binary()),
-                            ("n", pa.int64()),
-                        ]
-                    ),
-                )
+                capacity, sb_eps, max_id, records = layer_records(blob.as_py())
+                rows += [
+                    (fid, eps, capacity, max_id, sb_eps, rec, cnt)
+                    for fid, eps, cnt, rec in records
+                ]
+            if rows:
+                cols = dict(zip(_LAYER_SCHEMA_PA.names, zip(*rows)))
+                yield pa.RecordBatch.from_pydict(cols, schema=_LAYER_SCHEMA_PA)
 
-    layers = blob_df.mapInArrow(explode_layers, schema=_LAYER_SCHEMA)
-    return merge_layer_rows(layers, seed)
+    return blob_df.mapInArrow(explode, schema=_LAYER_SCHEMA)
 
 
-def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
-    """Counter-sum colliding (first_id, layer_eps) layer rows — the
-    merge step for any union of layer-row DataFrames: resumed builds
-    over overlapping id ranges, or an ingest batch unioned with the
-    prior checkpoint. Id-disjoint layers pass through untouched; the
-    whole merge is one parallel groupBy, no driver traffic."""
+def _layer_fold(seed: int):
+    """Per-(first_id, layer_eps) fold of layer rows: counter-sum
+    colliding layers, pass a lone one through untouched."""
 
     def merge_layer_group(pdf):
         import pandas as pd
@@ -527,8 +481,36 @@ def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFra
             }
         )
 
+    return merge_layer_group
+
+
+def scaling_layers_df(blob_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
+    """Merge a (shard, blob, n) DataFrame of scaling-bloom partials
+    into the filter's canonical LAYER-ROW form — one row per
+    (first_id, layer_eps) layer — entirely in parallel.
+
+    This is the merge+checkpoint shape that scales: a scaling filter
+    over 10^12 rows is tens of GB, so the one-blob artifact
+    (merge_blobs_df) funnels every byte through a single final task,
+    while layers are the filter's natural parallel unit — id-disjoint
+    shards NEVER share (first_id, eps), so the merge is a pure
+    repartition (colliding layers, e.g. from a resumed build over the
+    same id range, counter-sum in their own group) and the write
+    spreads one task per layer. Restore with
+    restore_scaling_bloom_layers; equality with the one-blob path is
+    property-tested bit-identically.
+    """
+    return merge_layer_rows(_explode_layers(blob_df), seed)
+
+
+def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
+    """Counter-sum colliding (first_id, layer_eps) layer rows — the
+    merge step for any union of layer-row DataFrames: resumed builds
+    over overlapping id ranges, or an ingest batch unioned with the
+    prior checkpoint. Id-disjoint layers pass through untouched; the
+    whole merge is one parallel groupBy, no driver traffic."""
     return layers_df.groupBy("first_id", "layer_eps").applyInPandas(
-        merge_layer_group, schema=_LAYER_SCHEMA
+        _layer_fold(seed), schema=_LAYER_SCHEMA
     )
 
 
@@ -573,7 +555,6 @@ def build_scaling_bloom(
     error_rate: float,
     seed: int = DABLOOMS_SEED,
     num_shards: int | None = None,
-    merge_fanin: int = 8,
     id_layout: str = "range",
     expected_layers: int | None = None,
 ) -> ScalingBloom:
@@ -592,30 +573,24 @@ def build_scaling_bloom(
     layer-row checkpoint write when the filter is too big to
     collect."""
     if id_layout == "dense":
-        pieces, merge_layer = _fixed_pieces(
+        partials, fold_layer = _fixed_pieces(
             df, key_col, id_col, capacity, error_rate, seed, expected_layers
         )
-        rows = fold_or_exchange(
-            pieces, ["layer"], merge_layer, _LAYER_SCHEMA, collect=True
-        )
-        if not rows:
-            return ScalingBloom(capacity, error_rate, seed=seed)
-        return assemble_scaling_bloom(rows, seed)
-    if expected_layers is not None:
+        keys = ["layer"]
+    elif expected_layers is not None:
         raise ValueError(
             "expected_layers applies only to id_layout='dense' — the "
             "range path's layer count is an arrival-order outcome, not "
             "a function of the id span"
         )
-    blob_df = scaling_bloom_partials(
-        df, key_col, id_col, capacity, error_rate, seed, num_shards
-    )
-    # the range build repartitions to num_shards before its partial
-    # stage, so the blob count is statically bounded by the shard count
-    filt, _ = merge_blobs(
-        blob_df, seed, merge_fanin,
-        num_blobs=num_shards or df.sparkSession.sparkContext.defaultParallelism,
-    )
-    if filt is None:
+    else:
+        partials = _explode_layers(
+            scaling_bloom_partials(
+                df, key_col, id_col, capacity, error_rate, seed, num_shards
+            )
+        )
+        keys, fold_layer = ["first_id", "layer_eps"], _layer_fold(seed)
+    rows = fold_or_exchange(partials, keys, fold_layer, _LAYER_SCHEMA, collect=True)
+    if not rows:
         return ScalingBloom(capacity, error_rate, seed=seed)
-    return filt
+    return assemble_scaling_bloom(rows, seed)

@@ -1,4 +1,4 @@
-"""The one merge executor: driver fold or exchange, and the blob tree.
+"""The one merge executor: driver fold or exchange.
 
 Every distributed build and remove ends the same way: a DataFrame of
 partials (counter pieces or serialized sketches) keyed by some group
@@ -14,6 +14,13 @@ The driver path moves bytes with no Python stage on either side: the
 cached pieces come in as Arrow (`toArrow`), and a returned frame goes
 out as pickled rows the JVM unpickles itself (`_local_frame`), so its
 first action runs JVM tasks only.
+
+Serialized filters and sketches fold the same way: the range scaling
+build's layers per (first_id, layer_eps), sketch_agg's partials in
+groups of at most 8 input partitions. The one merge left outside the
+measure is `merge_blobs_df`, whose single output row must never visit
+the driver: it merges in a tree of blob-only rounds, at most 8 blobs
+per task.
 
 This module is the only reader of the driver-fold ceiling
 (spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
@@ -146,36 +153,6 @@ def _local_frame(spark, rows: list, schema: str) -> DataFrame:
     return df
 
 
-#: optimized-logical-plan nodes that are NARROW (no exchange, no
-#: broadcast, no Python stage) — the only shapes for which calling
-#: .rdd.getNumPartitions() is guaranteed job-free under AQE. Anything
-#: else (joins, aggregates, repartitions, mapInArrow, ...) could have
-#: its query stages EXECUTED by the .rdd conversion, silently running
-#: the plan twice, so those fall back to the dynamic count path.
-_NARROW_PLAN_NODES = frozenset(
-    {"Project", "Filter", "Relation", "Range", "LocalRelation", "LogicalRDD"}
-)
-
-
-def _static_num_partitions(df: DataFrame) -> int | None:
-    """Partition count of a provably-narrow plan, else None.
-
-    Used to size the blob tree without a count() job (guide §1/§2.4:
-    the dynamic path pays persist + one full extra job over the input
-    just to learn a number the plan already knows). Returning None is
-    always safe — merge_blobs then keeps the dynamic persist+count
-    path."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        for line in plan.splitlines():
-            node = line.lstrip(" :+-*").split(" ", 1)[0].rstrip(",")
-            if node and node not in _NARROW_PLAN_NODES:
-                return None
-        return int(df.rdd.getNumPartitions())
-    except Exception:
-        return None
-
-
 def _merge_blobs_to_bytes(blobs: list[bytes], seed: int) -> bytes:
     """Fold serialized (self-describing) sketches to a serialized
     result, using the no-densify fast paths: counting blooms
@@ -191,76 +168,14 @@ def _merge_blobs_to_bytes(blobs: list[bytes], seed: int) -> bytes:
     return out.to_bytes()
 
 
-def _blob_tree(blob_df: DataFrame, seed: int, fanin: int, n: int, keep: int) -> DataFrame:
-    """The blob tree: rounds of groupBy(shard % k), k = ceil(n/fanin),
-    merge (shard, blob, n) rows in parallel (the log-depth critical
-    path) until at most `keep` rows remain. Shuffles only blobs. Small
-    fanin keeps every round wide enough to use the cluster — with wide
-    filters the merge is memory-bandwidth work, and one task merging
-    64 blobs serializes exactly what the tree is meant to parallelize.
-    An overestimated n only adds empty merge groups."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf.g.min())],
-                "blob": [_merge_blobs_to_bytes(list(pdf.blob), seed)],
-                "n": [int(pdf.n.sum())],
-            }
-        )
-
-    while n > keep:
-        k = math.ceil(n / fanin)
-        blob_df = (
-            blob_df.withColumn("g", (F.col("shard") % F.lit(k)).cast("long"))
-            .groupBy("g")
-            .applyInPandas(merge_group, schema=_BLOB_SCHEMA)
-        )
-        n = k
-    return blob_df
-
-
-def merge_blobs(
-    blob_df: DataFrame,
-    seed: int,
-    fanin: int = 8,
-    num_blobs: int | None = None,
-):
-    """Merge (shard, blob, n) rows to one driver-side sketch:
-    (sketch or None, total n). The tree runs until <= 8 blobs remain,
-    which are collected and folded on the driver.
-
-    Pass num_blobs (any upper bound — builders know their partition or
-    shard count) to size the tree STATICALLY: without it the partials
-    are persisted and counted — one extra full job over the input plus
-    a cache round-trip — purely to learn a number the caller already
-    had. With the bound, the whole merge is ONE action."""
-    if num_blobs is not None:
-        rows = _blob_tree(blob_df, seed, fanin, max(int(num_blobs), 1), 8).collect()
-    else:
-        blob_df = blob_df.persist()
-        try:
-            rows = _blob_tree(blob_df, seed, fanin, blob_df.count(), 8).collect()
-        finally:
-            # a strict (on_overflow='error') merge RAISES on overflow —
-            # an expected path that must not leak the pinned partials
-            blob_df.unpersist()
-    if not rows:
-        return None, 0
-    blobs = [bytes(r.blob) for r in rows]
-    if blobs[0][:4] == b"DBSK":
-        sk = CountingBloom.merge_blobs(blobs, seed=seed)
-    elif len(blobs) == 1:
-        sk = loads(blobs[0], seed=seed)
-    else:
-        sk = loads(_merge_blobs_to_bytes(blobs, seed), seed=seed)
-    return sk, sum(r.n for r in rows)
+#: blobs one merge task folds: a group of a merge_blobs_df tree round,
+#: and a fold group of sketch_agg's partials
+_FANIN = 8
 
 
 def merge_blobs_df(
     blob_df: DataFrame,
     seed: int = DABLOOMS_SEED,
-    fanin: int = 8,
     num_blobs: int | None = None,
 ) -> DataFrame:
     """Merge a (shard, blob, n) DataFrame down to ONE blob row, fully
@@ -268,6 +183,14 @@ def merge_blobs_df(
     parquet write for the scalable build→checkpoint→broadcast flow
     (at 10^12 rows the merged filter is GBs; collecting it is the
     anti-pattern, checkpointing it is the product).
+
+    The blob tree: rounds of groupBy(shard % k), k = ceil(n/8), merge
+    the rows in parallel (the log-depth critical path) until one row
+    remains. Shuffles only blobs, and no task holds more than 8 —
+    each partial can be as large as the whole filter, so one fold
+    group over every partial (fold_or_exchange above its ceiling)
+    would not fit where this does. An overestimated n only adds empty
+    merge groups.
 
     Pass num_blobs (an upper bound is fine — builders know their shard
     count) to size the merge tree WITHOUT a count() action: counting
@@ -278,4 +201,22 @@ def merge_blobs_df(
     # frame; with 2 the final pass always runs one full merge (a true
     # single-blob input just round-trips through one trivial group)
     n = max(num_blobs, 2) if num_blobs is not None else blob_df.count()
-    return _blob_tree(blob_df, seed, fanin, n, 1)
+
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                "shard": [int(pdf.g.min())],
+                "blob": [_merge_blobs_to_bytes(list(pdf.blob), seed)],
+                "n": [int(pdf.n.sum())],
+            }
+        )
+
+    while n > 1:
+        k = math.ceil(n / _FANIN)
+        blob_df = (
+            blob_df.withColumn("g", (F.col("shard") % F.lit(k)).cast("long"))
+            .groupBy("g")
+            .applyInPandas(merge_group, schema=_BLOB_SCHEMA)
+        )
+        n = k
+    return blob_df

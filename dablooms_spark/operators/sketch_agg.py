@@ -7,8 +7,10 @@ phases, the same shape Catalyst uses for its own partial aggregates:
   phase 1 — mapInArrow over input partitions: one partial sketch per
       (partition[, group]) updated from zero-copy Arrow buffers; only
       small blobs leave the task.
-  phase 2 — tree merge of blobs (global) or a groupBy over blobs
-      (grouped): the shuffle moves kilobytes per group, never rows.
+  phase 2 — a fold of the blobs: through the measured merge in groups
+      of at most 8 input partitions, then on the driver (global;
+      operators/merge.py), or a groupBy over blobs (grouped). The
+      shuffle moves kilobytes per group, never rows.
 
 All sketch classes share the same surface (add/add_buffer, merge,
 to_bytes/from_bytes), so one operator serves Bloom/HLL/CMS/t-digest/
@@ -30,14 +32,12 @@ from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.hll import HyperLogLog
 from dablooms_spark.core.kll import KLLSketch
 from dablooms_spark.core.mg import MisraGries
+from dablooms_spark.core.serde import loads
 from dablooms_spark.core.tdigest import TDigest
 from dablooms_spark.core.theta import ThetaSketch
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
-from dablooms_spark.operators.merge import (
-    _static_num_partitions,
-    fold_or_exchange,
-    merge_blobs,
-)
+from dablooms_spark.functions.murmur import DABLOOMS_SEED
+from dablooms_spark.operators.merge import _FANIN, _merge_blobs_to_bytes, fold_or_exchange
 
 _KINDS = {
     "hll": (HyperLogLog, "string"),
@@ -57,12 +57,6 @@ _KINDS = {
 def _make(kind: str, params: dict):
     cls, mode = _KINDS[kind]
     return cls(**params), mode
-
-
-def _loads_any(blob: bytes):
-    from dablooms_spark.core.serde import loads
-
-    return loads(bytes(blob))
 
 
 def _update_from_arrow(sketch, mode: str, col: pa.Array) -> None:
@@ -88,29 +82,32 @@ def sketch_agg(df: DataFrame, col: str, kind: str, **params):
         from pyspark import TaskContext
 
         sk, mode_ = _make(kind, params)
-        shard = TaskContext.get().partitionId() if TaskContext.get() else 0
+        k = TaskContext.get().partitionId() // _FANIN
         n = 0
         for batch in batches:
             _update_from_arrow(sk, mode_, batch.column(0))
             n += batch.num_rows
         if n:
             yield pa.RecordBatch.from_pydict(
-                {"shard": [shard], "blob": [sk.to_bytes()], "n": [n]},
-                schema=pa.schema(
-                    [("shard", pa.int64()), ("blob", pa.large_binary()), ("n", pa.int64())]
-                ),
+                {"k": [k], "blob": [sk.to_bytes()]},
+                schema=pa.schema([("k", pa.int64()), ("blob", pa.large_binary())]),
             )
 
-    blob_df = sdf.mapInArrow(build, schema="shard long, blob binary, n long")
-    # merge_blobs dispatches via blob magic; static sizing from the
-    # (narrow) input plan's partition count skips the persist+count
-    # job the dynamic path pays just to learn the blob count
-    sk, _n = merge_blobs(
-        blob_df, seed=0, fanin=8, num_blobs=_static_num_partitions(sdf)
-    )
-    if sk is None:
-        sk, _ = _make(kind, params)
-    return sk
+    partials = sdf.mapInArrow(build, schema="k long, blob binary")
+    seed = params.get("seed", DABLOOMS_SEED)
+
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"blob": [_merge_blobs_to_bytes(list(pdf.blob), seed)]})
+
+    # keyed by partition // 8: above the ceiling no exchange task folds
+    # more than 8 partials (a counting_bloom partial can be as large as
+    # the whole filter); the driver folds the ceil(partitions / 8) rest
+    rows = fold_or_exchange(partials, ["k"], merge_group, "blob binary", collect=True)
+    if not rows:
+        return _make(kind, params)[0]
+    blobs = [bytes(r.blob) for r in rows]
+    blob = blobs[0] if len(blobs) == 1 else _merge_blobs_to_bytes(blobs, seed)
+    return loads(blob, seed=seed)
 
 
 def _grouped_build_partials(
@@ -182,12 +179,15 @@ def grouped_sketch_agg(
 
     partials = sdf.mapInArrow(build, schema="g string, blob binary, n long")
 
+    seed = params.get("seed", DABLOOMS_SEED)
+
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _loads_any(pdf.blob.iloc[0])
-        for b in pdf.blob.iloc[1:]:
-            sk = sk.merge(_loads_any(b))
         return pd.DataFrame(
-            {"g": [pdf.g.iloc[0]], "blob": [sk.to_bytes()], "n": [int(pdf.n.sum())]}
+            {
+                "g": [pdf.g.iloc[0]],
+                "blob": [_merge_blobs_to_bytes(list(pdf.blob), seed)],
+                "n": [int(pdf.n.sum())],
+            }
         )
 
     return (
@@ -232,12 +232,11 @@ def sketch_rollup(
         "n",
     ).persist()
 
+    seed = params.get("seed", DABLOOMS_SEED)
+
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _loads_any(pdf.blob.iloc[0])
-        for b in pdf.blob.iloc[1:]:
-            sk = sk.merge(_loads_any(b))
         out = {c: [pdf[c].iloc[0]] for c in pdf.columns if c not in ("blob", "n")}
-        out["blob"] = [sk.to_bytes()]
+        out["blob"] = [_merge_blobs_to_bytes(list(pdf.blob), seed)]
         out["n"] = [int(pdf.n.sum())]
         return pd.DataFrame(out)
 
@@ -318,9 +317,9 @@ def _grouped_merge_finalize(
     partials = sdf.mapInArrow(build, schema="g string, blob binary, n long")
 
     def merge_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _loads_any(pdf.blob.iloc[0])
+        sk = loads(pdf.blob.iloc[0])
         for b in pdf.blob.iloc[1:]:
-            sk = sk.merge(_loads_any(b))
+            sk = sk.merge(loads(b))
         return finalize(pdf.g.iloc[0], sk)
 
     # identical on either path: every sketch here merges associatively
@@ -495,10 +494,10 @@ def heavy_hitters_mg(
 
     Shape: phase-1 partial MG per input partition (mapInArrow, batch
     rows pre-grouped by murmur words, no per-row Python), phase-2
-    blob-only tree merge — the only shuffle moves <= k-entry blobs, and
-    the driver holds exactly one <= k-entry summary at the end, never
-    rows. At 100 TB the data is scanned ONCE; there is no candidate
-    semi-join or second aggregation pass.
+    blob fold (sketch_agg's measured merge, at most 8 partials per
+    exchange task) — only <= k-entry blobs move, never rows. The data
+    is scanned ONCE; there is no candidate semi-join or second
+    aggregation pass.
 
     Returns (key_col, cnt_lo, cnt_hi): cnt_lo <= f(key) <= cnt_hi with
     cnt_hi - cnt_lo = E <= N/(k+1) (Agarwal et al., Mergeable

@@ -344,3 +344,119 @@ def test_to_bytes_matches_three_candidate_reference():
         assert check(_with_counters(cap, 0.01, np.arange(tie - 1), rng)) == 3
         assert check(_with_counters(cap, 0.01, np.arange(tie + 1), rng)) == 1
     assert kinds == {1, 2, 3}
+
+
+# ---- blob merge: every payload is a counter piece -----------------------
+
+
+def _mixed_partials(rng, words, capacity, on_overflow):
+    """2-6 partial filters whose blobs mix the three payload kinds: a
+    few keys in a large capacity (kind 2), a moderate load (kind 3), a
+    full load (nibbles); saturate partials also repeat keys past 15."""
+    parts, first_ids = [], []
+    for _ in range(rng.randrange(2, 7)):
+        load = rng.choice([3, capacity // 20, capacity])
+        keys = rng.sample(words, load)
+        if on_overflow == "saturate" and rng.random() < 0.3:
+            keys = keys[:5] * 20
+        parts.append(keys)
+        first_ids.append(rng.randrange(0, 100))
+    return parts, first_ids
+
+
+@pytest.mark.parametrize("on_overflow", ["saturate", "error"])
+def test_merge_blobs_mixed_kinds_equal_chain_and_single_node(on_overflow):
+    import functools
+
+    rng = random.Random(7 if on_overflow == "saturate" else 8)
+    words = make_words(20_000, seed=5)
+    seen_kinds = set()
+    for _ in range(12):
+        capacity = rng.choice([300, 20_000])
+        parts, first_ids = _mixed_partials(rng, words, capacity, on_overflow)
+        blobs = []
+        for keys, fid in zip(parts, first_ids):
+            cb = CountingBloom(capacity, 0.01, first_id=fid, on_overflow=on_overflow)
+            cb.add(keys)
+            blobs.append(cb.to_bytes())
+        seen_kinds.update(b[6] for b in blobs)
+        single = CountingBloom(
+            capacity, 0.01, first_id=min(first_ids), on_overflow=on_overflow
+        )
+        try:
+            single.add([k for keys in parts for k in keys])
+        except OverflowError:
+            with pytest.raises(OverflowError):
+                CountingBloom.merge_blobs(blobs)
+            continue
+        merged = CountingBloom.merge_blobs(blobs)
+        chain = functools.reduce(
+            CountingBloom.merge, [CountingBloom.from_bytes(b) for b in blobs]
+        )
+        assert merged.to_bytes() == chain.to_bytes() == single.to_bytes()
+        assert merged.on_overflow == on_overflow
+        assert merged.first_id == min(first_ids)
+        assert merged.count == sum(len(k) for k in parts)
+    assert seen_kinds == {1, 2, 3}
+
+
+def test_merge_blobs_refusals_kept():
+    hot = [b"hot"] * 10
+    a = CountingBloom(1000, 0.01, on_overflow="error")
+    a.add(hot)
+    b = CountingBloom(1000, 0.01, on_overflow="saturate")
+    b.add(hot)
+    other = CountingBloom(2000, 0.01)
+    with pytest.raises(OverflowError):
+        CountingBloom.merge_blobs([a.to_bytes(), a.to_bytes()])
+    with pytest.raises(ValueError, match="on_overflow"):
+        CountingBloom.merge_blobs([a.to_bytes(), b.to_bytes()])
+    with pytest.raises(ValueError, match="geometry"):
+        CountingBloom.merge_blobs([b.to_bytes(), other.to_bytes()])
+    # a saturate merge clips the same sum instead
+    assert CountingBloom.merge_blobs([b.to_bytes()] * 2).counters.max() == 15
+
+
+def test_merge_blobs_and_from_bytes_refuse_the_same_payloads():
+    """One payload reader: a foreign kind byte or a header whose
+    nfuncs/counts_per_func disagree with its capacity and error rate
+    is refused by the merge as by from_bytes (a nibble payload, which
+    the merge used to read whatever its kind byte said)."""
+    from dablooms_spark.core.counting_bloom import _HDR
+
+    cb = CountingBloom(200, 0.01)
+    cb.add(make_words(200))
+    good = cb.to_bytes()
+    assert good[6] == 1
+    hdr = list(_HDR.unpack_from(good, 0))
+    bad = {"kind": good[:6] + bytes([9]) + good[7:]}
+    for field, name in ((6, "nfuncs"), (8, "counts_per_func")):
+        h = list(hdr)
+        h[field] += 1
+        bad[name] = _HDR.pack(*h) + good[_HDR.size:]
+    for name, blob in bad.items():
+        msg = "not a counting-bloom" if name == "kind" else "does not match"
+        with pytest.raises(ValueError, match=msg):
+            CountingBloom.from_bytes(blob)
+        with pytest.raises(ValueError, match=msg):
+            CountingBloom.merge_blobs([good, blob])
+
+
+def test_scaling_blob_readers_agree():
+    """from_bytes, merge_blobs and the layer explode read one layout."""
+    from dablooms_spark.core.scaling_bloom import layer_records
+
+    sb = ScalingBloom(50, 0.05, start_id=10)
+    words = make_words(180)
+    sb.add(words, np.arange(10, 190))
+    blob = sb.to_bytes()
+    capacity, eps, max_id, records = layer_records(blob)
+    records = list(records)
+    assert (capacity, eps, max_id) == (50, 0.05, 189)
+    assert [(f, e, c) for f, e, c, _ in records] == [
+        (l.first_id, l.geometry.error_rate, l.count) for l in sb.layers
+    ]
+    assert [r for *_, r in records] == [l.to_bytes() for l in sb.layers]
+    assert ScalingBloom.merge_blobs([blob]) == blob
+    with pytest.raises(ValueError, match="not a scaling-bloom"):
+        layer_records(b"DBSK" + blob[4:])

@@ -339,3 +339,135 @@ def test_agg_sketch_by_auto_routes_and_warns(spark, events):
     assert {r.event_type: bytes(r.blob) for r in udaf.collect()} == {
         r.event_type: bytes(r.blob) for r in part.collect()
     }
+
+
+def test_global_counting_bloom_has_no_false_negatives(spark, events):
+    """The merged filter hashes with the seed its partials were built
+    with (a bloom blob does not store its seed)."""
+    users = [
+        str(r[0]).encode()
+        for r in events.select("user_id").filter("user_id is not null").collect()
+    ]
+    for extra in ({}, {"seed": 7}):
+        filt = sketch_agg(
+            events.repartition(6), "user_id", "counting_bloom",
+            capacity=2_000, error_rate=0.01, **extra,
+        )
+        assert filt.check(users).all(), extra
+        assert filt.count == len(users)
+
+
+def _local_partials(df, col, kind, params):
+    """One partial sketch per partition, built as phase 1 builds it."""
+    import pyarrow as pa
+
+    from dablooms_spark.functions.arrow_utils import arrow_byte_view
+    from dablooms_spark.operators.sketch_agg import _KINDS
+
+    out = []
+    for part in df.select(F.col(col).cast("string")).rdd.glom().collect():
+        vals = [r[0] for r in part if r[0] is not None]
+        if vals:
+            sk = _KINDS[kind][0](**params)
+            sk.add_buffer(*arrow_byte_view(pa.array(vals, pa.string())))
+            out.append(sk)
+    return out
+
+
+def test_global_sketch_agg_at_12_partitions_equals_local_fold(spark, events):
+    """12 partials — more than one fold group of the old merge tree —
+    fold under one key to the bytes of a local fold of the partials,
+    on the driver and through the exchange ('0')."""
+    import functools
+
+    d = events.repartition(12).persist()
+    cases = {
+        "hll": {"p": 12},
+        "cms": {"eps": 1e-3, "delta": 0.01},
+        "theta": {"k": 256},
+        "counting_bloom": {"capacity": 2_000, "error_rate": 0.01},
+    }
+    try:
+        want = {
+            kind: functools.reduce(
+                lambda a, b: a.merge(b), _local_partials(d, "user_id", kind, p)
+            ).to_bytes()
+            for kind, p in cases.items()
+        }
+        for ceiling in (None, "0"):
+            if ceiling is not None:
+                spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
+            try:
+                for kind, p in cases.items():
+                    got = sketch_agg(d, "user_id", kind, **p).to_bytes()
+                    assert got == want[kind], (kind, ceiling)
+            finally:
+                spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+    finally:
+        d.unpersist()
+
+
+def test_global_order_dependent_sketches_at_12_partitions(spark, events):
+    """KLL, t-digest and MG merges depend on fold order; at 12 partials
+    they keep the bounds the other tests hold them to."""
+    import numpy as np
+
+    d = events.repartition(12)
+    arr = np.array(
+        [r[0] for r in d.select("value").filter("value is not null").collect()]
+    )
+    td = sketch_agg(d, "value", "tdigest", delta=200)
+    for q in (0.1, 0.5, 0.9):
+        rank = float(np.mean(arr <= float(td.quantile(q)[0])))
+        assert abs(rank - q) < 0.03, q
+    kll = sketch_agg(d, "value", "kll", k=200)
+    assert float(kll.quantile([0.5])[0]) == pytest.approx(np.median(arr), rel=0.15)
+
+    truth = {
+        str(r["user_id"]).encode(): r["cnt"]
+        for r in d.groupBy("user_id").agg(F.count("*").alias("cnt")).collect()
+    }
+    exact = sketch_agg(d, "user_id", "mg", k=8192)
+    assert {k: lo for k, lo, hi in exact.heavy_hitters(1)} == truth
+    small = sketch_agg(d, "user_id", "mg", k=8)
+    for key, lo, hi in small.heavy_hitters(1):
+        assert lo <= truth[key] <= hi
+
+
+def test_global_sketch_agg_above_ceiling_folds_at_most_8_per_task(
+    spark, events, monkeypatch
+):
+    """Above the ceiling ('1b') 40 partials go through one exchange in
+    groups of at most 8 input partitions, and the folded groups give
+    the bytes of a local fold of the partials."""
+    import functools
+
+    from dablooms_spark.operators import merge
+
+    exchange, groups = merge._exchange, []
+
+    def spy(partials, keys, fold, schema):
+        counts = partials.groupBy(*keys).count().collect()
+        groups.append(sorted(r["count"] for r in counts))
+        return exchange(partials, keys, fold, schema)
+
+    monkeypatch.setattr(merge, "_exchange", spy)
+    d = events.filter("user_id is not null").repartition(40).persist()
+    cases = {
+        "hll": {"p": 12},
+        "cms": {"eps": 1e-3, "delta": 0.01},
+        "theta": {"k": 256},
+        "counting_bloom": {"capacity": 2_000, "error_rate": 0.01},
+    }
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "1b")
+    try:
+        for kind, p in cases.items():
+            want = functools.reduce(
+                lambda a, b: a.merge(b), _local_partials(d, "user_id", kind, p)
+            ).to_bytes()
+            groups.clear()
+            assert sketch_agg(d, "user_id", kind, **p).to_bytes() == want, kind
+            assert groups == [[8, 8, 8, 8, 8]], kind
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+        d.unpersist()

@@ -479,6 +479,38 @@ def test_scaling_layers_df_colliding_layers_counter_sum(spark, sf_dir):
         assert got == layer.to_bytes()
 
 
+@pytest.mark.parametrize("num_shards", [1, 4, 9, 32])
+def test_range_scaling_build_equals_fold_of_partials(spark, num_shards):
+    """The range build folds its shards' layers per (first_id,
+    layer_eps) through the measured merge: byte-identical to a local
+    ScalingBloom.merge fold of the shard blobs, at the driver fold,
+    the unmeasured exchange ('0') and the measured exchange ('1b')."""
+    import functools
+
+    from dablooms_spark.core import ScalingBloom
+    from dablooms_spark.operators.bloom_build import scaling_bloom_partials
+
+    df = spark.range(0, 12_000, 1, 4).select(
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("key"),
+        (F.col("id") * 3).alias("id"),
+    )
+    params = dict(capacity=200, error_rate=0.02, num_shards=num_shards)
+    shards = [
+        ScalingBloom.from_bytes(bytes(r.blob))
+        for r in scaling_bloom_partials(df, "key", "id", **params).collect()
+    ]
+    want = functools.reduce(ScalingBloom.merge, shards).to_bytes()
+    for ceiling in (None, "0", "1b"):
+        if ceiling is not None:
+            spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
+        try:
+            got = build_scaling_bloom(df, "key", "id", **params)
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+        assert got.to_bytes() == want, ceiling
+        assert got.count == 12_000
+
+
 def test_distributed_remove_on_dense_built_filter(spark):
     """bloom_remove_distributed routes by the target's layer skeleton,
     so it must work identically on a fixed-boundary (dense) filter."""
@@ -966,7 +998,7 @@ def test_measured_merge_pins_no_cache(spark, monkeypatch):
     from dablooms_spark.operators.generations import build_generation_filters
     from dablooms_spark.operators.sharded import build_sharded_counting_bloom
     from dablooms_spark.operators.sharded_scaling import build_sharded_scaling_layers
-    from dablooms_spark.operators.sketch_agg import approx_distinct_by
+    from dablooms_spark.operators.sketch_agg import approx_distinct_by, sketch_agg
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     df = spark.range(0, 6_000, 1, 4).select(
@@ -996,6 +1028,10 @@ def test_measured_merge_pins_no_cache(spark, monkeypatch):
             df, "key", "ts", "1 day", capacity=64, error_rate=0.02, num_shards=4
         ),
         "sketch_agg": lambda: approx_distinct_by(df, "g", "key", p=10),
+        "range_scaling": lambda: build_scaling_bloom(
+            df, "key", "id", capacity=1_000, error_rate=0.02, num_shards=4
+        ).to_bytes(),
+        "sketch_agg_global": lambda: sketch_agg(df, "key", "hll", p=10).to_bytes(),
     }
     seen = _merge_spy(monkeypatch)
     got = {}
