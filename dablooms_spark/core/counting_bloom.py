@@ -22,6 +22,11 @@ packs to dablooms-style nibbles with a small self-describing header
 (the reference's files are not self-describing — new_*_from_file
 src/dablooms.c:≈322 requires the caller to re-supply capacity and
 error_rate; we embed them instead so merges can validate geometry).
+
+Every counter update — add, remove, merge, subtract, merge_blobs — is
+the one counter scatter of core/pieces.py: the touched counters as
+int32, `scatter` of the signed counts, `settle` back to clipped uint8
+(or the strict refusal, raised before anything is written).
 """
 
 from __future__ import annotations
@@ -99,48 +104,27 @@ class CountingBloom:
         return km_expand(h1, h2, g.nfuncs, g.counts_per_func)
 
     def _apply(self, idx: np.ndarray, delta: int, n: int) -> None:
+        """Add `delta` (+1 add, −1 remove) at every index through the
+        one counter kernel (core/pieces.py): gather the touched
+        counters, or take all of them, as int32, scatter, settle. A
+        strict refusal raises before anything is written."""
         flat = idx.ravel()
+        strict = self.on_overflow == "error"
+        # sparse under size/8 indices: it sorts the indices but gathers
+        # and writes back only the hit counters. Timed on this typed
+        # path at 9.6M counters (numpy 1.26, 4-core host, medians of 7,
+        # two runs): size/4 sparse 73-86 ms vs dense 34-51 ms, size/8
+        # 29-31 vs 24-40 ms, size/16 15-18 vs 22-23 ms.
         if flat.size * 8 < self.geometry.size:
-            # sparse batch relative to the filter: touch only hit
-            # counters (full-array sweeps would be memory-bandwidth
-            # bound — ~5 sweeps of size*4 bytes per batch kills
-            # scaling when capacity >> batch size)
-            uniq, counts = np.unique(flat, return_counts=True)
-            cur = self.counters[uniq].astype(np.int32)
-            if delta >= 0:
-                cur += counts.astype(np.int32)
-            else:
-                cur -= counts.astype(np.int32)
-            self._strict_check(cur)
-            np.clip(cur, 0, 15, out=cur)
-            self.counters[uniq] = cur.astype(np.uint8)
+            at, counts = np.unique(flat, return_counts=True)
+            acc = self.counters[at].astype(np.int32)
+            scatter(acc, counts.astype(np.int32) * np.int32(delta))
+            self.counters[at] = settle(acc, strict)
         else:
-            acc = np.zeros(self.geometry.size, dtype=np.int32)
-            np.add.at(acc, flat, delta)
-            acc += self.counters
-            self._strict_check(acc)
-            np.clip(acc, 0, 15, out=acc)
-            self.counters = acc.astype(np.uint8)
+            acc = self.counters.astype(np.int32)
+            scatter(acc, np.int32(delta), flat)
+            self.counters = settle(acc, strict)
         self.count += delta * n
-
-    def _strict_check(self, raw: np.ndarray) -> None:
-        """Reference-parity refusal (on_overflow='error'): raise before
-        any counter mutation if the batch would overflow a 4-bit
-        counter (bitmap_increment ≈L108) or decrement a zero counter
-        (bitmap_decrement ≈L122)."""
-        if self.on_overflow != "error":
-            return
-        if raw.max(initial=0) > 15:
-            raise OverflowError(
-                "increment would overflow a 4-bit counter "
-                "(reference bitmap_increment refusal; use "
-                "on_overflow='saturate' for mergeable distributed builds)"
-            )
-        if raw.min(initial=0) < 0:
-            raise OverflowError(
-                "decrement of a zero counter refused "
-                "(reference bitmap_decrement parity)"
-            )
 
     def add(self, keys) -> None:
         """Batch add: scatter +1 on all banded indices, saturating at 15
@@ -286,32 +270,6 @@ class CountingBloom:
             on_overflow="error" if strict else "saturate",
         )
 
-    @classmethod
-    def merge_many(cls, blooms: list["CountingBloom"]) -> "CountingBloom":
-        """Fold many filters with ONE accumulator pass — pairwise
-        merge() would allocate and sweep a fresh array per pair."""
-        first = blooms[0]
-        if len(blooms) == 1:
-            return first
-        acc = first.counters.astype(np.int32)
-        count = first.count
-        first_id = first.first_id
-        for b in blooms[1:]:
-            if b.geometry != first.geometry or b.seed != first.seed:
-                raise ValueError("cannot merge counting blooms with different geometry")
-            acc += b.counters
-            count += b.count
-            first_id = min(first_id, b.first_id)
-        np.clip(acc, 0, 15, out=acc)
-        return cls(
-            first.geometry.capacity,
-            first.geometry.error_rate,
-            first_id=first_id,
-            seed=first.seed,
-            _counters=acc.astype(np.uint8),
-            _count=count,
-        )
-
     def subtract(self, other: "CountingBloom") -> "CountingBloom":
         """Counter-wise subtraction, clamped at 0 — the blob-algebra
         form of a batch remove. `other` is a DELETION-COUNT filter
@@ -326,11 +284,9 @@ class CountingBloom:
             raise ValueError(
                 "cannot subtract counting blooms with different geometry"
             )
-        cur = self.counters.astype(np.int32)
-        cur -= other.counters
-        self._strict_check(cur)
-        np.clip(cur, 0, 15, out=cur)
-        self.counters = cur.astype(np.uint8)
+        acc = self.counters.astype(np.int32)
+        scatter(acc, -other.counters.astype(np.int32))
+        self.counters = settle(acc, self.on_overflow == "error")
         # floor at 0: over-removal (deleting never-inserted keys) must
         # not drive the count negative — a negative count cannot even
         # serialize (u64 header field)
@@ -364,19 +320,14 @@ class CountingBloom:
                 f"({self.on_overflow!r} vs {other.on_overflow!r})"
             )
         strict = self.on_overflow == "error"
-        raw = self.counters.astype(np.int32) + other.counters
-        if strict and raw.max(initial=0) > 15:
-            raise OverflowError(
-                "merge would overflow a 4-bit counter "
-                "(strict on_overflow='error' operand)"
-            )
-        merged = np.minimum(raw, 15).astype(np.uint8)
+        acc = self.counters.astype(np.int32)
+        scatter(acc, other.counters)
         return CountingBloom(
             self.geometry.capacity,
             self.geometry.error_rate,
             first_id=min(self.first_id, other.first_id),
             seed=self.seed,
-            _counters=merged,
+            _counters=settle(acc, strict),
             _count=self.count + other.count,
             on_overflow="error" if strict else "saturate",
         )

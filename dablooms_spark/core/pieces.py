@@ -26,6 +26,12 @@ on_overflow='error' (a strict filter, CountingBloom's reference-parity
 mode) refuses instead of clipping: the encoder raises when a key's
 count within one piece passes 15, the fold when the summed counters
 do — together exactly the counters whose true total passes 15.
+
+`scatter` and `settle` are the one counter kernel of the package:
+besides the fold, every CountingBloom add, remove, merge, subtract
+and blob merge runs through them, so the 4-bit add, the clip and the
+strict refusal (dablooms' bitmap_increment/bitmap_decrement,
+src/dablooms.c ≈L97–170) are written once, here.
 """
 
 from __future__ import annotations
@@ -93,11 +99,22 @@ def runs(codes: np.ndarray, *cols: np.ndarray) -> Iterator[tuple]:
 
 
 def _refuse_overflow(raw: np.ndarray, strict: bool) -> None:
-    if strict and raw.max(initial=0) > 15:
+    """The one strict refusal (on_overflow='error'), raised before any
+    counter is written: a summed counter past 15 is the increment
+    bitmap_increment refuses (src/dablooms.c ≈L108), one below 0 the
+    decrement of a zero counter bitmap_decrement refuses (≈L122)."""
+    if not strict:
+        return
+    if raw.max(initial=0) > 15:
         raise OverflowError(
-            "increment would overflow a 4-bit counter (strict "
-            "on_overflow='error' filter; the reference bitmap_increment "
-            "refuses it)"
+            "increment would overflow a 4-bit counter "
+            "(reference bitmap_increment refusal; use "
+            "on_overflow='saturate' for mergeable distributed builds)"
+        )
+    if raw.min(initial=0) < 0:
+        raise OverflowError(
+            "decrement of a zero counter refused "
+            "(reference bitmap_decrement parity)"
         )
 
 
@@ -251,11 +268,14 @@ class PieceEncoder:
         return stage
 
 
-def scatter(acc: np.ndarray, vals: np.ndarray, idx: np.ndarray | None = None) -> None:
-    """Add one piece's u8 counts into a key's int32 accumulator: at its
-    indices (sparse), or cell for cell when idx is None (dense, the
-    whole counter array). The one counter scatter: `fold` feeds it
-    pieces, CountingBloom.merge_blobs blob payloads."""
+def scatter(acc: np.ndarray, vals, idx: np.ndarray | None = None) -> None:
+    """Add signed counts into an int32 accumulator: at `idx` (sparse;
+    `vals` an array or one numpy scalar for every index), or cell for
+    cell when idx is None (dense, the whole counter array). The one
+    counter scatter: `fold` feeds it pieces, CountingBloom blob
+    payloads, adds, removes, merges and subtractions. Values go in as
+    int32, which keeps np.add.at on numpy's typed fast path (a Python
+    int scalar takes the generic path, ~10x slower)."""
     if idx is not None:
         np.add.at(acc, idx, vals.astype(np.int32))
     elif vals.size:
@@ -268,8 +288,9 @@ def scatter(acc: np.ndarray, vals: np.ndarray, idx: np.ndarray | None = None) ->
 
 
 def settle(acc: np.ndarray, strict: bool) -> np.ndarray:
-    """The summed counters as clipped uint8; `strict` raises where one
-    passes 15."""
+    """The summed counters as uint8, clipped to 0..15; `strict` raises
+    instead where one passes 15 or falls below 0, before the caller
+    writes anything back."""
     _refuse_overflow(acc, strict)
     np.clip(acc, 0, 15, out=acc)
     return acc.astype(np.uint8)

@@ -28,7 +28,7 @@ each shard an ε budget of ε/S — since nfuncs = ceil(log2(1/ε)), a
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 
@@ -162,18 +162,7 @@ class ScalingBloom:
         return self.check_hashed(h1, h2)
 
     def check_hashed(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        n = len(h1)
-        if n == 0:
-            return np.empty(0, dtype=bool)
-        verdict = np.zeros(n, dtype=bool)
-        # Newest layer first: at steady state most hits are recent, and
-        # skipping already-positive rows saves index expansion work.
-        for layer in reversed(self.layers):
-            pending = ~verdict
-            if not pending.any():
-                break
-            verdict[pending] = layer.check_hashed(h1[pending], h2[pending])
-        return verdict
+        return check_layers(reversed(self.layers), h1, h2)
 
     @property
     def count(self) -> int:
@@ -350,3 +339,24 @@ def layer_records(blob: bytes) -> tuple[int, float, int, Iterator[tuple]]:
             yield h[9], h[5], h[10], rec
 
     return capacity, error_rate, max_id, records()
+
+
+def check_layers(
+    layers: Iterable[CountingBloom], h1: np.ndarray, h2: np.ndarray
+) -> np.ndarray:
+    """The one layered membership walk (scaling_bloom_check ≈L537):
+    OR of the layers' verdicts, `layers` given newest first. A key that
+    answers "present" drops out of every older layer's check — at
+    steady state most hits are recent — and the walk pulls no further
+    layer once every key has, so a generator that decodes layers on
+    demand (the sharded cogroup probe) decodes no more than it needs."""
+    verdict = np.zeros(len(h1), dtype=bool)
+    if not len(h1):
+        return verdict
+    pending = ~verdict
+    for layer in layers:
+        verdict[pending] = layer.check_hashed(h1[pending], h2[pending])
+        pending = ~verdict
+        if not pending.any():
+            break
+    return verdict

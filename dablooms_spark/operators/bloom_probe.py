@@ -122,16 +122,8 @@ def bloom_semi_join(
     With `exact_df`, surviving candidates are confirmed by a real
     LEFT SEMI join — exact results, bloom-pruned shuffle.
     """
-    out = bloom_probe_column(probe_df, key_col, bloom, "__bloom_hit", seed, key_cast)
-    out = out.filter(F.col("__bloom_hit")).drop("__bloom_hit")
-    if exact_df is not None:
-        ek = exact_key or key_col
-        out = out.join(
-            _semi_dim(exact_df, ek),
-            on=F.col(key_col) == F.col("__ek"),
-            how="left_semi",
-        )
-    return out
+    probed = bloom_probe_column(probe_df, key_col, bloom, "__bloom_hit", seed, key_cast)
+    return confirm(probed, key_col, exact_df, exact_key, hit="__bloom_hit")
 
 
 def bloom_anti_join(
@@ -153,17 +145,33 @@ def bloom_anti_join(
     small bloom-hit candidate set pays for an exact anti join. At scale
     the expensive join runs on ~|dim| + ε·|probe| rows instead of all
     of probe_df."""
-    out = bloom_probe_column(probe_df, key_col, bloom, "__bloom_hit", seed, key_cast)
-    misses = out.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
+    probed = bloom_probe_column(probe_df, key_col, bloom, "__bloom_hit", seed, key_cast)
+    return confirm(probed, key_col, exact_df, exact_key, anti=True, hit="__bloom_hit")
+
+
+def confirm(
+    probed: DataFrame,
+    key_col: str,
+    exact_df: DataFrame | None = None,
+    exact_key: str | None = None,
+    anti: bool = False,
+    hit: str = "__hit",
+) -> DataFrame:
+    """The semi/anti join over a bloom verdict column `hit`, shared by
+    every bloom, sharded and ingest join. Semi: the hits, confirmed
+    exactly against exact_df when given. Anti: the misses (definite
+    negatives) plus, with exact_df, the ε-sized hit set that a real
+    anti join finds absent."""
+    hits = probed.filter(F.col(hit)).drop(hit)
+    misses = probed.filter(~F.col(hit)).drop(hit) if anti else None
     if exact_df is None:
-        return misses
-    ek = exact_key or key_col
-    dim = _semi_dim(exact_df, ek)
-    candidates = out.filter(F.col("__bloom_hit")).drop("__bloom_hit")
-    confirmed_absent = candidates.join(
-        dim, on=F.col(key_col) == F.col("__ek"), how="left_anti"
+        return misses if anti else hits
+    confirmed = hits.join(
+        _semi_dim(exact_df, exact_key or key_col),
+        on=F.col(key_col) == F.col("__ek"),
+        how="left_anti" if anti else "left_semi",
     )
-    return misses.unionByName(confirmed_absent)
+    return misses.unionByName(confirmed) if anti else confirmed
 
 
 _SIZE = re.compile(r"(-?(?:\d+\.?\d*|\.\d+))([kmgtp]?b|[kmgtp])?")

@@ -22,10 +22,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from dablooms_spark.operators.textops import shingle_hashes
 
@@ -47,11 +46,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 def _list_offsets(arr) -> tuple[np.ndarray, np.ndarray]:
     """(flat int64 values, int64 offsets) from an Arrow list array —
-    zero-copy; also accepts a pandas Series of lists (converted once)."""
-    import pyarrow as pa
-
-    if isinstance(arr, pd.Series):
-        arr = pa.array(arr, type=pa.list_(pa.int64()))
+    zero-copy."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     flat = arr.values.to_numpy(zero_copy_only=False).astype(np.uint64)
@@ -65,37 +60,6 @@ def _list_offsets(arr) -> tuple[np.ndarray, np.ndarray]:
     elif len(offsets) and offsets[-1] != len(flat):
         flat = flat[: offsets[-1]]
     return flat, offsets
-
-
-def _minhash_udf(num_perms: int, seed: int):
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_perms, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, _MERSENNE, size=num_perms, dtype=np.int64).astype(np.uint64)
-
-    @pandas_udf("array<long>")
-    def minhash(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            n = len(series)
-            if n == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            flat, offsets = _list_offsets(series)
-            starts = offsets[:-1]
-            empty = offsets[1:] == starts
-            sig = np.zeros((n, num_perms), dtype=np.int64)
-            # vectorize over documents: one (a_j*h+b_j)%P pass + one
-            # segmented min (reduceat) per permutation
-            safe_starts = np.minimum(starts, max(len(flat) - 1, 0))
-            with np.errstate(over="ignore"):
-                for j in range(num_perms):
-                    vals = (a[j] * flat + b[j]) % np.uint64(_MERSENNE)
-                    if len(flat):
-                        mins = np.minimum.reduceat(vals, safe_starts)
-                        sig[:, j] = mins.astype(np.int64)
-            sig[empty] = 0
-            yield pd.Series(list(sig))
-
-    return minhash
 
 
 _ROLL_C = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd multiplier

@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
-from dablooms_spark.operators.sharded import _counting, build_layers, confirm, probe_layers
+from dablooms_spark.operators.bloom_probe import confirm
+from dablooms_spark.operators.sharded import _counting, build_layers, probe_layers
 
 _UNIT_SECONDS = {
     "second": 1, "seconds": 1,

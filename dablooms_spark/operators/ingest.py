@@ -37,9 +37,8 @@ from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import build_counting_bloom
-from dablooms_spark.operators.bloom_probe import bloom_anti_join
+from dablooms_spark.operators.bloom_probe import bloom_anti_join, confirm
 from dablooms_spark.operators.merge import _BLOB_SCHEMA
-from dablooms_spark.operators.sharded import confirm
 from dablooms_spark.sources.checkpoint import CheckpointManager
 
 

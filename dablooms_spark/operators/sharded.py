@@ -14,9 +14,10 @@ with a different layer key:
   * sharded scaling (sharded_scaling.py): layers keyed by id window;
   * rotating generations (generations.py): layers keyed by time bucket.
 
-The layered core is the one build, probe, remove and confirm of all
-three; a wrapper supplies the layer key, the per-layer geometry and
-the row projection.
+The layered core is the one build, probe and remove of all three (the
+walk itself is scaling_bloom.check_layers, the exact pass
+bloom_probe.confirm); a wrapper supplies the layer key, the per-layer
+geometry and the row projection.
 
 - build_layers: one map stage (layer_pieces) emits counter pieces
   (core/pieces.py) per touched (shard, layer) and input partition;
@@ -31,7 +32,8 @@ the row projection.
   false negatives; FP ≤ Σ of the shard's per-layer ε.
 - remove_layers: deletion pieces co-group with the layer rows and
   subtract counter-wise, floored at zero (counting_bloom_remove ≈L220).
-- confirm: the exact LEFT SEMI / ANTI pass over the bloom verdicts.
+- confirm (bloom_probe): the exact LEFT SEMI / ANTI pass over the
+  bloom verdicts, shared with the broadcast filter's joins.
 
 Per (shard, layer) semantics are exactly counting_bloom_add/check
 (≈L202/≈238); sharding is the topology the reference's single mmap
@@ -41,7 +43,7 @@ file cannot express.
 from __future__ import annotations
 
 import operator
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 from functools import reduce
 from typing import Iterator as TIterator
 from typing import Tuple as TTuple
@@ -57,9 +59,10 @@ from pyspark.sql.types import BooleanType, StructField, StructType
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.core.pieces import PieceEncoder, fold, runs
+from dablooms_spark.core.scaling_bloom import check_layers
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-from dablooms_spark.operators.bloom_probe import _conf_size_bytes, _semi_dim
+from dablooms_spark.operators.bloom_probe import _conf_size_bytes, confirm
 from dablooms_spark.operators.merge import _BLOB_SCHEMA, _partial_bytes, fold_or_exchange
 
 _SHARD_SEED = 0x5D
@@ -169,24 +172,6 @@ def build_layers(
     return fold_or_exchange(pieces, ["shard", "layer"], merge_layer, schema)
 
 
-def _walk_layers(
-    blooms: Iterable[CountingBloom], h1: np.ndarray, h2: np.ndarray
-) -> np.ndarray:
-    """Membership against a shard's layers, newest first: a key that
-    answers "present" drops out of every older layer's check, and the
-    walk pulls no further layer once every key has."""
-    verdict = np.zeros(len(h1), dtype=bool)
-    pos = np.arange(len(h1))
-    for cb in blooms:
-        if not len(pos):
-            break
-        hit = cb.check_hashed(h1, h2)
-        verdict[pos[hit]] = True
-        miss = ~hit
-        pos, h1, h2 = pos[miss], h1[miss], h2[miss]
-    return verdict
-
-
 def _verdicts(keys: pa.Array, shards: np.ndarray, layers_of, seed: int) -> np.ndarray:
     """Membership of string `keys` routed to `shards`, each walking
     `layers_of(shard)` (newest first); NULL keys are definite
@@ -196,7 +181,7 @@ def _verdicts(keys: pa.Array, shards: np.ndarray, layers_of, seed: int) -> np.nd
     verdict = np.zeros(len(shards), dtype=bool)
     for s in np.unique(shards).tolist():
         idx = np.flatnonzero(shards == s)
-        verdict[idx] = _walk_layers(layers_of(s), h1[idx], h2[idx])
+        verdict[idx] = check_layers(layers_of(s), h1[idx], h2[idx])
     if keys.null_count:
         verdict &= ~np.asarray(pa.compute.is_null(keys))
     return verdict
@@ -304,30 +289,6 @@ def probe_layers(
         .cogroup(b.groupBy("__shard", "__salt"))
         .applyInPandas(probe_group, schema=out_schema)
     )
-
-
-def confirm(
-    probed: DataFrame,
-    key_col: str,
-    exact_df: DataFrame | None = None,
-    exact_key: str | None = None,
-    anti: bool = False,
-    hit: str = "__hit",
-) -> DataFrame:
-    """The semi/anti join over a bloom verdict column `hit`. Semi:
-    the hits, confirmed exactly against exact_df when given. Anti:
-    the misses (definite negatives) plus, with exact_df, the ε-sized
-    hit set that a real anti join finds absent."""
-    hits = probed.filter(F.col(hit)).drop(hit)
-    misses = probed.filter(~F.col(hit)).drop(hit) if anti else None
-    if exact_df is None:
-        return misses if anti else hits
-    confirmed = hits.join(
-        _semi_dim(exact_df, exact_key or key_col),
-        on=F.col(key_col) == F.col("__ek"),
-        how="left_anti" if anti else "left_semi",
-    )
-    return misses.unionByName(confirmed) if anti else confirmed
 
 
 def remove_layers(

@@ -41,11 +41,11 @@ from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import fixed_layer_eps
+from dablooms_spark.operators.bloom_probe import confirm
 from dablooms_spark.operators.sharded import (
     Geometry,
     _check_num_shards,
     build_layers,
-    confirm,
     layer_pieces,
     probe_layers,
     remove_layers,

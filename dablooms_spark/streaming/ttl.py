@@ -47,6 +47,7 @@ import pandas as pd
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
+from dablooms_spark.core.scaling_bloom import check_layers
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words
 from dablooms_spark.streaming.dedup import (
     DEFAULT_STATE_BUDGET_BYTES,
@@ -190,11 +191,10 @@ def make_ttl_updater(
                 keys = firsts[_KEY].to_numpy(dtype=object)
                 h1, h2 = dablooms_hash_words(keys, seed)
                 g = int(g)
-                seen = np.zeros(len(keys), dtype=bool)
-                for wg in range(g - window + 1, g + 1):
-                    cb = gens.get(wg)
-                    if cb is not None:
-                        seen |= np.asarray(cb.check_hashed(h1, h2), dtype=bool)
+                seen = check_layers(
+                    (gens[wg] for wg in range(g, g - window, -1) if wg in gens),
+                    h1, h2,
+                )
                 fresh = ~seen
                 if fresh.any():
                     yield firsts.loc[fresh, out_columns]

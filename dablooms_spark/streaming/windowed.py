@@ -27,10 +27,12 @@ from __future__ import annotations
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from dablooms_spark.core.hll import HyperLogLog
 from dablooms_spark.core.theta import ThetaSketch
+from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 
 OUTPUT_SCHEMA = (
@@ -110,7 +112,9 @@ def make_windowed_sketch_updater(
         else:
             h = factory()
         for pdf in live:
-            h.add([k.encode() for k in pdf.key.astype(str)])
+            # NULL keys are not distinct values (COUNT(DISTINCT) skips them)
+            keys = pa.array(pdf.key, type=pa.large_string()).drop_null()
+            h.add_buffer(*arrow_byte_view(keys))
         state.update((bytearray(h.to_bytes()), int(win_end_ms)))
         # fire once the event-time watermark passes the window end
         # (surviving rows have ts >= watermark, and their window's end

@@ -460,3 +460,179 @@ def test_scaling_blob_readers_agree():
     assert ScalingBloom.merge_blobs([blob]) == blob
     with pytest.raises(ValueError, match="not a scaling-bloom"):
         layer_records(b"DBSK" + blob[4:])
+
+
+# ---- the one counter kernel ---------------------------------------------
+
+
+def _random_state(rng, cb, extreme):
+    """Counters anywhere in 0..15 (extreme), or mid-range 7..8, where a
+    batch of distinct keys stays inside 0..15."""
+    lo, hi = (0, 16) if extreme else (7, 9)
+    cb.counters = rng.integers(lo, hi, cb.geometry.size).astype(np.uint8)
+    cb.count = int(rng.integers(0, 1000))
+    return cb
+
+
+def _hashes(rng, n, pile=True):
+    h = rng.integers(0, 2**32, (2, n), dtype=np.uint64).astype(np.uint32)
+    if pile:
+        h[:, : n // 4] = h[:, :1]  # one key repeated, so counts pile up
+    return h[0], h[1]
+
+
+@pytest.mark.parametrize("on_overflow", ["saturate", "error"])
+def test_counter_updates_match_numpy_model(on_overflow):
+    """add, remove (both the sparse and the dense branch), merge and
+    subtract equal plain numpy arithmetic on the counters — np.add and
+    np.clip to 0..15 — and a strict filter raises exactly where that
+    arithmetic leaves 0..15."""
+    rng = np.random.default_rng(12)
+    strict = on_overflow == "error"
+    seen = set()
+    for trial in range(40):
+        extreme = bool(trial % 2)
+        cb = _random_state(rng, CountingBloom(3000, 0.01, on_overflow=on_overflow), extreme)
+        g = cb.geometry
+        n = 40 if trial % 4 < 2 else 3000
+        branch = "sparse" if n * g.nfuncs * 8 < g.size else "dense"
+        h1, h2 = _hashes(rng, n, pile=extreme)
+        hits = np.bincount(cb._indexes_hashed(h1, h2).ravel(), minlength=g.size)
+        for op, delta in (("add", 1), ("remove", -1)):
+            c = CountingBloom(3000, 0.01, on_overflow=on_overflow,
+                              _counters=cb.counters.copy(), _count=cb.count)
+            raw = c.counters.astype(np.int64) + delta * hits
+            refused = strict and (raw.max() > 15 or raw.min() < 0)
+            seen.add((op, branch, refused))
+            if refused:
+                with pytest.raises(OverflowError):
+                    getattr(c, f"{op}_hashed")(h1, h2)
+                continue
+            getattr(c, f"{op}_hashed")(h1, h2)
+            assert np.array_equal(c.counters, np.clip(raw, 0, 15))
+            assert c.count == cb.count + delta * n
+        other = CountingBloom(3000, 0.01, on_overflow=on_overflow, _count=int(trial))
+        other.counters = rng.integers(0, 16 if extreme else 8, g.size).astype(np.uint8)
+        raw = cb.counters.astype(np.int64) + other.counters
+        seen.add(("merge", "dense", strict and raw.max() > 15))
+        if strict and raw.max() > 15:
+            with pytest.raises(OverflowError):
+                cb.merge(other)
+        else:
+            m = cb.merge(other)
+            assert np.array_equal(m.counters, np.clip(raw, 0, 15))
+            assert m.count == cb.count + other.count
+        raw = cb.counters.astype(np.int64) - other.counters
+        before = cb.count
+        seen.add(("subtract", "dense", strict and raw.min() < 0))
+        if strict and raw.min() < 0:
+            with pytest.raises(OverflowError):
+                cb.subtract(other)
+        else:
+            cb.subtract(other)
+            assert np.array_equal(cb.counters, np.clip(raw, 0, 15))
+            assert cb.count == max(before - other.count, 0)
+    for op, branch in (("add", "sparse"), ("add", "dense"), ("remove", "sparse"),
+                       ("remove", "dense"), ("merge", "dense"), ("subtract", "dense")):
+        assert (op, branch, False) in seen
+        assert (op, branch, True) in seen or not strict
+
+
+def test_strict_refusals_leave_counters_and_count_untouched():
+    """A strict refusal writes nothing, in the dense branch of add and
+    of remove, in subtract and in merge (the sparse add is checked by
+    test_dablooms_parity.py)."""
+    rng = np.random.default_rng(3)
+
+    def frozen(cb):
+        return cb.counters.copy(), cb.count
+
+    def unchanged(cb, snap):
+        return np.array_equal(cb.counters, snap[0]) and cb.count == snap[1]
+
+    full = CountingBloom(500, 0.01, on_overflow="error")
+    full.counters[:] = 15
+    full.count = 7
+    empty = CountingBloom(500, 0.01, on_overflow="error", _count=7)
+    # as many keys as counters: the dense branch (n * nfuncs * 8 >= size)
+    h1, h2 = _hashes(rng, full.geometry.size)
+    for cb, op in ((full, full.add_hashed), (empty, empty.remove_hashed)):
+        snap = frozen(cb)
+        with pytest.raises(OverflowError):
+            op(h1, h2)
+        assert unchanged(cb, snap)
+
+    half = CountingBloom(500, 0.01, on_overflow="error")
+    half.counters[::2] = 9
+    half.count = 5
+    other = CountingBloom(500, 0.01, on_overflow="error", _count=3)
+    other.counters[:] = 9
+    for fn in (lambda: half.merge(other), lambda: half.subtract(other)):
+        snap = frozen(half)
+        with pytest.raises(OverflowError):
+            fn()
+        assert unchanged(half, snap)
+
+
+def test_cms_add_equals_two_dim_scatter():
+    """CMS add is one flat scatter: the table and total equal the 2-D
+    per-row scatter it replaced, with and without counts."""
+    from dablooms_spark.core.cms import CountMinSketch
+    from dablooms_spark.functions.murmur import murmur3_x64_128
+
+    rng = np.random.default_rng(9)
+    keys = [f"k{int(i)}".encode() for i in rng.integers(0, 3000, 4000)]
+    counts = rng.integers(1, 50, 1000)
+    cms = CountMinSketch(eps=1e-3, delta=0.01)
+    cms.add(keys)
+    cms.add(keys[:1000], counts=counts)
+    model = np.zeros((cms.depth, cms.width), dtype=np.int64)
+    rows = np.arange(cms.depth)[None, :]
+    for ks, c in ((keys, np.ones(len(keys), np.int64)), (keys[:1000], counts)):
+        w1, w2 = murmur3_x64_128(ks, cms.seed)
+        idx = cms._indexes(w1, w2)
+        np.add.at(model, (np.broadcast_to(rows, idx.shape), idx),
+                  np.broadcast_to(c[:, None], idx.shape))
+    assert cms.table.dtype == np.int64
+    assert np.array_equal(cms.table, model)
+    assert cms.total == len(keys) + int(counts.sum())
+    assert CountMinSketch.from_bytes(cms.to_bytes()).table.tobytes() == model.tobytes()
+
+
+# ---- the one layer walk --------------------------------------------------
+
+
+def test_check_layers_is_scaling_check_and_pulls_lazily():
+    """check_layers gives ScalingBloom.check_hashed's verdicts (the OR of
+    every layer), and on a generator it pulls no layer once every key
+    has hit."""
+    from dablooms_spark.core.scaling_bloom import check_layers
+    from dablooms_spark.functions.murmur import dablooms_hash_words
+
+    sb = ScalingBloom(300, 0.01)
+    words = make_words(1100)
+    sb.add(words, np.arange(len(words)))
+    assert len(sb.layers) == 4
+    probe = words + make_words(2000, seed=7, prefix="absent")
+    h1, h2 = dablooms_hash_words(np.asarray(probe, dtype=object), sb.seed)
+    every = np.zeros(len(probe), dtype=bool)
+    for layer in sb.layers:
+        every |= layer.check_hashed(h1, h2)
+    assert np.array_equal(sb.check_hashed(h1, h2), every)
+    assert np.array_equal(check_layers(reversed(sb.layers), h1, h2), every)
+
+    pulled = []
+
+    def newest_first():
+        for layer in reversed(sb.layers):
+            pulled.append(layer)
+            yield layer
+
+    # keys of the second-newest layer all hit there: the two oldest
+    # layers are never pulled
+    h1, h2 = dablooms_hash_words(np.asarray(words[600:890], dtype=object), sb.seed)
+    assert check_layers(newest_first(), h1, h2).all()
+    assert pulled == [sb.layers[3], sb.layers[2]]
+    pulled.clear()
+    assert len(check_layers(newest_first(), h1[:0], h2[:0])) == 0
+    assert pulled == []

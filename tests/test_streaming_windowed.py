@@ -165,3 +165,30 @@ def test_windowed_updater_late_filter_session_tz():
     out4 = run("UTC", ["2026-01-01 10:00:00"], st4)
     assert out4 == [] and bytes(st4.get[0]) == blob
     assert st4.timeout_set is None
+
+
+def test_windowed_updater_hashes_key_bytes_and_skips_nulls():
+    """The updater feeds the sketch the keys' UTF-8 bytes from the
+    Arrow buffer: the state blob equals a sketch built key by key over
+    the non-NULL keys, and a NULL key is no distinct value (as in
+    COUNT(DISTINCT))."""
+    import pandas as pd
+
+    from dablooms_spark.core.hll import HyperLogLog
+    from dablooms_spark.core.theta import ThetaSketch
+    from dablooms_spark.streaming.windowed import (
+        make_windowed_hll_updater,
+        make_windowed_theta_updater,
+    )
+
+    # no "" key: a NULL must not alias the empty string either
+    keys = [f"k{i % 37}" for i in range(200)] + ["ü-ß", None, "k1"]
+    key = (pd.Timestamp("2026-01-01 11:00:00"), 1, "g")
+    for make, sketch in ((make_windowed_hll_updater(10), HyperLogLog(p=10)),
+                         (make_windowed_theta_updater(64), ThetaSketch(k=64))):
+        st = _FakeWinState()
+        out = list(make(key, iter([pd.DataFrame({"key": keys})]), st))
+        sketch.add([k.encode() for k in keys if k is not None])
+        assert bytes(st.get[0]) == sketch.to_bytes()
+        assert len(out) == 1
+    assert out[0]["approx_distinct"].iloc[0] == 38.0  # 37 + "ü-ß"
