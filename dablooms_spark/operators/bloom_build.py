@@ -402,8 +402,9 @@ def scaling_bloom_fixed_partials(
           route rows by id//(capacity−1), emit one counter piece per
           (partition, touched layer) — sparse gap-coded, or dense
           once the layer is half full (core/pieces.py);
-      stage 2 (the only shuffle — pieces, never rows): groupBy(layer)
-          folds pieces and emits the layer-row form
+      stage 2 (the measured merge, operators/merge.py): pieces fold
+          per layer — on the driver when small, else in one piece-only
+          exchange, never a row shuffle — into the layer-row form
           (_LAYER_SCHEMA, restore with restore_scaling_bloom_layers).
 
     vs scaling_bloom_partials (the arrival-order state machine): that
@@ -421,7 +422,7 @@ def scaling_bloom_fixed_partials(
     pieces, merge_layer = _fixed_pieces(
         df, key_col, id_col, capacity, error_rate, seed, expected_layers
     )
-    return pieces.groupBy("layer").applyInPandas(merge_layer, schema=_LAYER_SCHEMA)
+    return fold_or_exchange(pieces, ["layer"], merge_layer, _LAYER_SCHEMA)
 
 
 _LAYER_SCHEMA_PA = pa.schema(
@@ -487,7 +488,7 @@ def _layer_fold(seed: int):
 def scaling_layers_df(blob_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
     """Merge a (shard, blob, n) DataFrame of scaling-bloom partials
     into the filter's canonical LAYER-ROW form — one row per
-    (first_id, layer_eps) layer — entirely in parallel.
+    (first_id, layer_eps) layer — through merge_layer_rows.
 
     This is the merge+checkpoint shape that scales: a scaling filter
     over 10^12 rows is tens of GB, so the one-blob artifact
@@ -508,9 +509,10 @@ def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFra
     merge step for any union of layer-row DataFrames: resumed builds
     over overlapping id ranges, or an ingest batch unioned with the
     prior checkpoint. Id-disjoint layers pass through untouched; the
-    whole merge is one parallel groupBy, no driver traffic."""
-    return layers_df.groupBy("first_id", "layer_eps").applyInPandas(
-        _layer_fold(seed), schema=_LAYER_SCHEMA
+    rows fold per (first_id, layer_eps) in the measured merge (on the
+    driver when small, else one parallel groupBy)."""
+    return fold_or_exchange(
+        layers_df, ["first_id", "layer_eps"], _layer_fold(seed), _LAYER_SCHEMA
     )
 
 

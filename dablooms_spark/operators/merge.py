@@ -1,26 +1,29 @@
 """The one merge executor: driver fold or exchange.
 
-Every distributed build and remove ends the same way: a DataFrame of
-partials (counter pieces or serialized sketches) keyed by some group
-columns, folded per group. The partials are persisted and measured —
-one JVM job fills the cache and counts the bytes it holds — and within
-the ceiling they are folded on the driver; above it they go through
-`groupBy(keys).applyInPandas(fold)`, which keeps the driver out of
-the data path. The per-group fold is the same function either way,
-so both topologies give identical rows (order-invariant merges).
-Nothing stays cached once a merge returns.
+Every distributed build, remove and sketch merge ends the same way: a
+DataFrame of partials (counter pieces, layer rows or serialized
+sketches) keyed by some group columns, folded per group by one
+function. The partials are persisted and measured (one JVM job fills
+the cache and counts its bytes); within the ceiling they fold on the
+driver, above it through `groupBy(keys).applyInPandas(fold)`, which
+keeps the driver out of the data path. Both give identical rows.
+
+The contract: a measured merge runs its piece stage once and returns
+its result computed. The driver fold is eager; the exchange is
+`localCheckpoint()`ed (eager) before the cached partials are released,
+so nothing downstream re-runs it, and nothing stays in the cache
+manager. Its blocks are not recomputed if an executor is lost (the
+trade operators/graph.py makes too). A ceiling of '0' skips the
+measure and returns the exchange lazy.
 
 The driver path moves bytes with no Python stage on either side: the
 cached pieces come in as Arrow (`toArrow`), and a returned frame goes
 out as pickled rows the JVM unpickles itself (`_local_frame`), so its
 first action runs JVM tasks only.
 
-Serialized filters and sketches fold the same way: the range scaling
-build's layers per (first_id, layer_eps), sketch_agg's partials in
-groups of at most 8 input partitions. The one merge left outside the
-measure is `merge_blobs_df`, whose single output row must never visit
-the driver: it merges in a tree of blob-only rounds, at most 8 blobs
-per task.
+The one merge left outside the measure is `merge_blobs_df`, whose
+single output row must never visit the driver: it merges in a tree of
+blob-only rounds, at most 8 blobs per task.
 
 This module is the only reader of the driver-fold ceiling
 (spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
@@ -98,25 +101,24 @@ def fold_or_exchange(
     in, output rows out, `schema`-shaped). Persisted and measured, the
     partials fold on the driver when their bytes fit
     driverMergeMaxBytes, else through groupBy(keys).applyInPandas
-    ('0' skips the measure). Returns the merged DataFrame, or with
-    collect=True the merged rows (attribute access by column name).
-    The driver fold reads the cached pieces as Arrow and returns a
-    frame of JVM-side rows with no Python stage behind it. The
-    partials are released on return: a collect=True exchange reads
-    them from the cache, a returned exchange frame is lazy."""
+    ('0' skips the measure). Returns the merged DataFrame, computed
+    (see the module contract), or with collect=True the merged rows
+    (attribute access by column name). Groups with NULL keys are
+    kept on both paths, as Spark's groupBy keeps them."""
     spark = partials.sparkSession
     cap = _driver_merge_max_bytes(spark)
-    if cap > 0:
-        partials = partials.persist()
+    if cap <= 0:
+        merged = _exchange(partials, keys, fold, schema)
+        return merged.collect() if collect else merged
+    partials = partials.persist()
     try:
-        if cap <= 0 or _partial_bytes(partials) > cap:
+        if _partial_bytes(partials) > cap:
             merged = _exchange(partials, keys, fold, schema)
-            return merged.collect() if collect else merged
+            return merged.collect() if collect else merged.localCheckpoint()
         pdf = partials.toArrow().to_pandas()
     finally:
-        if cap > 0:
-            partials.unpersist()
-    groups = pdf.groupby(keys, sort=True) if len(pdf) else []
+        partials.unpersist()
+    groups = pdf.groupby(keys, sort=True, dropna=False) if len(pdf) else []
     rows = [r for _, g in groups for r in fold(g).itertuples(index=False)]
     return rows if collect else _local_frame(spark, rows, schema)
 

@@ -42,6 +42,7 @@ from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import fixed_layer_eps
 from dablooms_spark.operators.bloom_probe import confirm
+from dablooms_spark.operators.merge import fold_or_exchange
 from dablooms_spark.operators.sharded import (
     Geometry,
     _check_num_shards,
@@ -237,10 +238,11 @@ def merge_sharded_layer_rows(
     """Union-merge sharded layer rows: rows sharing (shard, first_id)
     — e.g. a resumed/incremental build continuing inside the same id
     window — counter-sum into one row; disjoint rows pass through.
-    One parallel groupBy over (shard, first_id): the filter's natural
-    parallel unit, no driver traffic (the sharded twin of
-    bloom_build.merge_layer_rows). Geometry consistency (capacity,
-    sb_eps, num_shards) is validated per colliding group."""
+    The rows fold per (shard, first_id), the filter's natural parallel
+    unit, in the measured merge: on the driver when small, else one
+    parallel groupBy (the sharded twin of bloom_build.merge_layer_rows).
+    Geometry consistency (capacity, sb_eps, num_shards) is validated
+    per colliding group."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 1:
@@ -260,9 +262,7 @@ def merge_sharded_layer_rows(
         new["max_id"] = [int(pdf.max_id.max())]
         return new[_ROW_COLS]
 
-    return layers_df.groupBy("shard", "first_id").applyInPandas(
-        merge_group, schema=_ROW_SCHEMA
-    )
+    return fold_or_exchange(layers_df, ["shard", "first_id"], merge_group, _ROW_SCHEMA)
 
 
 def sharded_scaling_semi_join(

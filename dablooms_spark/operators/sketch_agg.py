@@ -7,10 +7,11 @@ phases, the same shape Catalyst uses for its own partial aggregates:
   phase 1 — mapInArrow over input partitions: one partial sketch per
       (partition[, group]) updated from zero-copy Arrow buffers; only
       small blobs leave the task.
-  phase 2 — a fold of the blobs: through the measured merge in groups
-      of at most 8 input partitions, then on the driver (global;
-      operators/merge.py), or a groupBy over blobs (grouped). The
-      shuffle moves kilobytes per group, never rows.
+  phase 2 — a fold of the blobs in the measured merge
+      (operators/merge.py): per group of at most 8 input partitions,
+      then on the driver (global), or per group (grouped, rollup).
+      Above the ceiling the shuffle moves kilobytes per group, never
+      rows.
 
 All sketch classes share the same surface (add/add_buffer, merge,
 to_bytes/from_bytes), so one operator serves Bloom/HLL/CMS/t-digest/
@@ -110,51 +111,81 @@ def sketch_agg(df: DataFrame, col: str, kind: str, **params):
     return loads(blob, seed=seed)
 
 
-def _grouped_build_partials(
-    batches: Iterator[pa.RecordBatch], kind: str, params: dict, mode: str
-) -> Iterator[pa.RecordBatch]:
-    """Phase-1 body shared by grouped_sketch_agg and the fused
-    merge+finalize operators: one partial sketch per group per task,
-    batch rows partitioned by group Arrow-side (no per-row Python)."""
-    sketches: dict[str, object] = {}
-    counts: dict[str, int] = {}
-    for batch in batches:
-        tbl = pa.Table.from_batches([batch])
-        # partition batch rows by group using Arrow-side dictionary
-        # encoding (no per-row Python): sort indices by group code
-        g = batch.column(0)
-        codes = pa.compute.dictionary_encode(g)
-        idx = pa.compute.sort_indices(codes.indices)
-        sorted_tbl = tbl.take(idx)
-        sorted_codes = codes.indices.take(idx).to_numpy(zero_copy_only=False)
-        dict_vals = codes.dictionary.to_pylist()
-        bounds = np.searchsorted(
-            sorted_codes, np.arange(len(dict_vals) + 1), side="left"
-        )
-        vcol = sorted_tbl.column(1).combine_chunks()
-        for gi, gname in enumerate(dict_vals):
-            lo, hi = int(bounds[gi]), int(bounds[gi + 1])
-            if lo == hi:
-                continue
-            sk = sketches.get(gname)
-            if sk is None:
-                sk, _m = _make(kind, params)
-                sketches[gname] = sk
-                counts[gname] = 0
-            _update_from_arrow(sk, mode, vcol.slice(lo, hi - lo))
-            counts[gname] += hi - lo
-    if sketches:
-        names = list(sketches)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "g": names,
-                "blob": [sketches[n].to_bytes() for n in names],
-                "n": [counts[n] for n in names],
-            },
-            schema=pa.schema(
-                [("g", pa.large_string()), ("blob", pa.large_binary()), ("n", pa.int64())]
-            ),
-        )
+_GROUPED_SCHEMA = "g string, blob binary, n long"
+_GROUPED_SCHEMA_PA = pa.schema(
+    [("g", pa.large_string()), ("blob", pa.large_binary()), ("n", pa.int64())]
+)
+
+
+def _grouped_partials(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    kind: str,
+    params: dict,
+    finish=None,
+    schema: str = _GROUPED_SCHEMA,
+) -> DataFrame:
+    """Phase 1 of every grouped operator: a (g string, blob, n) partial
+    per (input partition, group) over the rows whose group and value
+    are both non-NULL (map-side combine), batch rows partitioned by
+    group Arrow-side (no per-row Python). `finish` maps each task's
+    partials to a `schema`-shaped batch before they leave the task."""
+    _, mode = _KINDS[kind]
+    cast = "string" if mode == "string" else "double"
+    sdf = df.select(
+        F.col(group_col).cast("string").alias("g"),
+        F.col(value_col).cast(cast).alias("v"),
+    ).filter(F.col("v").isNotNull() & F.col("g").isNotNull())
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        sketches: dict[str, object] = {}
+        counts: dict[str, int] = {}
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            # partition batch rows by group using Arrow-side dictionary
+            # encoding (no per-row Python): sort indices by group code
+            codes = pa.compute.dictionary_encode(batch.column(0))
+            idx = pa.compute.sort_indices(codes.indices)
+            sorted_tbl = tbl.take(idx)
+            sorted_codes = codes.indices.take(idx).to_numpy(zero_copy_only=False)
+            dict_vals = codes.dictionary.to_pylist()
+            bounds = np.searchsorted(
+                sorted_codes, np.arange(len(dict_vals) + 1), side="left"
+            )
+            vcol = sorted_tbl.column(1).combine_chunks()
+            for gi, gname in enumerate(dict_vals):
+                lo, hi = int(bounds[gi]), int(bounds[gi + 1])
+                if lo == hi:
+                    continue
+                if gname not in sketches:
+                    sketches[gname], counts[gname] = _make(kind, params)[0], 0
+                _update_from_arrow(sketches[gname], mode, vcol.slice(lo, hi - lo))
+                counts[gname] += hi - lo
+        if sketches:
+            part = pa.RecordBatch.from_pydict(
+                {
+                    "g": list(sketches),
+                    "blob": [sk.to_bytes() for sk in sketches.values()],
+                    "n": list(counts.values()),
+                },
+                schema=_GROUPED_SCHEMA_PA,
+            )
+            yield finish(part) if finish else part
+
+    return sdf.mapInArrow(build, schema=schema)
+
+
+def _blob_merge(keys: list[str], seed: int):
+    """Per-group fold of (keys..., blob, n) rows into one such row."""
+
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = {c: [pdf[c].iloc[0]] for c in keys}
+        out["blob"] = [_merge_blobs_to_bytes(list(pdf.blob), seed)]
+        out["n"] = [int(pdf.n.sum())]
+        return pd.DataFrame(out)
+
+    return merge_group
 
 
 def grouped_sketch_agg(
@@ -166,35 +197,12 @@ def grouped_sketch_agg(
 ) -> DataFrame:
     """One sketch blob per group: DataFrame(group string, blob binary,
     n long). Phase 1 holds a dict of per-group partial sketches per
-    partition (map-side combine); phase 2 shuffles only blobs."""
-    _, mode = _KINDS[kind]
-    cast = "string" if mode == "string" else "double"
-    sdf = df.select(
-        F.col(group_col).cast("string").alias("g"),
-        F.col(value_col).cast(cast).alias("v"),
-    ).filter(F.col("v").isNotNull() & F.col("g").isNotNull())
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _grouped_build_partials(batches, kind, params, mode)
-
-    partials = sdf.mapInArrow(build, schema="g string, blob binary, n long")
-
+    partition (map-side combine); phase 2 folds only blobs, per group,
+    in the measured merge (operators/merge.py)."""
     seed = params.get("seed", DABLOOMS_SEED)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "g": [pdf.g.iloc[0]],
-                "blob": [_merge_blobs_to_bytes(list(pdf.blob), seed)],
-                "n": [int(pdf.n.sum())],
-            }
-        )
-
-    return (
-        partials.groupBy("g")
-        .applyInPandas(merge_group, schema="g string, blob binary, n long")
-        .withColumnRenamed("g", group_col)
-    )
+    partials = _grouped_partials(df, group_col, value_col, kind, params)
+    merged = fold_or_exchange(partials, ["g"], _blob_merge(["g"], seed), _GROUPED_SCHEMA)
+    return merged.withColumnRenamed("g", group_col)
 
 
 def sketch_rollup(
@@ -206,59 +214,58 @@ def sketch_rollup(
 ) -> DataFrame:
     """Sketch hierarchy: one blob per grouping level of a rollup —
     (c1, c2, ..., blob, n) with NULLs marking rolled-up levels, like
-    SQL ROLLUP.
+    SQL ROLLUP. The group columns must hold no NULLs (one raises).
 
-    The input is scanned ONCE (finest-level grouped sketches); every
-    coarser level is produced by merging child blobs — kilobytes per
-    group — instead of re-aggregating rows. This is the pattern that
-    makes per-(lang, host) → per-lang → global cardinality hierarchies
+    The input is scanned ONCE; every coarser level is produced by
+    merging child blobs — kilobytes per group — instead of
+    re-aggregating rows. Each phase-1 task merges its own finest-level
+    partials up the hierarchy (Spark's ROLLUP shape: the levels are
+    expanded below the partial aggregate), so every level's partials
+    fold in ONE measured merge keyed by group_cols, whose rolled-up
+    levels are NULL-keyed groups. This is the pattern that makes
+    per-(lang, host) → per-lang → global cardinality hierarchies
     affordable at 10^12 rows: the raw data is touched once, the
     hierarchy is sketch algebra.
     """
     assert group_cols, "need at least one group column"
-    finest = grouped_sketch_agg(
-        df.withColumn(
-            "__g", F.concat_ws("\x1f", *[F.col(c).cast("string") for c in group_cols])
-        ),
-        "__g",
-        value_col,
-        kind,
-        **params,
+    depth, seed = len(group_cols), params.get("seed", DABLOOMS_SEED)
+    arrow_schema = pa.schema(
+        [(c, pa.large_string()) for c in group_cols]
+        + [("blob", pa.large_binary()), ("n", pa.int64())]
     )
-    split = F.split(F.col("__g"), "\x1f")
-    finest = finest.select(
-        *[split.getItem(i).alias(c) for i, c in enumerate(group_cols)],
-        "blob",
-        "n",
-    ).persist()
 
-    seed = params.get("seed", DABLOOMS_SEED)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {c: [pdf[c].iloc[0]] for c in pdf.columns if c not in ("blob", "n")}
-        out["blob"] = [_merge_blobs_to_bytes(list(pdf.blob), seed)]
-        out["n"] = [int(pdf.n.sum())]
-        return pd.DataFrame(out)
-
-    levels = [finest]
-    current = finest
-    schema_cols = ", ".join(f"{c} string" for c in group_cols)
-    for depth in range(len(group_cols) - 1, -1, -1):
-        # null out the rolled-up dimensions, merge the parent level's
-        # blobs per remaining key — each level is sketch algebra over
-        # the level above, never a rescan
-        nulled = current
-        for c in group_cols[depth:]:
-            nulled = nulled.withColumn(c, F.lit(None).cast("string"))
-        level = nulled.groupBy(*group_cols).applyInPandas(
-            merge_group, schema=f"{schema_cols}, blob binary, n long"
+    def roll_up(part: pa.RecordBatch) -> pa.RecordBatch:
+        # the finest keys split back out of the joined group string;
+        # level k keeps the first k of them, merged from level k + 1
+        level = [
+            (tuple(g.split("\x1f"))[:depth], blob, n)
+            for g, blob, n in zip(*(c.to_pylist() for c in part.columns))
+        ]
+        if any(len(key) < depth for key, _, _ in level):
+            # concat_ws skips NULLs, and a NULL marks a rolled-up level
+            raise ValueError(f"sketch_rollup: NULL value in a group column {group_cols}")
+        rows = list(level)
+        for k in range(depth - 1, -1, -1):
+            groups: dict[tuple, list] = {}
+            for key, blob, n in level:
+                groups.setdefault(key[:k] + (None,) * (depth - k), []).append((blob, n))
+            level = [
+                (key, _merge_blobs_to_bytes([b for b, _ in bn], seed), sum(n for _, n in bn))
+                for key, bn in groups.items()
+            ]
+            rows += level
+        keys, blobs, ns = zip(*rows)
+        cols = {c: [key[i] for key in keys] for i, c in enumerate(group_cols)}
+        return pa.RecordBatch.from_pydict(
+            {**cols, "blob": list(blobs), "n": list(ns)}, schema=arrow_schema
         )
-        levels.append(level)
-        current = level
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+
+    joined = df.withColumn(
+        "__g", F.concat_ws("\x1f", *[F.col(c).cast("string") for c in group_cols])
+    )
+    schema = ", ".join(f"{c} string" for c in group_cols) + ", blob binary, n long"
+    partials = _grouped_partials(joined, "__g", value_col, kind, params, roll_up, schema)
+    return fold_or_exchange(partials, group_cols, _blob_merge(group_cols, seed), schema)
 
 
 def rollup_distinct(
@@ -294,27 +301,10 @@ def _grouped_merge_finalize(
     finalize,
     out_schema: str,
 ) -> DataFrame:
-    """grouped_sketch_agg's phase 1 + a SINGLE phase-2 applyInPandas
-    that merges each group's partial blobs AND finalizes (estimate /
-    quantiles) in the same pass.
-
-    The two-pass form (merge applyInPandas, then a second groupBy +
-    applyInPandas for the estimate) pays a second Exchange + pandas
-    round-trip: the merge's output attributes are new to Catalyst, so
-    the follow-up groupBy cannot reuse the first shuffle's
-    partitioning. The fold order over each group's blobs is the same
-    shuffle-arrival order as the two-pass form — results identical."""
-    _, mode = _KINDS[kind]
-    cast = "string" if mode == "string" else "double"
-    sdf = df.select(
-        F.col(group_col).cast("string").alias("g"),
-        F.col(value_col).cast(cast).alias("v"),
-    ).filter(F.col("v").isNotNull() & F.col("g").isNotNull())
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _grouped_build_partials(batches, kind, params, mode)
-
-    partials = sdf.mapInArrow(build, schema="g string, blob binary, n long")
+    """grouped_sketch_agg's phase 1 + ONE measured fold that merges
+    each group's partial blobs AND finalizes (estimate / quantiles) in
+    the same pass, instead of a second fold over the merged blobs."""
+    partials = _grouped_partials(df, group_col, value_col, kind, params)
 
     def merge_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
         sk = loads(pdf.blob.iloc[0])

@@ -164,11 +164,6 @@ def hll_estimate(col):
     return _hll_estimate_udf()(col)
 
 
-def sketch_estimate(col):
-    """Generic estimate reader for any blob with estimate()."""
-    return _hll_estimate_udf()(col)
-
-
 def _sketch_count_udf():
     @pandas_udf("long")
     def f(blobs: pd.Series) -> pd.Series:
@@ -179,11 +174,6 @@ def _sketch_count_udf():
         return pd.Series([n(b) for b in blobs])
 
     return f
-
-
-def sketch_count(col):
-    """The sketch's exact element count (every kind tracks one)."""
-    return _sketch_count_udf()(col)
 
 
 def quantile_udf(q: float):
@@ -205,10 +195,6 @@ def _cms_query_udf():
         return pd.Series(out)
 
     return f
-
-
-def cms_query(blob_col, key_col):
-    return _cms_query_udf()(blob_col, key_col)
 
 
 def _bloom_check_udf():

@@ -401,3 +401,44 @@ def test_incremental_ingest_sharded_scaling_pre_r4_artifact(spark, tmp_path):
         ).collect()
     }
     assert committed == oneshot
+
+
+def test_ingest_commits_identical_layers_at_every_merge_ceiling(spark, tmp_path):
+    """Three batches through each scaling ingest commit the same layer
+    rows whether the merges fold on the driver (default), take the
+    lazy exchange ('0') or the measured, checkpointed one ('1b')."""
+    from dablooms_spark.operators.ingest import (
+        incremental_ingest_scaling,
+        incremental_ingest_sharded_scaling,
+    )
+    from dablooms_spark.sources.checkpoint import CheckpointManager
+
+    def batch(lo, hi):
+        return spark.range(lo, hi, 1, 4).select(
+            F.concat(F.lit("k"), F.col("id")).alias("key"), F.col("id").alias("rid")
+        )
+
+    ingests = {
+        "scaling": lambda b, path: incremental_ingest_scaling(
+            b, "key", "rid", path, "run", 500, 0.05
+        ),
+        "sharded": lambda b, path: incremental_ingest_sharded_scaling(
+            b, "key", "rid", path, "run", 500, 0.05, num_shards=4
+        ),
+    }
+    got = {}
+    for ceiling in (None, "0", "1b"):
+        if ceiling is not None:
+            spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
+        try:
+            for name, ingest in ingests.items():
+                path = str(tmp_path / f"{name}-{ceiling}")
+                for lo, hi in ((0, 800), (400, 1_300), (1_300, 1_600)):
+                    ingest(batch(lo, hi), path)
+                mgr = CheckpointManager(path)
+                rows = mgr.load_blobs(spark, mgr.latest("run")).collect()
+                got.setdefault(name, []).append(sorted(map(tuple, rows)))
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+    for name, (default, lazy, measured) in got.items():
+        assert default and default == lazy == measured, name

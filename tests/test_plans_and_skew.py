@@ -220,9 +220,13 @@ def test_fixed_scaling_build_plan_shape(spark, wp_parquet):
     from dablooms_spark.operators.bloom_build import scaling_bloom_fixed_partials
 
     wp = spark.read.parquet(wp_parquet)
-    layers = scaling_bloom_fixed_partials(
-        wp, "text", "row_id", capacity=5_000, error_rate=0.05
-    )
+    spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "0")
+    try:
+        layers = scaling_bloom_fixed_partials(
+            wp, "text", "row_id", capacity=5_000, error_rate=0.05
+        )
+    finally:
+        spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
     plan = _formatted_plan(layers)
     lines = plan.splitlines()
     exchanges = [l for l in lines if l.startswith("(") and "Exchange" in l]

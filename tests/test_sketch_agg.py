@@ -117,6 +117,40 @@ def test_sketch_rollup_hierarchy(spark, events):
         assert abs(rows[key] - v) / max(v, 1) < 0.05, key
 
 
+def test_sketch_rollup_rows_equal_across_merge_ceilings(spark):
+    """A rollup's rolled-up levels are NULL-keyed groups, which the
+    driver fold keeps as Spark's groupBy does: a 3x5 rollup gives the
+    same 19 rows at the default ceiling, '0' and '1b'. A NULL in a
+    group column raises."""
+    from dablooms_spark.operators.sketch_agg import sketch_rollup
+
+    df = spark.range(0, 3_000, 1, 4).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"),
+        (F.col("id") % 3).cast("string").alias("a"),
+        (F.col("id") % 5).cast("string").alias("b"),
+    )
+    got = []
+    for ceiling in (None, "0", "1b"):
+        if ceiling is not None:
+            spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
+        try:
+            rows = sketch_rollup(df, ["a", "b"], "key", "hll", p=10).collect()
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+        got.append(set(map(tuple, rows)))
+        assert len(rows) == 19, ceiling
+    assert got[0] == got[1] == got[2]
+    assert {r[:2] for r in got[0] if r[1] is None} == {
+        (None, None), ("0", None), ("1", None), ("2", None)
+    }
+    assert sum(r[3] for r in got[0] if r[0] is None) == 3_000
+    with pytest.raises(Exception, match="NULL value in a group column"):
+        sketch_rollup(
+            df.withColumn("b", F.when(F.col("key") != "k7", F.col("b"))),
+            ["a", "b"], "key", "hll", p=10,
+        ).collect()
+
+
 def test_grouped_bloom_filters_per_type(spark, events):
     """Per-group membership filters via the generic sketch agg: one
     counting bloom per event_type over user keys — no FN within the

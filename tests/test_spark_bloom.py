@@ -998,7 +998,12 @@ def test_measured_merge_pins_no_cache(spark, monkeypatch):
     from dablooms_spark.operators.generations import build_generation_filters
     from dablooms_spark.operators.sharded import build_sharded_counting_bloom
     from dablooms_spark.operators.sharded_scaling import build_sharded_scaling_layers
-    from dablooms_spark.operators.sketch_agg import approx_distinct_by, sketch_agg
+    from dablooms_spark.operators.sketch_agg import (
+        approx_distinct_by,
+        grouped_sketch_agg,
+        rollup_distinct,
+        sketch_agg,
+    )
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     df = spark.range(0, 6_000, 1, 4).select(
@@ -1032,6 +1037,9 @@ def test_measured_merge_pins_no_cache(spark, monkeypatch):
             df, "key", "id", capacity=1_000, error_rate=0.02, num_shards=4
         ).to_bytes(),
         "sketch_agg_global": lambda: sketch_agg(df, "key", "hll", p=10).to_bytes(),
+        # the rolled-up level's NULL key filled in, so the rows sort
+        "rollup_distinct": lambda: rollup_distinct(df, ["g"], "key", p=10).na.fill("*"),
+        "grouped_sketch_agg": lambda: grouped_sketch_agg(df, "g", "key", "hll", p=10),
     }
     seen = _merge_spy(monkeypatch)
     got = {}
@@ -1083,6 +1091,61 @@ def test_ingest_loop_at_measured_exchange_pins_no_cache(spark, tmp_path):
             assert cache.numCachedEntries() == before, seq
     finally:
         spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+
+
+def test_measured_exchange_runs_each_piece_stage_once(spark, monkeypatch):
+    """Above the ceiling ('1b') a merge that returns a frame runs its
+    piece stage once per input partition: the exchange is computed
+    while the measured pieces are still cached, so reading the result
+    runs neither again. Its rows equal the default ceiling's."""
+    from dablooms_spark.core.pieces import PieceEncoder
+    from dablooms_spark.operators.bloom_build import scaling_bloom_fixed_partials
+    from dablooms_spark.operators.generations import build_generation_filters
+    from dablooms_spark.operators.sharded import build_sharded_counting_bloom
+    from dablooms_spark.operators.sharded_scaling import build_sharded_scaling_layers
+
+    runs, map_fn = spark.sparkContext.accumulator(0), PieceEncoder.map_fn
+
+    def counted_map_fn(self, route):
+        fn = map_fn(self, route)
+
+        def counted(batches):
+            runs.add(1)
+            yield from fn(batches)
+
+        return counted
+
+    monkeypatch.setattr(PieceEncoder, "map_fn", counted_map_fn)
+    df = spark.range(0, 6_000, 1, 4).select(
+        F.concat_ws(":", F.col("id"), F.lit("p")).alias("key"), F.col("id"),
+        (F.col("id") * 3_600).cast("timestamp").alias("ts"),
+    )
+    cases = {
+        "sharded_scaling": lambda: build_sharded_scaling_layers(
+            df, "key", "id", capacity=1_000, error_rate=0.02, num_shards=4
+        ),
+        "sharded": lambda: build_sharded_counting_bloom(
+            df, "key", 6_000, 0.01, num_shards=4
+        ),
+        "generations": lambda: build_generation_filters(
+            df, "key", "ts", "1 day", capacity=64, error_rate=0.02, num_shards=4
+        ),
+        "fixed_scaling": lambda: scaling_bloom_fixed_partials(
+            df, "key", "id", capacity=2_000, error_rate=0.02
+        ),
+    }
+    for case, run in cases.items():
+        runs.value = 0
+        want = sorted(map(tuple, run().collect()))
+        assert runs.value == 4, case
+        spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", "1b")
+        try:
+            runs.value = 0
+            got = sorted(map(tuple, run().collect()))
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
+        assert runs.value == 4, case
+        assert got == want, case
 
 
 def test_partial_bytes_matches_octet_length(spark):
