@@ -40,6 +40,7 @@ from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_b
 from dablooms_spark.operators.merge import (
     _BLOB_SCHEMA,
     _BLOB_SCHEMA_PA,
+    _exchange,
     fold_or_exchange,
 )
 from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
@@ -405,7 +406,8 @@ def scaling_bloom_fixed_partials(
       stage 2 (the measured merge, operators/merge.py): pieces fold
           per layer — on the driver when small, else in one piece-only
           exchange, never a row shuffle — into the layer-row form
-          (_LAYER_SCHEMA, restore with restore_scaling_bloom_layers).
+          (_LAYER_SCHEMA, restore with restore_scaling_bloom_layers;
+          a checkpoint above the ceiling, not recomputed from lineage).
 
     vs scaling_bloom_partials (the arrival-order state machine): that
     path must range-shuffle every row (16 B/row — 16 TB at 10^12 rows)
@@ -509,11 +511,9 @@ def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFra
     merge step for any union of layer-row DataFrames: resumed builds
     over overlapping id ranges, or an ingest batch unioned with the
     prior checkpoint. Id-disjoint layers pass through untouched; the
-    rows fold per (first_id, layer_eps) in the measured merge (on the
-    driver when small, else one parallel groupBy)."""
-    return fold_or_exchange(
-        layers_df, ["first_id", "layer_eps"], _layer_fold(seed), _LAYER_SCHEMA
-    )
+    rows fold per (first_id, layer_eps) in one parallel groupBy,
+    unmeasured and lazy (merge._exchange)."""
+    return _exchange(layers_df, ["first_id", "layer_eps"], _layer_fold(seed), _LAYER_SCHEMA)
 
 
 def assemble_scaling_bloom(rows, seed: int = DABLOOMS_SEED) -> ScalingBloom:

@@ -90,7 +90,8 @@ def build_generation_filters(
     capacity/num_shards (capacity = expected keys per generation).
     One map pass plus a driver fold or one piece-only shuffle, rows
     never shuffle — build_sharded_counting_bloom with the generation
-    as the layer key. Timestamps before 1970 give negative gens."""
+    as the layer key. Timestamps before 1970 give negative gens; a
+    checkpoint above driverMergeMaxBytes (operators/merge.py)."""
     keyed, geometry = _counting(
         df, key_col, capacity, error_rate, num_shards,
         layer=gen_expr(ts_col, generation_seconds(generation)),

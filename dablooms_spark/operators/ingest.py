@@ -212,9 +212,9 @@ def incremental_ingest_scaling(
     days); fixed id-value boundaries mean a new batch's layers are
     id-disjoint from the checkpoint's, so the filter update is a
     UNION of layer rows plus one parallel collide-merge
-    (merge_layer_rows) — the artifact grows by appending layers
-    exactly like scaling_bloom_add growing at capacity, and the commit
-    stays one task per layer at any history length.
+    (merge_layer_rows, a lazy exchange the commit's write runs) — the
+    artifact grows by appending layers exactly like scaling_bloom_add
+    growing at capacity.
 
     Returns (new_rows, committed_seqnum) with the same split
     semantics/guarantees as incremental_ingest. The split
@@ -341,7 +341,7 @@ def incremental_ingest_sharded_scaling(
     probe task; here the filter stays sharded end to end:
 
       * restore  — the checkpoint artifact IS the sharded layer-row
-                   DataFrame (never assembled anywhere);
+                   DataFrame (never assembled into one filter);
       * split    — sharded_scaling_probe: each cogroup task holds ONE
                    shard's layers (≈ filter_size / num_shards), so
                    task memory is bounded by shard sizing, not filter
@@ -351,9 +351,10 @@ def incremental_ingest_sharded_scaling(
                    prior rows and collide-merged per (shard, first_id)
                    (merge_sharded_layer_rows — counter-sum, so the
                    committed artifact is bit-identical to a one-shot
-                   sharded build over all batches so far);
+                   sharded build over all batches so far), a lazy
+                   exchange the commit's write runs;
       * commit   — atomic manifest under the next seqnum with parent
-                   lineage; one write task per (shard, layer) row.
+                   lineage.
 
     num_shards must match the prior artifact's (validated via the
     stamped num_shards column; drift raises rather than mis-routing).

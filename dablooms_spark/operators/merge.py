@@ -12,18 +12,18 @@ The contract: a measured merge runs its piece stage once and returns
 its result computed. The driver fold is eager; the exchange is
 `localCheckpoint()`ed (eager) before the cached partials are released,
 so nothing downstream re-runs it, and nothing stays in the cache
-manager. Its blocks are not recomputed if an executor is lost (the
-trade operators/graph.py makes too). A ceiling of '0' skips the
-measure and returns the exchange lazy.
+manager. A checkpoint has no lineage to recompute lost blocks from
+(as in operators/graph.py), so they are stored twice: it survives the
+loss of one executor. '0' skips the measure; the exchange stays lazy.
 
 The driver path moves bytes with no Python stage on either side: the
 cached pieces come in as Arrow (`toArrow`), and a returned frame goes
 out as pickled rows the JVM unpickles itself (`_local_frame`), so its
 first action runs JVM tasks only.
 
-The one merge left outside the measure is `merge_blobs_df`, whose
-single output row must never visit the driver: it merges in a tree of
-blob-only rounds, at most 8 blobs per task.
+Outside the measure: `merge_blobs_df`, whose single output row must
+never visit the driver, merges in a tree of blob-only rounds, at most
+8 blobs per task; the layer-row merges take `_exchange` lazy.
 
 This module is the only reader of the driver-fold ceiling
 (spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
@@ -36,6 +36,7 @@ from collections.abc import Callable
 
 import pandas as pd
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.serializers import AutoBatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -87,6 +88,8 @@ def _partial_bytes(partials: DataFrame) -> int:
 
 
 def _exchange(partials: DataFrame, keys: list[str], fold, schema: str) -> DataFrame:
+    """The unmeasured, lazy merge; the layer-row merges call it directly
+    (their computed rows are read once, by a checkpoint write)."""
     return partials.groupBy(*keys).applyInPandas(fold, schema=schema)
 
 
@@ -114,7 +117,9 @@ def fold_or_exchange(
     try:
         if _partial_bytes(partials) > cap:
             merged = _exchange(partials, keys, fold, schema)
-            return merged.collect() if collect else merged.localCheckpoint()
+            return merged.collect() if collect else merged.localCheckpoint(
+                storageLevel=StorageLevel.MEMORY_AND_DISK_2
+            )
         pdf = partials.toArrow().to_pandas()
     finally:
         partials.unpersist()

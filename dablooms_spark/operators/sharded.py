@@ -369,7 +369,8 @@ def build_sharded_counting_bloom(
     rows never shuffle). on_overflow='error' extends the reference's bitmap_increment
     refusal (≈L108) to the sharded topology: a counter whose count
     passes 15 within one partition's piece or across the folded
-    pieces raises, and the strict flag rides each blob header."""
+    pieces raises, and the strict flag rides each blob header; a
+    checkpoint above driverMergeMaxBytes (operators/merge.py)."""
     keyed, geometry = _counting(df, key_col, capacity, error_rate, num_shards)
     return build_layers(
         keyed, num_shards, geometry,

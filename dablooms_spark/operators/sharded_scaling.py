@@ -42,7 +42,7 @@ from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import fixed_layer_eps
 from dablooms_spark.operators.bloom_probe import confirm
-from dablooms_spark.operators.merge import fold_or_exchange
+from dablooms_spark.operators.merge import _exchange
 from dablooms_spark.operators.sharded import (
     Geometry,
     _check_num_shards,
@@ -133,7 +133,8 @@ def build_sharded_scaling_layers(
     polynomial to uniform (see bloom_build.fixed_layer_eps — ~20%
     less hash/index work at 80 layers, more at scale). build_layers:
     one map stage of counter pieces, folded per (shard, layer) on the
-    driver when the pieces are small, else in one piece-only exchange."""
+    driver when the pieces are small, else in one piece-only exchange
+    (a checkpoint, not recomputed from lineage: operators/merge.py)."""
     keyed, geometry, width = _scaling_layers(
         df, key_col, id_col, capacity, error_rate, num_shards, expected_layers
     )
@@ -239,10 +240,9 @@ def merge_sharded_layer_rows(
     — e.g. a resumed/incremental build continuing inside the same id
     window — counter-sum into one row; disjoint rows pass through.
     The rows fold per (shard, first_id), the filter's natural parallel
-    unit, in the measured merge: on the driver when small, else one
-    parallel groupBy (the sharded twin of bloom_build.merge_layer_rows).
-    Geometry consistency (capacity, sb_eps, num_shards) is validated
-    per colliding group."""
+    unit, in one lazy groupBy (merge._exchange; the sharded twin of
+    bloom_build.merge_layer_rows). Geometry consistency (capacity,
+    sb_eps, num_shards) is validated per colliding group."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 1:
@@ -262,7 +262,7 @@ def merge_sharded_layer_rows(
         new["max_id"] = [int(pdf.max_id.max())]
         return new[_ROW_COLS]
 
-    return fold_or_exchange(layers_df, ["shard", "first_id"], merge_group, _ROW_SCHEMA)
+    return _exchange(layers_df, ["shard", "first_id"], merge_group, _ROW_SCHEMA)
 
 
 def sharded_scaling_semi_join(

@@ -123,14 +123,11 @@ def _grouped_partials(
     value_col: str,
     kind: str,
     params: dict,
-    finish=None,
-    schema: str = _GROUPED_SCHEMA,
 ) -> DataFrame:
     """Phase 1 of every grouped operator: a (g string, blob, n) partial
     per (input partition, group) over the rows whose group and value
     are both non-NULL (map-side combine), batch rows partitioned by
-    group Arrow-side (no per-row Python). `finish` maps each task's
-    partials to a `schema`-shaped batch before they leave the task."""
+    group Arrow-side (no per-row Python)."""
     _, mode = _KINDS[kind]
     cast = "string" if mode == "string" else "double"
     sdf = df.select(
@@ -163,7 +160,7 @@ def _grouped_partials(
                 _update_from_arrow(sketches[gname], mode, vcol.slice(lo, hi - lo))
                 counts[gname] += hi - lo
         if sketches:
-            part = pa.RecordBatch.from_pydict(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "g": list(sketches),
                     "blob": [sk.to_bytes() for sk in sketches.values()],
@@ -171,9 +168,8 @@ def _grouped_partials(
                 },
                 schema=_GROUPED_SCHEMA_PA,
             )
-            yield finish(part) if finish else part
 
-    return sdf.mapInArrow(build, schema=schema)
+    return sdf.mapInArrow(build, schema=_GROUPED_SCHEMA)
 
 
 def _blob_merge(keys: list[str], seed: int):
@@ -198,7 +194,8 @@ def grouped_sketch_agg(
     """One sketch blob per group: DataFrame(group string, blob binary,
     n long). Phase 1 holds a dict of per-group partial sketches per
     partition (map-side combine); phase 2 folds only blobs, per group,
-    in the measured merge (operators/merge.py)."""
+    in the measured merge (operators/merge.py; above its ceiling the
+    frame is a checkpoint, not recomputed from lineage)."""
     seed = params.get("seed", DABLOOMS_SEED)
     partials = _grouped_partials(df, group_col, value_col, kind, params)
     merged = fold_or_exchange(partials, ["g"], _blob_merge(["g"], seed), _GROUPED_SCHEMA)
@@ -214,7 +211,7 @@ def sketch_rollup(
 ) -> DataFrame:
     """Sketch hierarchy: one blob per grouping level of a rollup —
     (c1, c2, ..., blob, n) with NULLs marking rolled-up levels, like
-    SQL ROLLUP. The group columns must hold no NULLs (one raises).
+    SQL ROLLUP. A NULL in a group column fails the action reading it.
 
     The input is scanned ONCE; every coarser level is produced by
     merging child blobs — kilobytes per group — instead of
@@ -222,28 +219,30 @@ def sketch_rollup(
     partials up the hierarchy (Spark's ROLLUP shape: the levels are
     expanded below the partial aggregate), so every level's partials
     fold in ONE measured merge keyed by group_cols, whose rolled-up
-    levels are NULL-keyed groups. This is the pattern that makes
+    levels are NULL-keyed groups (a checkpoint above the ceiling, not
+    recomputed from lineage). This is the pattern that makes
     per-(lang, host) → per-lang → global cardinality hierarchies
     affordable at 10^12 rows: the raw data is touched once, the
     hierarchy is sketch algebra.
     """
     assert group_cols, "need at least one group column"
     depth, seed = len(group_cols), params.get("seed", DABLOOMS_SEED)
+    schema = ", ".join(f"{c} string" for c in group_cols) + ", blob binary, n long"
     arrow_schema = pa.schema(
         [(c, pa.large_string()) for c in group_cols]
         + [("blob", pa.large_binary()), ("n", pa.int64())]
     )
 
-    def roll_up(part: pa.RecordBatch) -> pa.RecordBatch:
+    def roll_up(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # the finest keys split back out of the joined group string;
         # level k keeps the first k of them, merged from level k + 1
         level = [
-            (tuple(g.split("\x1f"))[:depth], blob, n)
+            (tuple(g.split("\x1f")), blob, n)
+            for part in batches
             for g, blob, n in zip(*(c.to_pylist() for c in part.columns))
         ]
-        if any(len(key) < depth for key, _, _ in level):
-            # concat_ws skips NULLs, and a NULL marks a rolled-up level
-            raise ValueError(f"sketch_rollup: NULL value in a group column {group_cols}")
+        if not level:
+            return
         rows = list(level)
         for k in range(depth - 1, -1, -1):
             groups: dict[tuple, list] = {}
@@ -256,15 +255,20 @@ def sketch_rollup(
             rows += level
         keys, blobs, ns = zip(*rows)
         cols = {c: [key[i] for key in keys] for i, c in enumerate(group_cols)}
-        return pa.RecordBatch.from_pydict(
+        yield pa.RecordBatch.from_pydict(
             {**cols, "blob": list(blobs), "n": list(ns)}, schema=arrow_schema
         )
 
-    joined = df.withColumn(
-        "__g", F.concat_ws("\x1f", *[F.col(c).cast("string") for c in group_cols])
+    # concat_ws skips NULLs (a NULL marks a rolled-up level): refuse them
+    cols = [F.col(c).cast("string") for c in group_cols]
+    msg = F.lit(f"sketch_rollup: NULL value in a group column {group_cols}")
+    keyed = df.withColumn(
+        "__g", F.when(F.concat(*cols).isNull(), F.raise_error(msg)).otherwise(
+            F.concat_ws("\x1f", *cols))
     )
-    schema = ", ".join(f"{c} string" for c in group_cols) + ", blob binary, n long"
-    partials = _grouped_partials(joined, "__g", value_col, kind, params, roll_up, schema)
+    partials = _grouped_partials(keyed, "__g", value_col, kind, params).mapInArrow(
+        roll_up, schema=schema
+    )
     return fold_or_exchange(partials, group_cols, _blob_merge(group_cols, seed), schema)
 
 
@@ -303,7 +307,8 @@ def _grouped_merge_finalize(
 ) -> DataFrame:
     """grouped_sketch_agg's phase 1 + ONE measured fold that merges
     each group's partial blobs AND finalizes (estimate / quantiles) in
-    the same pass, instead of a second fold over the merged blobs."""
+    the same pass, instead of a second fold over the merged blobs
+    (a checkpoint above the ceiling, not recomputed from lineage)."""
     partials = _grouped_partials(df, group_col, value_col, kind, params)
 
     def merge_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -327,7 +332,8 @@ def approx_distinct_by(
     so their estimate is the EXACT distinct count (the oracle-checked
     regime); bigger groups upgrade to dense registers losslessly and
     answer with the usual ~1.04/sqrt(m) error. Blob shuffle bytes only
-    shrink: a sparse blob never outgrows the register array."""
+    shrink: a sparse blob never outgrows the register array. Above
+    driverMergeMaxBytes the result is a checkpoint (operators/merge.py)."""
 
     def finalize(g: str, sk) -> pd.DataFrame:
         return pd.DataFrame(
@@ -348,7 +354,8 @@ def quantiles_by(
     kind: str = "tdigest",
     **params,
 ) -> DataFrame:
-    """Per-group quantile estimates: (group, q double, value double)."""
+    """Per-group quantile estimates: (group, q double, value double);
+    a checkpoint above driverMergeMaxBytes (operators/merge.py)."""
     assert kind in ("tdigest", "kll")
     qs = list(quantiles)
 

@@ -121,7 +121,7 @@ def test_sketch_rollup_rows_equal_across_merge_ceilings(spark):
     """A rollup's rolled-up levels are NULL-keyed groups, which the
     driver fold keeps as Spark's groupBy does: a 3x5 rollup gives the
     same 19 rows at the default ceiling, '0' and '1b'. A NULL in a
-    group column raises."""
+    group column raises, with one group column as with two."""
     from dablooms_spark.operators.sketch_agg import sketch_rollup
 
     df = spark.range(0, 3_000, 1, 4).select(
@@ -148,6 +148,11 @@ def test_sketch_rollup_rows_equal_across_merge_ceilings(spark):
         sketch_rollup(
             df.withColumn("b", F.when(F.col("key") != "k7", F.col("b"))),
             ["a", "b"], "key", "hll", p=10,
+        ).collect()
+    with pytest.raises(Exception, match="NULL value in a group column"):
+        sketch_rollup(
+            df.withColumn("a", F.when(F.col("key") != "k7", F.col("a"))),
+            ["a"], "key", "hll", p=10,
         ).collect()
 
 
