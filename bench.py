@@ -19,9 +19,6 @@ The headline set covers the engine's load-bearing paths:
                            assembled on one node) + per-shard cogroup
                            semi-join probe of lineitem against an
                            orders-key filter
-
-Scaling-efficiency evidence (N vs 4N cores on identical input) is
-produced by tools/bench_scaling.py, which writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations

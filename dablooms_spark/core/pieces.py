@@ -37,6 +37,7 @@ src/dablooms.c ≈L97–170) are written once, here.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
+from itertools import repeat
 
 import numpy as np
 import pyarrow as pa
@@ -296,13 +297,32 @@ def settle(acc: np.ndarray, strict: bool) -> np.ndarray:
     return acc.astype(np.uint8)
 
 
-def fold(pieces, size: int, on_overflow: str = "saturate") -> np.ndarray:
+def fold(pieces, size: int, on_overflow: str = "saturate", geometry=None) -> np.ndarray:
     """The one fold: sum a key's pieces (any sparse/dense mix — a
     pandas group or any object with idx/exc/vals columns) into its
     clipped uint8 counter array of `size` cells; on_overflow='error'
-    raises where a summed counter passes 15."""
+    raises where a summed counter passes 15. A row whose `blob` is not
+    NULL (a prior checkpoint's layer) scatters that blob's payload; a
+    blob of another geometry or overflow mode than `geometry` and
+    on_overflow is refused, as its counters mean nothing here."""
+    # a lazy import: counting_bloom imports this module
+    from dablooms_spark.core.counting_bloom import _FLAG_STRICT_OVERFLOW, _payload
+
+    strict = on_overflow == "error"
     acc = np.zeros(size, dtype=np.int32)
-    for idx, exc, vals in zip(pieces.idx, pieces.exc, pieces.vals):
-        v = np.frombuffer(vals, dtype=np.uint8)
-        scatter(acc, v, delta_decode(idx, exc) if len(idx) else None)
-    return settle(acc, on_overflow == "error")
+    blobs = getattr(pieces, "blob", repeat(None))
+    for idx, exc, vals, blob in zip(pieces.idx, pieces.exc, pieces.vals, blobs):
+        if blob is None:
+            v = np.frombuffer(vals, dtype=np.uint8)
+            scatter(acc, v, delta_decode(idx, exc) if len(idx) else None)
+            continue
+        hdr, g, at, v = _payload(blob)
+        mode = "error" if hdr[3] & _FLAG_STRICT_OVERFLOW else "saturate"
+        if (g, mode) != (geometry, on_overflow):
+            raise ValueError(
+                f"eps-schedule drift: a prior layer was built as {g} with "
+                f"on_overflow={mode!r}; this fold expects {geometry} with "
+                f"on_overflow={on_overflow!r}"
+            )
+        scatter(acc, v, at)
+    return settle(acc, strict)

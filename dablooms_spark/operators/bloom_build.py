@@ -40,7 +40,7 @@ from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_b
 from dablooms_spark.operators.merge import (
     _BLOB_SCHEMA,
     _BLOB_SCHEMA_PA,
-    _exchange,
+    _with_blob_rows,
     fold_or_exchange,
 )
 from dablooms_spark.operators.merge import merge_blobs_df  # noqa: F401 (public re-export)
@@ -301,9 +301,12 @@ def _fixed_pieces(
     error_rate: float,
     seed: int,
     expected_layers: int | None,
+    prior: DataFrame | None = None,
 ):
     """Stage 1 of the fixed-boundary build: (pieces DataFrame keyed by
-    layer, per-layer fold emitting _LAYER_SCHEMA rows)."""
+    layer, per-layer fold emitting _LAYER_SCHEMA rows). `prior` layer
+    rows (an ingest checkpoint's) join the pieces as blob rows keyed by
+    first_id div width, so one fold builds and merges."""
     width = max(capacity - 1, 1)
     geom_cache: dict[int, BloomGeometry] = {}
 
@@ -351,6 +354,10 @@ def _fixed_pieces(
 
     enc = PieceEncoder(["layer"], lambda key: layer_geom(key[0]))
     pieces = sdf.mapInArrow(enc.map_fn(route), schema=enc.ddl)
+    if prior is not None:
+        prior = prior.select(
+            F.expr(f"first_id div {width}").alias("layer"), "n", "max_id", "blob"
+        )
 
     def merge_layer(pdf):
         import pandas as pd
@@ -359,7 +366,7 @@ def _fixed_pieces(
         g = layer_geom(li)
         cb = CountingBloom(
             capacity, g.error_rate, first_id=li * width, seed=seed,
-            _counters=fold(pdf, g.size), _count=int(pdf.n.sum()),
+            _counters=fold(pdf, g.size, geometry=g), _count=int(pdf.n.sum()),
         )
         return pd.DataFrame(
             {
@@ -373,7 +380,7 @@ def _fixed_pieces(
             }
         )
 
-    return pieces, merge_layer
+    return _with_blob_rows(pieces, prior), merge_layer
 
 
 def scaling_bloom_fixed_partials(
@@ -490,30 +497,24 @@ def _layer_fold(seed: int):
 def scaling_layers_df(blob_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
     """Merge a (shard, blob, n) DataFrame of scaling-bloom partials
     into the filter's canonical LAYER-ROW form — one row per
-    (first_id, layer_eps) layer — through merge_layer_rows.
+    (first_id, layer_eps) layer — in the measured merge
+    (operators/merge.py).
 
     This is the merge+checkpoint shape that scales: a scaling filter
     over 10^12 rows is tens of GB, so the one-blob artifact
     (merge_blobs_df) funnels every byte through a single final task,
     while layers are the filter's natural parallel unit — id-disjoint
-    shards NEVER share (first_id, eps), so the merge is a pure
-    repartition (colliding layers, e.g. from a resumed build over the
-    same id range, counter-sum in their own group) and the write
-    spreads one task per layer. Restore with
+    shards NEVER share (first_id, eps), so each layer folds alone
+    (colliding layers, e.g. from a resumed build over the same id
+    range, counter-sum in their own group) and the write is parallel
+    over the layer rows. Restore with
     restore_scaling_bloom_layers; equality with the one-blob path is
     property-tested bit-identically.
     """
-    return merge_layer_rows(_explode_layers(blob_df), seed)
-
-
-def merge_layer_rows(layers_df: DataFrame, seed: int = DABLOOMS_SEED) -> DataFrame:
-    """Counter-sum colliding (first_id, layer_eps) layer rows — the
-    merge step for any union of layer-row DataFrames: resumed builds
-    over overlapping id ranges, or an ingest batch unioned with the
-    prior checkpoint. Id-disjoint layers pass through untouched; the
-    rows fold per (first_id, layer_eps) in one parallel groupBy,
-    unmeasured and lazy (merge._exchange)."""
-    return _exchange(layers_df, ["first_id", "layer_eps"], _layer_fold(seed), _LAYER_SCHEMA)
+    return fold_or_exchange(
+        _explode_layers(blob_df), ["first_id", "layer_eps"], _layer_fold(seed),
+        _LAYER_SCHEMA,
+    )
 
 
 def assemble_scaling_bloom(rows, seed: int = DABLOOMS_SEED) -> ScalingBloom:

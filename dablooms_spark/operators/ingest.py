@@ -38,7 +38,7 @@ from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import build_counting_bloom
 from dablooms_spark.operators.bloom_probe import bloom_anti_join, confirm
-from dablooms_spark.operators.merge import _BLOB_SCHEMA
+from dablooms_spark.operators.merge import _BLOB_SCHEMA, fold_or_exchange
 from dablooms_spark.sources.checkpoint import CheckpointManager
 
 
@@ -190,6 +190,16 @@ def _artifact_bytes(blob_dir: str, layers_df: DataFrame) -> int:
     return int(row["b"] or 0)
 
 
+def _refuse_lineage_drift(manifest: dict, **called) -> None:
+    """Refuse a checkpoint whose lineage names another geometry than
+    this call's (a checkpoint without lineage is trusted)."""
+    lin = manifest.get("lineage") or {}
+    drift = [f"{k}={lin.get(k)} (called with {v})" for k, v in called.items()
+             if lin and lin.get(k) != v]
+    if drift:
+        raise ValueError("geometry drift vs checkpoint lineage: " + ", ".join(drift))
+
+
 def incremental_ingest_scaling(
     batch_df: DataFrame,
     key_col: str,
@@ -210,11 +220,11 @@ def incremental_ingest_scaling(
     model across successive batches. Each batch carries fresh unique
     ids (the reference's monotone insertion sequence continuing across
     days); fixed id-value boundaries mean a new batch's layers are
-    id-disjoint from the checkpoint's, so the filter update is a
-    UNION of layer rows plus one parallel collide-merge
-    (merge_layer_rows, a lazy exchange the commit's write runs) — the
-    artifact grows by appending layers exactly like scaling_bloom_add
-    growing at capacity.
+    id-disjoint from the checkpoint's, so the artifact grows by
+    appending layers exactly like scaling_bloom_add growing at
+    capacity. The update is ONE measured merge (operators/merge.py):
+    the checkpoint's layer rows fold per layer with the batch's
+    counter pieces, on the driver when small, else in one exchange.
 
     Returns (new_rows, committed_seqnum) with the same split
     semantics/guarantees as incremental_ingest. The split
@@ -230,9 +240,9 @@ def incremental_ingest_scaling(
     memory build sharded from the start with
     build_sharded_scaling_layers."""
     from dablooms_spark.operators.bloom_build import (
+        _LAYER_SCHEMA,
+        _fixed_pieces,
         assemble_scaling_bloom,
-        merge_layer_rows,
-        scaling_bloom_fixed_partials,
     )
 
     spark = batch_df.sparkSession
@@ -241,15 +251,7 @@ def incremental_ingest_scaling(
 
     prior_layers = None
     if manifest is not None:
-        lin = manifest.get("lineage", {})
-        if lin and (lin.get("capacity"), lin.get("error_rate")) != (
-            capacity, error_rate,
-        ):
-            raise ValueError(
-                "geometry drift: checkpoint was built with "
-                f"capacity={lin.get('capacity')}, "
-                f"error_rate={lin.get('error_rate')}"
-            )
+        _refuse_lineage_drift(manifest, capacity=capacity, error_rate=error_rate)
         prior_layers = mgr.load_blobs(spark, manifest)
         if "first_id" not in prior_layers.columns:
             raise TypeError(
@@ -290,19 +292,13 @@ def incremental_ingest_scaling(
     # expected_layers: the TOTAL layer count of the whole id stream
     # (ids route to global windows id//(capacity-1), so the hint spans
     # the stream, not the batch). Pass the SAME value on every batch:
-    # a changed hint gives colliding id windows two (first_id, eps)
-    # rows — probes stay correct (every blob is consulted) but the
-    # compound FP budget splits across both rows.
-    batch_layers = scaling_bloom_fixed_partials(
+    # the fold refuses any checkpoint layer built under another ε
+    # schedule (eps-schedule drift), touched by this batch or not
+    pieces, merge_layer = _fixed_pieces(
         batch_df, key_col, id_col, capacity, error_rate, seed,
-        expected_layers=expected_layers,
+        expected_layers, prior=prior_layers,
     )
-    all_layers = (
-        batch_layers
-        if prior_layers is None
-        else batch_layers.unionByName(prior_layers)
-    )
-    merged = merge_layer_rows(all_layers, seed)
+    merged = fold_or_exchange(pieces, ["layer"], merge_layer, _LAYER_SCHEMA)
     seq = mgr.commit(
         merged,
         run_id,
@@ -346,13 +342,13 @@ def incremental_ingest_sharded_scaling(
                    shard's layers (≈ filter_size / num_shards), so
                    task memory is bounded by shard sizing, not filter
                    size; same split guarantees as incremental_ingest;
-      * add      — the batch builds its own sharded layer rows (one
-                   map stage + piece-only exchange), unioned with the
-                   prior rows and collide-merged per (shard, first_id)
-                   (merge_sharded_layer_rows — counter-sum, so the
-                   committed artifact is bit-identical to a one-shot
-                   sharded build over all batches so far), a lazy
-                   exchange the commit's write runs;
+      * add      — ONE measured merge (operators/merge.py): the
+                   batch's counter pieces (one map stage) and the
+                   prior layer rows fold per (shard, layer) — a
+                   counter-sum, so the committed artifact is
+                   bit-identical to a one-shot sharded build over all
+                   batches so far — on the driver when small, else in
+                   one exchange;
       * commit   — atomic manifest under the next seqnum with parent
                    lineage.
 
@@ -361,8 +357,7 @@ def incremental_ingest_sharded_scaling(
     """
     from dablooms_spark.operators.sharded_scaling import (
         _ensure_num_shards,
-        build_sharded_scaling_layers,
-        merge_sharded_layer_rows,
+        _fold_layers,
         sharded_scaling_probe,
     )
 
@@ -372,21 +367,9 @@ def incremental_ingest_sharded_scaling(
 
     prior_layers = None
     if manifest is not None:
-        lin = manifest.get("lineage", {})
-        drift = [
-            (k, lin.get(k), v)
-            for k, v in (
-                ("capacity", capacity),
-                ("error_rate", error_rate),
-                ("num_shards", num_shards),
-            )
-            if lin and lin.get(k) != v
-        ]
-        if drift:
-            raise ValueError(
-                "geometry drift vs checkpoint lineage: "
-                + ", ".join(f"{k}={was} (called with {now})" for k, was, now in drift)
-            )
+        _refuse_lineage_drift(
+            manifest, capacity=capacity, error_rate=error_rate, num_shards=num_shards
+        )
         prior_layers = mgr.load_blobs(spark, manifest)
         if "shard" not in prior_layers.columns or "first_id" not in prior_layers.columns:
             raise TypeError(
@@ -395,8 +378,8 @@ def incremental_ingest_sharded_scaling(
             )
         # pre-r4 sharded artifacts lack the stamped num_shards column;
         # stamp the caller's value in (the probe path already tolerates
-        # such artifacts the same way) so the union and merge below —
-        # whose schemas require the column — accept them too
+        # such artifacts the same way) so the fold's num_shards check
+        # below accepts them too
         prior_layers = _ensure_num_shards(prior_layers, num_shards)
         probed = sharded_scaling_probe(
             batch_df, key_col, prior_layers, num_shards=num_shards,
@@ -408,22 +391,13 @@ def incremental_ingest_sharded_scaling(
     else:
         new_rows = batch_df
 
-    # expected_layers must be the SAME on every batch, but the failure
-    # mode here is STRICTER than incremental_ingest_scaling's: sharded
-    # rows colliding on (shard, first_id) are counter-SUMMED by
-    # merge_sharded_layer_rows, which requires identical layer_eps —
-    # a changed hint fails loudly at the merge (eps-schedule drift)
-    # rather than splitting the FP budget across duplicate rows
-    batch_layers = build_sharded_scaling_layers(
-        batch_df, key_col, id_col, capacity, error_rate,
-        num_shards=num_shards, seed=seed, expected_layers=expected_layers,
+    # expected_layers must be the SAME on every batch: the fold
+    # refuses any checkpoint layer built under another ε schedule
+    # (eps-schedule drift), touched by this batch or not
+    merged = _fold_layers(
+        batch_df, key_col, id_col, capacity, error_rate, num_shards, seed,
+        expected_layers, prior=prior_layers,
     )
-    all_layers = (
-        batch_layers
-        if prior_layers is None
-        else batch_layers.unionByName(prior_layers)
-    )
-    merged = merge_sharded_layer_rows(all_layers, seed)
     seq = mgr.commit(
         merged,
         run_id,

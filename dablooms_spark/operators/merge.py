@@ -21,9 +21,9 @@ cached pieces come in as Arrow (`toArrow`), and a returned frame goes
 out as pickled rows the JVM unpickles itself (`_local_frame`), so its
 first action runs JVM tasks only.
 
-Outside the measure: `merge_blobs_df`, whose single output row must
-never visit the driver, merges in a tree of blob-only rounds, at most
-8 blobs per task; the layer-row merges take `_exchange` lazy.
+Outside the measure there is one merge: `merge_blobs_df`, whose
+single output row must never visit the driver, merges in a tree of
+blob-only rounds, at most 8 blobs per task.
 
 This module is the only reader of the driver-fold ceiling
 (spark.dablooms.build.driverMergeMaxBytes), a cap on measured bytes.
@@ -88,9 +88,19 @@ def _partial_bytes(partials: DataFrame) -> int:
 
 
 def _exchange(partials: DataFrame, keys: list[str], fold, schema: str) -> DataFrame:
-    """The unmeasured, lazy merge; the layer-row merges call it directly
-    (their computed rows are read once, by a checkpoint write)."""
     return partials.groupBy(*keys).applyInPandas(fold, schema=schema)
+
+
+def _with_blob_rows(pieces: DataFrame, prior: DataFrame | None) -> DataFrame:
+    """Counter `pieces` plus `prior` layers (piece keys, n, max_id,
+    blob) as the blob rows pieces.fold reads: `blob` is NULL on pieces,
+    the piece columns empty on prior rows. A Catalyst projection: the
+    measure counts a prior layer at its blob bytes."""
+    if prior is None:
+        return pieces
+    empty = F.lit(bytearray())
+    prior = prior.withColumns({"idx": empty, "exc": empty, "vals": empty})
+    return pieces.withColumn("blob", F.lit(None).cast("binary")).unionByName(prior)
 
 
 def fold_or_exchange(

@@ -64,6 +64,7 @@ from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
 from dablooms_spark.operators.bloom_probe import _conf_size_bytes, confirm
 from dablooms_spark.operators.merge import _BLOB_SCHEMA, _partial_bytes, fold_or_exchange
+from dablooms_spark.operators.merge import _with_blob_rows
 
 _SHARD_SEED = 0x5D
 
@@ -149,26 +150,29 @@ def build_layers(
     seed: int = DABLOOMS_SEED,
     width: int = 0,
     on_overflow: str = "saturate",
+    prior: DataFrame | None = None,
 ) -> DataFrame:
     """Build a layered sharded filter from `keyed` (see layer_pieces):
     the pieces fold per (shard, layer) into one CountingBloom each
     (first_id = layer·width), projected to an output row by
     `row(shard, layer, bloom, max_id)`. The fold runs on the driver
     when the pieces' measured bytes are small, else in one exchange
-    (merge.fold_or_exchange)."""
+    (merge.fold_or_exchange). `prior` layers (shard, layer, n, max_id,
+    blob) fold in the same groups as blob rows."""
 
     def merge_layer(pdf: pd.DataFrame) -> pd.DataFrame:
         shard, layer = int(pdf.shard.iloc[0]), int(pdf.layer.iloc[0])
         g = geometry(layer)
         cb = CountingBloom(
             g.capacity, g.error_rate, first_id=layer * width, seed=seed,
-            _counters=fold(pdf, g.size, on_overflow),
+            _counters=fold(pdf, g.size, on_overflow, geometry=g),
             _count=int(pdf.n.sum()), on_overflow=on_overflow,
         )
         out = row(shard, layer, cb, int(pdf.max_id.max()))
         return pd.DataFrame({c: [v] for c, v in out.items()})
 
     pieces = layer_pieces(keyed, num_shards, geometry, seed, on_overflow)
+    pieces = _with_blob_rows(pieces, prior)
     return fold_or_exchange(pieces, ["shard", "layer"], merge_layer, schema)
 
 

@@ -33,7 +33,6 @@ scaling filter's layer schedule (≈L437).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,7 +41,6 @@ from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 from dablooms_spark.operators.bloom_build import fixed_layer_eps
 from dablooms_spark.operators.bloom_probe import confirm
-from dablooms_spark.operators.merge import _exchange
 from dablooms_spark.operators.sharded import (
     Geometry,
     _check_num_shards,
@@ -56,7 +54,6 @@ _ROW_SCHEMA = (
     "shard long, first_id long, layer_eps double, capacity long, "
     "max_id long, sb_eps double, blob binary, n long, num_shards long"
 )
-_ROW_COLS = [c.split()[0] for c in _ROW_SCHEMA.split(", ")]
 
 
 def _ensure_num_shards(layers_df: DataFrame, num_shards: int) -> DataFrame:
@@ -135,9 +132,29 @@ def build_sharded_scaling_layers(
     one map stage of counter pieces, folded per (shard, layer) on the
     driver when the pieces are small, else in one piece-only exchange
     (a checkpoint, not recomputed from lineage: operators/merge.py)."""
+    return _fold_layers(
+        df, key_col, id_col, capacity, error_rate, num_shards, seed,
+        expected_layers,
+    )
+
+
+def _fold_layers(df: DataFrame, key_col: str, id_col: str, capacity: int,
+                 error_rate: float, num_shards: int, seed: int,
+                 expected_layers: int | None, prior: DataFrame | None = None):
+    """build_sharded_scaling_layers' one measured fold. `prior` layer
+    rows (an ingest checkpoint's) fold in with the pieces per (shard,
+    first_id div width); a prior row stamped with another num_shards
+    raises in Catalyst, before the fold."""
     keyed, geometry, width = _scaling_layers(
         df, key_col, id_col, capacity, error_rate, num_shards, expected_layers
     )
+    if prior is not None:
+        drift = F.lit(f"num_shards drift: prior rows not built with num_shards={num_shards}")
+        prior = prior.select(
+            "shard", F.expr(f"first_id div {width}").alias("layer"), "n", "max_id",
+            F.when(F.col("num_shards") == num_shards, F.col("blob"))
+            .otherwise(F.raise_error(drift)).alias("blob"),
+        )
 
     def row(shard: int, _layer: int, cb: CountingBloom, max_id: int) -> dict:
         return {
@@ -148,7 +165,8 @@ def build_sharded_scaling_layers(
         }
 
     return build_layers(
-        keyed, num_shards, geometry, row, _ROW_SCHEMA, seed, width=width
+        keyed, num_shards, geometry, row, _ROW_SCHEMA, seed, width=width,
+        prior=prior,
     )
 
 
@@ -231,38 +249,6 @@ def sharded_scaling_remove(
     rows = layers_df.withColumn("layer", F.expr(f"first_id div {width}"))
     pieces = layer_pieces(keyed, num_shards, geometry, seed)
     return remove_layers(rows, pieces, geometry, _ROW_SCHEMA, seed, validate)
-
-
-def merge_sharded_layer_rows(
-    layers_df: DataFrame, seed: int = DABLOOMS_SEED
-) -> DataFrame:
-    """Union-merge sharded layer rows: rows sharing (shard, first_id)
-    — e.g. a resumed/incremental build continuing inside the same id
-    window — counter-sum into one row; disjoint rows pass through.
-    The rows fold per (shard, first_id), the filter's natural parallel
-    unit, in one lazy groupBy (merge._exchange; the sharded twin of
-    bloom_build.merge_layer_rows). Geometry consistency (capacity,
-    sb_eps, num_shards) is validated per colliding group."""
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 1:
-            return pdf[_ROW_COLS]
-        for col in ("capacity", "sb_eps", "num_shards", "layer_eps"):
-            if pdf[col].nunique() > 1:
-                what = "eps-schedule" if col == "layer_eps" else "geometry"
-                raise ValueError(
-                    f"{what} drift inside (shard, first_id) group: {col} "
-                    f"values {sorted(pdf[col].unique())} — rebuild colliding "
-                    "batches with one geometry and pinned expected_layers"
-                )
-        cb = CountingBloom.merge_blobs([bytes(b) for b in pdf.blob], seed=seed)
-        new = pdf.iloc[[0]].copy()
-        new["blob"] = [cb.to_bytes()]
-        new["n"] = [int(cb.count)]
-        new["max_id"] = [int(pdf.max_id.max())]
-        return new[_ROW_COLS]
-
-    return _exchange(layers_df, ["shard", "first_id"], merge_group, _ROW_SCHEMA)
 
 
 def sharded_scaling_semi_join(

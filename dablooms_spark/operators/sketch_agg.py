@@ -276,19 +276,22 @@ def rollup_distinct(
     df: DataFrame, group_cols: list[str], key_col: str, p: int = 14
 ) -> DataFrame:
     """HLL distinct-count hierarchy: (group_cols..., approx_distinct)
-    for every rollup level, input scanned once."""
+    for every rollup level, input scanned once. The folded rows are
+    already one per group, so each maps to its estimate in place (a
+    narrow mapInArrow, no exchange)."""
     blobs = sketch_rollup(df, group_cols, key_col, "hll", p=p)
     schema_cols = ", ".join(f"{c} string" for c in group_cols)
 
-    def estimate(pdf: pd.DataFrame) -> pd.DataFrame:
-        ests = [int(round(HyperLogLog.from_bytes(b).estimate())) for b in pdf.blob]
-        out = {c: pdf[c] for c in group_cols}
-        out["approx_distinct"] = ests
-        return pd.DataFrame(out)
+    def estimate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            raw = batch.column("blob").to_pylist()
+            ests = [int(round(HyperLogLog.from_bytes(b).estimate())) for b in raw]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in group_cols] + [pa.array(ests, pa.int64())],
+                names=group_cols + ["approx_distinct"],
+            )
 
-    return blobs.groupBy(*group_cols).applyInPandas(
-        estimate, schema=f"{schema_cols}, approx_distinct long"
-    )
+    return blobs.mapInArrow(estimate, schema=f"{schema_cols}, approx_distinct long")
 
 
 # ---------------------------------------------------------------------------

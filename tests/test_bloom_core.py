@@ -417,6 +417,57 @@ def test_merge_blobs_refusals_kept():
     assert CountingBloom.merge_blobs([b.to_bytes()] * 2).counters.max() == 15
 
 
+@pytest.mark.parametrize("on_overflow", ["saturate", "error"])
+def test_fold_reads_blob_rows_as_pieces(on_overflow):
+    """A prior layer kept as a blob folds in the same group as counter
+    pieces: the sum equals merge_blobs over every part, a blob alone
+    rebuilds to its own bytes (nibble odd- and even-sized, sparse), and
+    a blob of another geometry or overflow mode is refused."""
+    import pandas as pd
+
+    from dablooms_spark.core.codec import delta_encode
+    from dablooms_spark.core.pieces import fold
+
+    words = make_words(700, seed=11)
+    kinds = set()
+    for capacity in (300, 302, 20_000):
+        g = BloomGeometry(capacity, 0.01)
+        prior, sparse, dense = (
+            CountingBloom(capacity, 0.01, first_id=7, on_overflow=on_overflow)
+            for _ in range(3)
+        )
+        for cb, lo, hi in ((prior, 0, 300), (sparse, 300, 350), (dense, 350, 700)):
+            cb.add(words[lo:hi])
+        blob = prior.to_bytes()
+        kinds.add((blob[6], g.size % 2))
+        nz = np.flatnonzero(sparse.counters)
+        gaps, exc = delta_encode(nz.astype(np.int64))
+        pdf = pd.DataFrame({
+            "idx": [b"", gaps, b""],
+            "exc": [b"", exc, b""],
+            "vals": [b"", sparse.counters[nz].tobytes(), dense.counters.tobytes()],
+            "blob": [blob, None, None],
+        })
+        merged = CountingBloom.merge_blobs(
+            [blob, sparse.to_bytes(), dense.to_bytes()]
+        )
+        got = fold(pdf, g.size, on_overflow, geometry=g)
+        assert np.array_equal(got, merged.counters)
+        alone = CountingBloom(
+            capacity, 0.01, first_id=7, _counters=fold(pdf[:1], g.size, on_overflow, geometry=g),
+            _count=prior.count, on_overflow=on_overflow,
+        )
+        assert alone.to_bytes() == blob
+        for other in (BloomGeometry(capacity, 0.02), BloomGeometry(capacity + 1, 0.01), None):
+            size = g.size if other is None else other.size
+            with pytest.raises(ValueError, match="eps-schedule drift"):
+                fold(pdf, size, on_overflow, geometry=other)
+        flip = "saturate" if on_overflow == "error" else "error"
+        with pytest.raises(ValueError, match="on_overflow"):
+            fold(pdf, g.size, flip, geometry=g)
+    assert kinds == {(1, 1), (1, 0), (3, 0)}
+
+
 def test_merge_blobs_and_from_bytes_refuse_the_same_payloads():
     """One payload reader: a foreign kind byte or a header whose
     nfuncs/counts_per_func disagree with its capacity and error rate

@@ -442,3 +442,87 @@ def test_ingest_commits_identical_layers_at_every_merge_ceiling(spark, tmp_path)
             spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
     for name, (default, lazy, measured) in got.items():
         assert default and default == lazy == measured, name
+
+
+def _scaling_ingests(**kw):
+    from dablooms_spark.operators.ingest import (
+        incremental_ingest_scaling,
+        incremental_ingest_sharded_scaling,
+    )
+
+    return {
+        "scaling": lambda b, path: incremental_ingest_scaling(
+            b, "key", "rid", path, "run", 500, 0.05, **kw
+        ),
+        "sharded": lambda b, path: incremental_ingest_sharded_scaling(
+            b, "key", "rid", path, "run", 500, 0.05, num_shards=4, **kw
+        ),
+    }
+
+
+def _rid_batch(spark, lo, hi):
+    return spark.range(lo, hi, 1, 4).select(
+        F.concat(F.lit("k"), F.col("id")).alias("key"), F.col("id").alias("rid")
+    )
+
+
+def test_each_ingest_micro_batch_runs_one_merge(spark, tmp_path, monkeypatch):
+    """Each micro-batch of both scaling ingests folds its pieces and the
+    prior checkpoint's layer rows in ONE fold_or_exchange call, and no
+    other merge (an `_exchange` outside that call) runs."""
+    import sys
+
+    import dablooms_spark.operators.ingest  # noqa: F401
+    import dablooms_spark.operators.sharded_scaling  # noqa: F401
+    from dablooms_spark.operators import merge
+
+    calls = []
+    real_fold, real_exchange = merge.fold_or_exchange, merge._exchange
+    inside = []
+
+    def fold_spy(*args, **kwargs):
+        calls.append("fold_or_exchange")
+        inside.append(1)
+        try:
+            return real_fold(*args, **kwargs)
+        finally:
+            inside.pop()
+
+    def exchange_spy(*args, **kwargs):
+        if not inside:
+            calls.append("_exchange")
+        return real_exchange(*args, **kwargs)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("dablooms_spark.operators"):
+            for attr, real, spy in (
+                ("fold_or_exchange", real_fold, fold_spy),
+                ("_exchange", real_exchange, exchange_spy),
+            ):
+                if getattr(mod, attr, None) is real:
+                    monkeypatch.setattr(mod, attr, spy)
+
+    for name, ingest in _scaling_ingests().items():
+        path = str(tmp_path / name)
+        for lo, hi in ((0, 800), (400, 1_300), (1_300, 1_600)):
+            calls.clear()
+            ingest(_rid_batch(spark, lo, hi), path)
+            assert calls == ["fold_or_exchange"], (name, lo, calls)
+
+
+@pytest.mark.parametrize("collide", [True, False])
+def test_ingest_refuses_eps_schedule_drift(spark, tmp_path, collide):
+    """A batch whose expected_layers hint differs from the checkpoint's
+    is refused by both scaling ingests, whether or not its id windows
+    meet the checkpoint's layers, and nothing is committed."""
+    from dablooms_spark.sources.checkpoint import CheckpointManager
+
+    first = _scaling_ingests()
+    hinted = _scaling_ingests(expected_layers=8)
+    lo, hi = (400, 1_300) if collide else (5_000, 5_400)
+    for name in first:
+        path = str(tmp_path / name)
+        first[name](_rid_batch(spark, 0, 800), path)
+        with pytest.raises(Exception, match="eps-schedule drift"):
+            hinted[name](_rid_batch(spark, lo, hi), path)
+        assert CheckpointManager(path).latest("run")["seqnum"] == 1

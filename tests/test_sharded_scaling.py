@@ -449,34 +449,37 @@ def test_sharded_uniform_schedule_build_probe_remove(spark):
     layers.unpersist()
 
 
-def test_merge_layer_eps_drift_raises(spark):
-    """Colliding (shard, first_id) rows built under DIFFERENT eps
-    schedules (e.g. one ingest batch with an expected_layers hint, one
-    without) must surface an explicit eps-schedule-drift error at the
-    merge, not CountingBloom.merge_blobs' opaque geometry failure."""
+def test_fold_refuses_prior_rows_of_another_num_shards(spark):
+    """Prior layer rows fold with a batch's pieces only under the
+    num_shards they were built with: another stamp raises (a Catalyst
+    check before the fold) at the driver fold and at the exchange."""
     import pytest
 
-    from dablooms_spark.operators.sharded_scaling import (
-        merge_sharded_layer_rows,
-    )
+    from dablooms_spark.functions.murmur import DABLOOMS_SEED
+    from dablooms_spark.operators.sharded_scaling import _fold_layers
 
-    rows = _rows(spark, n=6_000, parts=2)
-    a = build_sharded_scaling_layers(
+    rows = _rows(spark, n=4_000, parts=2)
+    prior = build_sharded_scaling_layers(
         rows, "k", "id", capacity=CAP, error_rate=EPS, num_shards=SHARDS
-    )
-    b = build_sharded_scaling_layers(
-        rows, "k", "id", capacity=CAP, error_rate=EPS, num_shards=SHARDS,
-        expected_layers=8,
-    )
-    with pytest.raises(Exception, match="eps-schedule drift"):
-        merge_sharded_layer_rows(a.unionByName(b)).collect()
-    # hint pinned across both unions -> merges cleanly
-    c = build_sharded_scaling_layers(
-        rows, "k", "id", capacity=CAP, error_rate=EPS, num_shards=SHARDS,
-        expected_layers=8,
-    )
-    merged = merge_sharded_layer_rows(b.unionByName(c))
-    assert merged.count() == b.count()
+    ).collect()
+    prior = spark.createDataFrame(prior)
+    for ceiling in (None, "0"):
+        if ceiling is not None:
+            spark.conf.set("spark.dablooms.build.driverMergeMaxBytes", ceiling)
+        try:
+            forged = prior.withColumn("num_shards", F.lit(SHARDS * 2).cast("long"))
+            with pytest.raises(Exception, match="num_shards drift"):
+                _fold_layers(
+                    rows, "k", "id", CAP, EPS, SHARDS, DABLOOMS_SEED, None,
+                    prior=forged,
+                ).collect()
+            # the same rows under their own stamp fold cleanly
+            got = _fold_layers(
+                rows, "k", "id", CAP, EPS, SHARDS, DABLOOMS_SEED, None, prior=prior,
+            ).agg(F.sum("n")).first()[0]
+            assert got == 2 * 4_000
+        finally:
+            spark.conf.unset("spark.dablooms.build.driverMergeMaxBytes")
 
 
 def test_driver_fold_matches_distributed(spark):

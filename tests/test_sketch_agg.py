@@ -117,6 +117,27 @@ def test_sketch_rollup_hierarchy(spark, events):
         assert abs(rows[key] - v) / max(v, 1) < 0.05, key
 
 
+def test_rollup_distinct_maps_folded_rows_without_exchange(spark, events):
+    """Each folded rollup row maps to its estimate in place: at the
+    default ceiling the plan above the driver fold's rows holds no
+    Exchange and no grouped pandas map, and the rows equal an
+    estimate of sketch_rollup's blobs."""
+    from dablooms_spark.core.hll import HyperLogLog
+    from dablooms_spark.operators.sketch_agg import rollup_distinct, sketch_rollup
+
+    ev = events.withColumn("bucket", (F.col("user_id") % 3).cast("string"))
+    cols = ["event_type", "bucket"]
+    got = rollup_distinct(ev, cols, "user_id", p=12)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan, plan
+    want = {
+        (r.event_type, r.bucket): int(round(HyperLogLog.from_bytes(r.blob).estimate()))
+        for r in sketch_rollup(ev, cols, "user_id", "hll", p=12).collect()
+    }
+    rows = [((r.event_type, r.bucket), r.approx_distinct) for r in got.collect()]
+    assert len(rows) == len(want) and dict(rows) == want
+
+
 def test_sketch_rollup_rows_equal_across_merge_ceilings(spark):
     """A rollup's rolled-up levels are NULL-keyed groups, which the
     driver fold keeps as Spark's groupBy does: a 3x5 rollup gives the
