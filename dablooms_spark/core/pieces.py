@@ -322,7 +322,10 @@ def fold(pieces, size: int, on_overflow: str = "saturate", geometry=None) -> np.
             raise ValueError(
                 f"eps-schedule drift: a prior layer was built as {g} with "
                 f"on_overflow={mode!r}; this fold expects {geometry} with "
-                f"on_overflow={on_overflow!r}"
+                f"on_overflow={on_overflow!r}. Pass the expected_layers the "
+                "checkpoint was built with; a checkpoint that already holds "
+                "layers of two schedules cannot be extended and has to be "
+                "rebuilt under one expected_layers"
             )
         scatter(acc, v, at)
     return settle(acc, strict)
