@@ -1,11 +1,15 @@
 """Bloom probe — the read path, broadcast to every probe task.
 
 Spark equivalent of scaling_bloom_check / counting_bloom_check
-(src/dablooms.c:≈537/≈238): the merged filter blob is broadcast once;
-probe batches gain a Boolean verdict column via a vectorized Arrow
-UDF. A filter sized for 10^8 keys at ε=0.01 is ~100 MB of nibbles —
-broadcastable; bigger corpora shard the filter by key range and probe
-joins on the range (future work, see plans/).
+(src/dablooms.c:≈537/≈238). Every broadcast filter ships as one
+{shard: [blobs newest first]} value: a whole CountingBloom or
+ScalingBloom is {0: [blob]}, a sharded filter's layer rows
+(sharded.probe_layers) one list per shard. Each Python worker decodes
+a value once into one LRU, and one vectorized Arrow UDF walks a key's
+layers newest first (scaling_bloom.check_layers). A filter sized for
+10^8 keys at ε=0.01 is ~100 MB of nibbles — broadcastable; bigger
+filters stay a DataFrame of hash-sharded layer rows (operators/
+sharded.py), probed by a salted cogroup instead.
 
 `bloom_semi_join` is the runtime-filter pattern: probe → filter →
 (optionally) exact semi-join the surviving candidates. With exact
@@ -18,71 +22,99 @@ negatives so no row is lost.
 from __future__ import annotations
 
 import re
+from collections import OrderedDict
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
 
+from dablooms_spark.core.counting_bloom import CountingBloom
+from dablooms_spark.core.scaling_bloom import ScalingBloom, check_layers
+from dablooms_spark.core.serde import loads
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
 
-# Per-executor deserialized-filter cache: the broadcast ships bytes;
-# each Python worker deserializes once per filter, not once per batch.
-# Keyed by the blob OBJECT's identity (the broadcast value is one
-# long-lived object per worker); the entry holds the blob so the id
-# stays valid. Content hashing would risk collisions between filters
-# sharing a prefix/suffix. True LRU (evict oldest, not clear-all) so a
-# many-filter job degrades gracefully instead of thrashing.
-from collections import OrderedDict  # noqa: E402
-
-_FILTER_CACHE: "OrderedDict[int, tuple[object, object]]" = OrderedDict()
+# Per-worker decoded-filter cache: the broadcast ships bytes; each
+# Python worker decodes a broadcast value once, not once per task or
+# batch. One entry per broadcast value, keyed by the value OBJECT's
+# identity (a worker keeps one long-lived value per broadcast); the
+# entry holds the value so the id stays valid, and decodes a shard's
+# layers the first time a task touches it. Content hashing would risk
+# collisions between filters sharing a prefix/suffix. True LRU (evict
+# oldest, not clear-all) so a many-filter job degrades gracefully
+# instead of thrashing.
+_FILTER_CACHE: "OrderedDict[int, tuple[dict, dict]]" = OrderedDict()
 _FILTER_CACHE_MAX = 8
 
 
-def _get_filter(blob: bytes, seed: int):
-    key = id(blob)
-    hit = _FILTER_CACHE.get(key)
-    if hit is not None:
+def _decoded_layers(value: dict, shard: int, decode, seed: int) -> list:
+    """Worker side: the decoded layers (newest first) of `shard` in the
+    broadcast value `value`, through the LRU."""
+    key = id(value)
+    entry = _FILTER_CACHE.get(key)
+    if entry is None:
+        while len(_FILTER_CACHE) >= _FILTER_CACHE_MAX:
+            _FILTER_CACHE.popitem(last=False)
+        entry = _FILTER_CACHE[key] = (value, {})
+    else:
         _FILTER_CACHE.move_to_end(key)
-        return hit[1]
-    from dablooms_spark.core.serde import loads
-
-    filt = loads(blob, seed=seed)
-    while len(_FILTER_CACHE) >= _FILTER_CACHE_MAX:
-        _FILTER_CACHE.popitem(last=False)
-    _FILTER_CACHE[key] = (blob, filt)
-    return filt
+    decoded = entry[1]
+    if shard not in decoded:
+        decoded[shard] = [decode(b, seed=seed) for b in value.get(shard, ())]
+    return decoded[shard]
 
 
-def _check_arrow(arr: pa.Array, blob: bytes, seed: int) -> "np.ndarray":
-    import numpy as np
+def _broadcast_filter(spark, shard_blobs: dict[int, list[bytes]], seed: int):
+    """Broadcast a filter as {shard: [blobs newest first]} and return
+    `layers_of(shard)`, its worker-side reader of decoded layers."""
+    bc = spark.sparkContext.broadcast(shard_blobs)
+    # read on the driver, so the closure carries the decode the workers
+    # run (a wrapper patched over `loads` there reaches them too)
+    decode = loads
 
-    filt = _get_filter(blob, seed)
-    buf, offs, lens = arrow_byte_view(arr)
+    def layers_of(shard: int) -> list:
+        return _decoded_layers(bc.value, shard, decode, seed)
+
+    return layers_of
+
+
+def _verdicts(keys: pa.Array, shards: np.ndarray | None, layers_of, seed: int) -> np.ndarray:
+    """Membership of string `keys` routed to `shards` (None: all to
+    shard 0), each walking `layers_of(shard)` newest first; NULL keys
+    are definite negatives (a NULL would otherwise alias the empty
+    string). The broadcast and cogroup probes both run exactly this."""
+    buf, offs, lens = arrow_byte_view(keys)
     h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-    verdict = filt.check_hashed(h1, h2)
-    if arr.null_count:
-        # a NULL key is definitively not a member (it would otherwise
-        # alias the empty string and could false-positive)
-        verdict &= ~np.asarray(pa.compute.is_null(arr))
+    if shards is None:
+        verdict = check_layers(layers_of(0), h1, h2)
+    else:
+        verdict = np.zeros(len(shards), dtype=bool)
+        for s in np.unique(shards).tolist():
+            idx = np.flatnonzero(shards == s)
+            verdict[idx] = check_layers(layers_of(s), h1[idx], h2[idx])
+    if keys.null_count:
+        verdict &= ~np.asarray(pa.compute.is_null(keys))
     return verdict
 
 
-def bloom_probe_udf(spark, bloom, seed: int = DABLOOMS_SEED):
-    """A reusable vectorized UDF closing over the broadcast filter.
-
-    The probe is end-to-end zero-copy (Spark 4.1 arrow_udf): Arrow
-    string buffers in, hash kernel, boolean buffer out — no per-row
-    Python string objects are ever materialized."""
-    bc = spark.sparkContext.broadcast(bloom.to_bytes())
+def _probe_udf(spark, shard_blobs: dict[int, list[bytes]], seed: int):
+    """The broadcast probe: an Arrow UDF over (key string[, shard
+    long]) against the broadcast filter `shard_blobs`; called with the
+    key alone it probes shard 0. Zero-copy end to end (Spark 4.1
+    arrow_udf): Arrow string buffers in, hash kernel, boolean buffer
+    out — no per-row Python string objects."""
+    layers_of = _broadcast_filter(spark, shard_blobs, seed)
 
     @arrow_udf("boolean")
-    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        blob = bc.value
-        for arr in it:
-            yield pa.array(_check_arrow(arr, blob, seed))
+    def probe(it: Iterator[tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+        for batch in it:
+            keys, shards = batch if isinstance(batch, tuple) else (batch, None)
+            if shards is not None:
+                shards = shards.to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.array(_verdicts(keys, shards, layers_of, seed))
 
     return probe
 
@@ -101,7 +133,12 @@ def bloom_probe_column(
     `key_cast`: optional intermediate type the key is cast to BEFORE
     the string cast — must match whatever cast the build side applied,
     or the rendered bytes diverge and the filter false-negatives."""
-    probe = bloom_probe_udf(df.sparkSession, bloom, seed)
+    if not isinstance(bloom, (CountingBloom, ScalingBloom)):
+        raise TypeError(
+            "bloom_probe_column probes a CountingBloom or a ScalingBloom, "
+            f"not {type(bloom).__name__}"
+        )
+    probe = _probe_udf(df.sparkSession, {0: [bloom.to_bytes()]}, seed)
     key = F.col(key_col) if isinstance(key_col, str) else key_col
     if key_cast is not None:
         key = key.cast(key_cast)

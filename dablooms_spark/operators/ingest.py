@@ -171,25 +171,6 @@ def incremental_ingest(
     return new_rows, seq
 
 
-def _artifact_bytes(blob_dir: str, layers_df: DataFrame) -> int:
-    """Size of a committed artifact. The checkpoint protocol is
-    local-FS based (CheckpointManager uses os.* throughout), so file
-    sizes are O(1) metadata; a non-local path falls back to one
-    octet_length scan of the blob column — O(filter size) read, the
-    same order as the restore it sizes."""
-    import os
-
-    if os.path.isdir(blob_dir):
-        total = 0
-        for root, _dirs, files in os.walk(blob_dir):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    total += os.path.getsize(os.path.join(root, f))
-        return total
-    row = layers_df.agg(F.sum(F.octet_length("blob")).alias("b")).first()
-    return int(row["b"] or 0)
-
-
 def _refuse_lineage_drift(manifest: dict, **called) -> None:
     """Refuse a checkpoint whose lineage names another geometry than
     this call's (a checkpoint without lineage is trusted)."""
@@ -212,7 +193,6 @@ def incremental_ingest_scaling(
     exact_seen_df: DataFrame | None = None,
     exact_key: str | None = None,
     batch_tag: str | None = None,
-    broadcast_blob_budget: int = 64 << 20,
     split_salt: int | None = None,
     expected_layers: int | None = None,
 ) -> tuple[DataFrame, int]:
@@ -227,23 +207,17 @@ def incremental_ingest_scaling(
     counter pieces, on the driver when small, else in one exchange.
 
     Returns (new_rows, committed_seqnum) with the same split
-    semantics/guarantees as incremental_ingest. The split
-    auto-routes on artifact size: up to broadcast_blob_budget the
-    prior filter is assembled once on the driver and broadcast-probed
-    (cheapest — one blob ships to every executor); beyond the budget
-    NO driver assembly happens — the layer rows stay a DataFrame and
-    the batch splits through the salt-replicated cogroup probe
-    (sharded_scaling_probe with the layer rows as one logical shard),
-    so driver memory never bounds ingest. split_salt controls the
-    cogroup fan-out (default max(8, defaultParallelism)); each probe
-    task holds the full layer set, so for filters beyond EXECUTOR
-    memory build sharded from the start with
-    build_sharded_scaling_layers."""
-    from dablooms_spark.operators.bloom_build import (
-        _LAYER_SCHEMA,
-        _fixed_pieces,
-        assemble_scaling_bloom,
-    )
+    semantics/guarantees as incremental_ingest. The split probes the
+    prior layer rows as ONE logical shard through sharded_scaling_probe,
+    so the prior filter is never assembled on the driver; that probe's
+    measured gate (spark.dablooms.probe.autoBroadcastBytes) broadcasts
+    the layers when their bytes fit and otherwise co-groups them with
+    the batch, replicated split_salt ways (default max(8,
+    defaultParallelism)). Each cogroup task holds the full layer set,
+    so for filters beyond EXECUTOR memory build sharded from the start
+    with build_sharded_scaling_layers."""
+    from dablooms_spark.operators.bloom_build import _LAYER_SCHEMA, _fixed_pieces
+    from dablooms_spark.operators.sharded_scaling import sharded_scaling_probe
 
     spark = batch_df.sparkSession
     mgr = CheckpointManager(checkpoint_path)
@@ -259,33 +233,17 @@ def incremental_ingest_scaling(
                 f"found a counting-bloom artifact at {checkpoint_path} "
                 "(use incremental_ingest for that run)"
             )
-        if _artifact_bytes(manifest["blob_dir"], prior_layers) <= broadcast_blob_budget:
-            prior = assemble_scaling_bloom(prior_layers.collect(), seed)
-            new_rows = bloom_anti_join(
-                batch_df, key_col, prior,
-                exact_df=exact_seen_df, exact_key=exact_key, seed=seed,
-            )
-        else:
-            # beyond broadcast size: the prior filter never visits the
-            # driver — probe the layer rows as ONE logical shard
-            # through the salt-replicated cogroup (probe rows fan out
-            # across `salt` tasks; the layer side replicates to each).
-            # Identical split semantics: bloom misses are definite new
-            # keys; with exact_seen_df the ε-sized hit set is verified
-            # by a real anti join (mirrors bloom_anti_join).
-            from dablooms_spark.operators.sharded_scaling import (
-                sharded_scaling_probe,
-            )
-
-            salt = split_salt or max(8, spark.sparkContext.defaultParallelism)
-            one_shard = prior_layers.withColumn("shard", F.lit(0).cast("long"))
-            probed = sharded_scaling_probe(
-                batch_df, key_col, one_shard, num_shards=1, salt=salt,
-                seed=seed, out_col="__seen",
-            )
-            new_rows = confirm(
-                probed, key_col, exact_seen_df, exact_key, anti=True, hit="__seen"
-            )
+        # bloom misses are definite new keys; with exact_seen_df the
+        # ε-sized hit set is verified by a real anti join
+        salt = split_salt or max(8, spark.sparkContext.defaultParallelism)
+        one_shard = prior_layers.withColumn("shard", F.lit(0).cast("long"))
+        probed = sharded_scaling_probe(
+            batch_df, key_col, one_shard, num_shards=1, salt=salt,
+            seed=seed, out_col="__seen",
+        )
+        new_rows = confirm(
+            probed, key_col, exact_seen_df, exact_key, anti=True, hit="__seen"
+        )
     else:
         new_rows = batch_df
 

@@ -27,6 +27,23 @@ from pyspark.sql import functions as F
 from dablooms_spark.functions.murmur import DABLOOMS_SEED
 
 
+def _fp_report(probed: DataFrame, bound: float) -> DataFrame:
+    """The one-row report over a probe's `is_member` column: probes,
+    false_positives, fp_rate, configured_bound, within_bound."""
+    bound = F.lit(float(bound))
+    rate = F.col("false_positives") / F.col("probes")
+    return probed.agg(
+        F.count("*").alias("probes"),
+        F.sum(F.col("is_member").cast("long")).alias("false_positives"),
+    ).select(
+        "probes",
+        "false_positives",
+        F.round(rate, 6).alias("fp_rate"),
+        bound.alias("configured_bound"),
+        (rate <= bound).alias("within_bound"),
+    )
+
+
 def observed_fp_rate(
     negatives: DataFrame,
     key_col: str,
@@ -39,42 +56,22 @@ def observed_fp_rate(
     absent from the filter (the caller's contract — any present key
     inflates the 'observed FP' count by construction).
 
-    `bloom` is anything bloom_probe_column accepts (CountingBloom /
-    ScalingBloom / broadcast blob). `bound` defaults to the filter's
-    configured error rate. The probe is the same broadcast vectorized
-    path production queries use; the aggregation is a map-side
-    partial count — one scan, no shuffle of rows.
+    `bloom` is a CountingBloom or a ScalingBloom (what
+    bloom_probe_column accepts; anything else raises a TypeError).
+    `bound` defaults to the filter's configured error rate. The probe
+    is the same broadcast vectorized path production queries use; the
+    aggregation is a map-side partial count — one scan, no shuffle of
+    rows.
     """
     from dablooms_spark.operators.bloom_probe import bloom_probe_column
 
-    if bound is None:
-        geom = getattr(bloom, "geometry", None)
-        bound = (
-            float(geom.error_rate)
-            if geom is not None
-            else float(getattr(bloom, "error_rate"))
-        )
     probed = bloom_probe_column(
         negatives.select(F.col(key_col)), key_col, bloom, seed=seed
     )
-    return (
-        probed.agg(
-            F.count("*").alias("probes"),
-            F.sum(F.col("is_member").cast("long")).alias("false_positives"),
-        )
-        .select(
-            "probes",
-            "false_positives",
-            F.round(F.col("false_positives") / F.col("probes"), 6).alias(
-                "fp_rate"
-            ),
-            F.lit(float(bound)).alias("configured_bound"),
-            (
-                F.col("false_positives") / F.col("probes")
-                <= F.lit(float(bound))
-            ).alias("within_bound"),
-        )
-    )
+    if bound is None:
+        # a CountingBloom's rate is its geometry's, a ScalingBloom's its own
+        bound = getattr(bloom, "geometry", bloom).error_rate
+    return _fp_report(probed, bound)
 
 
 def observed_fp_rate_per_layer(
@@ -103,10 +100,9 @@ def observed_fp_rate_per_layer(
     layer metadata (first_id, eps, capacity, live count) is driver-side
     knowledge stamped in as literals, so the report stays a lazy
     DataFrame."""
-    from dablooms_spark.operators.bloom_probe import _get_filter
+    from dablooms_spark.operators.bloom_probe import _broadcast_filter
 
-    spark = negatives.sparkSession
-    bc = spark.sparkContext.broadcast(scaling.to_bytes())
+    layers_of = _broadcast_filter(negatives.sparkSession, {0: [scaling.to_bytes()]}, seed)
     n_layers = len(scaling.layers)
 
     def _layer_hits_arrow(arr: pa.Array) -> pa.Array:
@@ -116,7 +112,7 @@ def observed_fp_rate_per_layer(
         from dablooms_spark.functions.arrow_utils import arrow_byte_view
         from dablooms_spark.functions.murmur import dablooms_hash_words_buffer
 
-        filt = _get_filter(bc.value, seed)
+        filt = layers_of(0)[0]
         buf, offs, lens = arrow_byte_view(arr)
         h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
         mat = np.empty((len(h1), len(filt.layers)), dtype=bool)
@@ -205,21 +201,4 @@ def observed_fp_rate_sharded(
         negatives.select(F.col(key_col)), key_col, layers_df,
         num_shards=num_shards, seed=seed,
     )
-    return (
-        probed.agg(
-            F.count("*").alias("probes"),
-            F.sum(F.col("is_member").cast("long")).alias("false_positives"),
-        )
-        .select(
-            "probes",
-            "false_positives",
-            F.round(F.col("false_positives") / F.col("probes"), 6).alias(
-                "fp_rate"
-            ),
-            F.lit(float(bound)).alias("configured_bound"),
-            (
-                F.col("false_positives") / F.col("probes")
-                <= F.lit(float(bound))
-            ).alias("within_bound"),
-        )
-    )
+    return _fp_report(probed, bound)

@@ -26,8 +26,9 @@ geometry and the row projection.
   (merge.fold_or_exchange). Rows never shuffle; the fold is
   an exact saturating counter sum, bit-identical to one node's build.
 - probe_layers: a key walks its shard's layers newest first and stops
-  at the first that answers "present" — in a broadcast UDF when the
-  blobs fit spark.dablooms.probe.autoBroadcastBytes, else in a
+  at the first that answers "present" — in bloom_probe's one
+  broadcast UDF (shared with the whole-filter probe) when the blobs
+  fit spark.dablooms.probe.autoBroadcastBytes, else in a
   (shard, salt) cogroup whose salt bounds a hot shard's task. No
   false negatives; FP ≤ Σ of the shard's per-layer ε.
 - remove_layers: deletion pieces co-group with the layer rows and
@@ -45,24 +46,20 @@ from __future__ import annotations
 import operator
 from collections.abc import Callable
 from functools import reduce
-from typing import Iterator as TIterator
-from typing import Tuple as TTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from dablooms_spark.core.counting_bloom import CountingBloom
 from dablooms_spark.core.geometry import BloomGeometry
 from dablooms_spark.core.pieces import PieceEncoder, fold, runs
-from dablooms_spark.core.scaling_bloom import check_layers
 from dablooms_spark.functions.arrow_utils import arrow_byte_view
 from dablooms_spark.functions.murmur import DABLOOMS_SEED, dablooms_hash_words_buffer
-from dablooms_spark.operators.bloom_probe import _conf_size_bytes, confirm
+from dablooms_spark.operators.bloom_probe import _conf_size_bytes, _probe_udf, _verdicts, confirm
 from dablooms_spark.operators.merge import _BLOB_SCHEMA, _partial_bytes, fold_or_exchange
 from dablooms_spark.operators.merge import _with_blob_rows
 
@@ -176,43 +173,6 @@ def build_layers(
     return fold_or_exchange(pieces, ["shard", "layer"], merge_layer, schema)
 
 
-def _verdicts(keys: pa.Array, shards: np.ndarray, layers_of, seed: int) -> np.ndarray:
-    """Membership of string `keys` routed to `shards`, each walking
-    `layers_of(shard)` (newest first); NULL keys are definite
-    negatives. Both probe topologies run exactly this."""
-    buf, offs, lens = arrow_byte_view(keys)
-    h1, h2 = dablooms_hash_words_buffer(buf, offs, lens, seed)
-    verdict = np.zeros(len(shards), dtype=bool)
-    for s in np.unique(shards).tolist():
-        idx = np.flatnonzero(shards == s)
-        verdict[idx] = check_layers(layers_of(s), h1[idx], h2[idx])
-    if keys.null_count:
-        verdict &= ~np.asarray(pa.compute.is_null(keys))
-    return verdict
-
-
-def _broadcast_probe_udf(spark, shard_layers: dict, seed: int):
-    """Arrow UDF over (key_str, shard) against a broadcast {shard:
-    [layer blobs newest first]}; layers deserialize once per task."""
-    bc = spark.sparkContext.broadcast(shard_layers)
-
-    @arrow_udf("boolean")
-    def probe(it: TIterator[TTuple[pa.Array, pa.Array]]) -> TIterator[pa.Array]:
-        cache: dict = {}
-
-        def layers_of(s: int) -> list[CountingBloom]:
-            if s not in cache:
-                cache[s] = [CountingBloom.from_bytes(b, seed=seed)
-                            for b in bc.value.get(s, [])]
-            return cache[s]
-
-        for keys, shards in it:
-            sh = shards.to_numpy(zero_copy_only=False).astype(np.int64)
-            yield pa.array(_verdicts(keys, sh, layers_of, seed))
-
-    return probe
-
-
 def probe_layers(
     probe_df: DataFrame,
     key,
@@ -241,7 +201,7 @@ def probe_layers(
             for r in sorted(rows, key=lambda r: -int(r["layer"])):
                 _check_num_shards(r["num_shards"], num_shards)
                 shard_layers.setdefault(int(r["shard"]), []).append(bytes(r["blob"]))
-            probe = _broadcast_probe_udf(probe_df.sparkSession, shard_layers, seed)
+            probe = _probe_udf(probe_df.sparkSession, shard_layers, seed)
             return probe_df.withColumn(
                 out_col, probe(key, _shard_expr(key, num_shards))
             )

@@ -188,7 +188,7 @@ def test_restore_filter_refuses_sharded_counting_artifact(spark, tmp_path):
 
 
 def test_scaling_ingest_autoroutes_above_broadcast_budget(spark, tmp_path, monkeypatch):
-    """Above broadcast_blob_budget the split must not assemble the
+    """Above the probe's broadcast gate the split must not assemble the
     prior filter on the driver: same new_rows through the distributed
     layer-row probe, with assemble_scaling_bloom forbidden."""
     import dablooms_spark.operators.bloom_build as bb
@@ -202,7 +202,7 @@ def test_scaling_ingest_autoroutes_above_broadcast_budget(spark, tmp_path, monke
     b1, b2 = mk_batch(0, 800), mk_batch(400, 1_200)
     expected_new = {f"k{i}" for i in range(800, 1_200)}
 
-    # reference run: broadcast path (roomy budget)
+    # reference run: broadcast path (default gate)
     pa_, pb_ = str(tmp_path / "a"), str(tmp_path / "b")
     for p in (pa_, pb_):
         incremental_ingest_scaling(b1, "key", "rid", p, "run", 500, 0.05)
@@ -212,27 +212,29 @@ def test_scaling_ingest_autoroutes_above_broadcast_budget(spark, tmp_path, monke
     )
     assert {r["key"] for r in ref.collect()} == expected_new
 
-    # forced-tiny budget: driver assembly must never happen
+    # gate '0' forces the cogroup: driver assembly must never happen
     def boom(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("driver-side assemble_scaling_bloom was called")
 
     monkeypatch.setattr(bb, "assemble_scaling_bloom", boom)
-    routed, seq = incremental_ingest_scaling(
-        b2, "key", "rid", pb_, "run", 500, 0.05,
-        exact_seen_df=b1, exact_key="key",
-        broadcast_blob_budget=1, split_salt=4,
-    )
-    assert {r["key"] for r in routed.collect()} == expected_new
-    assert seq == 2
+    spark.conf.set("spark.dablooms.probe.autoBroadcastBytes", "0")
+    try:
+        routed, seq = incremental_ingest_scaling(
+            b2, "key", "rid", pb_, "run", 500, 0.05,
+            exact_seen_df=b1, exact_key="key", split_salt=4,
+        )
+        assert {r["key"] for r in routed.collect()} == expected_new
+        assert seq == 2
 
-    # approximate mode too (no exact verify): misses only, no driver
-    pc_ = str(tmp_path / "c")
-    incremental_ingest_scaling(b1, "key", "rid", pc_, "run", 500, 0.05)
-    approx, _ = incremental_ingest_scaling(
-        b2, "key", "rid", pc_, "run", 500, 0.05,
-        broadcast_blob_budget=1, split_salt=4,
-    )
-    got = {r["key"] for r in approx.collect()}
+        # approximate mode too (no exact verify): misses only, no driver
+        pc_ = str(tmp_path / "c")
+        incremental_ingest_scaling(b1, "key", "rid", pc_, "run", 500, 0.05)
+        approx, _ = incremental_ingest_scaling(
+            b2, "key", "rid", pc_, "run", 500, 0.05, split_salt=4,
+        )
+        got = {r["key"] for r in approx.collect()}
+    finally:
+        spark.conf.unset("spark.dablooms.probe.autoBroadcastBytes")
     assert got <= expected_new  # never reports a seen key as new
     assert len(got) >= len(expected_new) * 0.9  # only FP casualties missing
 

@@ -44,6 +44,9 @@ def test_probe_column_no_false_negatives(spark, docs):
     filt = build_counting_bloom(docs, "text", capacity=600, error_rate=0.05)
     probed = bloom_probe_column(docs, "text", filt)
     assert probed.filter(~F.col("is_member")).count() == 0
+    # only a filter object probes: its blob is not one
+    with pytest.raises(TypeError, match="CountingBloom or a ScalingBloom"):
+        bloom_probe_column(docs, "text", filt.to_bytes())
 
 
 def test_probe_fp_bounded(spark, docs):
@@ -697,6 +700,77 @@ def test_spark_conf_keys_are_the_two_measured_ceilings():
         "spark.dablooms.build.driverMergeMaxBytes",
         "spark.dablooms.probe.autoBroadcastBytes",
     }
+
+
+def test_one_broadcast_probe_path():
+    """One Arrow probe UDF body, and filters broadcast from one module:
+    the other broadcasts (sketch_agg's CMS, similarity's query and
+    centroid arrays) are not filters. A new probe path has to be a
+    deliberate edit here."""
+    import ast
+    import pathlib
+
+    import dablooms_spark
+
+    boolean_udfs, broadcasters = 0, set()
+    for path in pathlib.Path(dablooms_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "arrow_udf"
+                and [getattr(a, "value", None) for a in node.args] == ["boolean"]
+            ):
+                boolean_udfs += 1
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "broadcast"
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "sparkContext"
+            ):
+                broadcasters.add(path.stem)
+    assert boolean_udfs == 1
+    assert broadcasters == {"bloom_probe", "sketch_agg", "similarity"}
+
+
+def test_broadcast_probe_decodes_once_per_worker(spark, monkeypatch):
+    """A broadcast filter's layers decode once per Python worker, not
+    once per task: a sharded broadcast probe over 8x defaultParallelism
+    input partitions decodes fewer layers than tasks x touched shards
+    (a decode per task makes exactly that many). Its verdicts
+    equal the cogroup probe's."""
+    from dablooms_spark.operators import bloom_probe
+    from dablooms_spark.operators.sharded import (
+        build_sharded_counting_bloom,
+        sharded_bloom_probe,
+    )
+
+    decodes, loads = spark.sparkContext.accumulator(0), bloom_probe.loads
+
+    def counted_loads(blob, seed):
+        decodes.add(1)
+        return loads(blob, seed=seed)
+
+    monkeypatch.setattr(bloom_probe, "loads", counted_loads)
+    num_shards = 4
+    tasks = 8 * spark.sparkContext.defaultParallelism
+    dim = spark.range(0, 2_000).select(F.concat(F.lit("k"), F.col("id")).alias("key"))
+    blobs = build_sharded_counting_bloom(dim, "key", 2_000, 0.01, num_shards=num_shards)
+    probe = spark.range(0, 16_000, 1, tasks).select(
+        F.col("id"), F.concat(F.lit("k"), F.col("id")).alias("key")
+    )
+    probed = sharded_bloom_probe(probe, "key", blobs, num_shards=num_shards)
+    got = sorted(map(tuple, probed.collect()))
+    assert 0 < decodes.value < tasks * num_shards
+    assert sum(r[2] for r in got[:2_000]) == 2_000  # no false negatives
+    spark.conf.set("spark.dablooms.probe.autoBroadcastBytes", "0")
+    try:
+        want = sorted(map(tuple, sharded_bloom_probe(
+            probe, "key", blobs, num_shards=num_shards
+        ).collect()))
+    finally:
+        spark.conf.unset("spark.dablooms.probe.autoBroadcastBytes")
+    assert got == want
 
 
 def test_approx_n_keys_slack_covers_undershoot(spark):
